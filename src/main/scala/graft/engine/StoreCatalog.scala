@@ -2555,16 +2555,21 @@ final class StoreCatalog(basePath: String) {
   /** Did a feed read/evaluation fail because the window's versions
     * (manifests or data dirs) were vacuumed away? Routine source
     * maintenance must degrade REFRESH to a full recompute, never a
-    * hard failure.
+    * hard failure. A vacuumed manifest is the store's typed refusal; a
+    * vacuumed data dir surfaces from Spark's scan as a missing file or
+    * its "does not exist" path error.
     */
   private def mvWindowVacuumed(e: Throwable): Boolean = {
     var t: Throwable = e
     var hops = 0
     while (t != null && hops < 16) {
-      if (t.isInstanceOf[java.io.FileNotFoundException]) return true
+      t match {
+        case _: ManifestTableStore.VersionUnavailableException |
+            _: java.io.FileNotFoundException => return true
+        case _ =>
+      }
       val m = t.getMessage
-      if (m != null && (m.contains("is missing or incomplete") ||
-          m.contains("does not exist"))) return true
+      if (m != null && m.contains("does not exist")) return true
       t = if (t.getCause eq t) null else t.getCause
       hops += 1
     }

@@ -5,15 +5,17 @@ import graft.engine.Pin.Pinnable
 
 /** Silver-table sink. The reference appends micro-batches to an Iceberg
   * table (`bronze_assets_to_silver_assets.py:275-277`); Iceberg/Delta jars
-  * are unavailable offline, so the stand-in is a parquet directory append —
-  * same append-only medallion semantics, minus snapshot isolation.
+  * are unavailable offline, so there are two stand-ins:
+  * [[ManifestTableStore]] commits versioned manifests (snapshot
+  * isolation, replayed batches are no-ops), and [[ParquetTableStore]] is
+  * a bare parquet directory append without snapshot isolation.
   *
-  * Exactly-once caveat (SURVEY §7.4): the streaming checkpoint prevents
-  * re-reads, but a crash between the parquet write and checkpoint commit
-  * can duplicate a batch. `batch_id` is stamped on every row so a later
-  * dedup (max batch_id per key, or drop repeated batch ids) can restore
-  * exactly-once — the same recovery contract Iceberg gives via snapshot
-  * rollback.
+  * Exactly-once caveat (SURVEY §7.4) for the bare append: the streaming
+  * checkpoint prevents re-reads, but a crash between the parquet write
+  * and checkpoint commit can duplicate a batch. `batch_id` is stamped on
+  * every row so a later dedup (max batch_id per key, or drop repeated
+  * batch ids) can restore exactly-once — the same recovery contract
+  * Iceberg gives via snapshot rollback.
   */
 trait TableStore {
   def append(df: DataFrame, batchId: Long): Unit
@@ -85,8 +87,9 @@ trait TableStore {
   *     predicates on partition columns prune directories — the same scan
   *     reduction a table format's partition spec gives (asserted against
   *     the executed plan's PartitionFilters in the spec);
-  *   - readers see exactly the current version's dirs, with mergeSchema
-  *     for governed evolution.
+  *   - readers see exactly the current version's dirs, each read with
+  *     its cached schema ([[ManifestTableStore.DirSchemas]]) and unioned
+  *     by name, so governed evolution null-pads missing columns.
   *
   * Time travel ([[readVersion]]) and garbage collection ([[vacuum]])
   * fall out of the versioned design, and `statsColumns` adds the third
@@ -124,6 +127,8 @@ final class ManifestTableStore(path: String,
   import org.apache.spark.sql.functions._
   import ManifestTableStore.{EndMarker, Entry, NumV, StagedStatsFile,
     StrV, SVal, TsV}
+  import com.fasterxml.jackson.databind.JsonNode
+  import com.fasterxml.jackson.databind.node.{JsonNodeFactory, TextNode}
 
   private def isMain: Boolean = refDir == "manifest"
 
@@ -152,21 +157,36 @@ final class ManifestTableStore(path: String,
 
   private def manifestDir = new HPath(s"$path/$refDir")
 
-  /** (version, entries) of the newest COMPLETE manifest — versions whose
-    * content lacks the end marker are in-flight (or dead) writers and are
-    * skipped; (0, empty) for a new table.
+  /** The newest COMPLETE manifest — versions whose content lacks the
+    * end marker are in-flight (or dead) writers and are skipped; version
+    * 0 with no entries for a new table.
     */
-  private def current(f: FileSystem): (Long, Seq[Entry]) = {
-    if (!f.exists(manifestDir)) return (0L, Nil)
+  private def current(f: FileSystem): Snapshot = {
+    if (!f.exists(manifestDir)) return new Snapshot(0L, Nil)
     val versions = f.listStatus(manifestDir)
       .map(_.getPath.getName)
       .collect { case n if n.startsWith("v") => n.drop(1).toLong }
       .sorted.reverse
     versions.iterator
       .map(v => v -> readManifest(f, v))
-      .collectFirst { case (v, Some(entries)) => (v, entries) }
-      .getOrElse((0L, Nil))
+      .collectFirst { case (v, Some(entries)) => new Snapshot(v, entries) }
+      .getOrElse(new Snapshot(0L, Nil))
   }
+
+  /** COMPLETE version `version`, or the store's one refusal of a
+    * missing (never committed, or vacuumed) or incomplete version.
+    */
+  private def snapshotAt(f: FileSystem, version: Long): Snapshot =
+    new Snapshot(version, manifestAt(f, version).getOrElse(
+      throw new ManifestTableStore.VersionUnavailableException(path, version)))
+
+  /** A version's entries; None when it is missing (never committed, or
+    * vacuumed) or incomplete.
+    */
+  private def manifestAt(f: FileSystem, version: Long): Option[Seq[Entry]] =
+    try readManifest(f, version) catch {
+      case _: java.io.FileNotFoundException => None
+    }
 
   /** None ⇔ the version file exists but is incomplete (no end marker):
     * a concurrent writer mid-commit, or a writer that died — either way
@@ -241,16 +261,60 @@ final class ManifestTableStore(path: String,
         else s"${e.batchId}\t${e.dir}\t${e.statsJson}"
       } :+ EndMarker).mkString("\n").getBytes("UTF-8"))
 
+  /** Commit ONE entry on top of `base` with optimistic retry — the
+    * protocol every single-entry commit shares. A lost race means the
+    * occupant is complete by construction (single-step publish), so the
+    * winner's state goes to `rebase`, which throws to refuse, returns
+    * false when the winner already holds the change (converged: nothing
+    * to commit), or true to retry on top of it at a higher version.
+    */
+  private def commitEntry(f: FileSystem, base: Snapshot, entry: Entry)(
+      rebase: Snapshot => Boolean): Unit = {
+    var snap = base
+    var next = base.version + 1
+    while (!tryCommit(f, next, snap.entries :+ entry)) {
+      snap = current(f)
+      if (!rebase(snap)) return
+      next = math.max(snap.version + 1, next + 1)
+    }
+  }
+
+  /** Write a ZERO-ROW schema-marker dir `data/<kind>-<uuid>` holding
+    * `cols` plus `batch_id`, and return its manifest entry under the
+    * reserved [[ManifestTableStore.SchemaBatchId]]. A direct
+    * unpartitioned write: a marker has no partition values and nothing
+    * for checks to see. Its schema pre-fills
+    * [[ManifestTableStore.DirSchemas]], and its stats are what
+    * [[collectStatsOf]] emits over the empty frame — no min/max, all-zero
+    * bloom bitsets, count 0 — computed with no Spark job (known by
+    * construction); `payload` adds a drop/rename/widen marker's key.
+    */
+  private def writeMarker(spark: SparkSession, kind: String,
+      cols: org.apache.spark.sql.types.StructType =
+        org.apache.spark.sql.types.StructType(Nil),
+      payload: Option[(String, JsonNode)] = None): Entry = {
+    val schema =
+      if (cols.fieldNames.contains("batch_id")) cols
+      else cols.add("batch_id", org.apache.spark.sql.types.LongType)
+    val dir = s"$path/data/$kind-${java.util.UUID.randomUUID()}"
+    spark.createDataFrame(
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+      .write.mode("overwrite").parquet(dir)
+    ManifestTableStore.DirSchemas.put(dir, schema)
+    Entry(ManifestTableStore.SchemaBatchId, dir,
+      statsJsonFrom(schema, Nil, Nil, 0L, None, payload))
+  }
+
   /** Min/max per requested stats column over one freshly-written data
     * dir, as the manifest's JSON stats field ("" when none apply). One
     * columnar scan of JUST these columns per commit — footer-cheap, and
     * the read-back (rather than re-running the upstream batch plan)
     * guarantees stats describe exactly the bytes committed. Numeric and
     * string columns only; anything else (or an all-null dir) simply
-    * yields no stats — pruning stays conservative. Unpartitioned
-    * writes no longer reach this: [[write]] folds the same aggregates
-    * into the write job itself (observe), so only partitioned dirs and
-    * staged publishes without a stashed sidecar read back.
+    * yields no stats — pruning stays conservative. Serves staged
+    * publishes without a stashed sidecar and the per-bucket dirs of
+    * clustered rewrites; [[write]] folds these aggregates into the
+    * write job itself.
     */
   private def collectStats(spark: SparkSession, dir: String): String =
     collectStatsOf(ManifestTableStore.DirSchemas.read(spark, dir))
@@ -315,30 +379,23 @@ final class ManifestTableStore(path: String,
     statsJsonFrom(df.schema, present, minMax, count, Some(() => df))
   }
 
-  /** Stats for a dir KNOWN to hold zero rows (schema markers,
-    * truncate): byte-identical to what [[collectStatsOf]] emits over
-    * the empty frame — no min/max entries, all-zero bloom bitsets,
-    * count 0 — with ZERO Spark jobs (guide §1.2: don't compute what
-    * is known by construction).
-    */
-  private def emptyStats(
-      schema: org.apache.spark.sql.types.StructType): String =
-    statsJsonFrom(schema, Nil, Nil, 0L, None)
-
   /** Shared serializer behind the read-back, observe-based and
     * zero-row stats collectors. `minMax` aligns with `present`
     * (normalized strings, null when the column was all-null);
     * `bloomDf` is only forced when a bloom column is eligible in
     * `schema` — None means "provably empty", which serializes the
-    * all-zero bitsets without a job.
+    * all-zero bitsets without a job. `marker` is a schema marker's
+    * payload key ([[writeMarker]]).
     */
   private def statsJsonFrom(
       schema: org.apache.spark.sql.types.StructType,
       present: Seq[String], minMax: Seq[(String, String)], count: Long,
-      bloomDf: Option[() => DataFrame]): String = {
+      bloomDf: Option[() => DataFrame],
+      marker: Option[(String, JsonNode)] = None): String = {
     import org.apache.spark.sql.types.NumericType
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createObjectNode()
+    marker.foreach { case (k, v) => root.set[JsonNode](k, v) }
     present.zip(minMax).foreach { case (c, (mn, mx)) =>
       if (mn != null && mx != null) {
         schema(c).dataType match {
@@ -391,12 +448,12 @@ final class ManifestTableStore(path: String,
     * `read(spark).count()`.
     */
   def countRows(spark: SparkSession): Option[Long] = {
-    val (_, lines) = current(fs(spark))
-    if (lines.isEmpty) return Some(0L)
+    val snap = current(fs(spark))
+    if (snap.isEmpty) return Some(0L)
     // pending merge-on-read delete files make the manifest count an
     // overcount — fall back to a real (delete-applied) count
-    if (lines.exists(isDeleteEntry)) return None
-    val perDir = lines.groupBy(_.dir).map(_._2.head.statsJson).toSeq
+    if (snap.deletes.nonEmpty) return None
+    val perDir = snap.entries.groupBy(_.dir).map(_._2.head.statsJson).toSeq
     val ns = perDir.map(ManifestTableStore.parseCount)
     if (ns.forall(_.isDefined)) Some(ns.flatten.sum) else None
   }
@@ -511,9 +568,9 @@ final class ManifestTableStore(path: String,
   def addCheck(spark: SparkSession, name: String,
       predicateSql: String, validateExisting: Boolean = true): Unit = {
     val f = fs(spark)
-    val (_, lines) = current(f)
-    if (lines.nonEmpty && validateExisting) {
-      val bad = readEntries(spark, lines).filter(!expr(predicateSql))
+    val snap = current(f)
+    if (!snap.isEmpty && validateExisting) {
+      val bad = snap.read(spark).filter(!expr(predicateSql))
       require(bad.isEmpty,
         s"cannot add check '$name': existing rows violate " +
           s"($predicateSql)")
@@ -660,13 +717,26 @@ final class ManifestTableStore(path: String,
       if (!hasData)
         df.limit(0).write.mode("overwrite").parquet(dir)
     }
+    // bounded: the observation completes asynchronously once the write
+    // action's listener event lands; a Spark change that never completes
+    // it must fail this write loudly, not hang it
+    try scala.concurrent.Await.ready(obs.future,
+      ManifestTableStore.ObservationWait)
+    catch {
+      case _: java.util.concurrent.TimeoutException =>
+        throw new IllegalStateException(
+          s"write observation for $dir did not arrive within " +
+            s"${ManifestTableStore.ObservationWait}")
+    }
     val m = obs.get
-    // a PROVABLY-empty write (e.g. a rewrite whose predicate
-    // constant-folds false over a void-typed partition column)
-    // collapses to an empty local relation and the CollectMetrics
-    // node folds away with it — no metrics arrive. That is the only
-    // way the node disappears; verify with one footer count rather
-    // than trusting the inference, then serve the empty-write metrics.
+    // a PROVABLY-empty partitioned write (a `filter(lit(false))`
+    // batch, or a rewrite whose predicate constant-folds false over a
+    // void-typed partition column) collapses to an empty local
+    // relation and the CollectMetrics node under the clustering
+    // exchange folds away with it — no metrics arrive. That is the
+    // only way the node disappears; verify with one footer count
+    // rather than trusting the inference, then serve the empty-write
+    // metrics.
     val lost = !m.contains("__cnt")
     if (lost) {
       val n = ManifestTableStore.DirSchemas.read(spark, dir).count()
@@ -703,21 +773,12 @@ final class ManifestTableStore(path: String,
       s"batchId must be >= 0, got $batchId")
     val f = fs(df.sparkSession)
     guardInheritedId(f, batchId)
-    var (v, lines) = current(f)
-    if (lines.exists(_.batchId == batchId)) return // replay → idempotent no-op
+    val snap = current(f)
+    if (snap.has(batchId)) return // replay → idempotent no-op
     val dataDir = s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
     val entry = Entry(batchId, dataDir,
       write(df.withColumn("batch_id", lit(batchId)), dataDir))
-    var next = v + 1
-    while (!tryCommit(f, next, lines :+ entry)) {
-      // lost the race: the occupant is complete by construction
-      // (single-step publish), so rebase on the winner's state and try
-      // a higher version
-      val (nv, nlines) = current(f)
-      if (nlines.exists(_.batchId == batchId)) return // competitor replayed it
-      lines = nlines; v = nv
-      next = math.max(nv + 1, next + 1)
-    }
+    commitEntry(f, snap, entry)(!_.has(batchId)) // competitor replayed it
   }
 
   /** Exposed partition layout (for SQL routing of
@@ -736,29 +797,39 @@ final class ManifestTableStore(path: String,
     * lakehouse job uses to republish a computed table. Replayed batch
     * ids no-op like [[append]]; the superseded state stays readable AS
     * OF its version (rollback via [[restore]]) until [[vacuum]].
-    * Overwrite conflicts with ANY concurrent write (Delta's
-    * serializable rule for blind overwrites): losing the version race
-    * throws rather than silently clobbering a commit that landed
-    * between snapshot and publish — the freshly-written dir stays an
-    * invisible orphan for vacuum.
+    * Overwrite conflicts with ANY concurrent write
+    * ([[commitReplacing]]).
     */
   def overwrite(df: DataFrame, batchId: Long): Unit = synchronized {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     val spark = df.sparkSession
     val f = fs(spark)
     guardInheritedId(f, batchId)
-    val (v, lines) = current(f)
-    if (lines.exists(_.batchId == batchId)) return // replay → no-op
+    val snap = current(f)
+    if (snap.has(batchId)) return // replay → no-op
     val dataDir = s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
     val entry = Entry(batchId, dataDir,
       write(df.withColumn("batch_id", lit(batchId)), dataDir))
+    commitReplacing(f, snap, entry, "overwrite",
+      converged = _.has(batchId))
+  }
+
+  /** Commit `entry` as the ONLY entry of the version after `snap` — a
+    * blind replacement, which conflicts with ANY concurrent write
+    * (Delta's serializable rule): losing the race throws rather than
+    * silently clobbering a commit that landed between snapshot and
+    * publish, and deletes the uncommitted dir — unless the winner
+    * already holds this very change (`converged`: a replayed batch).
+    */
+  private def commitReplacing(f: FileSystem, snap: Snapshot, entry: Entry,
+      op: String, converged: Snapshot => Boolean = _ => false): Unit = {
     beforeDmlCommit()
-    if (!tryCommit(f, v + 1, Seq(entry))) {
-      val (_, nlines) = current(f)
-      if (nlines.exists(_.batchId == batchId)) return // competitor replayed
+    if (!tryCommit(f, snap.version + 1, Seq(entry)) &&
+        !converged(current(f))) {
+      f.delete(new HPath(entry.dir), true)
       throw new java.util.ConcurrentModificationException(
-        s"overwrite of $path aborted: a concurrent write committed " +
-          "after this overwrite's snapshot; nothing was applied — " +
+        s"$op of $path aborted: a concurrent write committed after " +
+          s"this ${op.toLowerCase}'s snapshot; nothing was applied — " +
           "re-read and retry")
     }
   }
@@ -773,33 +844,17 @@ final class ManifestTableStore(path: String,
     * mistaken truncate). No data file is read, rewritten, or deleted
     * at truncate time: at 100 TB this is one empty-footer write + one
     * manifest commit, vs DELETE WHERE true's full-table rewrite.
-    * Conflicts like [[overwrite]] (Delta's serializable rule for blind
-    * replacements): losing the race throws rather than clobbering a
-    * commit that landed between snapshot and publish. No-op on an
+    * Conflicts like [[overwrite]] ([[commitReplacing]]). No-op on an
     * empty (zero-version) table.
     */
   def truncate(spark: SparkSession): Unit = synchronized {
     val f = fs(spark)
-    val (v, lines) = current(f)
-    if (lines.isEmpty) return
+    val snap = current(f)
+    if (snap.isEmpty) return
     // the truncated table's schema anchor: the CURRENT logical schema
-    // (renames/widens/drops applied), materialized like createEmpty's
-    val schema = readEntries(spark, lines).schema
-    val dir = s"$path/data/schema-${java.util.UUID.randomUUID()}"
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .write.mode("overwrite").parquet(dir)
-    ManifestTableStore.DirSchemas.put(dir, schema)
-    val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
-      emptyStats(schema))
-    beforeDmlCommit()
-    if (!tryCommit(f, v + 1, Seq(entry))) {
-      f.delete(new HPath(dir), true)
-      throw new java.util.ConcurrentModificationException(
-        s"TRUNCATE of $path aborted: a concurrent write committed " +
-          "after this truncate's snapshot; nothing was applied — " +
-          "re-read and retry")
-    }
+    // (renames/widens/drops applied)
+    commitReplacing(f, snap,
+      writeMarker(spark, "schema", snap.read(spark).schema), "TRUNCATE")
   }
 
   /** `SHOW PARTITIONS` — the table's partition values as Spark's
@@ -816,10 +871,7 @@ final class ManifestTableStore(path: String,
       s"SHOW PARTITIONS is not allowed on the non-partitioned table " +
         s"at $path")
     val f = fs(spark)
-    val (_, lines) = current(f)
-    val dataDirs = lines
-      .filterNot(e => isDeleteEntry(e) || isSchemaMarker(e))
-      .map(_.dir).distinct
+    val dataDirs = current(f).dataDirs
     val depth = partitionBy.size
     if (dataDirs.size <= listingThreshold(spark)) {
       // few dirs: plain driver-side hive walk (no behavior change)
@@ -903,18 +955,14 @@ final class ManifestTableStore(path: String,
       versionAsOf: Option[Long] = None): Unit = {
     val f = fs(spark)
     val entries = versionAsOf match {
-      case Some(v) =>
-        (try readManifest(f, v) catch {
-          case _: java.io.FileNotFoundException => None
-        }).getOrElse(throw new IllegalArgumentException(
-          s"version $v of $path is missing or incomplete"))
+      case Some(v) => snapshotAt(f, v).entries
       case None =>
-        val (v, lines) = current(f)
-        require(v > 0L, s"cannot clone $path: no committed versions")
-        lines
+        val snap = current(f)
+        require(snap.version > 0L, s"cannot clone $path: no committed versions")
+        snap.entries
     }
     val tf = target.fs(spark)
-    val (tv, _) = target.current(tf)
+    val tv = target.current(tf).version
     require(tv == 0L,
       s"clone target ${target.tablePath} already has commits " +
         s"(version $tv)")
@@ -1098,10 +1146,8 @@ final class ManifestTableStore(path: String,
     */
   def describeDetail(spark: SparkSession): DataFrame = {
     val f = fs(spark)
-    val (v, lines) = current(f)
-    val dataDirs = lines
-      .filterNot(e => isDeleteEntry(e) || isSchemaMarker(e))
-      .map(_.dir).distinct
+    val snap = current(f)
+    val dataDirs = snap.dataDirs
     // live file count + bytes: driver walk for small tables, a
     // distributed (path, length) aggregation beyond the threshold —
     // DESCRIBE DETAIL on a million-partition table must not be a
@@ -1134,14 +1180,14 @@ final class ManifestTableStore(path: String,
       .map(_.getModificationTime)
     import spark.implicits._
     Seq((
-      "graft-store", path, v,
+      "graft-store", path, snap.version,
       partitionBy.mkString(","),
       numFiles, sizeBytes,
       statsColumns.mkString(","), bloomColumns.mkString(","),
       morDeleteKey.getOrElse(""),
       listChecks(spark).size.toLong,
       new java.sql.Timestamp(createdAt.getOrElse(0L)),
-      new java.sql.Timestamp(manifestMtime(v).getOrElse(0L))
+      new java.sql.Timestamp(manifestMtime(snap.version).getOrElse(0L))
     )).toDF("format", "location", "version", "partition_columns",
       "num_files", "size_in_bytes", "stats_columns", "bloom_columns",
       "mor_delete_key", "num_checks", "created_at", "last_modified")
@@ -1174,9 +1220,9 @@ final class ManifestTableStore(path: String,
       val spark = df.sparkSession
       val f = fs(spark)
       guardInheritedId(f, batchId)
-      val (v, lines) = current(f)
-      requireNoDeleteFiles(lines, "overwritePartitions")
-      if (lines.exists(_.batchId == batchId)) return // replay → no-op
+      val snap = current(f)
+      snap.requireNoDeletes("overwritePartitions")
+      if (snap.has(batchId)) return // replay → no-op
       val dataDir =
         s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
       val entry = Entry(batchId, dataDir,
@@ -1186,7 +1232,7 @@ final class ManifestTableStore(path: String,
         "dynamic partition overwrite with an EMPTY batch is refused " +
           "(it would replace nothing; a full truncate must be the " +
           "explicit full-table overwrite)")
-      val touched = lines.map(_.dir).distinct
+      val touched = snap.entries.map(_.dir).distinct
         .filter(d => partitionTuples(f, d).exists(touchedTuples))
         .toSet
       // null-safe per column: hive encodes a NULL partition value as the
@@ -1204,7 +1250,7 @@ final class ManifestTableStore(path: String,
             else lit(value)
           col(c).cast("string") <=> decoded
         }.reduce(_ && _)).reduce(_ || _)
-      rewriteDirs(spark, f, v, lines, touched, "overwrite",
+      rewriteDirs(spark, f, snap, touched, "overwrite",
         _.filter(keep), extra = Seq(entry))
     }
 
@@ -1242,9 +1288,9 @@ final class ManifestTableStore(path: String,
     * carry a new field first. The mechanics cost nothing the store
     * doesn't already have: the new columns commit as a ZERO-ROW schema
     * marker dir (reserved batch id, outside the caller id space), and
-    * the established mergeSchema/union-by-name read exposes them
-    * null-padded on every existing row — exactly how a new column
-    * reads after Delta's metadata-only ADD COLUMNS. Idempotent when
+    * the union-by-name read exposes them null-padded on every existing
+    * row — exactly how a new column reads after Delta's metadata-only
+    * ADD COLUMNS. Idempotent when
     * ALL requested columns already exist with the same types (safe
     * re-runs); refuses partial overlap or a type change. Refused on an
     * empty table (the first batch defines the schema) — and the marker
@@ -1256,11 +1302,11 @@ final class ManifestTableStore(path: String,
     synchronized {
       require(cols.nonEmpty, "ADD COLUMNS needs at least one column")
       val f = fs(spark)
-      var (v, lines) = current(f)
-      require(lines.nonEmpty,
+      val snap = current(f)
+      require(!snap.isEmpty,
         "ALTER ... ADD COLUMNS on an empty table is refused: the " +
           "first appended batch defines the schema")
-      val existing = readEntries(spark, lines).schema
+      val existing = snap.read(spark).schema
       val (present, fresh) = cols.partition(c =>
         existing.fieldNames.exists(_.equalsIgnoreCase(c._1)))
       present.foreach { case (n, t) =>
@@ -1271,7 +1317,7 @@ final class ManifestTableStore(path: String,
             "changes are not supported")
       }
       if (fresh.isEmpty) return // all present with matching types
-      val retired = retiredNames(lines)
+      val retired = snap.retired
       fresh.foreach { case (n, _) =>
         require(!retired.exists(_.equalsIgnoreCase(n)),
           s"column name '$n' was DROPPED or RENAMED AWAY and is " +
@@ -1280,40 +1326,24 @@ final class ManifestTableStore(path: String,
             "them (compact() first to materialize the schema, then " +
             "re-add)")
       }
-      val schema = org.apache.spark.sql.types.StructType(fresh.map {
-        case (n, t) =>
+      val entry = writeMarker(spark, "schema",
+        org.apache.spark.sql.types.StructType(fresh.map { case (n, t) =>
           org.apache.spark.sql.types.StructField(n, t, nullable = true)
-      })
-      val dir = s"$path/data/schema-${java.util.UUID.randomUUID()}"
-      // direct unpartitioned write: a zero-row marker has no partition
-      // values and nothing for checks to see
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .withColumn("batch_id", lit(ManifestTableStore.SchemaBatchId))
-        .write.mode("overwrite").parquet(dir)
-      ManifestTableStore.DirSchemas.put(dir, schema.add("batch_id",
-        org.apache.spark.sql.types.LongType))
-      val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
-        emptyStats(schema.add("batch_id",
-          org.apache.spark.sql.types.LongType)))
-      var next = v + 1
-      while (!tryCommit(f, next, lines :+ entry)) {
-        val (nv, nlines) = current(f)
+        }))
+      commitEntry(f, snap, entry) { won =>
         // rebase = new table state: a concurrent append may have
         // introduced one of the fresh names, a concurrent drop/rename
         // may have retired it — re-run the guards before retrying
-        val sch = readEntries(spark, nlines).schema
-        val ret = retiredNames(nlines)
+        val sch = won.read(spark).schema
         fresh.foreach { case (n, _) =>
           require(!sch.fieldNames.exists(_.equalsIgnoreCase(n)),
             s"column '$n' was introduced concurrently; ADD COLUMNS " +
               "rebase refused")
-          require(!ret.exists(_.equalsIgnoreCase(n)),
+          require(!won.retired.exists(_.equalsIgnoreCase(n)),
             s"column name '$n' was retired concurrently; ADD COLUMNS " +
               "rebase refused (compact() first)")
         }
-        lines = nlines; v = nv
-        next = math.max(nv + 1, next + 1)
+        true
       }
     }
 
@@ -1334,9 +1364,9 @@ final class ManifestTableStore(path: String,
   def dropColumn(spark: SparkSession, name: String): Unit =
     synchronized {
       val f = fs(spark)
-      var (v, lines) = current(f)
-      require(lines.nonEmpty, s"no committed batches under $path")
-      val schema = readEntries(spark, lines).schema
+      val snap = current(f)
+      require(!snap.isEmpty, s"no committed batches under $path")
+      val schema = snap.read(spark).schema
       require(schema.fieldNames.exists(_.equalsIgnoreCase(name)),
         s"unknown column '$name'")
       require(!name.equalsIgnoreCase("batch_id"),
@@ -1358,30 +1388,16 @@ final class ManifestTableStore(path: String,
       }
       val canonical = schema.fieldNames
         .find(_.equalsIgnoreCase(name)).get
-      val dir = s"$path/data/dropcol-${java.util.UUID.randomUUID()}"
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("batch_id",
-              org.apache.spark.sql.types.LongType))))
-        .write.mode("overwrite").parquet(dir)
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = mapper.createObjectNode()
-      root.put(ManifestTableStore.DropColKey, canonical)
-      root.put(ManifestTableStore.CountKey, 0L)
-      val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
-        mapper.writeValueAsString(root))
-      var next = v + 1
-      while (!tryCommit(f, next, lines :+ entry)) {
-        val (nv, nlines) = current(f)
+      val entry = writeMarker(spark, "dropcol", payload = Some(
+        ManifestTableStore.DropColKey -> TextNode.valueOf(canonical)))
+      commitEntry(f, snap, entry) { won =>
         // rebase: a concurrent rename may have moved the column away —
         // re-check it still exists under this name before retrying
-        require(readEntries(spark, nlines).schema.fieldNames
+        require(won.read(spark).schema.fieldNames
           .exists(_.equalsIgnoreCase(canonical)),
           s"column '$canonical' changed concurrently; DROP COLUMN " +
             "rebase refused")
-        lines = nlines; v = nv
-        next = math.max(nv + 1, next + 1)
+        true
       }
     }
 
@@ -1400,9 +1416,9 @@ final class ManifestTableStore(path: String,
       schema: org.apache.spark.sql.types.StructType): Unit =
     synchronized {
       val f = fs(spark)
-      val (v, lines) = current(f)
-      require(v == 0L && lines.isEmpty,
-        s"table at $path already has commits (version $v)")
+      val snap = current(f)
+      require(snap.version == 0L && snap.isEmpty,
+        s"table at $path already has commits (version ${snap.version})")
       require(schema.nonEmpty, "CREATE TABLE needs at least one column")
       partitionBy.foreach { c =>
         require(schema.fieldNames.exists(_.equalsIgnoreCase(c)),
@@ -1410,18 +1426,9 @@ final class ManifestTableStore(path: String,
       }
       require(!schema.fieldNames.exists(_.equalsIgnoreCase("batch_id")),
         "batch_id is the store's replay-attribution column")
-      val dir = s"$path/data/schema-${java.util.UUID.randomUUID()}"
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-        .withColumn("batch_id", lit(ManifestTableStore.SchemaBatchId))
-        .write.mode("overwrite").parquet(dir)
-      ManifestTableStore.DirSchemas.put(dir, schema.add("batch_id",
-        org.apache.spark.sql.types.LongType))
-      val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
-        emptyStats(schema.add("batch_id",
-          org.apache.spark.sql.types.LongType)))
+      val entry = writeMarker(spark, "schema", schema)
       if (!tryCommit(f, 1L, Seq(entry))) {
-        f.delete(new HPath(dir), true)
+        f.delete(new HPath(entry.dir), true)
         throw new java.util.ConcurrentModificationException(
           s"CREATE TABLE at $path lost to a concurrent first commit")
       }
@@ -1447,8 +1454,8 @@ final class ManifestTableStore(path: String,
       schema: org.apache.spark.sql.types.StructType,
       newPartitionBy: Seq[String]): Unit = synchronized {
     val f = fs(spark)
-    val (v, lines) = current(f)
-    require(v > 0L && lines.nonEmpty,
+    val snap = current(f)
+    require(snap.version > 0L && !snap.isEmpty,
       s"table at $path has no commits; REPLACE needs an existing " +
         "table (CREATE OR REPLACE falls back to CREATE)")
     require(schema.nonEmpty, "REPLACE TABLE needs at least one column")
@@ -1458,24 +1465,8 @@ final class ManifestTableStore(path: String,
     }
     require(!schema.fieldNames.exists(_.equalsIgnoreCase("batch_id")),
       "batch_id is the store's replay-attribution column")
-    val dir = s"$path/data/schema-${java.util.UUID.randomUUID()}"
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      .withColumn("batch_id", lit(ManifestTableStore.SchemaBatchId))
-      .write.mode("overwrite").parquet(dir)
-    ManifestTableStore.DirSchemas.put(dir, schema.add("batch_id",
-      org.apache.spark.sql.types.LongType))
-    val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
-      emptyStats(schema.add("batch_id",
-        org.apache.spark.sql.types.LongType)))
-    beforeDmlCommit()
-    if (!tryCommit(f, v + 1, Seq(entry))) {
-      f.delete(new HPath(dir), true)
-      throw new java.util.ConcurrentModificationException(
-        s"REPLACE of $path aborted: a concurrent write committed " +
-          "after this replace's snapshot; nothing was applied — " +
-          "re-read and retry")
-    }
+    commitReplacing(f, snap, writeMarker(spark, "schema", schema),
+      "REPLACE")
   }
 
   /** Governed `ALTER TABLE ... RENAME COLUMN` — metadata-only, the
@@ -1483,7 +1474,7 @@ final class ManifestTableStore(path: String,
     * ([[dropColumn]]): no data file is rewritten; a zero-row RENAME
     * MARKER records (old, new) in the manifest and every read of a
     * version carrying it serves the column under the NEW name (old
-    * physical files project through [[applyRenames]]' coalesce). The
+    * physical files project through [[Snapshot.project]]'s coalesce). The
     * rename is VERSIONED: time travel before the marker still shows the
     * old name with its data. DML rewrites materialize the new name
     * incrementally; [[compact]] materializes it table-wide.
@@ -1504,17 +1495,17 @@ final class ManifestTableStore(path: String,
   def renameColumn(spark: SparkSession, from: String, to: String): Unit =
     synchronized {
       val f = fs(spark)
-      var (v, lines) = current(f)
+      val snap = current(f)
       // The full precondition set, re-runnable against a REBASED
       // snapshot: a lost commit race means a competitor changed table
       // state between our validation and our commit — a concurrent
       // append may have introduced `to`, a concurrent rename/drop may
       // have retired it — so the guards must re-run on the winner's
       // entries before every retry, not just once up front.
-      def validate(ls: Seq[Entry])
+      def validate(state: Snapshot)
           : org.apache.spark.sql.types.StructType = {
-        require(ls.nonEmpty, s"no committed batches under $path")
-        val schema = readEntries(spark, ls).schema
+        require(!state.isEmpty, s"no committed batches under $path")
+        val schema = state.read(spark).schema
         require(schema.fieldNames.exists(_.equalsIgnoreCase(from)),
           s"unknown column '$from'")
         require(!from.equalsIgnoreCase(to),
@@ -1528,8 +1519,7 @@ final class ManifestTableStore(path: String,
           s"'$from' is the merge-on-read delete key")
         require(!schema.fieldNames.exists(_.equalsIgnoreCase(to)),
           s"column '$to' already exists")
-        val retired = retiredNames(ls)
-        require(!retired.exists(_.equalsIgnoreCase(to)),
+        require(!state.retired.exists(_.equalsIgnoreCase(to)),
           s"column name '$to' was dropped or renamed away and is " +
             "retired: old data files still hold its values, and without " +
             "field-id column mapping reusing the name would resurrect " +
@@ -1545,31 +1535,13 @@ final class ManifestTableStore(path: String,
         }
         schema
       }
-      val schema = validate(lines)
-      val canonical = schema.fieldNames
+      val canonical = validate(snap).fieldNames
         .find(_.equalsIgnoreCase(from)).get
-      val dir = s"$path/data/renamecol-${java.util.UUID.randomUUID()}"
-      spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("batch_id",
-              org.apache.spark.sql.types.LongType))))
-        .write.mode("overwrite").parquet(dir)
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = mapper.createObjectNode()
-      val rn = root.putObject(ManifestTableStore.RenameColKey)
-      rn.put("f", canonical)
-      rn.put("t", to)
-      root.put(ManifestTableStore.CountKey, 0L)
-      val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
-        mapper.writeValueAsString(root))
-      var next = v + 1
-      while (!tryCommit(f, next, lines :+ entry)) {
-        val (nv, nlines) = current(f)
-        validate(nlines) // rebase = new table state: re-run the guards
-        lines = nlines; v = nv
-        next = math.max(nv + 1, next + 1)
-      }
+      val entry = writeMarker(spark, "renamecol", payload = Some(
+        ManifestTableStore.RenameColKey -> JsonNodeFactory.instance
+          .objectNode().put("f", canonical).put("t", to)))
+      // rebase = new table state: re-run the guards
+      commitEntry(f, snap, entry) { won => validate(won); true }
     }
 
   /** Governed `ALTER TABLE ... ALTER COLUMN ... TYPE` — metadata-only
@@ -1603,15 +1575,15 @@ final class ManifestTableStore(path: String,
   def widenColumn(spark: SparkSession, name: String,
       to: org.apache.spark.sql.types.DataType): Unit = synchronized {
     val f = fs(spark)
-    var (v, lines) = current(f)
+    val snap = current(f)
     // Re-runnable against a rebased snapshot — same contract as
     // renameColumn: a lost commit race means table state changed, so
     // the guards re-run on the winner's entries before every retry.
     // Returns the column's canonical current name, or None for the
     // idempotent already-wide case.
-    def validate(ls: Seq[Entry]): Option[String] = {
-      require(ls.nonEmpty, s"no committed batches under $path")
-      val schema = readEntries(spark, ls).schema
+    def validate(state: Snapshot): Option[String] = {
+      require(!state.isEmpty, s"no committed batches under $path")
+      val schema = state.read(spark).schema
       val fld = schema.fields.find(_.name.equalsIgnoreCase(name))
         .getOrElse(throw new IllegalArgumentException(
           s"unknown column '$name'"))
@@ -1633,32 +1605,18 @@ final class ManifestTableStore(path: String,
           "or lateral change rewrites data — refused")
       Some(fld.name)
     }
-    val canonical = validate(lines) match {
+    val canonical = validate(snap) match {
       case None => return
       case Some(c) => c
     }
-    val dir = s"$path/data/widencol-${java.util.UUID.randomUUID()}"
-    spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("batch_id",
-            org.apache.spark.sql.types.LongType))))
-      .write.mode("overwrite").parquet(dir)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    val wn = root.putObject(ManifestTableStore.WidenColKey)
-    wn.put("c", canonical)
-    wn.put("t", to.sql)
-    root.put(ManifestTableStore.CountKey, 0L)
-    val entry = Entry(ManifestTableStore.SchemaBatchId, dir,
-      mapper.writeValueAsString(root))
-    var next = v + 1
-    while (!tryCommit(f, next, lines :+ entry)) {
-      val (nv, nlines) = current(f)
-      if (validate(nlines).isEmpty) { f.delete(new HPath(dir), true)
-        return } // a concurrent identical widen landed: converged
-      lines = nlines; v = nv
-      next = math.max(nv + 1, next + 1)
+    val entry = writeMarker(spark, "widencol", payload = Some(
+      ManifestTableStore.WidenColKey -> JsonNodeFactory.instance
+        .objectNode().put("c", canonical).put("t", to.sql)))
+    commitEntry(f, snap, entry) { won =>
+      // a concurrent identical widen landed: converged
+      val retry = validate(won).isDefined
+      if (!retry) f.delete(new HPath(entry.dir), true)
+      retry
     }
   }
 
@@ -1679,16 +1637,13 @@ final class ManifestTableStore(path: String,
     */
   def refreshStats(spark: SparkSession): Unit = synchronized {
     val f = fs(spark)
-    val (v, lines) = current(f)
-    if (lines.isEmpty) return
-    val dataDirs = lines
-      .filterNot(e => isDeleteEntry(e) || isSchemaMarker(e))
-      .map(_.dir).distinct
-    val fresh: Map[String, String] = dataDirs.map { d =>
-      d -> collectStatsOf(applyWidens(applyRenames(
-        ManifestTableStore.DirSchemas.read(spark, d), lines), lines))
+    val snap = current(f)
+    if (snap.isEmpty) return
+    val fresh: Map[String, String] = snap.dataDirs.map { d =>
+      d -> collectStatsOf(
+        snap.project(ManifestTableStore.DirSchemas.read(spark, d)))
     }.toMap
-    commitRewrite(f, v + 1, lines, snap => snap.map { e =>
+    commitRewrite(f, snap, _.map { e =>
       if (isDeleteEntry(e) || isSchemaMarker(e)) e
       else fresh.get(e.dir) match {
         case Some(st) => Entry(e.batchId, e.dir, st)
@@ -1742,8 +1697,8 @@ final class ManifestTableStore(path: String,
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     val f = fs(spark)
     guardInheritedId(f, batchId)
-    var (v, lines) = current(f)
-    if (lines.exists(_.batchId == batchId)) return
+    val snap = current(f)
+    if (snap.has(batchId)) return
     val sp = new HPath(stagedDir, StagedStatsFile)
     val stats =
       if (f.exists(sp)) {
@@ -1754,14 +1709,7 @@ final class ManifestTableStore(path: String,
           in.readFully(buf); new String(buf, "UTF-8")
         } finally in.close()
       } else collectStats(spark, stagedDir)
-    val entry = Entry(batchId, stagedDir, stats)
-    var next = v + 1
-    while (!tryCommit(f, next, lines :+ entry)) {
-      val (nv, nlines) = current(f)
-      if (nlines.exists(_.batchId == batchId)) return
-      lines = nlines; v = nv
-      next = math.max(nv + 1, next + 1)
-    }
+    commitEntry(f, snap, Entry(batchId, stagedDir, stats))(!_.has(batchId))
   }
 
   /** Drop a staged batch that failed its audit — the table never
@@ -1779,9 +1727,9 @@ final class ManifestTableStore(path: String,
     */
   def compact(spark: SparkSession): Unit = synchronized {
     val f = fs(spark)
-    val (v, lines) = current(f)
-    val hasDeletes = lines.exists(isDeleteEntry)
-    if (lines.map(_.dir).distinct.size <= 1 && !hasDeletes) return
+    val snap = current(f)
+    if (snap.entries.map(_.dir).distinct.size <= 1 &&
+      snap.deletes.isEmpty) return
     val dataDir = s"$path/data/compact-${java.util.UUID.randomUUID()}"
     // rewrite the SNAPSHOT's dirs (not a re-listed current) so a
     // conflict rebase knows exactly which batches the new dir holds.
@@ -1789,8 +1737,8 @@ final class ManifestTableStore(path: String,
     // the delete-applied state and the delete entries drop out of the
     // committed manifest (Iceberg's rewrite_data_files + rewrite of
     // delete files in one step).
-    val stats = write(readEntries(spark, lines), dataDir)
-    commitRewrite(f, v + 1, lines,
+    val stats = write(snap.read(spark), dataDir)
+    commitRewrite(f, snap,
       _.filterNot(isDeleteEntry).map(e => Entry(e.batchId, dataDir, stats)))
   }
 
@@ -1822,27 +1770,25 @@ final class ManifestTableStore(path: String,
       predicateSql: Option[String]): Unit =
     synchronized {
       val f = fs(spark)
-      val (v, lines) = current(f)
-      requireNoDeleteFiles(lines, "compactSmall")
+      val snap = current(f)
+      snap.requireNoDeletes("compactSmall")
       // schema markers (add/drop/rename/widen/create) carry verbatim:
       // merging one into a data dir would lose the change while
       // untouched dirs still hold the old physical column
-      val smallAll = lines.filterNot(isSchemaMarker).map(_.dir).distinct
-        .filter(d =>
-          f.getContentSummary(new HPath(d)).getLength < smallBytes)
+      val smallAll = snap.dataDirs.filter(d =>
+        f.getContentSummary(new HPath(d)).getLength < smallBytes)
       val small = predicateSql match {
         case None => smallAll
         case Some(p) =>
           val (kept, _) = pruneEntries(spark, p,
-            lines.filterNot(isSchemaMarker)
-              .filter(e => smallAll.contains(e.dir)))
+            snap.data.filter(e => smallAll.contains(e.dir)))
           smallAll.filter(kept.contains)
       }
       if (small.size < 2) return
       val dataDir = s"$path/data/compact-${java.util.UUID.randomUUID()}"
       val stats = write(readDirs(spark, small), dataDir)
       val smallSet = small.toSet
-      commitRewrite(f, v + 1, lines, snap => snap.map { e =>
+      commitRewrite(f, snap, _.map { e =>
         if (smallSet.contains(e.dir)) Entry(e.batchId, dataDir, stats)
         else e
       })
@@ -1861,27 +1807,27 @@ final class ManifestTableStore(path: String,
     * happened — [[rewriteDirs]] propagates this and delete/update/merge
     * throw.
     */
-  private def commitRewrite(f: FileSystem, firstTry: Long,
-      snapshot: Seq[Entry],
+  private def commitRewrite(f: FileSystem, base: Snapshot,
       rewrite: Seq[Entry] => Seq[Entry]): Boolean = {
     // Snapshot identity is the FULL entry (batchId, dir, stats), not
     // batchId alone: delete entries all share the reserved sentinel id,
     // so id-keyed bookkeeping would conflate a concurrent second delete
     // with a moved batch.
+    val snapshot = base.entries
     val snapSet = snapshot.toSet
     val snapDataIds =
       snapshot.filterNot(isDeleteEntry).map(_.batchId).toSet
-    var next = firstTry
+    var next = base.version + 1
     var committed = tryCommit(f, next, rewrite(snapshot))
     while (!committed) {
-      val (nv, nlines) = current(f)
-      val (snap, fresh) = nlines.partition(snapSet.contains)
+      val won = current(f)
+      val (kept, fresh) = won.entries.partition(snapSet.contains)
       // a snapshot data batch re-committed under a new dir (or a
       // snapshot entry gone) = a CONCURRENT MAINTENANCE op landed:
       // abort — rebasing across two rewrites would double-count rows
       val movedByOther = fresh.exists(e =>
         !isDeleteEntry(e) && snapDataIds.contains(e.batchId))
-      if (movedByOther || snap.size != snapshot.size) return false
+      if (movedByOther || kept.size != snapshot.size) return false
       // an UNSCOPED delete entry in the snapshot masks every data
       // entry, including fresh appends the rewrite never anti-joined —
       // folding it in would silently resurrect those rows. Scoped
@@ -1891,7 +1837,7 @@ final class ManifestTableStore(path: String,
         ManifestTableStore.parseApplies(e.statsJson).isEmpty)
       if (unscopedDelete && fresh.exists(e => !isDeleteEntry(e)))
         return false
-      next = math.max(nv + 1, next + 1)
+      next = math.max(won.version + 1, next + 1)
       committed = tryCommit(f, next, rewrite(snapshot) ++ fresh)
     }
     true
@@ -1914,22 +1860,32 @@ final class ManifestTableStore(path: String,
   def compactClustered(spark: SparkSession, clusterBy: String,
       buckets: Int): Unit = synchronized {
     val f = fs(spark)
-    val (v, lines) = current(f)
-      requireNoDeleteFiles(lines, "compactClustered")
-    if (lines.isEmpty) return
+    val snap = current(f)
+    snap.requireNoDeletes("compactClustered")
+    if (snap.isEmpty) return
     val base = s"$path/data/cluster-${java.util.UUID.randomUUID()}"
-    val clustered = readEntries(spark, lines) // drops materialize here
+    val clustered = snap.read(spark) // drops materialize here
       .repartitionByRange(buckets, col(clusterBy))
       .withColumn("__cluster", spark_partition_id())
     val w = clustered.write.mode("overwrite")
     w.partitionBy("__cluster" +: partitionBy: _*).parquet(base)
+    commitBuckets(spark, f, snap, base)
+  }
+
+  /** Commit a clustered rewrite's hive `__cluster=k` output dirs under
+    * `base`, each as an independent manifest dir with its own stats,
+    * through [[commitRewrite]]. Every batch id of the snapshot stays
+    * present for replay checks (the id→dir association is void after
+    * the rewrite, as with [[compact]]).
+    */
+  private def commitBuckets(spark: SparkSession, f: FileSystem,
+      snap: Snapshot, base: String): Unit = {
     val dirs = f.listStatus(new HPath(base)).map(_.getPath)
       .collect { case p if p.getName.startsWith("__cluster=") => p.toString }
       .sorted.toSeq
     val stats = dirs.map(d => d -> collectStats(spark, d)).toMap
-    // register every dir; keep every batch id present for replay checks
-    commitRewrite(f, v + 1, lines, { snap =>
-      val ids = snap.map(_.batchId).distinct
+    commitRewrite(f, snap, { es =>
+      val ids = es.map(_.batchId).distinct
       val entries = dirs.zipWithIndex.map { case (d, i) =>
         Entry(ids(i % ids.size), d, stats(d)) }
       val carried = ids.filterNot(id => entries.exists(_.batchId == id))
@@ -1965,12 +1921,12 @@ final class ManifestTableStore(path: String,
       buckets: Int): Unit = synchronized {
     require(zorderBy.nonEmpty, "compactZOrder needs at least one column")
     val f = fs(spark)
-    val (v, lines) = current(f)
-      requireNoDeleteFiles(lines, "compactZOrder")
-    if (lines.isEmpty) return
+    val snap = current(f)
+    snap.requireNoDeletes("compactZOrder")
+    if (snap.isEmpty) return
     val bitsPer = 12
     val n = zorderBy.size
-    val base0 = readEntries(spark, lines) // drops materialize here
+    val base0 = snap.read(spark) // drops materialize here
     val total = base0.count()
     val denom = math.max(total - 1L, 1L).toDouble
     val ranked = zorderBy.zipWithIndex.foldLeft(base0) {
@@ -1998,18 +1954,7 @@ final class ManifestTableStore(path: String,
       .drop(("__z" +: (0 until n).map(i => s"__r$i")): _*)
     clustered.write.mode("overwrite")
       .partitionBy("__cluster" +: partitionBy: _*).parquet(base)
-    val dirs = f.listStatus(new HPath(base)).map(_.getPath)
-      .collect { case p if p.getName.startsWith("__cluster=") => p.toString }
-      .sorted.toSeq
-    val stats = dirs.map(d => d -> collectStats(spark, d)).toMap
-    commitRewrite(f, v + 1, lines, { snap =>
-      val ids = snap.map(_.batchId).distinct
-      val entries = dirs.zipWithIndex.map { case (d, i) =>
-        Entry(ids(i % ids.size), d, stats(d)) }
-      val carried = ids.filterNot(id => entries.exists(_.batchId == id))
-        .map(id => Entry(id, dirs.head, stats(dirs.head)))
-      entries ++ carried
-    })
+    commitBuckets(spark, f, snap, base)
   }
 
   /** Copy-on-write row-level DELETE (Iceberg CoW delete / Delta DELETE,
@@ -2030,11 +1975,10 @@ final class ManifestTableStore(path: String,
   def delete(spark: SparkSession, predicateSql: String): Unit =
     synchronized {
       val f = fs(spark)
-      val (v, lines) = current(f)
-      requireNoDeleteFiles(lines, "delete")
-      if (lines.isEmpty) return
-      val (touched, _) = pruneEntries(spark, predicateSql,
-        lines.filterNot(isSchemaMarker))
+      val snap = current(f)
+      snap.requireNoDeletes("delete")
+      if (snap.isEmpty) return
+      val (touched, _) = pruneEntries(spark, predicateSql, snap.data)
       if (touched.isEmpty) return // stats prove no row matches: no-op
       // row probe (Delta's find-files phase): stats admit these dirs,
       // but only a dir holding an ACTUAL match justifies a rewrite.
@@ -2046,12 +1990,12 @@ final class ManifestTableStore(path: String,
       // short-circuits on the first matching row (LocalLimit), so the
       // matching path pays ~one partition read, the no-match path a
       // read-only scan instead of a rewrite+commit.
-      if (probeNoMatch(spark, touched, lines, predicateSql)) return
+      if (probeNoMatch(spark, touched, snap, predicateSql)) return
       // SQL DELETE removes rows where the predicate is TRUE; a NULL
       // predicate (NULL-valued column in `WHERE c = 3`) KEEPS the row
       // — a bare `!pred` filter would silently delete it
       val keep = !(expr(predicateSql) <=> lit(true))
-      rewriteDirs(spark, f, v, lines, touched.toSet, "delete",
+      rewriteDirs(spark, f, snap, touched.toSet, "delete",
         _.filter(keep))
     }
 
@@ -2064,9 +2008,8 @@ final class ManifestTableStore(path: String,
     * still hold the old physical column.
     */
   private def probeNoMatch(spark: SparkSession, touched: Seq[String],
-      lines: Seq[Entry], predicateSql: String): Boolean =
-    applyWidens(applyRenames(
-      readDirs(spark, touched.distinct), lines), lines)
+      snap: Snapshot, predicateSql: String): Boolean =
+    snap.project(readDirs(spark, touched.distinct))
       .filter(expr(predicateSql) <=> lit(true))
       .isEmpty
 
@@ -2082,17 +2025,16 @@ final class ManifestTableStore(path: String,
       set: Map[String, org.apache.spark.sql.Column]): Unit =
     synchronized {
       val f = fs(spark)
-      val (v, lines) = current(f)
-      requireNoDeleteFiles(lines, "update")
-      if (lines.isEmpty) return
-      val (touched, _) = pruneEntries(spark, predicateSql,
-        lines.filterNot(isSchemaMarker))
+      val snap = current(f)
+      snap.requireNoDeletes("update")
+      if (snap.isEmpty) return
+      val (touched, _) = pruneEntries(spark, predicateSql, snap.data)
       if (touched.isEmpty) return
       // same row probe as [[delete]]: an UPDATE matching no row must
       // not rewrite dirs or mint a version
-      if (probeNoMatch(spark, touched, lines, predicateSql)) return
+      if (probeNoMatch(spark, touched, snap, predicateSql)) return
       val hit = expr(predicateSql)
-      rewriteDirs(spark, f, v, lines, touched.toSet, "update", { df =>
+      rewriteDirs(spark, f, snap, touched.toSet, "update", { df =>
         set.foldLeft(df) { case (d, (c, value)) =>
           d.withColumn(c, when(hit, value).otherwise(col(c)))
         }
@@ -2142,9 +2084,9 @@ final class ManifestTableStore(path: String,
     require(keys.nonEmpty, "merge needs at least one key column")
     val f = fs(spark)
     guardInheritedId(f, batchId)
-    val (v, lines) = current(f)
-    requireNoDeleteFiles(lines, "merge")
-    if (lines.exists(_.batchId == batchId)) return // replay → no-op
+    val snap = current(f)
+    snap.requireNoDeletes("merge")
+    if (snap.has(batchId)) return // replay → no-op
     // PIN before anything reads it (same reason as [[mergeClauses]]):
     // the bounds aggregate, the anti-join key set, and the insert
     // write are separate evaluations — a non-deterministic source
@@ -2152,21 +2094,19 @@ final class ManifestTableStore(path: String,
     val src =
       if (sourcePinned) source
       else { import Pin.Pinnable; source.pinned }
-    val touched = mergeTouchedDirs(src, keys, lines)
+    val touched = mergeTouchedDirs(src, keys, snap.data)
     val srcKeys = src.select(keys.map(col): _*).distinct()
     val insDir = s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
     val insEntry = Entry(batchId, insDir,
       write(src.withColumn("batch_id", lit(batchId)), insDir))
-    rewriteDirs(spark, f, v, lines, touched, "merge",
+    rewriteDirs(spark, f, snap, touched, "merge",
       _.join(broadcast(srcKeys), keys, "left_anti"),
       extra = Seq(insEntry))
   }
 
-  private def mergeTouchedDirs(source: DataFrame, key: String,
-      lines0: Seq[Entry]): Set[String] =
-    mergeTouchedDirs(source, Seq(key), lines0)
-
-  /** Data dirs a keyed merge must rewrite: those whose recorded key
+  /** Data dirs a keyed merge must rewrite, among the data entries
+    * `lines` (schema markers are structure: a key join cannot run
+    * against their batch_id-only files): those whose recorded key
     * min/max cannot be proven disjoint from `source`'s key range on
     * any key column (no stats → conservatively touched). The source
     * key ranges are normalized exactly like collectStats values so
@@ -2174,12 +2114,9 @@ final class ManifestTableStore(path: String,
     * from ONE aggregate over the source.
     */
   private def mergeTouchedDirs(source: DataFrame, keys: Seq[String],
-      lines0: Seq[Entry]): Set[String] = {
+      lines: Seq[Entry]): Set[String] = {
     import org.apache.spark.sql.types.{NumericType, StringType,
       TimestampNTZType, TimestampType}
-    // schema markers are structural, never data: a key join cannot run
-    // against their batch_id-only files
-    val lines = lines0.filterNot(isSchemaMarker)
     def isTsOf(k: String) = {
       val kt = source.schema(k).dataType
       kt == TimestampType || kt == TimestampNTZType
@@ -2272,10 +2209,10 @@ final class ManifestTableStore(path: String,
     require(keys.nonEmpty, "MERGE needs at least one key column")
     val f = fs(spark)
     guardInheritedId(f, batchId)
-    val (v, lines) = current(f)
-    requireNoDeleteFiles(lines, "merge")
-    if (lines.exists(_.batchId == batchId)) return // replay → no-op
-    if (lines.isEmpty && notMatched.isEmpty) return
+    val snap = current(f)
+    snap.requireNoDeletes("merge")
+    if (snap.has(batchId)) return // replay → no-op
+    if (snap.isEmpty && notMatched.isEmpty) return
     // PIN the source before anything reads it: the clauses evaluate it
     // several times (duplicate-key check, per-touched-dir broadcast
     // joins, insert anti-join, the insert write), and a
@@ -2292,9 +2229,8 @@ final class ManifestTableStore(path: String,
       d.withColumnRenamed(c, s"__src_$c"))
     val touched: Set[String] =
       if (matched.isEmpty && bySource.isEmpty) Set.empty // insert-only
-      else if (bySource.nonEmpty)
-        lines.filterNot(isSchemaMarker).map(_.dir).toSet
-      else mergeTouchedDirs(src, keys, lines)
+      else if (bySource.nonEmpty) snap.dataDirs.toSet
+      else mergeTouchedDirs(src, keys, snap.data)
     // index of the first clause (declaration order) whose condition
     // holds, -1 when none does — SQL MERGE's first-match-wins
     def firstClause(clauses: Seq[ManifestTableStore.MergeClause],
@@ -2306,17 +2242,15 @@ final class ManifestTableStore(path: String,
             when(applicable && cl.cond.map(expr).getOrElse(lit(true)),
               lit(i)).otherwise(els)
         }
-    // the target's CURRENT schema (renames/widens/adds projected) —
-    // computed BEFORE the per-dir rewrites because each rewrite must
-    // emit the FULL current schema, not the dir's own physical one: a
-    // governed ADD that landed just before this merge (schema
-    // evolution) means old dirs lack the new column, and a SET * of it
-    // would otherwise be silently dropped from the rewritten dir.
+    // the target (renames/widens/adds projected; drops NOT applied) —
+    // its schema is computed BEFORE the per-dir rewrites because each
+    // rewrite must emit the FULL current schema, not the dir's own
+    // physical one: a governed ADD that landed just before this merge
+    // (schema evolution) means old dirs lack the new column, and a SET *
+    // of it would otherwise be silently dropped from the rewritten dir.
     // Schema-only (parquet footers), no data read.
-    val tSchema =
-      if (lines.isEmpty) src.schema
-      else applyWidens(applyRenames(
-        readDirs(spark, lines.map(_.dir).distinct), lines), lines).schema
+    val target = if (snap.isEmpty) src else snap.project(snap.scan(spark))
+    val tSchema = target.schema
     def xform(df: DataFrame): DataFrame = {
       val joined = df.join(broadcast(srcPrefixed),
         keys.map(k => df(k) === col(s"__src_$k")).reduce(_ && _),
@@ -2391,10 +2325,9 @@ final class ManifestTableStore(path: String,
           .drop("batch_id").withColumn("batch_id", lit(batchId))
       else {
         val unmatched =
-          if (lines.isEmpty) src
-          else src.join(applyWidens(applyRenames(
-              readDirs(spark, lines.map(_.dir).distinct), lines), lines)
-            .select(keys.map(col): _*).distinct(), keys, "left_anti")
+          if (snap.isEmpty) src
+          else src.join(target.select(keys.map(col): _*).distinct(), keys,
+            "left_anti")
         val iIdx = notMatched.zipWithIndex
           .foldRight(lit(-1): org.apache.spark.sql.Column) {
             case ((cl, i), els) =>
@@ -2430,7 +2363,7 @@ final class ManifestTableStore(path: String,
     val insDir =
       s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
     val extra = Seq(Entry(batchId, insDir, write(insRows, insDir)))
-    rewriteDirs(spark, f, v, lines, touched, "merge", xform,
+    rewriteDirs(spark, f, snap, touched, "merge", xform,
       extra = extra)
   }
 
@@ -2444,10 +2377,9 @@ final class ManifestTableStore(path: String,
     * report success while deleting nothing. The freshly-written dirs
     * stay invisible orphans for vacuum.
     */
-  private def rewriteDirs(spark: SparkSession,
-      f: org.apache.hadoop.fs.FileSystem, v: Long, lines: Seq[Entry],
-      touched: Set[String], tag: String, xform: DataFrame => DataFrame,
-      extra: Seq[Entry] = Nil): Unit = {
+  private def rewriteDirs(spark: SparkSession, f: FileSystem,
+      snap: Snapshot, touched: Set[String], tag: String,
+      xform: DataFrame => DataFrame, extra: Seq[Entry] = Nil): Unit = {
     val rewritten: Map[String, (String, String)] = touched.map { d =>
       val nd = s"$path/data/$tag-${java.util.UUID.randomUUID()}"
       // pending renames AND widens project onto each dir BEFORE the
@@ -2456,12 +2388,11 @@ final class ManifestTableStore(path: String,
       // the old physical column — the rewrite also materializes the
       // new name/type (with fresh stats), so DML incrementally
       // completes a metadata-only rename or widen
-      d -> (nd, write(xform(applyWidens(applyRenames(
-        ManifestTableStore.DirSchemas.read(spark, d), lines),
-        lines)), nd))
+      d -> (nd, write(xform(
+        snap.project(ManifestTableStore.DirSchemas.read(spark, d))), nd))
     }.toMap
     beforeDmlCommit()
-    val committed = commitRewrite(f, v + 1, lines, snap => snap.map { e =>
+    val committed = commitRewrite(f, snap, _.map { e =>
       rewritten.get(e.dir) match {
         case Some((nd, st)) => Entry(e.batchId, nd, st)
         case None => e
@@ -2483,13 +2414,10 @@ final class ManifestTableStore(path: String,
   def history(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val f = fs(spark)
-    val (cur, _) = current(f)
     // vacuumed (deleted) manifests are skipped like in-flight ones —
     // the ledger lists the versions that still exist, it never throws
-    (1L to cur).flatMap { v =>
-      (try readManifest(f, v) catch {
-        case _: java.io.FileNotFoundException => None
-      }).map { es =>
+    (1L to current(f).version).flatMap { v =>
+      manifestAt(f, v).map { es =>
         val counts = es.groupBy(_.dir).map(_._2.head.statsJson).toSeq
           .map(ManifestTableStore.parseCount)
         (v, es.map(_.batchId).distinct.size.toLong,
@@ -2506,25 +2434,19 @@ final class ManifestTableStore(path: String,
     * [[vacuum]]).
     */
   def readVersion(spark: SparkSession, version: Long): DataFrame =
-    readEntries(spark, versionEntries(spark, version)) // + delete files
+    readable(spark, version).read(spark)
 
-  /** The entries of one COMPLETE historical version, with the missing /
-    * incomplete / empty refusals every time-travel entry point shares.
+  /** A COMPLETE, non-empty historical version — the refusals every
+    * time-travel read shares.
     */
-  private def versionEntries(spark: SparkSession,
-      version: Long): Seq[Entry] = {
-    val entries = (try readManifest(fs(spark), version) catch {
-      case _: java.io.FileNotFoundException =>
-        throw new IllegalArgumentException(
-          s"version $version of $path does not exist")
-    }).getOrElse(throw new IllegalArgumentException(
-        s"version $version of $path is incomplete (writer died mid-commit)"))
-    require(entries.nonEmpty, s"version $version of $path is empty")
-    entries
+  private def readable(spark: SparkSession, version: Long): Snapshot = {
+    val snap = snapshotAt(fs(spark), version)
+    require(!snap.isEmpty, s"version $version of $path is empty")
+    snap
   }
 
   /** Current manifest version (0 = no commits yet). */
-  def currentVersion(spark: SparkSession): Long = current(fs(spark))._1
+  def currentVersion(spark: SparkSession): Long = current(fs(spark)).version
 
   /** Batch ids committed in the CURRENT version — metadata-bounded
     * (one manifest read). The MV refresh derives its last-applied CDF
@@ -2534,7 +2456,8 @@ final class ManifestTableStore(path: String,
     * would re-fold the already-applied window under a fresh id).
     */
   private[engine] def committedBatchIds(spark: SparkSession): Set[Long] =
-    current(fs(spark))._2.filterNot(isSchemaMarker).map(_.batchId).toSet
+    current(fs(spark)).entries.filterNot(isSchemaMarker).map(_.batchId)
+      .toSet
 
   /** Commit wall-clock of a version, epoch millis — the version file's
     * modification time (the atomic publish stamps it at commit). The
@@ -2543,10 +2466,7 @@ final class ManifestTableStore(path: String,
     */
   def versionTimestampMs(spark: SparkSession, version: Long): Long = {
     val f = fs(spark)
-    (try readManifest(f, version) catch {
-      case _: java.io.FileNotFoundException => None
-    }).getOrElse(throw new IllegalArgumentException(
-      s"version $version of $path is missing or incomplete"))
+    snapshotAt(f, version)
     f.getFileStatus(new HPath(manifestDir, s"v$version"))
       .getModificationTime
   }
@@ -2574,7 +2494,7 @@ final class ManifestTableStore(path: String,
             st.getModificationTime <= tsMillis =>
           st.getPath.getName.drop(1).toLong
       }.sorted.reverse.iterator
-        .find(v => readManifest(f, v).isDefined)
+        .find(v => manifestAt(f, v).isDefined)
     require(eligible.nonEmpty,
       s"no version of $path was committed at or before epoch-ms " +
         s"$tsMillis (the table's history starts later)")
@@ -2611,11 +2531,7 @@ final class ManifestTableStore(path: String,
   def tag(spark: SparkSession, name: String, version: Long): Unit = {
     require(isMain, "tags name MAIN versions; tag from the main ref")
     val f = fs(spark)
-    (try readManifest(f, version) catch {
-      case _: java.io.FileNotFoundException => None
-    }).getOrElse(
-      throw new IllegalArgumentException(
-        s"cannot tag version $version of $path: missing or incomplete"))
+    snapshotAt(f, version)
     if (!AtomicCreate.publish(f, tagPath(name),
         version.toString.getBytes("UTF-8"))) {
       val existing = resolveTag(spark, name)
@@ -2698,15 +2614,16 @@ final class ManifestTableStore(path: String,
       targetPath: String): ManifestTableStore = {
     require(isMain, "clone from the main ref")
     val f = fs(spark)
-    val (v, lines) = current(f)
-    require(lines.nonEmpty, s"nothing to clone under $path (version $v)")
+    val snap = current(f)
+    require(!snap.isEmpty,
+      s"nothing to clone under $path (version ${snap.version})")
     // delete entries are classified by a path prefix the clone does not
     // share — a clone would misread them as data dirs. Fold first.
-    requireNoDeleteFiles(lines, "shallowClone")
+    snap.requireNoDeletes("shallowClone")
     val clone = new ManifestTableStore(targetPath, partitionBy,
       statsColumns, bloomColumns, bloomBits, morDeleteKey)
-    require(clone.current(f)._1 == 0L &&
-      clone.tryCommit(f, 1L, lines),
+    require(clone.current(f).version == 0L &&
+      clone.tryCommit(f, 1L, snap.entries),
       s"target $targetPath already holds a table")
     clone
   }
@@ -2793,13 +2710,9 @@ final class ManifestTableStore(path: String,
     require(isMain, "createBranch runs on the main ref")
     tagPath(name) // reuse the name validation
     val f = fs(spark)
-    val entries = (try readManifest(f, fromVersion) catch {
-      case _: java.io.FileNotFoundException => None
-    }).getOrElse(throw new IllegalArgumentException(
-      s"cannot branch from version $fromVersion of $path: missing or " +
-        "incomplete"))
+    val entries = snapshotAt(f, fromVersion).entries
     val b = branch(name)
-    require(b.current(f)._1 == 0L,
+    require(b.current(f).version == 0L,
       s"branch '$name' already exists on $path")
     require(b.tryCommit(f, 1L, entries),
       s"branch '$name' already exists on $path")
@@ -2857,12 +2770,10 @@ final class ManifestTableStore(path: String,
       require(isMain, "fastForward runs on the main ref")
       val f = fs(spark)
       val b = branch(name)
-      val base = (try b.readManifest(f, 1L) catch {
-        case _: java.io.FileNotFoundException => None
-      }).getOrElse(throw new IllegalArgumentException(
-        s"unknown branch '$name' on $path"))
-      val (bv, bLines) = b.current(f)
-      require(bv >= 1L, s"branch '$name' on $path has no commits")
+      val base = b.manifestAt(f, 1L).getOrElse(
+        throw new IllegalArgumentException(s"unknown branch '$name' on $path"))
+      val head = b.current(f)
+      require(head.version >= 1L, s"branch '$name' on $path has no commits")
       val baseDataIds = base.filterNot(isDeleteEntry).map(_.batchId).toSet
       val baseDirs = base.map(_.dir).toSet
       val maintPrefixes = Seq("compact-", "cluster-", "zorder-")
@@ -2876,7 +2787,8 @@ final class ManifestTableStore(path: String,
       val baseCount = totalCount(base)
       var done = false
       while (!done) {
-        val (mv, mLines) = current(f)
+        val main = current(f)
+        val mLines = main.entries
         val mDataIds = mLines.filterNot(isDeleteEntry)
           .map(_.batchId).toSet
         val byteEqual = mLines.toSet == base.toSet
@@ -2893,7 +2805,7 @@ final class ManifestTableStore(path: String,
           s"cannot fast-forward '$name': main advanced past the " +
             "branch point (a non-maintenance commit landed) — " +
             "recreate the branch from the new head")
-        done = tryCommit(f, mv + 1, bLines)
+        done = tryCommit(f, main.version + 1, head.entries)
       }
     }
 
@@ -2918,21 +2830,14 @@ final class ManifestTableStore(path: String,
     */
   def restore(spark: SparkSession, version: Long): Unit = synchronized {
     val f = fs(spark)
-    // vacuum prunes manifest files below the retention horizon too, so a
-    // missing manifest and a missing data dir are the same refusal
-    val target = (try readManifest(f, version) catch {
-      case _: java.io.FileNotFoundException =>
-        throw new IllegalArgumentException(
-          s"cannot restore $path to version $version: its manifest was " +
-            "vacuumed past the retention horizon")
-    }).getOrElse(throw new IllegalArgumentException(
-      s"version $version of $path does not exist or is incomplete"))
+    // vacuum prunes manifest files below the retention horizon as well
+    // as data dirs: either one gone refuses the restore
+    val target = snapshotAt(f, version).entries
     target.map(_.dir).distinct.foreach { d =>
       require(f.exists(new HPath(d)),
         s"cannot restore $path to version $version: data dir $d was vacuumed")
     }
-    var v = current(f)._1
-    while (!tryCommit(f, v + 1, target)) v = current(f)._1
+    while (!tryCommit(f, current(f).version + 1, target)) ()
   }
 
   /** Rows ADDED between two manifest versions — change-data-feed lite
@@ -2950,39 +2855,24 @@ final class ManifestTableStore(path: String,
   def readChanges(spark: SparkSession, fromVersion: Long,
       toVersion: Long): DataFrame = {
     val f = fs(spark)
-    def entriesOf(v: Long): Seq[Entry] =
-      readManifest(f, v).getOrElse(throw new IllegalArgumentException(
-        s"version $v of $path is missing or incomplete"))
-        .filterNot(isDeleteEntry) // CDF here is the INSERT stream only
-    // zero-row schema markers (add/drop/rename/widen) are structure,
-    // never data: a metadata-only evolution commit contributes NO new
-    // batch ids — otherwise its marker dir (schema: batch_id only)
-    // masquerades as an insert batch and the "new rows" come out with
-    // the data columns missing. The FULL entry set still drives the
-    // rename/widen/drop projection (the feed speaks the end schema).
+    // CDF here is the INSERT stream only: the delete files are not
+    // applied. Zero-row schema markers (add/drop/rename/widen) are
+    // structure, never data: a metadata-only evolution commit
+    // contributes NO new batch ids — otherwise its marker dir (schema:
+    // batch_id only) masquerades as an insert batch and the "new rows"
+    // come out with the data columns missing. The FULL entry set still
+    // drives the projection (the feed speaks the end schema), and the
+    // scan takes the pure marker dirs along with zero rows.
     val fromIds =
       if (fromVersion == 0L) Set.empty[Long]
-      else entriesOf(fromVersion).filterNot(isSchemaMarker)
-        .map(_.batchId).toSet
-    val to = entriesOf(toVersion)
-    val newIds = to.filterNot(isSchemaMarker)
-      .map(_.batchId).toSet -- fromIds
+      else snapshotAt(f, fromVersion).data.map(_.batchId).toSet
+    val to = snapshotAt(f, toVersion)
+    val newIds = to.data.map(_.batchId).toSet -- fromIds
     if (newIds.isEmpty) // zero rows, but in the END version's schema
-      return dropsOf(to).foldLeft(applyWidens(applyRenames(
-        readDirs(spark, to.map(_.dir).distinct), to), to))(_.drop(_))
-        .filter(lit(false))
-    // pure (zero-row) marker dirs join the SCAN set but never the
-    // attribution: a window holding both an ADD COLUMNS and a real
-    // append must serve the full end schema even when no new data dir
-    // carries the added column yet — the marker is its only physical
-    // holder. The batch_id filter keeps their row contribution at zero.
-    val toDataDirs = to.filterNot(isSchemaMarker).map(_.dir).toSet
-    val schemaDirs = to.filter(isSchemaMarker).map(_.dir).distinct
-      .filterNot(toDataDirs.contains)
-    val dirs = (to.filter(e => newIds.contains(e.batchId)).map(_.dir) ++
-      schemaDirs).distinct
-    dropsOf(to).foldLeft(applyWidens(applyRenames(readDirs(spark, dirs)
-      .filter(col("batch_id").isInCollection(newIds)), to), to))(_.drop(_))
+      return to.dropped(to.project(to.scan(spark))).filter(lit(false))
+    val dirs = to.data.filter(e => newIds.contains(e.batchId)).map(_.dir)
+    to.dropped(to.project(to.scan(spark, dirs)
+      .filter(col("batch_id").isInCollection(newIds))))
   }
 
   /** FULL change-data-feed between two versions — Delta CDF shaped:
@@ -3016,26 +2906,19 @@ final class ManifestTableStore(path: String,
   def readChangeFeed(spark: SparkSession, fromVersion: Long,
       toVersion: Long): DataFrame = {
     val f = fs(spark)
-    def entriesOf(v: Long): Seq[Entry] =
-      if (v == 0L) Nil
-      else (try readManifest(f, v) catch {
-        case _: java.io.FileNotFoundException => None
-      }).getOrElse(throw new IllegalArgumentException(
-        s"version $v of $path is missing or incomplete"))
-    val fromE = entriesOf(fromVersion)
-    val toE = entriesOf(toVersion)
-    require(fromE.nonEmpty || toE.nonEmpty,
+    def at(v: Long) = if (v == 0L) new Snapshot(0L, Nil) else snapshotAt(f, v)
+    val from = at(fromVersion)
+    val to = at(toVersion)
+    require(!from.isEmpty || !to.isEmpty,
       s"no data in either version $fromVersion or $toVersion of $path")
-    val (fromDel, fromData0) = fromE.partition(isDeleteEntry)
-    val (toDel, toData0) = toE.partition(isDeleteEntry)
     // zero-row schema markers (add/drop/rename/widen) are structure,
     // never data: a metadata-only evolution commit must not mark its
     // reserved batch id "affected" — its marker dir (schema: batch_id
     // only) would masquerade as changed rows' home and the empty feed
-    // would lose the data columns. The full entry sets still drive the
-    // rename/widen/drop projection below.
-    val fromData = fromData0.filterNot(isSchemaMarker)
-    val toData = toData0.filterNot(isSchemaMarker)
+    // would lose the data columns. The full snapshots still drive the
+    // projection below.
+    val (fromDel, fromData) = (from.deletes, from.data)
+    val (toDel, toData) = (to.deletes, to.data)
     // affected ids: dirs present on exactly one side, plus the scopes
     // of delete entries present on exactly one side (an unscoped
     // legacy delete entry masks everything → all ids conservatively)
@@ -3051,45 +2934,32 @@ final class ManifestTableStore(path: String,
         toData.filterNot(e => fromDirs(e.dir)).map(_.batchId).toSet ++
         delDiff.toSeq.flatMap(e =>
           ManifestTableStore.parseApplies(e.statsJson).get)
+    val end = if (to.isEmpty) from else to
     // the visible state of one version, restricted to the affected ids
-    // (post-compaction dirs can mix ids — the row filter re-separates)
-    def scoped(dels: Seq[Entry], datas: Seq[Entry],
-        all0: Seq[Entry]): Option[DataFrame] = {
-      val dirs = datas.filter(e => affected.contains(e.batchId))
+    // (post-compaction dirs can mix ids — the row filter re-separates).
+    // Both sides serve the END version's rename AND widen chain (Delta's
+    // CDF rule: the feed speaks the end schema) — a metadata-only rename
+    // or widen between the versions then diffs to ZERO change rows
+    def scoped(side: Snapshot): Option[DataFrame] = {
+      val dirs = side.data.filter(e => affected.contains(e.batchId))
         .map(_.dir).distinct
       if (dirs.isEmpty) None
-      // both sides serve the END version's rename AND widen chain
-      // (Delta's CDF rule: the feed speaks the end schema) — a
-      // metadata-only rename or widen between the versions then diffs
-      // to ZERO change rows
-      else {
-        // pure (zero-row) marker dirs join the scan but never the
-        // attribution: a window with BOTH an ADD COLUMNS and a data
-        // change must still speak the full end schema even before any
-        // data dir carries the added column (see readChanges)
-        val dataDirs = datas.map(_.dir).toSet
-        val markerDirs = all0.filter(isSchemaMarker).map(_.dir)
-          .distinct.filterNot(dataDirs.contains)
-        val end = if (toE.nonEmpty) toE else fromE
-        Some(applyWidens(applyRenames(
-          applyDeletes(spark,
-            readDirs(spark, (dirs ++ markerDirs).distinct), dels), end),
-          end).filter(col("batch_id").isInCollection(affected)))
-      }
+      else Some(end.project(side.masked(spark, side.scan(spark, dirs)))
+        .filter(col("batch_id").isInCollection(affected)))
     }
-    val oldS = scoped(fromDel, fromData, fromData0)
-    val newS = scoped(toDel, toData, toData0)
+    val oldS = scoped(from)
+    val newS = scoped(to)
     // nothing changed between the versions (e.g. fromVersion ==
     // toVersion, or only metadata markers moved): an EMPTY feed in the
     // end-version's schema, not a NoSuchElementException from the
     // alignment fallback below
     if (oldS.isEmpty && newS.isEmpty)
-      return readEntries(spark, if (toE.nonEmpty) toE else fromE)
+      return end.read(spark)
         .filter(lit(false)).withColumn("_change_type", lit("insert"))
     // align schemas across evolution (columns added between versions)
     // the feed serves the END version's schema (Delta's CDF rule):
     // columns its drop markers retired are projected off both sides
-    val toDrops = dropsOf(toE).map(_.toLowerCase).toSet
+    val toDrops = to.drops.map(_.toLowerCase).toSet
     val allFields = (oldS.toSeq ++ newS.toSeq).flatMap(_.schema.fields)
       .foldLeft(Vector.empty[org.apache.spark.sql.types.StructField]) {
         (acc, fld) =>
@@ -3131,7 +3001,7 @@ final class ManifestTableStore(path: String,
       minAgeMs: Long = 600000L, dryRun: Boolean = false): Seq[String] =
     synchronized {
       val f = fs(spark)
-      val (v, _) = current(f)
+      val v = current(f).version
       if (v == 0) return Nil
       require(isMain,
         "vacuum runs on the main ref (branch heads are retained from " +
@@ -3196,7 +3066,7 @@ final class ManifestTableStore(path: String,
       // dirs survive until dropBranch; branch time travel BEHIND a
       // head shares main's retention like any superseded version
       val branchEntries = listBranches(spark)
-        .flatMap(n => branch(n).current(f)._2)
+        .flatMap(n => branch(n).current(f).entries)
       // the deletable unit is the dir DIRECTLY under data/ (clustered
       // compaction nests __cluster=k dirs one level deeper); top-level
       // names are unique (uuid-suffixed), so retention compares the
@@ -3205,13 +3075,9 @@ final class ManifestTableStore(path: String,
       // versions inside the keep window that an EARLIER, more
       // aggressive vacuum already deleted simply contribute nothing —
       // a retention horizon must never crash on its own history
-      val referenced = (keepVersions.flatMap(kv =>
-        (try readManifest(f, kv) catch {
-          case _: java.io.FileNotFoundException => None
-        }).toSeq.flatten.map(
-          _.dir.split("/data/").last.split('/').head)) ++
-        branchEntries.filterNot(isDeleteEntry).map(
-          _.dir.split("/data/").last.split('/').head)).toSet
+      val kept = keepVersions.flatMap(manifestAt(f, _)).flatten
+      val referenced = (kept ++ branchEntries.filterNot(isDeleteEntry))
+        .map(_.dir.split("/data/").last.split('/').head).toSet
       val dataRoot = new HPath(s"$path/data")
       val deleted = Seq.newBuilder[String]
       if (f.exists(dataRoot)) f.listStatus(dataRoot).foreach { st =>
@@ -3228,13 +3094,8 @@ final class ManifestTableStore(path: String,
       // equality-delete files retire by the same retention rule: once no
       // retained version references one (compact folded it in), it is
       // garbage like any superseded data dir
-      val referencedDel = (keepVersions.flatMap(kv =>
-        (try readManifest(f, kv) catch {
-          case _: java.io.FileNotFoundException => None
-        }).toSeq.flatten.filter(isDeleteEntry).map(
-          _.dir.split("/deletes/").last.split('/').head)) ++
-        branchEntries.filter(isDeleteEntry).map(
-          _.dir.split("/deletes/").last.split('/').head)).toSet
+      val referencedDel = (kept ++ branchEntries).filter(isDeleteEntry)
+        .map(_.dir.split("/deletes/").last.split('/').head).toSet
       val delRoot = new HPath(s"$path/deletes")
       if (f.exists(delRoot)) f.listStatus(delRoot).foreach { st =>
         if (!referencedDel.contains(st.getPath.getName) &&
@@ -3266,9 +3127,9 @@ final class ManifestTableStore(path: String,
     * that is exactly the pressure [[compact]] relieves.
     */
   override def read(spark: SparkSession): DataFrame = {
-    val (_, lines) = current(fs(spark))
-    require(lines.nonEmpty, s"no committed batches under $path")
-    readEntries(spark, lines)
+    val snap = current(fs(spark))
+    require(!snap.isEmpty, s"no committed batches under $path")
+    snap.read(spark)
   }
 
   // ---- Merge-on-read equality deletes (Iceberg v2 delete files) ------
@@ -3290,33 +3151,6 @@ final class ManifestTableStore(path: String,
   private def isDeleteEntry(e: Entry): Boolean =
     e.dir.startsWith(s"$path/deletes/")
 
-  /** A zero-row DROP-COLUMN marker ([[dropColumn]]): structural, never
-    * data — rewrite scopes must skip it (its file holds only batch_id,
-    * so a predicate/join over data columns cannot run against it) and
-    * incremental compaction must carry it VERBATIM (folding it into a
-    * merged dir would lose the drop while untouched dirs still hold
-    * the column physically).
-    */
-  private def isDropMarker(e: Entry): Boolean =
-    e.batchId == ManifestTableStore.SchemaBatchId &&
-      ManifestTableStore.parseDropCol(e.statsJson).isDefined
-
-  /** A zero-row RENAME-COLUMN marker ([[renameColumn]]): structural
-    * like a drop marker — rewrite scopes skip it, incremental
-    * compaction carries it verbatim.
-    */
-  private def isRenameMarker(e: Entry): Boolean =
-    e.batchId == ManifestTableStore.SchemaBatchId &&
-      ManifestTableStore.parseRenameCol(e.statsJson).isDefined
-
-  /** A zero-row WIDEN-COLUMN marker ([[widenColumn]]): structural like
-    * the others — rewrite scopes skip it, incremental compaction
-    * carries it verbatim.
-    */
-  private def isWidenMarker(e: Entry): Boolean =
-    e.batchId == ManifestTableStore.SchemaBatchId &&
-      ManifestTableStore.parseWidenCol(e.statsJson).isDefined
-
   /** Any zero-row schema marker: structural, never data — the set
     * rewrite scopes, key joins, and CDF batch attribution must exclude.
     * EVERY entry committed under [[ManifestTableStore.SchemaBatchId]]
@@ -3333,117 +3167,161 @@ final class ManifestTableStore(path: String,
   private def isSchemaMarker(e: Entry): Boolean =
     e.batchId == ManifestTableStore.SchemaBatchId
 
-  /** The column names a snapshot's drop markers retire. */
-  private def dropsOf(lines: Seq[Entry]): Seq[String] =
-    lines.flatMap(e => ManifestTableStore.parseDropCol(e.statsJson))
-      .distinct
-
-  /** A snapshot's (from, to) renames IN COMMIT ORDER — chained renames
-    * (a→b then b→c) must fold in sequence.
+  /** One immutable manifest state — a version and its entries — and the
+    * ONE derivation of the logical table from its dirs, in layered steps;
+    * a caller that needs less than the full [[read]] stops at the step
+    * it needs:
+    *
+    *   1. [[scan]] — the chosen dirs plus every PURE schema-marker dir,
+    *      unioned by name in commit order;
+    *   2. [[masked]] — the scoped merge-on-read deletes anti-joined;
+    *   3. [[project]] — renames, then widens;
+    *   4. [[dropped]] — drop markers' columns removed.
     */
-  private def renamesOf(lines: Seq[Entry]): Seq[(String, String)] =
-    lines.flatMap(e => ManifestTableStore.parseRenameCol(e.statsJson))
+  private final class Snapshot(val version: Long, val entries: Seq[Entry]) {
+    def isEmpty: Boolean = entries.isEmpty
+    def has(batchId: Long): Boolean = entries.exists(_.batchId == batchId)
+    def deletes: Seq[Entry] = entries.filter(isDeleteEntry)
+    /** Data entries proper: no delete files, no schema markers. */
+    def data: Seq[Entry] =
+      entries.filterNot(e => isDeleteEntry(e) || isSchemaMarker(e))
+    def dataDirs: Seq[String] = data.map(_.dir).distinct
 
-  /** Project a snapshot's rename markers onto a raw (physical-name)
-    * frame. Renames are metadata-only, so physical files on BOTH sides
-    * of a rename coexist: dirs written before the marker hold the old
-    * name, dirs after hold the new one, and a union-by-name read pads
-    * each side's missing column with null — each row carries its value
-    * under exactly one of the two names, so `coalesce(new, old)` is the
-    * row's value and the old column projects away. Dirs rewritten by
-    * DML materialize the new name incrementally; once no old-name file
-    * remains (e.g. after [[compact]]) the fold is a no-op.
-    */
-  private def applyRenames(df: DataFrame, lines: Seq[Entry]): DataFrame =
-    renamesOf(lines).foldLeft(df) { case (d, (from, to)) =>
-      val fromC = d.columns.find(_.equalsIgnoreCase(from))
-      val toC = d.columns.find(_.equalsIgnoreCase(to))
-      (fromC, toC) match {
-        case (None, _) => d // fully materialized already
-        case (Some(fc), None) => d.withColumnRenamed(fc, to)
-        case (Some(fc), Some(tc)) =>
-          d.withColumn(tc, coalesce(col(tc), col(fc))).drop(fc)
+    /** Rewrite ops and row-level DML assume entries are data dirs; with
+      * pending delete files their rewrite scope would be wrong. The
+      * contract (as in Iceberg) is: fold deletes in first.
+      */
+    def requireNoDeletes(op: String): Unit =
+      require(deletes.isEmpty,
+        s"$op with pending merge-on-read delete files: run " +
+          "compactDeletes() (targeted) or compact() (whole-table) " +
+          "first to fold them into data")
+
+    /** The column names the drop markers retire. */
+    def drops: Seq[String] =
+      entries.flatMap(e => ManifestTableStore.parseDropCol(e.statsJson))
+        .distinct
+
+    /** (from, to) renames IN COMMIT ORDER — chained renames (a→b then
+      * b→c) must fold in sequence.
+      */
+    def renames: Seq[(String, String)] =
+      entries.flatMap(e => ManifestTableStore.parseRenameCol(e.statsJson))
+
+    /** Names old data files may still physically hold although the
+      * current schema no longer shows them: dropped columns and the
+      * SOURCE side of every rename. Without field-id column mapping
+      * (Iceberg's mechanism), re-introducing such a name would resurrect
+      * the old values through the union-by-name read — refused until a
+      * [[compact]] materializes the schema physically.
+      */
+    def retired: Seq[String] = (drops ++ renames.map(_._1)).distinct
+
+    /** Effective (column, widened type) pairs — each widen marker's
+      * recorded name projected through every rename committed AFTER it
+      * (the cast must land on the column's CURRENT name), then
+      * deduplicated keeping the LAST widen per column: a widening chain
+      * guarantees the final type contains every earlier one, and casting
+      * through an intermediate type would narrow data already written
+      * wide.
+      */
+    def widens: Seq[(String, org.apache.spark.sql.types.DataType)] = {
+      val acc = scala.collection.mutable.ArrayBuffer
+        .empty[(String, org.apache.spark.sql.types.DataType)]
+      entries.foreach { e =>
+        ManifestTableStore.parseWidenCol(e.statsJson).foreach(acc += _)
+        ManifestTableStore.parseRenameCol(e.statsJson).foreach {
+          case (from, to) => acc.indices.foreach { i =>
+            if (acc(i)._1.equalsIgnoreCase(from)) acc(i) = (to, acc(i)._2)
+          }
+        }
       }
+      acc.zipWithIndex.filter { case ((c, _), i) =>
+        !acc.drop(i + 1).exists(_._1.equalsIgnoreCase(c))
+      }.map(_._1).toSeq
     }
 
-  /** Names old data files may still physically hold although the
-    * current schema no longer shows them: dropped columns and the
-    * SOURCE side of every rename. Without field-id column mapping
-    * (Iceberg's mechanism), re-introducing such a name would resurrect
-    * the old values through the union-by-name read — refused until a
-    * [[compact]] materializes the schema physically.
-    */
-  private def retiredNames(lines: Seq[Entry]): Seq[String] =
-    (dropsOf(lines) ++ renamesOf(lines).map(_._1)).distinct
+    /** Step 1: `dirs` plus the pure (zero-row) schema-marker dirs, in
+      * commit order. Markers join the scan but never the pruning or
+      * attribution: an ADD COLUMNS marker is the only physical holder of
+      * a column no data dir carries yet, and every read must serve the
+      * full snapshot schema. Zero rows — no scan cost. Only PURE marker
+      * dirs: after a compact, marker entries point at the shared
+      * materialized data dir, and adding it would defeat the pruning.
+      */
+    def scan(spark: SparkSession, dirs: Seq[String] = dataDirs)
+        : DataFrame = {
+      val dataSet = data.map(_.dir).toSet
+      val want = dirs.toSet ++ entries.filter(isSchemaMarker).map(_.dir)
+        .filterNot(dataSet)
+      readDirs(spark,
+        entries.filterNot(isDeleteEntry).map(_.dir).distinct.filter(want))
+    }
 
-  /** A snapshot's effective (column, widened type) pairs — each widen
-    * marker's recorded name projected through every rename committed
-    * AFTER it (the cast must land on the column's CURRENT name), then
-    * deduplicated keeping the LAST widen per column: a widening chain
-    * guarantees the final type contains every earlier one, and casting
-    * through an intermediate type would narrow data already written
-    * wide.
-    */
-  private def widensOf(lines: Seq[Entry])
-      : Seq[(String, org.apache.spark.sql.types.DataType)] = {
-    val acc = scala.collection.mutable.ArrayBuffer
-      .empty[(String, org.apache.spark.sql.types.DataType)]
-    lines.foreach { e =>
-      ManifestTableStore.parseWidenCol(e.statsJson).foreach(acc += _)
-      ManifestTableStore.parseRenameCol(e.statsJson).foreach {
-        case (from, to) => acc.indices.foreach { i =>
-          if (acc(i)._1.equalsIgnoreCase(from)) acc(i) = (to, acc(i)._2)
+    /** Step 2: the equality deletes anti-joined (broadcast — delete
+      * files are small by design). Each delete entry is SCOPED to the
+      * data batch ids present when it committed (Iceberg's
+      * equality-delete sequence-number contract): rows appended AFTER
+      * the delete are never masked, so a later compact that folds the
+      * delete in cannot resurrect them. An entry without a scope
+      * (foreign manifest) masks everything — the conservative legacy
+      * reading.
+      */
+    def masked(spark: SparkSession, base: DataFrame): DataFrame =
+      deletes.distinctBy(_.dir).foldLeft(base) { (df, d) =>
+        val keys = ManifestTableStore.DirSchemas.read(spark, d.dir)
+        val kc = keys.schema.fields.head.name
+        val cond = ManifestTableStore.parseApplies(d.statsJson) match {
+          case Some(ids) =>
+            df(kc) === keys(kc) && df("batch_id").isInCollection(ids)
+          case None => df(kc) === keys(kc)
+        }
+        df.join(broadcast(keys), cond, "left_anti")
+      }
+
+    /** Step 3: the rename markers, then the widen markers, projected onto
+      * a raw (physical-name) frame.
+      *
+      * Renames are metadata-only, so physical files on BOTH sides of a
+      * rename coexist: dirs written before the marker hold the old name,
+      * dirs after hold the new one, and the union-by-name read pads each
+      * side's missing column with null — each row carries its value
+      * under exactly one of the two names, so `coalesce(new, old)` is
+      * the row's value and the old column projects away. Widens cast
+      * each widened column to its declared type: old dirs stay narrow,
+      * post-widen dirs are wide (the union already coerced them to the
+      * widest PRESENT type), and the cast pins the DECLARED type even
+      * when no wide file exists yet. DML rewrites materialize both
+      * incrementally; once maintenance has, both folds are no-ops.
+      */
+    def project(df: DataFrame): DataFrame = {
+      val renamed = renames.foldLeft(df) { case (d, (from, to)) =>
+        val fromC = d.columns.find(_.equalsIgnoreCase(from))
+        val toC = d.columns.find(_.equalsIgnoreCase(to))
+        (fromC, toC) match {
+          case (None, _) => d // fully materialized already
+          case (Some(fc), None) => d.withColumnRenamed(fc, to)
+          case (Some(fc), Some(tc)) =>
+            d.withColumn(tc, coalesce(col(tc), col(fc))).drop(fc)
+        }
+      }
+      widens.foldLeft(renamed) { case (d, (name, t)) =>
+        d.columns.find(_.equalsIgnoreCase(name)) match {
+          case Some(c) if d.schema(c).dataType != t =>
+            d.withColumn(c, col(c).cast(t))
+          case _ => d
         }
       }
     }
-    acc.zipWithIndex.filter { case ((c, _), i) =>
-      !acc.drop(i + 1).exists(_._1.equalsIgnoreCase(c))
-    }.map(_._1).toSeq
+
+    /** Step 4: the dropped columns projected away. */
+    def dropped(df: DataFrame): DataFrame = drops.foldLeft(df)(_.drop(_))
+
+    /** The logical table over `dirs`: all four steps. */
+    def read(spark: SparkSession, dirs: Seq[String] = dataDirs)
+        : DataFrame =
+      dropped(project(masked(spark, scan(spark, dirs))))
   }
-
-  /** Project a snapshot's widen markers onto a frame: cast each widened
-    * column to its declared type. Physical files on both sides of a
-    * widen coexist (old dirs narrow, post-widen dirs wide — the per-dir
-    * union already coerced them to the widest PRESENT type); the cast
-    * pins the DECLARED type even when no wide file exists yet, and
-    * no-ops once maintenance materializes it physically.
-    */
-  private def applyWidens(df: DataFrame, lines: Seq[Entry]): DataFrame =
-    widensOf(lines).foldLeft(df) { case (d, (name, t)) =>
-      d.columns.find(_.equalsIgnoreCase(name)) match {
-        case Some(c) if d.schema(c).dataType != t =>
-          d.withColumn(c, col(c).cast(t))
-        case _ => d
-      }
-    }
-
-  private def readEntries(spark: SparkSession,
-      lines: Seq[Entry]): DataFrame = {
-    val (dels, datas) = lines.partition(isDeleteEntry)
-    dropsOf(lines).foldLeft(applyWidens(applyRenames(
-      applyDeletes(spark, readDirs(spark, datas.map(_.dir).distinct),
-        dels), lines), lines))(_.drop(_))
-  }
-
-  private def applyDeletes(spark: SparkSession, base: DataFrame,
-      dels: Seq[Entry]): DataFrame =
-    dels.distinctBy(_.dir).foldLeft(base) { (df, d) =>
-      val keys = ManifestTableStore.DirSchemas.read(spark, d.dir)
-      val kc = keys.schema.fields.head.name
-      // Each delete entry is SCOPED to the data batch ids present when
-      // it committed (Iceberg's equality-delete sequence-number
-      // contract): rows appended AFTER the delete are never masked, so
-      // a later compact that folds the delete in cannot resurrect them.
-      // An entry without a scope (foreign manifest) masks everything —
-      // the conservative legacy reading.
-      val cond = ManifestTableStore.parseApplies(d.statsJson) match {
-        case Some(ids) =>
-          df(kc) === keys(kc) && df("batch_id").isInCollection(ids)
-        case None => df(kc) === keys(kc)
-      }
-      df.join(org.apache.spark.sql.functions.broadcast(keys),
-        cond, "left_anti")
-    }
 
   /** MERGE-ON-READ delete: commit the predicate's matching `keyCol`
     * values as an equality-delete file — no data dir is opened for
@@ -3461,22 +3339,22 @@ final class ManifestTableStore(path: String,
     val f = fs(spark)
     var done = false
     while (!done) {
-      val (v, lines) = current(f)
-      if (lines.isEmpty) return
-      val keys = readEntries(spark, lines)
+      val snap = current(f)
+      if (snap.isEmpty) return
+      val keys = snap.read(spark)
         .filter(expr(predicateSql)).select(keyCol).distinct()
       val delDir = s"$path/deletes/del-${java.util.UUID.randomUUID()}"
       keys.write.mode("overwrite").parquet(delDir)
       if (ManifestTableStore.DirSchemas.read(spark, delDir).isEmpty) {
         f.delete(new HPath(delDir), true); return
       }
-      val applies = lines.filterNot(isDeleteEntry)
+      val applies = snap.entries.filterNot(isDeleteEntry)
         .map(_.batchId).distinct.sorted
       val entry = Entry(ManifestTableStore.DeleteBatchId, delDir,
         applies.mkString("{\"" + ManifestTableStore.AppliesKey +
           "\":[", ",", "]}"))
       beforeDmlCommit()
-      done = tryCommit(f, v + 1, lines :+ entry)
+      done = tryCommit(f, snap.version + 1, snap.entries :+ entry)
       if (!done) f.delete(new HPath(delDir), true)
     }
   }
@@ -3502,26 +3380,26 @@ final class ManifestTableStore(path: String,
     */
   def compactDeletes(spark: SparkSession): Unit = synchronized {
     val f = fs(spark)
-    val (v, lines) = current(f)
-    val (dels, datas) = lines.partition(isDeleteEntry)
-    if (dels.isEmpty) return
-    val touched: Set[String] = dels.distinctBy(_.dir).flatMap { d =>
+    val snap = current(f)
+    if (snap.deletes.isEmpty) return
+    val touched: Set[String] = snap.deletes.distinctBy(_.dir).flatMap { d =>
       val keys = ManifestTableStore.DirSchemas.read(spark, d.dir)
       val kc = keys.schema.fields.head.name
       val candidates = ManifestTableStore.parseApplies(d.statsJson) match {
-        case Some(ids) => datas.filter(e => ids.contains(e.batchId))
-        case None => datas
+        case Some(ids) => snap.data.filter(e => ids.contains(e.batchId))
+        case None => snap.data
       }
-      mergeTouchedDirs(keys, kc, candidates)
+      mergeTouchedDirs(keys, Seq(kc), candidates)
     }.toSet
     val rewritten: Map[String, (String, String)] = touched.map { dir =>
       val nd = s"$path/data/delfold-${java.util.UUID.randomUUID()}"
-      dir -> (nd, write(applyDeletes(spark,
-        ManifestTableStore.DirSchemas.read(spark, dir), dels), nd))
+      dir -> (nd, write(
+        snap.masked(spark, ManifestTableStore.DirSchemas.read(spark, dir)),
+        nd))
     }.toMap
     beforeDmlCommit()
-    val committed = commitRewrite(f, v + 1, lines, snap =>
-      snap.filterNot(isDeleteEntry).map { e =>
+    val committed = commitRewrite(f, snap, es =>
+      es.filterNot(isDeleteEntry).map { e =>
         rewritten.get(e.dir) match {
           case Some((nd, st)) => Entry(e.batchId, nd, st)
           case None => e
@@ -3545,7 +3423,7 @@ final class ManifestTableStore(path: String,
       smallBytes: Long = 32L << 20,
       predicateSql: Option[String] = None): Seq[String] = {
     val actions = Seq.newBuilder[String]
-    if (current(fs(spark))._2.exists(isDeleteEntry)) {
+    if (current(fs(spark)).deletes.nonEmpty) {
       compactDeletes(spark)
       actions += "compactDeletes"
     }
@@ -3556,16 +3434,6 @@ final class ManifestTableStore(path: String,
         s"compactSmall(where $p)")
     actions.result()
   }
-
-  /** Rewrite ops and row-level DML assume entries are data dirs; with
-    * pending delete files their rewrite scope would be wrong. The
-    * contract (as in Iceberg) is: fold deletes in first.
-    */
-  private def requireNoDeleteFiles(lines: Seq[Entry], op: String): Unit =
-    require(!lines.exists(isDeleteEntry),
-      s"$op with pending merge-on-read delete files: run " +
-        "compactDeletes() (targeted) or compact() (whole-table) " +
-        "first to fold them into data")
 
   private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
     dirs.map(d => ManifestTableStore.DirSchemas.read(spark, d))
@@ -3584,35 +3452,19 @@ final class ManifestTableStore(path: String,
     // ONE manifest snapshot for both the prune and the delete set — two
     // current() reads could straddle a concurrent commit and pair a new
     // version's data dirs with an old version's delete files
-    val (_, lines) = current(fs(spark))
-    readWhereEntries(spark, lines, predicateSql)
+    readWhereOf(spark, current(fs(spark)), predicateSql)
   }
 
-  /** [[readWhere]] against an explicit manifest snapshot — the shared
-    * core of the current-state and time-travel pruned-read paths.
+  /** [[readWhere]] against an explicit snapshot — the shared core of the
+    * current-state and time-travel pruned-read paths. With no dir kept
+    * the whole snapshot is read for its schema (the filter leaves no
+    * row).
     */
-  private def readWhereEntries(spark: SparkSession, lines: Seq[Entry],
+  private def readWhereOf(spark: SparkSession, snap: Snapshot,
       predicateSql: String): DataFrame = {
-    val (dels, datas) = lines.partition(isDeleteEntry)
-    val (kept, _) =
-      pruneEntries(spark, predicateSql, datas.filterNot(isSchemaMarker))
-    // zero-row schema-marker dirs never participate in PRUNING (they
-    // are structure, not data) but always participate in the UNION:
-    // an ADD COLUMNS marker is the only physical holder of a column no
-    // data dir carries yet, and a pruned read right after the add must
-    // still serve the full snapshot schema. Zero rows — no scan cost.
-    // Only PURE marker dirs: after a compact, marker entries point at
-    // the shared materialized data dir (which already carries the full
-    // schema), and re-adding it here would defeat the stats pruning.
-    val dataDirs = datas.filterNot(isSchemaMarker).map(_.dir).toSet
-    val markerDirs = datas.filter(isSchemaMarker).map(_.dir).distinct
-      .filterNot(d => dataDirs.contains(d) || kept.contains(d))
-    val base =
-      if (kept.isEmpty) readEntries(spark, lines) // footers skip the rest
-      else dropsOf(lines).foldLeft(applyWidens(applyRenames(
-        applyDeletes(spark, readDirs(spark, kept ++ markerDirs), dels),
-        lines), lines))(_.drop(_))
-    base.filter(expr(predicateSql))
+    val (kept, _) = pruneEntries(spark, predicateSql, snap.data)
+    snap.read(spark, if (kept.isEmpty) snap.dataDirs else kept)
+      .filter(expr(predicateSql))
   }
 
   /** [[readWhere]] of a HISTORICAL version: the same manifest-stats
@@ -3623,7 +3475,7 @@ final class ManifestTableStore(path: String,
     */
   def readVersionWhere(spark: SparkSession, version: Long,
       predicateSql: String): DataFrame =
-    readWhereEntries(spark, versionEntries(spark, version), predicateSql)
+    readWhereOf(spark, readable(spark, version), predicateSql)
 
   /** (kept, skipped) data dirs for a predicate — the pruning decision
     * [[readWhere]] acts on, exposed for tests/inspection. Only top-level
@@ -3633,7 +3485,7 @@ final class ManifestTableStore(path: String,
   private[engine] def pruneDirs(spark: SparkSession,
       predicateSql: String): (Seq[String], Seq[String]) =
     pruneEntries(spark, predicateSql,
-      current(fs(spark))._2.filterNot(isDeleteEntry))
+      current(fs(spark)).entries.filterNot(isDeleteEntry))
 
   /** [[pruneDirs]] against an explicit manifest snapshot, so a DML
     * rewrite prunes against exactly the entries it will commit against.
@@ -3750,6 +3602,23 @@ object ManifestTableStore {
     */
   val VacuumIgnoreClonesConf = "spark.graft.vacuum.ignoreClones.enabled"
 
+  /** The store's refusal of a version that is missing (never committed,
+    * or its manifest vacuumed past the retention horizon) or incomplete
+    * (its writer died mid-commit) — an IllegalArgumentException like
+    * every other refusal of a bad argument.
+    */
+  final class VersionUnavailableException(table: String, version: Long)
+      extends IllegalArgumentException(s"version $version of $table is " +
+        "missing or incomplete (never committed, vacuumed past the " +
+        "retention horizon, or its writer died mid-commit)")
+
+  /** How long [[ManifestTableStore]]'s write waits, after the write
+    * action returned, for its observed metrics. They arrive through
+    * Spark's listener bus (asynchronous), normally within milliseconds.
+    */
+  private[engine] val ObservationWait =
+    scala.concurrent.duration.Duration(120, "seconds")
+
   /** Per-dir parquet schema cache for committed store dirs.
     *
     * Every writer targets a fresh UUID-stamped dir and a dir is written
@@ -3823,8 +3692,10 @@ object ManifestTableStore {
       */
     def evictUnder(dir: String): Unit = {
       val p = new org.apache.hadoop.fs.Path(dir).toUri.getPath
-      cache.keySet.removeIf(k =>
-        new org.apache.hadoop.fs.Path(k).toUri.getPath.startsWith(p))
+      cache.keySet.removeIf { k =>
+        val kp = new org.apache.hadoop.fs.Path(k).toUri.getPath
+        kp == p || kp.startsWith(p + "/")
+      }
     }
   }
 
