@@ -2222,20 +2222,29 @@ final class StoreCatalog(basePath: String) {
     * resolve the backing table like any table (BI tools see a table);
     * REFRESH advances it:
     *
-    *   - INCREMENTAL when the definition is a single-source
-    *     `GROUP BY <col>` over COUNT/SUM/MIN/MAX (or a pure
-    *     filter/projection) AND the CDF window since the last refresh
-    *     holds only inserts: the refresh reads ONLY
-    *     `readChangeFeed(last, current)` — window-bounded, never the
-    *     100 TB source — aggregates the delta, and combines it into
-    *     the backing table through the keyed merge (count/sum add,
-    *     min/max fold; a pure projection appends). The refresh batch
-    *     id derives from the window's end version in a reserved
+    *   - INCREMENTAL when the definition decomposes
+    *     ([[mvDecompose]]): a row map — Project/Filter legs, one per
+    *     source, under any number of UNION ALLs (one leg without) —
+    *     or a GROUP BY of COUNT/SUM/MIN/MAX/AVG over one. Each source
+    *     has its own CDF window since the last refresh, and the
+    *     refresh reads ONLY `readChangeFeed(start, current)` per moved
+    *     source — window-bounded, never the 100 TB source. The
+    *     definition runs over the windows' rows with every source
+    *     substituted at once: a row map appends the result (insert
+    *     windows only); an aggregate folds its partials through the
+    *     keyed merge — inserts add, deletes (and CoW UPDATE/MERGE,
+    *     which travel as delete+insert pairs) subtract through the
+    *     generated pair columns, and a delete window under MIN/MAX
+    *     recomputes only the touched groups. The refresh batch id
+    *     derives from the windows' end-version SUM in a reserved
     *     namespace, so a crash between the data commit and the
-    *     sidecar update replays into a no-op.
-    *   - FULL RECOMPUTE otherwise (multi-source, non-decomposable
-    *     aggregates, deletes/updates in the window), reported loudly
-    *     in the returned mode row — never a silent wrong answer.
+    *     sidecar update replays into a no-op or recovers loudly.
+    *   - FULL RECOMPUTE otherwise (joins, UNION DISTINCT,
+    *     non-decomposable aggregates, deletes under a row map, and
+    *     every gate: a vacuumed window, a NULL group key, an emptied
+    *     group, a crashed refresh, a pre-pair backing), reported
+    *     loudly in the returned mode row — never a silent wrong
+    *     answer.
     */
   private def mviewPath(name: String): org.apache.hadoop.fs.Path = {
     require(name.forall(c => c.isLetterOrDigit || c == '_' || c == '-'),
@@ -2332,27 +2341,14 @@ final class StoreCatalog(basePath: String) {
     // during the CTAS is neither skipped nor double-counted, the next
     // REFRESH's window covers it once
     val lasts = srcs.map(t => t -> store(t).currentVersion(spark)).toMap
-    mvCtasRewrite.set((lasts, mvFoldExpandFor(spark, text, srcs)))
+    mvCtasRewrite.set((lasts, mvDecompose(spark,
+      spark.sessionState.sqlParser.parsePlan(text), srcs)
+      .exists(_.isRight)))
     try exec(spark, s"CREATE TABLE $name AS $text", batchId)
     finally mvCtasRewrite.remove()
     publishMviewSpec(spark, name, text, lasts)
     spark.emptyDataFrame
   }
-
-  /** Does the decomposer fold this definition incrementally as a
-    * GROUP BY shape? If so the CTAS/REPLACE load must carry the fold
-    * columns the combine works on: a per-group row count (`__rows`,
-    * the emptied-group detector that makes DELETE windows foldable)
-    * plus the sum/count pair per SUM and AVG.
-    */
-  private def mvFoldExpandFor(spark: SparkSession, text: String,
-      srcs: Seq[String]): Boolean =
-    (srcs.size == 1 && mvIncrementalShape(spark, text, srcs.head)
-      .exists {
-        case Right(_) => true
-        case _ => false
-      }) ||
-      (srcs.size > 1 && mvUnionAggShape(spark, text).isDefined)
 
   /** A naked `SELECT *` / `t.*` anywhere in the (view-spliced)
     * definition — stars inside function arguments (COUNT(*)) don't
@@ -2578,7 +2574,7 @@ final class StoreCatalog(basePath: String) {
 
   /** REFRESH MATERIALIZED VIEW [FULL] — returns one row
     * (mode, from_version, to_version) describing what ran:
-    * `current` (nothing to do), `incremental` (CDF window only), or
+    * `current` (nothing to do), `incremental` (CDF windows only), or
     * `full:<reason>` (recompute, saying why). `FULL` forces the
     * recompute unconditionally — the operator's rebuild verb when a
     * backing is suspected stale/corrupt, or to re-snapshot after an
@@ -2588,20 +2584,20 @@ final class StoreCatalog(basePath: String) {
     * to the full recompute LOUDLY — REFRESH never hard-fails on
     * routine source maintenance and never folds wrong numbers
     * silently.
-    */
-  /** Per-(catalog, MV) refresh locks: two streaming feeds driving the
-    * same gold MV (the silver→gold topology runs one change stream per
-    * silver source, each calling REFRESH per trigger) must not
-    * interleave sidecar-read → fold → sidecar-publish. Concurrent
-    * refreshes over the SAME windows are already idempotent (the fold
-    * bid derives from the source version sum), but a source commit
-    * landing between two refreshes' sidecar reads would let the later
-    * fold re-cover the earlier one's window under a NEW bid — a
-    * double-fold. In-JVM serialization closes that for the streaming
-    * topology; cross-process racers still converge through the
-    * applied-tip guard's loud full recompute. JVM-wide (companion
-    * object), keyed by catalog base path + MV name, so two catalog
-    * handles over the same store serialize too.
+    *
+    * Refreshes serialize per (catalog, MV): two streaming feeds
+    * driving the same gold MV (the silver→gold topology runs one
+    * change stream per silver source, each calling REFRESH per
+    * trigger) must not interleave sidecar-read → fold →
+    * sidecar-publish. Concurrent refreshes over the SAME windows are
+    * already idempotent (the fold bid derives from the source version
+    * sum), but a source commit landing between two refreshes' sidecar
+    * reads would let the later fold re-cover the earlier one's window
+    * under a NEW bid — a double-fold. In-JVM serialization closes that
+    * for the streaming topology; cross-process racers still converge
+    * through the applied-tip guard's loud full recompute. JVM-wide
+    * (companion object), keyed by catalog base path + MV name, so two
+    * catalog handles over the same store serialize too.
     */
   private def refreshMaterializedView(spark: SparkSession,
       name: String, forceFull: Boolean = false): DataFrame =
@@ -2611,9 +2607,21 @@ final class StoreCatalog(basePath: String) {
         refreshMaterializedViewLocked(spark, name, forceFull)
       }
 
+  /** The one refresh body, for any number of sources. Each source
+    * has its own CDF window [start, current]; the definition is
+    * applied to the windows' rows with every source substituted at
+    * once (a source whose window is empty reads as empty), and the
+    * result folds into the backing: a row map appends it, an
+    * aggregate merges its partials ([[foldAggPartials]]), and a
+    * delete window under MIN/MAX recomputes only the touched groups.
+    * The row reports the window as version sums.
+    */
   private def refreshMaterializedViewLocked(spark: SparkSession,
       name: String, forceFull: Boolean = false): DataFrame = {
     import spark.implicits._
+    import org.apache.spark.sql.functions.{col => fcol,
+      count => fcount, lit => flit, when => fwhen}
+    import Pin.Pinnable
     val (text, lasts) = mviewSpec(spark, name).getOrElse(
       throw new IllegalArgumentException(
         s"unknown materialized view '$name' (known: " +
@@ -2624,9 +2632,11 @@ final class StoreCatalog(basePath: String) {
         "source tables resolve (dropped or renamed?); DROP the MV or " +
         "recreate the sources")
     val curs = srcs.map(t => t -> store(t).currentVersion(spark)).toMap
-    val foldExpand = mvFoldExpandFor(spark, text, srcs)
-    def currentRow(): DataFrame = Seq(("current", 0L, 0L))
-      .toDF("mode", "from_version", "to_version")
+    val parsed = spark.sessionState.sqlParser.parsePlan(text)
+    val decomposed = mvDecompose(spark, parsed, srcs)
+    val foldExpand = decomposed.exists(_.isRight)
+    def row(mode: String, from: Long, to: Long): DataFrame =
+      Seq((mode, from, to)).toDF("mode", "from_version", "to_version")
     def full(reason: String): DataFrame = {
       mvInternalOp.set(true)
       mvCtasRewrite.set((curs, foldExpand))
@@ -2634,34 +2644,38 @@ final class StoreCatalog(basePath: String) {
         Some(MvRefreshBidBase + curs.values.sum))
       finally { mvInternalOp.set(false); mvCtasRewrite.remove() }
       publishMviewSpec(spark, name, text, curs)
-      Seq((s"full:$reason", 0L, curs.values.max))
-        .toDF("mode", "from_version", "to_version")
+      row(s"full:$reason", 0L, curs.values.max)
     }
     if (forceFull) return full("forced")
-    if (srcs.size != 1) {
-      if (srcs.forall(t => lasts.get(t).contains(curs(t))))
-        return currentRow()
-      return refreshUnionMv(spark, name, text, srcs, lasts, curs,
-        full, currentRow _)
+    // window starts: the sidecar's, unless the backing's reserved
+    // batch ids show a fold whose sidecar publish was lost (a crash
+    // between the two). Those ids encode the version SUM: with one
+    // source the tip IS the applied version, so the window starts
+    // there; with several, the applied windows are recoverable only
+    // when nothing moved since (tip == Σcurrent) — otherwise the
+    // overlap is not provably idempotent and the view recomputes
+    def lastOf(t: String): Long =
+      lasts.find(_._1.equalsIgnoreCase(t)).map(_._2).getOrElse(0L)
+    val sidecarSum = srcs.map(lastOf).sum
+    val tip = mvAppliedTip(spark, name).getOrElse(0L)
+    val starts: Map[String, Long] =
+      if (tip <= sidecarSum) srcs.map(t => t -> lastOf(t)).toMap
+      else if (srcs.size == 1) Map(srcs.head -> tip)
+      else if (tip == curs.values.sum) curs
+      else return full("recovering a crashed multi-source refresh")
+    if (srcs.forall(t => starts(t) >= curs(t))) {
+      // the backing already holds every window; heal a lagging sidecar
+      if (tip > sidecarSum) publishMviewSpec(spark, name, text, starts)
+      return row("current", 0L, 0L)
     }
-    val srcName = srcs.head
-    val toV = curs(srcName)
-    val sidecarFrom = lasts.getOrElse(srcName, 0L)
-    val fromV = math.max(sidecarFrom,
-      mvAppliedTip(spark, name).getOrElse(0L))
-    if (fromV >= toV) {
-      // the backing already folded everything up to toV; if the
-      // sidecar lags (crash between data commit and publish), heal it
-      if (sidecarFrom < fromV)
-        publishMviewSpec(spark, name, text, Map(srcName -> fromV))
-      return currentRow()
-    }
-    val shape = mvIncrementalShape(spark, text, srcName).getOrElse {
-      return full("non-decomposable definition")
-    }
+    val shape = decomposed.getOrElse(return full(
+      if (srcs.size == 1) "non-decomposable definition"
+      else "multi-source definition"))
+    val fromV = starts.values.sum
+    val toV = curs.values.sum
     // an EMPTY backing with a NON-ZERO window start is a crashed full
     // refresh (the REPLACE metadata commit landed, the data load did
-    // not): folding only [fromV, toV] into nothing would silently
+    // not): folding only the windows into nothing would silently
     // resurrect a fraction of the view. Recompute. (A legitimately
     // empty gold table pays a redundant recompute of the same empty
     // answer — correct, and rare.) Metadata-bounded: manifest row
@@ -2673,177 +2687,170 @@ final class StoreCatalog(basePath: String) {
           .getOrElse(
             backingStore.read(spark).isEmpty))
       return full("backing empty at a non-zero window start")
-    val src = store(srcName)
-    // ONE window-bounded feed read; a VACUUMED window (missing
-    // manifest or data dir) degrades to the recompute — a routine
-    // source vacuum must never hard-fail the refresh
-    import org.apache.spark.sql.functions.{col => fcol,
-      count => fcount, lit => flit, when => fwhen}
-    import Pin.Pinnable
-    val deltaAll =
-      try src.readChangeFeed(spark, fromV, toV).pinned
-      catch {
-        case scala.util.control.NonFatal(e) if mvWindowVacuumed(e) =>
-          return full("cdf window vacuumed")
-      }
-    // ONE probe job for both window gates over the pinned feed
+    // ONE window-bounded feed read per moved source; a VACUUMED window
+    // (missing manifest or data dir) degrades to the recompute — a
+    // routine source vacuum must never hard-fail the refresh
+    val feeds: Map[String, DataFrame] =
+      srcs.filter(t => starts(t) < curs(t)).map { t =>
+        t -> (try store(t).readChangeFeed(spark, starts(t), curs(t))
+          .pinned
+        catch {
+          case scala.util.control.NonFatal(e) if mvWindowVacuumed(e) =>
+            return full("cdf window vacuumed")
+        })
+      }.toMap
+    // ONE probe job for both window gates over every pinned feed
     // (guide §2.4: the emptiness and delete probes fuse into a single
-    // aggregate instead of two executeTake passes)
-    val winProbe = deltaAll.agg(
-      fcount(flit(1)).as("n"),
-      fcount(fwhen(fcol("_change_type") =!= "insert", 1)).as("d"))
+    // global aggregate instead of a pass per gate or per source)
+    val winProbe = feeds.values.map(_.select("_change_type"))
+      .reduce(_ union _)
+      .agg(fcount(flit(1)).as("n"),
+        fcount(fwhen(fcol("_change_type") =!= "insert", 1)).as("d"))
       .head()
-    // a window of pure STRUCTURAL commits (evolution markers,
-    // maintenance rewrites) has an empty feed: folding it would
+    // windows of pure STRUCTURAL commits (evolution markers,
+    // maintenance rewrites) have empty feeds: folding them would
     // anti-join every backing dir against an empty key set — a
     // wasted gold-table rewrite. Advance the sidecar and go.
     if (winProbe.getLong(0) == 0L) {
-      publishMviewSpec(spark, name, text, Map(srcName -> toV))
-      return Seq(("incremental", fromV, toV))
-        .toDF("mode", "from_version", "to_version")
+      publishMviewSpec(spark, name, text, curs)
+      return row("incremental", fromV, toV)
     }
     val hasDeletes = winProbe.getLong(1) > 0L
     val bid = MvRefreshBidBase + toV
-    def partial(changeType: String): DataFrame =
-      applyOverDelta(spark, text, srcName,
-        deltaAll.filter(fcol("_change_type") === changeType)
-          .drop("_change_type", "batch_id"), foldExpand)
+    // `plan` over the windows: every source substituted by its feed's
+    // rows of `changeType` (all rows when None), or by an empty read
+    // when its window is empty
+    def overWindows(plan: LogicalPlan,
+        changeType: Option[String]): DataFrame =
+      applyPlanOverDeltas(spark, plan, srcs.map { t =>
+        t -> feeds.get(t).map { f =>
+          changeType.fold(f)(c => f.filter(fcol("_change_type") === c))
+            .drop("_change_type", "batch_id")
+        }.getOrElse(store(t).read(spark).limit(0))
+      }.toMap)
     shape match {
       case Left(()) =>
-        // pure row-map: the transformed delta simply appends; a
-        // delete cannot be expressed as an append
-        if (hasDeletes) return full("deletes in the CDF window")
-        store(name).append(partial("insert"), bid)
+        // a row map: the mapped window rows simply append — the union
+        // of every leg's rows, positionally aligned exactly as the
+        // CTAS was; a delete cannot be expressed as an append
+        if (hasDeletes) return full(
+          if (srcs.size == 1) "deletes in the CDF window"
+          else "deletes in a multi-source window")
+        store(name).append(overWindows(parsed, Some("insert")), bid)
       case Right(MvShape(keys, keyExprs, aggs)) =>
-        // distributive aggregate: fold the delta's partials into the
+        // distributive aggregate: fold the windows' partials into the
         // backing rows. Inserts add; with the retractable pair
         // columns present (COUNT/SUM/AVG shapes), DELETES SUBTRACT —
         // a CoW UPDATE travels as its delete+insert pair and folds
-        // exactly ([[foldAggPartials]], shared with the union-agg
-        // path). The keyed merge rewrites only dirs whose key range
-        // overlaps the delta's groups — stats-bounded,
-        // gold-table-sized, never source-sized.
-        import org.apache.spark.sql.functions.{col => fcol}
-        // MIN/MAX cannot retract — but only groups the window TOUCHED
-        // can change. Recompute exactly those groups from the source
-        // PINNED at the window end and merge them over the backing:
-        // a delete-bearing window costs a group-bounded scan
-        // (broadcast semi-join on the delta's key tuples, plus min/max
-        // dir pruning on bare-column keys), never a gold rebuild. A
-        // group the window EMPTIED vanishes from the recompute — the
-        // keyed merge cannot delete a backing row, so that (rare)
-        // case still recomputes fully, loudly.
+        // exactly ([[foldAggPartials]]). The keyed merge rewrites only
+        // dirs whose key range overlaps the delta's groups —
+        // stats-bounded, gold-table-sized, never source-sized.
+        val expanded = expandFoldPairs(parsed)
         val retractable =
           !aggs.exists(a => a._2 == "min" || a._2 == "max")
-        if (hasDeletes && !retractable) {
+        if (!hasDeletes || retractable) {
+          foldAggPartials(spark, name, keys, aggs,
+            overWindows(expanded, Some("insert")),
+            if (hasDeletes) Some(overWindows(expanded, Some("delete")))
+            else None, bid)
+            .foreach(reason => return full(reason))
+        } else {
+          // MIN/MAX cannot retract — but only groups the windows
+          // TOUCHED can change. Recompute exactly those groups from
+          // every source PINNED at its window end and merge them over
+          // the backing: a delete-bearing window costs a group-bounded
+          // scan (broadcast semi-join on the delta's key tuples, plus
+          // min/max dir pruning on bare-column keys), never a gold
+          // rebuild. A group the windows EMPTIED vanishes from the
+          // recompute — the keyed merge cannot delete a backing row,
+          // so that (rare) case still recomputes fully, loudly.
           import org.apache.spark.sql.catalyst.analysis.{
-            UnresolvedAttribute, UnresolvedStar}
+            UnresolvedAttribute, UnresolvedRelation, UnresolvedStar}
           import org.apache.spark.sql.catalyst.expressions.Alias
           import org.apache.spark.sql.catalyst.plans.logical.{
-            Aggregate, Project, SubqueryAlias}
+            Project, SubqueryAlias}
           import org.apache.spark.sql.functions.{
-            broadcast, lit => flit, max => fmax, min => fmin}
+            broadcast, max => fmax, min => fmin}
           import org.apache.spark.sql.graftshim.PlanShim
-          // the shape's keyExprs/aggExprs name the ROW-MAP's outputs
-          // (the aggregate's child may be a renaming/filtering
-          // subselect: `FROM (SELECT upper(s) AS k, v FROM src)`), so
-          // key extraction and the bounded recompute must compose
-          // THROUGH the row-map — applying keyExprs to the raw delta
-          // would hard-fail on renamed keys or, worse, read a raw
-          // column that shares a declared key's name and bound the
-          // wrong groups
-          val parsedAgg = spark.sessionState.sqlParser
-            .parsePlan(text) match {
-            case a: Aggregate => a
-            case _ => return full("deletes in the window fold past " +
-              "MIN/MAX")
-          }
+          // the shape's keyExprs/aggExprs name the aggregate INPUT's
+          // outputs (a renaming/filtering subselect, or a union of
+          // legs: `FROM (SELECT upper(s) AS k, v FROM src)`), so key
+          // extraction and the bounded recompute compose THROUGH that
+          // input — applying keyExprs to the raw delta would hard-fail
+          // on renamed keys or, worse, read a raw column that shares
+          // a declared key's name and bound the wrong groups
+          val input = parsed.children.head
           def stripAlias(pl: LogicalPlan): LogicalPlan = pl match {
             case sa: SubqueryAlias => stripAlias(sa.child)
             case other => other
           }
-          val childIsBare = stripAlias(parsedAgg.child) match {
-            case _: org.apache.spark.sql.catalyst.analysis
-              .UnresolvedRelation => true
-            case _ => false
-          }
-          def throughRowMap(df: DataFrame): DataFrame =
-            if (childIsBare) df
-            else applyPlanOverDelta(spark, parsedAgg.child, srcName, df)
+          val inputIsBare =
+            stripAlias(input).isInstanceOf[UnresolvedRelation]
           val tmp = keys.indices.map(i => s"__gk$i")
-          // row-map FIRST: a delete touching only rows the MV's WHERE
-          // clause excludes contributes no never-visible groups here,
-          // so it folds incrementally instead of tripping the
-          // emptied-group full rebuild
-          val deltaKeys = PlanShim.ofRows(spark, Project(
-            keyExprs.zip(tmp).map { case (e, n) => Alias(e, n)() },
-            PlanShim.planOf(throughRowMap(
-              deltaAll.drop("_change_type", "batch_id")))))
+          def keyed(rows: DataFrame, star: Boolean): DataFrame =
+            PlanShim.ofRows(spark, Project(
+              (if (star) Seq(UnresolvedStar(None)) else Nil) ++
+                keyExprs.zip(tmp).map { case (e, n) => Alias(e, n)() },
+              PlanShim.planOf(rows)))
+          // through the input FIRST: a delete touching only rows the
+          // MV's WHERE clause excludes contributes no never-visible
+          // groups here, so it folds incrementally instead of
+          // tripping the emptied-group full rebuild
+          val deltaKeys = keyed(overWindows(input, None), star = false)
             .distinct().pinned
           if (!deltaKeys.filter(tmp.map(fcol(_).isNull)
               .reduce(_ || _)).isEmpty)
             return full("null group key in the delta")
           val affectedN = deltaKeys.count()
-          // the recompute reads the source AS OF the window end — a
-          // commit racing this refresh must not leak rows past toV
-          // into the recomputed groups (they fold in the NEXT window)
-          var srcAt = spark.read.format("graft-store")
-            .option("path", src.tablePath)
-            .option("versionAsOf", toV.toString).load()
           // bare-column keys prune source dirs by the affected range
           // BEFORE the join — the manifest's min/max stats make the
           // bounded scan skip every dir outside the delta's key span.
-          // Only valid when the aggregate reads the bare relation: a
-          // row-map child means a keyExpr attribute names the MAP's
+          // Only valid when the aggregate reads one bare relation: a
+          // row-map input means a keyExpr attribute names the MAP's
           // output, not a raw source column
-          val bare = if (!childIsBare) Seq.empty[Int]
+          val bare = if (!inputIsBare) Seq.empty[Int]
           else keys.indices.filter(i => keyExprs(i) match {
             case a: UnresolvedAttribute => a.nameParts.size == 1
             case _ => false
           })
-          if (bare.nonEmpty) {
-            val spans = bare.flatMap(i =>
-              Seq(fmin(fcol(tmp(i))), fmax(fcol(tmp(i)))))
-            val mm = deltaKeys.agg(spans.head, spans.tail: _*).head()
-            bare.zipWithIndex.foreach { case (i, j) =>
-              val (lo, hi) = (mm.get(2 * j), mm.get(2 * j + 1))
-              val sc = keyExprs(i)
-                .asInstanceOf[UnresolvedAttribute].nameParts.head
-              if (lo != null && hi != null)
-                srcAt = srcAt.filter(
-                  fcol(sc) >= flit(lo) && fcol(sc) <= flit(hi))
+          val keySpans: Seq[org.apache.spark.sql.Column] =
+            if (bare.isEmpty) Nil
+            else {
+              val spans = bare.flatMap(i =>
+                Seq(fmin(fcol(tmp(i))), fmax(fcol(tmp(i)))))
+              val mm = deltaKeys.agg(spans.head, spans.tail: _*).head()
+              bare.zipWithIndex.flatMap { case (i, j) =>
+                val (lo, hi) = (mm.get(2 * j), mm.get(2 * j + 1))
+                val sc = keyExprs(i)
+                  .asInstanceOf[UnresolvedAttribute].nameParts.head
+                if (lo == null || hi == null) None
+                else Some(fcol(sc) >= flit(lo) && fcol(sc) <= flit(hi))
+              }
             }
-          }
-          val srcKeyed = PlanShim.ofRows(spark, Project(
-            UnresolvedStar(None) +:
-              keyExprs.zip(tmp).map { case (e, n) => Alias(e, n)() },
-            PlanShim.planOf(throughRowMap(srcAt))))
+          // each source reads AS OF its window end — a commit racing
+          // this refresh must not leak rows past it into the
+          // recomputed groups (they fold in the NEXT window)
+          val asOfEnds = srcs.map { t =>
+            val at =
+              if (curs(t) <= 0L) store(t).read(spark).limit(0)
+              else spark.read.format("graft-store")
+                .option("path", store(t).tablePath)
+                .option("versionAsOf", curs(t).toString).load()
+            t -> keySpans.foldLeft(at)(_ filter _)
+          }.toMap
           // broadcast only a broadcast-SIZED key set; a delete wave
           // touching millions of groups semi-joins by shuffle instead
           // of OOMing the driver
           val dk = if (affectedN <= 1000000L) broadcast(deltaKeys)
             else deltaKeys
-          val bounded = srcKeyed
+          val bounded = keyed(
+            applyPlanOverDeltas(spark, input, asOfEnds), star = true)
             .join(dk, tmp, "left_semi")
             .drop(tmp: _*)
-          // bare child: re-apply the full definition over the bounded
-          // raw rows. Row-map child: `bounded` already passed through
-          // the map, so apply only the (pair-expanded) AGGREGATE —
-          // re-applying the full text would run the map twice
-          val recomputed = (if (childIsBare)
-            applyOverDelta(spark, text, srcName, bounded, foldExpand)
-          else {
-            val expanded =
-              if (foldExpand) expandFoldPairs(parsedAgg)
-              else parsedAgg
-            val agg = expanded match {
-              case a: Aggregate => a
-              case _ => return full("deletes in the window fold " +
-                "past MIN/MAX")
-            }
-            PlanShim.ofRows(spark,
-              agg.copy(child = PlanShim.planOf(bounded)))
-          }).pinned
+          // the (pair-expanded) aggregate over the bounded input rows
+          val recomputed = PlanShim.ofRows(spark,
+            expanded.withNewChildren(Seq(PlanShim.planOf(bounded))))
+            .pinned
           // vintage gate: the recomputed groups carry the generated
           // pair columns; a backing that predates them upgrades
           // through ONE full recompute
@@ -2854,32 +2861,23 @@ final class StoreCatalog(basePath: String) {
           if (recomputed.count() < affectedN)
             return full("a group emptied in the window")
           store(name).merge(spark, recomputed, keys, bid)
-          publishMviewSpec(spark, name, text, Map(srcName -> toV))
-          return Seq(("incremental", fromV, toV))
-            .toDF("mode", "from_version", "to_version")
         }
-        val insA = partial("insert")
-        val delA0 =
-          if (hasDeletes) Some(partial("delete")) else None
-        foldAggPartials(spark, name, keys, aggs, insA, delA0, bid)
-          .foreach(reason => return full(reason))
     }
-    publishMviewSpec(spark, name, text, Map(srcName -> toV))
-    Seq(("incremental", fromV, toV))
-      .toDF("mode", "from_version", "to_version")
+    publishMviewSpec(spark, name, text, curs)
+    row("incremental", fromV, toV)
   }
 
   /** Fold one window's aggregate PARTIALS into an MV's backing via
-    * the keyed merge — the combine step shared by the single-source
-    * fold and the aggregate-over-UNION-ALL fold. `insA` / `delA0`
-    * are the definition (pair-expanded) applied to the window's
-    * insert / delete rows. Inserts add; deletes subtract through the
-    * retractable pair columns (`__rows`, `<a>__cnt`, avg's pair),
-    * the served AVG recomputes from the FOLDED pair, and a SUM whose
-    * non-null count reaches zero serves NULL, not 0. Returns
-    * Some(reason) when the fold must degrade to a loud full
-    * recompute (vintage gate, MIN/MAX under deletes, a NULL group
-    * key, an emptied group); None when the merge committed.
+    * the keyed merge. `insA` / `delA0` are the definition
+    * (pair-expanded) applied to the windows' insert / delete rows.
+    * Inserts add; deletes subtract through the retractable pair
+    * columns (`__rows`, `<a>__cnt`, avg's pair), the served AVG
+    * recomputes from the FOLDED pair, and a SUM whose non-null count
+    * reaches zero serves NULL, not 0. MIN/MAX fold inserts only (a
+    * delete window under them takes the group-bounded recompute).
+    * Returns Some(reason) when the fold must degrade to a loud full
+    * recompute (vintage gate, a NULL group key, an emptied group);
+    * None when the merge committed.
     */
   private def foldAggPartials(spark: SparkSession, name: String,
       keys: Seq[String], aggs: Seq[(String, String)],
@@ -2901,8 +2899,6 @@ final class StoreCatalog(basePath: String) {
     val retractable =
       !aggs.exists(a => a._2 == "min" || a._2 == "max")
     val hasDeletes = delA0.isDefined
-    if (hasDeletes && !retractable)
-      return Some("deletes in the window fold past MIN/MAX")
     val net0 =
       if (!hasDeletes) insA
       else {
@@ -2998,189 +2994,13 @@ final class StoreCatalog(basePath: String) {
     None
   }
 
-  /** Incremental refresh of a MULTI-SOURCE materialized view, for
-    * the two multi-source shapes that decompose:
-    *
-    *  - **UNION ALL of row-map legs**, each over a single source
-    *    ([[mvUnionLegs]] — the reference's own silver model): each
-    *    moved source's insert-only delta transforms through ITS leg
-    *    and appends; any delete recomputes fully (appends cannot
-    *    retract a row-map).
-    *  - **An aggregate over such a union** ([[mvUnionAggShape]] —
-    *    gold over silver-union): one pair-expanded partial per
-    *    change type with every source substituted by its window's
-    *    rows at once, folded through [[foldAggPartials]] — deletes
-    *    retract through the pair columns like the single-source path.
-    *
-    * Both commit under ONE batch id derived from the version SUM (a
-    * crashed refresh replayed over unchanged sources is an
-    * idempotent no-op). If any source advanced between a crashed
-    * data commit and its sidecar publish, the overlap is no longer
-    * provably idempotent — that (rare) case recomputes fully,
-    * loudly. Joins and UNION DISTINCT keep the full-recompute
-    * fallback.
-    */
-  private def refreshUnionMv(spark: SparkSession, name: String,
-      text: String, srcs: Seq[String], lasts: Map[String, Long],
-      curs: Map[String, Long], full: String => DataFrame,
-      currentRow: () => DataFrame): DataFrame = {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col => fcol}
-    import Pin.Pinnable
-    // the two decomposable multi-source shapes: a bare UNION ALL of
-    // row-map legs (append fold) or an AGGREGATE over one (partial
-    // fold through foldAggPartials). A leg over a VIEW names the
-    // view, not a store — only direct store legs fold.
-    def legsOverStores(ls: Seq[(String, LogicalPlan)]): Boolean =
-      ls.forall { case (t, _) => srcs.exists(_.equalsIgnoreCase(t)) }
-    val rowMapLegs = mvUnionLegs(spark, text).filter(legsOverStores)
-    val aggShape =
-      if (rowMapLegs.isDefined) None
-      else mvUnionAggShape(spark, text)
-        .filter(s => legsOverStores(s._2))
-    if (rowMapLegs.isEmpty && aggShape.isEmpty)
-      return full("multi-source definition")
-    def curOf(t: String): Long =
-      curs.find(_._1.equalsIgnoreCase(t)).map(_._2).getOrElse(0L)
-    def lastOf(t: String): Long =
-      lasts.find(_._1.equalsIgnoreCase(t)).map(_._2).getOrElse(0L)
-    val sidecarSum = srcs.map(lastOf).sum
-    val cursSum = curs.values.sum
-    val tip = mvAppliedTip(spark, name).getOrElse(0L)
-    if (tip > sidecarSum) {
-      // crash between the union fold's data commit and its sidecar
-      // publish: if NOTHING moved since, the backing already holds
-      // exactly the current windows — heal the sidecar and go; if a
-      // source moved, the already-applied overlap is not recoverable
-      // per source from the version sum — recompute, loudly
-      if (tip == cursSum) {
-        publishMviewSpec(spark, name, text, curs)
-        return currentRow()
-      }
-      return full("recovering a crashed multi-source refresh")
-    }
-    val bid = MvRefreshBidBase + cursSum
-    // per-source windows, each feed read ONCE; vacuumed windows
-    // degrade to the recompute exactly like the single-source path
-    val pinnedFeeds: Seq[(String, DataFrame)] = srcs.flatMap { t =>
-      val from = lastOf(t)
-      val to = curOf(t)
-      if (from >= to) None
-      else {
-        val feed =
-          try store(t).readChangeFeed(spark, from, to).pinned
-          catch {
-            case scala.util.control.NonFatal(e)
-                if mvWindowVacuumed(e) =>
-              return full("cdf window vacuumed")
-          }
-        Some(t -> feed)
-      }
-    }
-    // ONE probe job across EVERY window (guide §2.4): per-feed row and
-    // non-insert counts over the already-pinned blocks, replacing an
-    // emptiness probe plus a delete probe per moved source
-    import org.apache.spark.sql.functions.{count => fcount,
-      lit => flit, when => fwhen}
-    val feedCounts: Map[String, (Long, Long)] =
-      if (pinnedFeeds.isEmpty) Map.empty
-      else pinnedFeeds.map { case (t, f) =>
-        f.select(flit(t).as("__t"), fcol("_change_type"))
-      }.reduce(_ union _)
-        .groupBy("__t")
-        .agg(fcount(flit(1)).as("n"),
-          fcount(fwhen(fcol("_change_type") =!= "insert", 1)).as("d"))
-        .collect()
-        .map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-        .toMap
-    val movedFeeds: Map[String, DataFrame] = pinnedFeeds.filter {
-      case (t, _) => feedCounts.get(t).exists(_._1 > 0L)
-    }.toMap
-    def feedOf(srcT: String): Option[DataFrame] =
-      movedFeeds.find(_._1.equalsIgnoreCase(srcT)).map(_._2)
-    val hasDeletes = feedCounts.values.exists(_._2 > 0L)
-    rowMapLegs match {
-      case Some(legs) =>
-        if (hasDeletes)
-          return full("deletes in a multi-source window")
-        val parts = legs.flatMap { case (srcT, leg) =>
-          feedOf(srcT).map(feed =>
-            applyPlanOverDelta(spark, leg, srcT,
-              feed.filter(fcol("_change_type") === "insert")
-                .drop("_change_type", "batch_id")))
-        }
-        if (parts.nonEmpty) {
-          // positional alignment: a leg's OWN output names (the
-          // union's column names come from the first leg) must land
-          // on the backing's columns by position, as the CTAS did
-          val backCols =
-            store(name).read(spark).drop("batch_id").columns.toSeq
-          val unioned = parts.map(_.toDF(backCols: _*))
-            .reduce(_ union _).pinned
-          if (!unioned.isEmpty)
-            store(name).append(unioned, bid)
-        }
-      case None =>
-        // aggregate over the union: ONE partial per change type —
-        // every source substituted at once (its window's rows, or
-        // empty when unmoved), the definition pair-expanded exactly
-        // as the backing was materialized, folded through the shared
-        // combine. Deletes subtract through the retractable pairs;
-        // MIN/MAX under deletes, null keys, emptied groups, and
-        // pre-pair vintages degrade to the loud full recompute.
-        val (shape, _) = aggShape.get
-        val parsed = expandFoldPairs(
-          spark.sessionState.sqlParser.parsePlan(text))
-        def partialU(changeType: String): DataFrame =
-          applyPlanOverDeltas(spark, parsed, srcs.map { t =>
-            t -> feedOf(t)
-              .map(_.filter(fcol("_change_type") === changeType)
-                .drop("_change_type", "batch_id"))
-              .getOrElse(store(t).read(spark).limit(0))
-          }.toMap)
-        if (movedFeeds.nonEmpty) {
-          val delA0 =
-            if (hasDeletes) Some(partialU("delete")) else None
-          foldAggPartials(spark, name, shape.keys, shape.aggs,
-            partialU("insert"), delA0, bid)
-            .foreach(reason => return full(reason))
-        }
-    }
-    publishMviewSpec(spark, name, text, curs)
-    Seq(("incremental", sidecarSum, cursSum))
-      .toDF("mode", "from_version", "to_version")
-  }
-
-  /** The MV definition applied to the DELTA instead of the source:
-    * the parsed text with the source relation substituted by the
-    * (already-analyzed) delta frame — count/sum/min/max over a
-    * row-disjoint union decompose, so the same query over the delta
-    * yields exactly the partial the combine step folds in.
-    */
-  private def applyOverDelta(spark: SparkSession, text: String,
-      srcName: String, delta: org.apache.spark.sql.DataFrame,
-      avgExpand: Boolean): org.apache.spark.sql
-      .DataFrame = {
-    val parsed0 = spark.sessionState.sqlParser.parsePlan(text)
-    // the delta partial must carry the same expanded columns the
-    // backing table holds (avg's sum/count pair)
-    val parsed = if (avgExpand) expandFoldPairs(parsed0) else parsed0
-    applyPlanOverDelta(spark, parsed, srcName, delta)
-  }
-
-  /** One (possibly leg-of-a-union) parsed definition plan applied to
-    * the DELTA instead of its source: the source relation substituted
-    * by the already-analyzed delta frame.
-    */
-  private def applyPlanOverDelta(spark: SparkSession,
-      plan: LogicalPlan, srcName: String,
-      delta: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame =
-    applyPlanOverDeltas(spark, plan, Map(srcName -> delta))
-
-  /** [[applyPlanOverDelta]] with SEVERAL sources substituted at once —
-    * the aggregate-over-union fold swaps every source for its window
-    * delta (empty for unmoved sources) in one pass.
+  /** A parsed definition plan (or its aggregate's input) with every
+    * named source relation substituted by an already-analyzed frame,
+    * all at once: the CDF windows' rows for the fold — count/sum/
+    * min/max over a row-disjoint union decompose, so the same query
+    * over the windows yields exactly the rows or partials the fold
+    * combines — or the sources AS OF their window ends for the
+    * group-bounded recompute.
     */
   private def applyPlanOverDeltas(spark: SparkSession,
       plan: LogicalPlan,
@@ -3201,9 +3021,9 @@ final class StoreCatalog(basePath: String) {
   }
 
   /** A decomposable GROUP BY shape: the key OUTPUT column names, the
-    * SOURCE-side expression each key computes (a bare attribute or
+    * INPUT-side expression each key computes (a bare attribute or
     * the aliased expression — what the group-bounded recompute
-    * re-applies over the source), plus the aliased aggregates
+    * re-applies over the aggregate's input), plus the aliased aggregates
     * (`fn` ∈ count|sum|min|max|avg; avg folds through its
     * `<alias>__sum`/`<alias>__cnt` pair).
     */
@@ -3214,7 +3034,7 @@ final class StoreCatalog(basePath: String) {
   /** Expression GROUP BY keys must be DETERMINISTIC over the source —
     * the fold re-applies them over the delta and the partials must
     * land on the same groups a full recompute produces. Probed
-    * through the analyzer against the live source schema
+    * through the analyzer against the aggregate's routed input
     * (metadata-only, no job); anything that fails analysis fails the
     * probe and REFRESH recomputes fully. Time-dependent "constants"
     * (current_date/current_timestamp) carry deterministic=true yet
@@ -3242,7 +3062,7 @@ final class StoreCatalog(basePath: String) {
     } catch { case scala.util.control.NonFatal(_) => false })
 
   /** AVG decomposes only when its argument resolves to a NON-decimal
-    * numeric over the source: the fold serves `sum/count` as a double
+    * numeric over the aggregate's input: the fold serves `sum/count` as a double
     * ratio, bit-exact for long/double partial sums but able to drift
     * from Spark's exact decimal average. Analysis-only probe, no job.
     */
@@ -3275,140 +3095,67 @@ final class StoreCatalog(basePath: String) {
       case _ => false
     })
 
-  /** Is `pl` a pure per-row Project/Filter chain over the single
-    * source `srcName`? Row-disjoint unions commute with per-row maps,
-    * so a delta transformed through the same chain appends exactly.
+  /** Is `pl` a per-row map over the stores `srcs`: Project/Filter
+    * chains and UNION ALLs down to relations that name sources?
+    * Row-disjoint unions commute with per-row maps, so the definition
+    * applied to the windows' rows — every source substituted at once
+    * — yields exactly the rows to append. A union of such legs is
+    * one too (the reference's own silver model is a two-source union
+    * of per-row maps — BA:150-162 = BA:256-268), and a plan without a
+    * UNION ALL is its one-leg case. `UNION` (distinct) parses as
+    * Distinct(Union) and fails: dedup does not commute with appends;
+    * a leg over a VIEW names the view, not a store, and fails too.
     */
-  private def mvIsRowMap(pl: LogicalPlan, srcName: String): Boolean =
+  private def mvIsRowMap(pl: LogicalPlan, srcs: Seq[String]): Boolean =
     pl match {
       case u: org.apache.spark.sql.catalyst.analysis
           .UnresolvedRelation =>
         u.multipartIdentifier.size == 1 &&
-          u.multipartIdentifier.head.equalsIgnoreCase(srcName)
+          srcs.exists(_.equalsIgnoreCase(u.multipartIdentifier.head))
       case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-        mvNoWindows(Seq(f.condition)) && mvIsRowMap(f.child, srcName)
+        mvNoWindows(Seq(f.condition)) && mvIsRowMap(f.child, srcs)
       case pr: org.apache.spark.sql.catalyst.plans.logical.Project =>
-        mvNoWindows(pr.projectList) && mvIsRowMap(pr.child, srcName)
+        mvNoWindows(pr.projectList) && mvIsRowMap(pr.child, srcs)
       case s: org.apache.spark.sql.catalyst.plans.logical
-          .SubqueryAlias => mvIsRowMap(s.child, srcName)
+          .SubqueryAlias => mvIsRowMap(s.child, srcs)
+      case u: org.apache.spark.sql.catalyst.plans.logical.Union
+          if !u.byName => u.children.forall(mvIsRowMap(_, srcs))
       case _ => false
     }
 
-  /** The UNION ALL decomposition of a multi-source MV definition, if
-    * it has one: each leg a row-map over exactly one source (the
-    * reference's own silver model is a two-source union of per-row
-    * maps — BA:150-162 = BA:256-268). Per-source CDF windows then
-    * fold independently: each leg's insert-only delta transforms
-    * through ITS map and appends. `UNION` (distinct) parses as
-    * Distinct(Union) and correctly fails the probe — dedup does not
-    * commute with appends.
+  /** The one decomposition of a (parsed) MV definition over its
+    * sources: Left(()) = a row map ([[mvIsRowMap]]) whose window rows
+    * append; Right(MvShape) = a GROUP BY over a row map whose outputs
+    * are the key columns plus aliased COUNT/SUM/MIN/MAX/AVG
+    * aggregates, whose window partials fold into the backing. Keys
+    * may be several columns, group-by aliases (`GROUP BY day`),
+    * ordinals (`GROUP BY 1, 2`), or deterministic scalar expressions
+    * (`date_trunc('day', ts)`) — the realistic gold shapes; the
+    * key/AVG analysis probes resolve against the routed row map (its
+    * output, not the raw source, is what the aggregate reads).
+    * Anything else — joins, windows, DISTINCT, FILTER clauses,
+    * subqueries, non-deterministic keys, decimal AVG — returns None
+    * and REFRESH recomputes fully, saying so.
     */
-  private def mvUnionLegs(spark: SparkSession, text: String)
-      : Option[Seq[(String, LogicalPlan)]] = {
-    val p = try spark.sessionState.sqlParser.parsePlan(text)
-      catch { case scala.util.control.NonFatal(_) => return None }
-    if (p.subqueriesAll.nonEmpty) return None
-    mvUnionLegsOf(p)
-  }
+  private def mvDecompose(spark: SparkSession, parsed: LogicalPlan,
+      srcs: Seq[String]): Option[Either[Unit, MvShape]] =
+    parsed match {
+      case _ if parsed.subqueriesAll.nonEmpty => None
+      case org.apache.spark.sql.catalyst.plans.logical.Aggregate(
+          groupExprs, aggExprs, child, _) =>
+        if (!mvIsRowMap(child, srcs)) None
+        else mvAggShapeOf(spark, groupExprs, aggExprs,
+          StoreSql.route(spark, tables, child)).map(Right(_))
+      case other =>
+        if (mvIsRowMap(other, srcs)) Some(Left(())) else None
+    }
 
-  /** [[mvUnionLegs]] over an already-parsed plan node. */
-  private def mvUnionLegsOf(p0: LogicalPlan)
-      : Option[Seq[(String, LogicalPlan)]] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedRelation
-    import org.apache.spark.sql.catalyst.plans.logical.{
-      SubqueryAlias, Union}
-    def flat(pl: LogicalPlan): Seq[LogicalPlan] = pl match {
-      case u: Union if !u.byName => u.children.flatMap(flat)
-      case other => Seq(other)
-    }
-    // `FROM (a UNION ALL b)` wraps the union in a subquery alias
-    def strip(pl: LogicalPlan): LogicalPlan = pl match {
-      case s: SubqueryAlias => strip(s.child)
-      case other => other
-    }
-    val p = strip(p0)
-    p match {
-      case u: Union if !u.byName =>
-        val legs = flat(u).map { leg =>
-          leg.collect {
-            case r: UnresolvedRelation
-                if r.multipartIdentifier.size == 1 =>
-              r.multipartIdentifier.head
-          } match {
-            case Seq(one) if mvIsRowMap(leg, one) => Some(one -> leg)
-            case _ => None
-          }
-        }
-        if (legs.exists(_.isEmpty)) None else Some(legs.flatten)
-      case _ => None
-    }
-  }
-
-  /** The aggregate-over-UNION-ALL decomposition, if the definition
-    * has one: `SELECT keys, aggs FROM (leg ∪ leg ∪ …) GROUP BY keys`
-    * where every leg is a row-map over one source — the realistic
-    * gold-over-silver-union shape (the reference's silver IS a
-    * two-source union; a gold aggregate over it is the natural next
-    * MV). The union of per-source deltas is row-disjoint from the
-    * backing's inputs, so the SAME distributive fold the
-    * single-source path uses applies: partials from the delta union,
-    * combined through [[foldAggPartials]]. Key/avg analysis probes
-    * resolve against the routed union (legs' output schema).
-    */
-  private def mvUnionAggShape(spark: SparkSession, text: String)
-      : Option[(MvShape, Seq[(String, LogicalPlan)])] = {
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    val p = try spark.sessionState.sqlParser.parsePlan(text)
-      catch { case scala.util.control.NonFatal(_) => return None }
-    if (p.subqueriesAll.nonEmpty) return None
-    p match {
-      case Aggregate(groupExprs, aggExprs, child, _) =>
-        for {
-          legs <- mvUnionLegsOf(child)
-          shape <- mvAggShapeOf(spark, groupExprs, aggExprs,
-            StoreSql.route(spark, tables, child))
-        } yield (shape, legs)
-      case _ => None
-    }
-  }
-
-  /** The decomposable shape of an MV definition, if it has one:
-    * Left(()) = pure Project/Filter row-map over the single source
-    * (delta rows append through the same map); Right(MvShape) =
-    * GROUP BY over the source whose outputs are the key columns plus
-    * aliased COUNT/SUM/MIN/MAX/AVG aggregates (delta partials fold
-    * into backing). Keys may be several columns, group-by aliases
-    * (`GROUP BY day`), ordinals (`GROUP BY 1, 2`), or deterministic
-    * scalar expressions (`date_trunc('day', ts)`) — the realistic
-    * gold shapes. Anything else — joins, windows, DISTINCT, FILTER
-    * clauses, subqueries, non-deterministic keys, decimal AVG —
-    * returns None and REFRESH recomputes fully, saying so.
-    */
-  private def mvIncrementalShape(spark: SparkSession, text: String,
-      srcName: String)
-      : Option[Either[Unit, MvShape]] = {
-    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
-    val p = spark.sessionState.sqlParser.parsePlan(text)
-    if (p.subqueriesAll.nonEmpty) return None
-    def isRowMap(pl: LogicalPlan): Boolean = mvIsRowMap(pl, srcName)
-    p match {
-      case Aggregate(groupExprs, aggExprs, child, _)
-          if isRowMap(child) =>
-        mvAggShapeOf(spark, groupExprs, aggExprs,
-          org.apache.spark.sql.graftshim.PlanShim.planOf(
-            store(srcName).read(spark))).map(Right(_))
-      case other if isRowMap(other) => Some(Left(()))
-      case _ => None
-    }
-  }
-
-  /** The foldable GROUP BY analysis shared by the single-source and
-    * the aggregate-over-UNION-ALL decomposers: map every GROUP BY
+  /** The decomposer's GROUP BY analysis: map every GROUP BY
     * expression to its output item, require every remaining item to
     * be an aliased foldable aggregate, refuse generated-name
     * collisions and non-deterministic keys. `probePlan` supplies the
     * relation the key/avg analysis probes resolve against (the
-    * single source's read, or the analyzed union).
+    * aggregate's routed input).
     */
   private def mvAggShapeOf(spark: SparkSession,
       groupExprs: Seq[org.apache.spark.sql.catalyst.expressions

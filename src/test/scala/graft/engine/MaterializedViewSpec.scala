@@ -6,10 +6,11 @@ import graft.SparkSpec
 
 /** Materialized gold views with CDF-incremental REFRESH: a real store
   * table + a definition sidecar; REFRESH folds the change-data-feed
-  * window into the backing table when the definition decomposes
-  * (single-source GROUP BY over COUNT/SUM/MIN/MAX, or a pure
-  * filter/projection) and the window is insert-only — otherwise it
-  * recomputes fully and SAYS so in the returned mode row.
+  * windows into the backing table when the definition decomposes (a
+  * row map — filter/projection legs under UNION ALL, one leg without
+  * — or a GROUP BY of COUNT/SUM/MIN/MAX/AVG over one, for any number
+  * of sources) — otherwise it recomputes fully and SAYS so in the
+  * returned mode row.
   */
 class MaterializedViewSpec extends SparkSpec {
 
@@ -639,6 +640,64 @@ class MaterializedViewSpec extends SparkSpec {
       == "incremental")
     assert(cat.query(spark, "SELECT total FROM fmv WHERE k = 'b'")
       .as[Long].head() == 7L)
+  }
+
+  test("a crashed full refresh of a MULTI-SOURCE aggregate (empty " +
+      "backing, stale sidecar) recovers by FULL recompute through the " +
+      "same gate as one source — never a fold into the emptied " +
+      "backing") {
+    val (cat, _) = freshCat()
+    cat.exec(spark,
+      "CREATE TABLE xa (k STRING, n BIGINT) USING graft_store")
+    cat.exec(spark,
+      "CREATE TABLE xb (k STRING, n BIGINT) USING graft_store")
+    cat.exec(spark, "INSERT INTO xa VALUES ('a', 1), ('b', 2)",
+      batchId = Some(0L))
+    cat.exec(spark, "INSERT INTO xb VALUES ('a', 30)",
+      batchId = Some(0L))
+    val defn = "SELECT k, COUNT(*) AS cnt, SUM(n) AS total FROM (" +
+      "SELECT k, n FROM xa UNION ALL SELECT k, n FROM xb) GROUP BY k"
+    cat.exec(spark, s"CREATE MATERIALIZED VIEW xmv AS $defn",
+      batchId = Some(100L))
+    // the mid-full-refresh failpoint: REPLACE retired every backing
+    // row, the data load never ran, the sidecar claims the old windows
+    val backing = cat.resolve(spark, "xmv").get
+    backing.replaceSchema(spark,
+      backing.read(spark).drop("batch_id").schema, Nil)
+    assert(backing.countRows(spark).contains(0L))
+    cat.exec(spark, "INSERT INTO xb VALUES ('c', 5)",
+      batchId = Some(1L))
+    val r = cat.exec(spark, "REFRESH MATERIALIZED VIEW xmv")
+    assert(modeOf(r) ==
+      "full:backing empty at a non-zero window start",
+      r.collect().mkString)
+    def asMap(q: String) = cat.query(spark, q).collect()
+      .map(x => x.getString(0) -> (x.getLong(1), x.getLong(2))).toMap
+    assert(asMap("SELECT k, cnt, total FROM xmv") == asMap(defn))
+    assert(asMap(defn) == Map("a" -> ((2L, 31L)), "b" -> ((1L, 2L)),
+      "c" -> ((1L, 5L))))
+  }
+
+  test("AVG over a column a subselect renames folds incrementally: " +
+      "the decomposer probes the aggregate's input, not the raw " +
+      "source") {
+    val (cat, _) = freshCat()
+    cat.exec(spark,
+      "CREATE TABLE ar (k STRING, v BIGINT) USING graft_store")
+    cat.exec(spark, "INSERT INTO ar VALUES ('a', 1), ('b', 4)",
+      batchId = Some(0L))
+    val defn = "SELECT k2, COUNT(*) AS c, AVG(w) AS m FROM (" +
+      "SELECT upper(k) AS k2, v AS w FROM ar) t GROUP BY k2"
+    cat.exec(spark, s"CREATE MATERIALIZED VIEW amv AS $defn",
+      batchId = Some(100L))
+    cat.exec(spark, "INSERT INTO ar VALUES ('a', 6), ('c', 2)",
+      batchId = Some(1L))
+    val r = cat.exec(spark, "REFRESH MATERIALIZED VIEW amv")
+    assert(modeOf(r) == "incremental", r.collect().mkString)
+    def asMap(q: String) = cat.query(spark, q).collect()
+      .map(x => x.getString(0) -> (x.getLong(1), x.getDouble(2))).toMap
+    assert(asMap("SELECT k2, c, m FROM amv") == asMap(defn))
+    assert(asMap(defn)("A") == ((2L, 3.5)))
   }
 
   test("width is pinned at CREATE: a naked SELECT * refuses (top " +
