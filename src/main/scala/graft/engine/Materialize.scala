@@ -220,8 +220,10 @@ object Materialize {
     val lock = locks.computeIfAbsent(key, _ => new Object)
     lock.synchronized {
       if (f.exists(ptr)) return readPtr()
+      // not dot-hidden: the published artifact IS this dir, and Spark
+      // warns "All paths were ignored" on every read of a hidden path
       val stage = new HPath(rootDir,
-        s".stage-$name-$dirH-$verH-${java.util.UUID.randomUUID()}")
+        s"stage-$name-$dirH-$verH-${java.util.UUID.randomUUID()}")
       build.write.mode("overwrite").parquet(stage.toString)
       if (AtomicCreate.publish(f, ptr, stage.toString.getBytes(UTF_8))) {
         gc(f, rootDir, name, dirH, keepVerH = verH)
@@ -256,8 +258,9 @@ object Materialize {
           f.delete(new HPath(data), true)
           f.delete(st.getPath, false)
         }
-        // orphaned staging dirs of dead builders (never published)
-        if (n.startsWith(s".stage-$name-$dirH-") &&
+        // orphaned staging dirs of dead builders (never published),
+        // including those named before staging dirs lost their dot
+        if (n.stripPrefix(".").startsWith(s"stage-$name-$dirH-") &&
             st.getModificationTime < cutoff)
           f.delete(st.getPath, true)
       }

@@ -349,21 +349,12 @@ final class ManifestTableStore(path: String,
 
   /** [[collectStats]] over an arbitrary frame — the shared core, also
     * used by [[refreshStats]] to recompute a dir's stats through the
-    * snapshot's rename projection.
+    * snapshot's rename projection. The per-dir row count (Iceberg
+    * records this in every manifest entry) is a parquet
+    * footer-metadata count, so [[countRows]] and [[history]] answer
+    * without touching data regardless of stats configuration.
     */
-  private def collectStatsOf(df: DataFrame): String =
-    // per-dir row count (Iceberg records this in every manifest entry):
-    // a parquet footer-metadata count on EVERY commit, so [[countRows]]
-    // and [[history]] answer without touching data regardless of stats
-    // configuration.
-    collectStatsOfCounted(df, df.count())
-
-  /** [[collectStatsOf]] with the row count supplied by the caller
-    * (the write job's observation) — partitioned writes read back for
-    * min/max and bloom but never re-count.
-    */
-  private def collectStatsOfCounted(df: DataFrame, count: Long)
-      : String = {
+  private def collectStatsOf(df: DataFrame): String = {
     val present = statsEligibleIn(df.schema)
     val minMax =
       if (present.isEmpty) Nil
@@ -376,7 +367,7 @@ final class ManifestTableStore(path: String,
         present.indices.map(i =>
           (row.getString(2 * i), row.getString(2 * i + 1)))
       }
-    statsJsonFrom(df.schema, present, minMax, count, Some(() => df))
+    statsJsonFrom(df.schema, present, minMax, df.count(), Some(() => df))
   }
 
   /** Shared serializer behind the read-back, observe-based and
@@ -641,24 +632,22 @@ final class ManifestTableStore(path: String,
   // rows being written), a violation deletes the dir and throws —
   // the batch never existed.
 
-  /** Write one data dir and return its manifest stats JSON. For
-    * unpartitioned dirs the count and min/max aggregates ride the
-    * write job itself (`observe`, guide §1.2/§6): commit stats
-    * describe exactly the rows the write streamed out with no second
-    * read of the dir — at 100 TB ingest this removes a full re-read
-    * of every committed stats column. Bloom bitsets (a grouped
-    * aggregation observe cannot express) still read the written dir,
-    * so only bloom-indexed tables pay any post-write read at all.
-    * Partitioned dirs keep the read-back path: their subdir layout and
-    * re-inferred partition-column types must be reflected exactly.
+  /** Write one data dir and return its manifest stats JSON. The row
+    * count and min/max aggregates ride the write job itself (`observe`,
+    * guide §1.2/§6): commit stats describe exactly the rows the write
+    * streamed out with no second read of the dir — at 100 TB ingest
+    * this removes a full re-read of every committed stats column.
+    * Bloom bitsets (a grouped aggregation observe cannot express)
+    * still read the written dir, so only bloom-indexed tables pay any
+    * post-write read at all. The dir reads back with the schema
+    * written here ([[putSchema]]), partition columns included, so the
+    * observed values are the values readers see.
     */
   private def write(df0: DataFrame, dir: String): String = {
-    // a rewrite of a dir whose partition column held ONLY nulls reads
-    // back VOID-typed (hive inference over a lone
-    // __HIVE_DEFAULT_PARTITION__ dir name carries no type) and a void
-    // partition column refuses to write — cast to string, which is
-    // type-neutral on disk (partition values live in dir names and
-    // re-infer on read)
+    // a void column (a NULL-literal partition value, or a rewrite of a
+    // dir whose null-only partition column inferred as void) refuses
+    // to be a partition column — cast to string, which is type-neutral
+    // on disk (partition values live in dir names)
     val df = partitionBy.foldLeft(df0) { (d, c) =>
       if (d.schema.fields.exists(fld => fld.name.equalsIgnoreCase(c) &&
           fld.dataType == org.apache.spark.sql.types.NullType))
@@ -666,17 +655,11 @@ final class ManifestTableStore(path: String,
       else d
     }
     val spark = df.sparkSession
-    // the row count and every check-constraint violation count ride
-    // the write job itself in BOTH branches (observe): the observed
-    // rows ARE the rows written, and a violation deletes the dir and
-    // throws exactly like the read-back gate did. Unpartitioned dirs
-    // additionally fold their min/max stats in; partitioned dirs keep
-    // min/max and bloom on the read-back path — partition-column
-    // types re-infer from dir names and the recorded stats node types
-    // must follow what readers will see.
+    // every check-constraint violation count rides the observation
+    // too: the observed rows ARE the rows written, and a violation
+    // deletes the dir and throws
     val checks = listChecks(spark)
-    val present =
-      if (partitionBy.isEmpty) statsEligibleIn(df.schema) else Nil
+    val present = statsEligibleIn(df.schema)
     val obs = org.apache.spark.sql.Observation()
     val aggs = (count(lit(1)).as("__cnt") +: present.flatMap { c =>
       val dt = df.schema(c).dataType
@@ -686,37 +669,22 @@ final class ManifestTableStore(path: String,
       count(when(!expr(pred), 1)).as(s"__chk_$i")
     }
     val observed = df.observe(obs, aggs.head, aggs.tail: _*)
-    if (partitionBy.isEmpty) {
-      observed.write.mode("overwrite").parquet(dir)
-      ManifestTableStore.DirSchemas.put(dir, df.schema)
-    } else {
+    if (partitionBy.isEmpty) observed.write.mode("overwrite").parquet(dir)
+    else
       // cluster rows by their partition values before the hive write
-      // (guide §6 small-files; Iceberg's hash distribution-mode):
-      // each partition dir then receives files from one task instead
-      // of one file per (input task × partition value) — at 100 TB
-      // that is the difference between file counts scaling with data
-      // and with tasks×values. AQE coalesces the exchange to the data
-      // size; a single enormous partition value is the documented
-      // trade-off of hash mode (same as Iceberg's).
-      observed.repartition(partitionBy.map(col): _*)
+      // (guide §6 small-files; Iceberg's hash distribution-mode): each
+      // partition dir then receives files from few tasks instead of
+      // one file per (input task × partition value). REBALANCE rather
+      // than a plain hash repartition: AQE coalesces small values AND
+      // splits one dominant value across tasks, so a skewed batch
+      // does not funnel through a single writer.
+      observed.hint("rebalance", partitionBy.map(col): _*)
         .write.mode("overwrite").partitionBy(partitionBy: _*)
         .parquet(dir)
-      // a PARTITIONED write of zero rows lays down no part files at
-      // all (there are no partition values to create dirs for),
-      // leaving a dir whose schema cannot be inferred — re-write
-      // inline so every committed dir is a readable (possibly empty)
-      // table. Reached when a rewrite empties a whole dir (e.g.
-      // dynamic partition overwrite replacing every partition a dir
-      // held).
-      val f = new HPath(dir).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      val it = f.listFiles(new HPath(dir), true)
-      var hasData = false
-      while (!hasData && it.hasNext)
-        hasData = it.next().getPath.getName.endsWith(".parquet")
-      if (!hasData)
-        df.limit(0).write.mode("overwrite").parquet(dir)
-    }
+    // before the footer count below: a zero-row partitioned write lays
+    // down no part files, and only the recorded schema makes such a
+    // dir readable (as empty)
+    putSchema(spark, dir, df.schema)
     // bounded: the observation completes asynchronously once the write
     // action's listener event lands; a Spark change that never completes
     // it must fail this write loudly, not hang it
@@ -756,17 +724,21 @@ final class ManifestTableStore(path: String,
             s"$violations row(s); the batch was not committed")
       }
     }
-    val cnt = mLong("__cnt")
-    if (partitionBy.isEmpty) {
-      val minMax = present.map(c => (mStr(s"__mn_$c"), mStr(s"__mx_$c")))
-      statsJsonFrom(df.schema, present, minMax, cnt,
-        Some(() => ManifestTableStore.DirSchemas.read(spark, dir)))
-    } else if (statsColumns.nonEmpty || bloomColumns.nonEmpty)
-      collectStatsOfCounted(
-        ManifestTableStore.DirSchemas.read(spark, dir), cnt)
-    else
-      statsJsonFrom(df.schema, Nil, Nil, cnt, None)
+    val minMax = present.map(c => (mStr(s"__mn_$c"), mStr(s"__mx_$c")))
+    statsJsonFrom(df.schema, present, minMax, mLong("__cnt"),
+      Some(() => ManifestTableStore.DirSchemas.read(spark, dir)))
   }
+
+  /** Make `schema` the read schema of the fresh dir `dir` (before it
+    * is committed). A hive-partitioned dir also records it on disk
+    * ([[ManifestTableStore.DirSchemas.record]]): its partition values
+    * live in dir names, which inference would re-type ("007" → 7).
+    * An unpartitioned dir's footer is exact, so the cache suffices.
+    */
+  private def putSchema(spark: SparkSession, dir: String,
+      schema: org.apache.spark.sql.types.StructType): Unit =
+    if (partitionBy.isEmpty) ManifestTableStore.DirSchemas.put(dir, schema)
+    else ManifestTableStore.DirSchemas.record(fs(spark), dir, schema)
 
   override def append(df: DataFrame, batchId: Long): Unit = synchronized {
     require(batchId >= 0, // negative ids are reserved (delete entries)
@@ -1699,16 +1671,9 @@ final class ManifestTableStore(path: String,
     guardInheritedId(f, batchId)
     val snap = current(f)
     if (snap.has(batchId)) return
-    val sp = new HPath(stagedDir, StagedStatsFile)
-    val stats =
-      if (f.exists(sp)) {
-        val st = f.getFileStatus(sp)
-        val in = f.open(sp)
-        try {
-          val buf = new Array[Byte](st.getLen.toInt)
-          in.readFully(buf); new String(buf, "UTF-8")
-        } finally in.close()
-      } else collectStats(spark, stagedDir)
+    val stats = AtomicCreate.readString(f,
+      new HPath(stagedDir, StagedStatsFile))
+      .getOrElse(collectStats(spark, stagedDir))
     commitEntry(f, snap, Entry(batchId, stagedDir, stats))(!_.has(batchId))
   }
 
@@ -1863,26 +1828,30 @@ final class ManifestTableStore(path: String,
     val snap = current(f)
     snap.requireNoDeletes("compactClustered")
     if (snap.isEmpty) return
-    val base = s"$path/data/cluster-${java.util.UUID.randomUUID()}"
     val clustered = snap.read(spark) // drops materialize here
       .repartitionByRange(buckets, col(clusterBy))
       .withColumn("__cluster", spark_partition_id())
-    val w = clustered.write.mode("overwrite")
-    w.partitionBy("__cluster" +: partitionBy: _*).parquet(base)
-    commitBuckets(spark, f, snap, base)
+    commitBuckets(spark, f, snap, clustered, "cluster")
   }
 
-  /** Commit a clustered rewrite's hive `__cluster=k` output dirs under
-    * `base`, each as an independent manifest dir with its own stats,
-    * through [[commitRewrite]]. Every batch id of the snapshot stays
-    * present for replay checks (the id→dir association is void after
-    * the rewrite, as with [[compact]]).
+  /** Write a clustered rewrite as hive `__cluster=k` output dirs under
+    * a fresh `data/<kind>-<uuid>` base (table partitions nested
+    * inside), and commit each as an independent manifest dir with its
+    * own stats and recorded schema, through [[commitRewrite]]. Every
+    * batch id of the snapshot stays present for replay checks (the
+    * id→dir association is void after the rewrite, as with
+    * [[compact]]).
     */
   private def commitBuckets(spark: SparkSession, f: FileSystem,
-      snap: Snapshot, base: String): Unit = {
+      snap: Snapshot, clustered: DataFrame, kind: String): Unit = {
+    val base = s"$path/data/$kind-${java.util.UUID.randomUUID()}"
+    clustered.write.mode("overwrite")
+      .partitionBy("__cluster" +: partitionBy: _*).parquet(base)
     val dirs = f.listStatus(new HPath(base)).map(_.getPath)
       .collect { case p if p.getName.startsWith("__cluster=") => p.toString }
       .sorted.toSeq
+    val schema = clustered.drop("__cluster").schema
+    dirs.foreach(putSchema(spark, _, schema))
     val stats = dirs.map(d => d -> collectStats(spark, d)).toMap
     commitRewrite(f, snap, { es =>
       val ids = es.map(_.batchId).distinct
@@ -1947,14 +1916,11 @@ final class ManifestTableStore(path: String,
     val zExpr = (0 until bitsPer).flatMap(b => (0 until n).map(i =>
       s"(cast((__r$i >> $b) & 1 as bigint) << ${b * n + i})"))
       .mkString(" + ")
-    val base = s"$path/data/zorder-${java.util.UUID.randomUUID()}"
     val clustered = ranked.withColumn("__z", expr(zExpr))
       .repartitionByRange(buckets, col("__z"))
       .withColumn("__cluster", spark_partition_id())
       .drop(("__z" +: (0 until n).map(i => s"__r$i")): _*)
-    clustered.write.mode("overwrite")
-      .partitionBy("__cluster" +: partitionBy: _*).parquet(base)
-    commitBuckets(spark, f, snap, base)
+    commitBuckets(spark, f, snap, clustered, "zorder")
   }
 
   /** Copy-on-write row-level DELETE (Iceberg CoW delete / Delta DELETE,
@@ -3632,14 +3598,23 @@ object ManifestTableStore {
     * per statement is exactly the metadata cost manifest formats exist
     * to avoid (the manifest, not the files, is the schema authority —
     * Iceberg's contract). Serving the cached schema via
-    * `spark.read.schema(...)` skips inference entirely; the miss path
-    * reads one footer driver-side (single-write dirs make
-    * merge-vs-single-footer equivalent). Entries for vacuumed dirs
-    * simply go cold — UUID names are never reused.
+    * `spark.read.schema(...)` skips inference entirely. Writers pre-fill
+    * the cache, and a hive-partitioned dir also carries its writer
+    * schema on disk ([[record]]): inference would re-type its
+    * partition columns from dir names, so the record is what makes the
+    * reader's schema the writer's in every process. The miss path reads
+    * the record, else one footer driver-side (single-write dirs make
+    * merge-vs-single-footer equivalent; unpartitioned footers are
+    * exact, and partitioned dirs committed before records existed keep
+    * inference). Entries for vacuumed dirs simply go cold — UUID names
+    * are never reused.
     */
   private[engine] object DirSchemas {
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType,
+      StructType}
     private val cache = new java.util.concurrent.ConcurrentHashMap[
-      String, org.apache.spark.sql.types.StructType]()
+      String, StructType]()
     // growth bound for a long-lived driver: entries are (path,
     // schema) pairs — tiny — but a process hosting millions of
     // commits should not grow without limit; a full clear is safe
@@ -3650,31 +3625,44 @@ object ManifestTableStore {
     // makes the process-wide key sound.
     private val MaxEntries = 100000
     def read(spark: SparkSession, dir: String): DataFrame = {
-      val hit = cache.get(dir)
-      if (hit ne null) spark.read.schema(hit).parquet(dir)
-      else {
-        val df = spark.read.parquet(dir)
-        put(dir, df.schema)
-        df
+      val known = Option(cache.get(dir)).orElse {
+        val f = new HPath(dir).getFileSystem(
+          spark.sparkContext.hadoopConfiguration)
+        AtomicCreate.readString(f, new HPath(dir, SchemaFile)).map { json =>
+          val recorded = DataType.fromJson(json).asInstanceOf[StructType]
+          put(dir, recorded)
+          recorded
+        }
+      }
+      known match {
+        case Some(schema) => spark.read.schema(schema).parquet(dir)
+        case None =>
+          val df = spark.read.parquet(dir)
+          put(dir, df.schema)
+          df
       }
     }
-    /** Pre-fill from the WRITER (unpartitioned dirs only — their
-      * read-back schema is the written schema modulo nullability):
-      * the first read of a fresh dir then skips the one-task footer
-      * inference job Spark runs per uncached parquet scan — at 100 TB
-      * ingest, one job per committed dir.
+    /** Pre-fill from the WRITER: the first read of a fresh dir then
+      * skips the one-task footer inference job Spark runs per uncached
+      * parquet scan — at 100 TB ingest, one job per committed dir.
       */
-    def put(dir: String,
-        schema: org.apache.spark.sql.types.StructType): Unit = {
+    def put(dir: String, schema: StructType): Unit = {
       if (cache.size >= MaxEntries) cache.clear()
-      cache.put(dir, allNullable(schema)
-        .asInstanceOf[org.apache.spark.sql.types.StructType])
+      cache.put(dir, readSchema(schema))
     }
+    /** [[put]], plus the schema published into `dir` as [[SchemaFile]]
+      * for every later process — called before `dir` is committed.
+      */
+    def record(f: FileSystem, dir: String, schema: StructType): Unit = {
+      AtomicCreate.publish(f, new HPath(dir, SchemaFile),
+        readSchema(schema).json.getBytes("UTF-8"))
+      put(dir, schema)
+    }
+    private def readSchema(schema: StructType): StructType =
+      allNullable(schema).asInstanceOf[StructType]
     // parquet read-back reports every field nullable — the cached
     // writer schema must match what inference would have returned
-    private def allNullable(dt: org.apache.spark.sql.types.DataType)
-        : org.apache.spark.sql.types.DataType = {
-      import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+    private def allNullable(dt: DataType): DataType = {
       dt match {
         case st: StructType => StructType(st.fields.map(f => f.copy(
           dataType = allNullable(f.dataType), nullable = true)))
@@ -3691,9 +3679,9 @@ object ManifestTableStore {
       * UUID-stamped dirs never come back, so this is pure reclamation.
       */
     def evictUnder(dir: String): Unit = {
-      val p = new org.apache.hadoop.fs.Path(dir).toUri.getPath
+      val p = new HPath(dir).toUri.getPath
       cache.keySet.removeIf { k =>
-        val kp = new org.apache.hadoop.fs.Path(k).toUri.getPath
+        val kp = new HPath(k).toUri.getPath
         kp == p || kp.startsWith(p + "/")
       }
     }
@@ -3741,6 +3729,11 @@ object ManifestTableStore {
     * prefix: parquet readers ignore it, so audits see only data).
     */
   private[engine] val StagedStatsFile = "_graft_stats.json"
+
+  /** A hive-partitioned dir's writer schema ([[DirSchemas.record]];
+    * underscore prefix: parquet listing skips it).
+    */
+  private[engine] val SchemaFile = "_graft_schema.json"
 
   private[engine] sealed trait SVal
   private[engine] final case class NumV(v: java.math.BigDecimal) extends SVal

@@ -107,6 +107,43 @@ class ManifestTableStoreSpec extends SparkSpec {
       .forall(_.getString(0).contains("source=rapid7")))
   }
 
+  test("partition columns read back with the writer's type: STRING " +
+      "'007' stays '007', a later non-numeric value still reads, and " +
+      "a date-like string stays STRING") {
+    import org.apache.spark.sql.types.StringType
+    val store = new ManifestTableStore(tmp("manifest-ptype-").toString,
+      partitionBy = Seq("p"))
+    def values(): Set[String] = {
+      val df = store.read(spark)
+      assert(df.schema("p").dataType == StringType, df.schema)
+      df.select("p").as[String].collect().toSet
+    }
+    store.append(Seq(("007", 1)).toDF("p", "n"), 0L)
+    assert(values() == Set("007"))
+    store.append(Seq(("x", 2)).toDF("p", "n"), 1L)
+    assert(values() == Set("007", "x"))
+    store.append(Seq(("2024-01-01", 3)).toDF("p", "n"), 2L)
+    assert(values() == Set("007", "x", "2024-01-01"))
+  }
+
+  test("a dominant partition value is split across write tasks") {
+    // REBALANCE under AQE: with a tiny advisory size the one hot value
+    // (99% of rows, from 4 map tasks) is written by several tasks, so
+    // its subdir holds more than one part file
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1k")
+    val root = tmp("manifest-skew-")
+    val store = new ManifestTableStore(root.toString,
+      partitionBy = Seq("p"))
+    store.append(s.range(0, 20000, 1, 4).selectExpr(
+      "if(id % 100 = 0, 'rare', 'hot') as p", "id as n"), 0L)
+    val hotFiles = Files.walk(root.resolve("data")).filter(f =>
+      f.getParent.getFileName.toString == "p=hot" &&
+        f.getFileName.toString.endsWith(".parquet")).count()
+    assert(hotFiles > 1, "the hot value was written by one task")
+    assert(store.read(spark).count() == 20000L)
+  }
+
   test("time travel: readVersion sees the table as of each commit; " +
       "vacuum removes dirs unreferenced by the retention horizon") {
     val root = tmp("manifest-tt-")

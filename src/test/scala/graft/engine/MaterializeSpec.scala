@@ -10,7 +10,8 @@ import graft.SparkSpec
 /** Cluster-grade contract of the [[Materialize]] index-artifact layer:
   * shared-root placement, build-once reuse, version-keyed invalidation
   * when a corpus changes in place, and same-key build deduplication
-  * across threads (the round-4 verdict's three findings).
+  * across threads (the round-4 verdict's three findings); plus
+  * readable (not dot-hidden) artifact dirs and orphan reaping.
   */
 class MaterializeSpec extends SparkSpec {
 
@@ -90,6 +91,30 @@ class MaterializeSpec extends SparkSpec {
       })), 2.minutes)
       assert(builds.get() == 1, s"expected one build, got ${builds.get()}")
       assert(counts.distinct.size == 1)
+    }
+  }
+
+  test("the published artifact dir is not dot-hidden, and a publish " +
+      "reaps old orphaned staging dirs under the current and the " +
+      "legacy dotted name") {
+    withRoot {
+      val corpus = mkCorpus()
+      val root = Paths.get(spark.conf.get("graft.materialize.root"))
+      val dirH = java.security.MessageDigest.getInstance("SHA-256")
+        .digest(corpus.toString.getBytes("UTF-8"))
+        .take(4).map(b => f"$b%02x").mkString
+      val orphans = Seq(".stage", "stage").map { prefix =>
+        val d = Files.createDirectories(
+          root.resolve(s"$prefix-spec_g-$dirH-dead-builder"))
+        d.toFile.setLastModified(System.currentTimeMillis() - 7200000L)
+        d
+      }
+      val published = Materialize.path(spark, "spec_g", corpus.toString)(
+        spark.read.parquet(s"$corpus/t.parquet"))
+      assert(Paths.get(published).getFileName.toString
+        .startsWith("stage-spec_g-"), published)
+      orphans.foreach(d => assert(!Files.exists(d), s"orphan kept: $d"))
+      assert(spark.read.parquet(published).count() == 100L)
     }
   }
 }

@@ -5,17 +5,20 @@ import java.sql.Timestamp
 
 import graft.SparkSpec
 
-/** The write job now folds commit stats in via `observe` (count,
-  * min/max; checks too) instead of re-reading the just-written dir.
-  * This spec pins EXACT parity with the read-back collector:
-  * `refreshStats` recomputes every data dir's stats through the
-  * read-back path (`collectStatsOf` over the committed bytes), so an
-  * append followed by a stats refresh must leave every manifest stats
-  * string BYTE-identical — min/max normalization (timestamps as epoch
-  * micros), bloom bitsets, row counts, JSON field order, NaN-column
-  * skipping, all of it. Plus: the staged-stats sidecar is invisible to
-  * audit reads and serves publish; zero-row markers prune like the
-  * job-computed empty stats always did.
+/** The write job folds commit stats in via `observe` (count, min/max;
+  * checks too) instead of re-reading the just-written dir, for
+  * unpartitioned and partitioned tables alike. This spec pins EXACT
+  * parity with the read-back collector: `refreshStats` recomputes every
+  * data dir's stats through the read-back path (`collectStatsOf` over
+  * the committed bytes), so an append followed by a stats refresh must
+  * leave every manifest stats string BYTE-identical — min/max
+  * normalization (timestamps as epoch micros), bloom bitsets, row
+  * counts, JSON field order, NaN-column skipping, partition columns
+  * read back through the recorded writer schema, all of it. A job
+  * count pins that stats columns add no job to a partitioned append.
+  * Plus: the staged-stats sidecar is invisible to audit reads and
+  * serves publish; zero-row markers prune like the job-computed empty
+  * stats always did.
   */
 class ObserveStatsSpec extends SparkSpec {
 
@@ -71,6 +74,79 @@ class ObserveStatsSpec extends SparkSpec {
     // and the stats actually carry content (not two empty strings)
     assert(observed.values.forall(_.contains("\"__n__\"")))
     assert(observed.values.exists(_.contains("\"__bloom__\"")))
+  }
+
+  test("partitioned append stats (a partition column, a data column, " +
+      "bloom) are byte-identical to a cold read-back recompute") {
+    val root = tmp("obs-part-parity")
+    val store = new ManifestTableStore(root.toString,
+      partitionBy = Seq("p"), statsColumns = Seq("p", "v"),
+      bloomColumns = Seq("v"), bloomBits = 1 << 10)
+    store.append(Seq(("007", "w3"), ("010", "w9"), ("007", "w5"))
+      .toDF("p", "v"), 0L)
+    // a null-only partition column: no min/max entry for it
+    store.append(Seq((null.asInstanceOf[String], "w1")).toDF("p", "v"), 1L)
+    val observed = manifestStats(root)
+    assert(observed.size == 2)
+    // the recompute reads the dirs back through their recorded schema
+    ManifestTableStore.DirSchemas.evictUnder(root.toString)
+    store.refreshStats(spark)
+    val recomputed = manifestStats(root)
+    assert(recomputed.keySet == observed.keySet)
+    observed.foreach { case (dir, json) =>
+      assert(recomputed(dir) == json,
+        s"observe-path stats diverge from read-back for $dir:\n" +
+          s"observe : $json\nreadback: ${recomputed(dir)}")
+    }
+    // the partition column's stats are the written STRING values
+    assert(observed.values.exists(_.contains(
+      "\"p\":{\"min\":\"007\",\"max\":\"010\"}")), observed)
+    assert(observed.values.forall(_.contains("\"__bloom__\"")))
+  }
+
+  /** Spark jobs started while `body` runs. A marker job submitted after
+    * it drains the listener bus: events arrive in submission order.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "obs-jobs-marker"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      Iterator.continually(
+        seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { d =>
+          assert(d != null, "listener bus stalled")
+          d != marker
+        }.size
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a partitioned append with stats columns runs exactly as many " +
+      "Spark jobs as the same append without them") {
+    def jobsOfSecondAppend(statsColumns: Seq[String]): Int = {
+      val store = new ManifestTableStore(tmp("obs-jobs").toString,
+        partitionBy = Seq("p"), statsColumns = statsColumns)
+      store.append(Seq(("a", 1L)).toDF("p", "v"), 0L)
+      jobsDuring(store.append(
+        Seq(("a", 2L), ("b", 3L)).toDF("p", "v"), 1L))
+    }
+    val bare = jobsOfSecondAppend(Nil)
+    val withStats = jobsOfSecondAppend(Seq("p", "v"))
+    assert(bare > 0)
+    assert(withStats == bare,
+      s"stats columns cost ${withStats - bare} extra job(s)")
   }
 
   test("staged sidecar: invisible to the audit read, serves publish " +

@@ -93,6 +93,19 @@ class StoreOverwriteSpec extends SparkSpec {
       "the null partition must replace, not duplicate")
   }
 
+  test("dynamic overwrite of a leading-zero STRING partition replaces " +
+      "its old rows") {
+    val p = Files.createTempDirectory("ovw007-")
+    p.toFile.deleteOnExit()
+    val store = new ManifestTableStore(p.toString,
+      partitionBy = Seq("p"))
+    store.append(Seq(("007", "old"), ("010", "kept")).toDF("p", "k"), 0L)
+    store.overwritePartitions(Seq(("007", "new")).toDF("p", "k"), 1L)
+    assert(store.read(spark).selectExpr("cast(p as string)", "k")
+      .as[(String, String)].collect().toSet ==
+      Set(("007", "new"), ("010", "kept")))
+  }
+
   test("full-table overwrite replaces everything in one commit and " +
       "conflicts with a concurrent write instead of clobbering it") {
     val store = partStore()

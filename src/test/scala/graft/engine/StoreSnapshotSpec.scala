@@ -107,6 +107,39 @@ class StoreSnapshotSpec extends SparkSpec {
     assert(store.read(spark).filter("batch_id = 1").isEmpty)
   }
 
+  test("a cold schema cache (a fresh process) reads partitioned dirs " +
+      "with the writer's types: after an append, after " +
+      "compactClustered, and for a provably-empty commit") {
+    val root = tmp("snap-cold-")
+    val store = new ManifestTableStore(root.toString,
+      partitionBy = Seq("p"))
+    def coldRead(): DataFrame = {
+      ManifestTableStore.DirSchemas.evictUnder(root.toString)
+      store.read(spark)
+    }
+    def codes(): Set[String] = {
+      val df = coldRead()
+      assert(df.schema("p").dataType == StringType, df.schema)
+      df.select("p").as[String].collect().toSet
+    }
+    store.append(Seq(("007", 1L), ("010", 2L)).toDF("p", "n"), 0L)
+    assert(codes() == Set("007", "010"))
+    // no part files at all: only the recorded schema makes it readable
+    store.append(Seq(("b", 3L)).toDF("p", "n").filter(lit(false)), 1L)
+    import scala.jdk.CollectionConverters._
+    val emptyDir = Files.list(root.resolve("data")).iterator().asScala
+      .find(_.getFileName.toString.startsWith("batch-1-")).get.toString
+    ManifestTableStore.DirSchemas.evictUnder(root.toString)
+    val empty = ManifestTableStore.DirSchemas.read(spark, emptyDir)
+    assert(empty.isEmpty)
+    assert(empty.schema.map(f => f.name -> f.dataType).toSet ==
+      Set("p" -> StringType, "n" -> LongType, "batch_id" -> LongType))
+    assert(coldRead().count() == 2L)
+    store.compactClustered(spark, "n", 2)
+    assert(codes() == Set("007", "010"))
+    assert(coldRead().count() == 2L)
+  }
+
   test("schema-cache eviction matches on a path boundary: evicting " +
       "batch-1 keeps its sibling batch-10 cached") {
     val root = tmp("snap-evict-")

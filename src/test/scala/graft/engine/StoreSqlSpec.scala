@@ -388,6 +388,22 @@ class StoreSqlSpec extends SparkSpec {
       .select($"n".cast("double")).as[Double].head() == 3.7)
   }
 
+  test("a STRING partition column keeps its leading zeros through SQL " +
+      "INSERT and SELECT, and a later non-numeric value commits") {
+    val base = Files.createTempDirectory("sqlpart-")
+    base.toFile.deleteOnExit()
+    val cat = new StoreCatalog(base.toString)
+    cat.exec(spark, "CREATE TABLE t (code STRING, v BIGINT) " +
+      "USING graft_store PARTITIONED BY (code)")
+    cat.exec(spark, "INSERT INTO t VALUES ('007', 1), ('010', 2)",
+      batchId = Some(0L))
+    def codes(): Seq[Any] = cat.query(spark,
+      "SELECT code FROM t ORDER BY code").collect().map(_.get(0)).toSeq
+    assert(codes() == Seq("007", "010"))
+    cat.exec(spark, "INSERT INTO t VALUES ('A1', 3)", batchId = Some(1L))
+    assert(codes() == Seq("007", "010", "A1"))
+  }
+
   test("OPTIMIZE t WHERE pred scopes the small-file merge to " +
       "stats-admitted dirs: out-of-scope dirs carry forward " +
       "byte-identical, rows survive exactly, WHERE+ZORDER refuses") {
