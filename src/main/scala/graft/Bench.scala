@@ -159,10 +159,12 @@ object Bench {
     // stop the session BEFORE printing so the JSON line is the last
     // stdout payload — no Spark shutdown logging can interleave after
     // it (the round-16 artifact tail was unparseable for exactly this
-    // class of reason)
-    spark.stop()
-    println(line)
-    System.out.flush()
+    // class of reason); a failing stop still prints the line
+    try spark.stop()
+    finally {
+      println(line)
+      System.out.flush()
+    }
     if (failed.nonEmpty) {
       failed.foreach { case (n, m) => System.err.println(s"BENCH FAILURE $n: $m") }
       sys.exit(1)

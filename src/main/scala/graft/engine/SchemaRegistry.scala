@@ -157,12 +157,22 @@ final class SchemaRegistry(
     else base
   }
 
+  /** The text lines of a folder artifact's part files, read
+    * driver-side through the Hadoop FileSystem: the artifact is one
+    * small part file, and a Spark text scan would run a job per read.
+    */
+  private def artifactLines(dir: String): Seq[String] =
+    FsCatalog.listFilesRecursive(dir, hconf).map(_.path).sorted
+      .flatMap { p =>
+        val hp = new org.apache.hadoop.fs.Path(p)
+        AtomicCreate.readString(hp.getFileSystem(hconf), hp)
+      }.flatMap(_.linesIterator)
+
   /** First parseable JSON line wins (reference `:117-126`). */
   def readState(topic: String): TopicState = {
     if (!FsCatalog.exists(stateDir(topic), hconf)) return TopicState(topic)
-    spark.read.text(stateDir(topic)).collect().view
-      .map(_.getString(0))
-      .filter(v => v != null && v.trim.nonEmpty)
+    artifactLines(stateDir(topic)).view
+      .filter(_.trim.nonEmpty)
       .flatMap(v => Try(stateFromJson(v)).toOption)
       .headOption
       .getOrElse(TopicState(topic))
@@ -184,8 +194,7 @@ final class SchemaRegistry(
   /** Persisted schema for a topic, if any. */
   def readSchema(topic: String): Option[StructType] = {
     if (!FsCatalog.exists(schemaDir(topic), hconf)) return None
-    spark.read.text(schemaDir(topic)).collect().view
-      .map(_.getString(0)).filter(_.trim.nonEmpty)
+    artifactLines(schemaDir(topic)).view.filter(_.trim.nonEmpty)
       .flatMap(v => Try(
         org.apache.spark.sql.types.DataType.fromJson(v)
           .asInstanceOf[StructType]).toOption)

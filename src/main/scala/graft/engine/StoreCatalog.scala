@@ -2886,7 +2886,8 @@ final class StoreCatalog(basePath: String) {
     import org.apache.spark.sql.functions.{
       coalesce, col => fcol, count => fcount, greatest, least, lit, when}
     import Pin.Pinnable
-    val backing = store(name).read(spark).drop("batch_id")
+    val backingStore = store(name)
+    val backing = backingStore.read(spark).drop("batch_id")
     val bCols = backing.columns.map(_.toLowerCase).toSet
     val avgAliases = aggs.collect { case (a, "avg") => a }
     val sumAliases = aggs.collect { case (a, "sum") => a }
@@ -2978,19 +2979,22 @@ final class StoreCatalog(basePath: String) {
     //    DELETE a backing row (rare: a whole gold group vanishing in
     //    one window).
     // Both degrade to the loud full recompute; reason precedence is
-    // preserved.
+    // preserved. The keyed merge's key-bounds aggregate rides the same
+    // job: it reads the same pinned frame.
     val nullkC = fcount(when(keys.map(fcol(_).isNull)
       .reduce(_ || _), 1)).as("nullk")
     val probeCols =
       if (retractable)
         Seq(nullkC, fcount(when(fcol("__rows") === 0, 1)).as("empt"))
       else Seq(nullkC)
-    val probe = combined.agg(probeCols.head, probeCols.tail: _*).head()
+    val aggCols = probeCols ++ backingStore.mergeBoundCols(combined, keys)
+    val probe = combined.agg(aggCols.head, aggCols.tail: _*).head()
     if (probe.getLong(0) > 0L)
       return Some("null group key in the delta")
     if (retractable && probe.getLong(1) > 0L)
       return Some("a group emptied in the window")
-    store(name).mergePinned(spark, combined, keys, bid)
+    backingStore.mergePinned(spark, combined, keys, bid,
+      org.apache.spark.sql.Row.fromSeq(probe.toSeq.drop(probeCols.size)))
     None
   }
 

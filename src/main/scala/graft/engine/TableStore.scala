@@ -1769,8 +1769,7 @@ final class ManifestTableStore(path: String,
     * snapshot rows). Returns false on abort so callers can surface it:
     * maintenance ops may shrug (re-running compact is free), but
     * row-level DML must NOT report success for a write that never
-    * happened — [[rewriteDirs]] propagates this and delete/update/merge
-    * throw.
+    * happened — [[commitDml]] turns it into a throw for every DML.
     */
   private def commitRewrite(f: FileSystem, base: Snapshot,
       rewrite: Seq[Entry] => Seq[Entry]): Boolean = {
@@ -2010,15 +2009,19 @@ final class ManifestTableStore(path: String,
   /** Keyed MERGE (Delta `MERGE INTO` with whenMatched=replace,
     * whenNotMatched=insert): every table row whose `key` appears in
     * `source` is replaced by the source row; source rows with no match
-    * are inserted. Executed copy-on-write in ONE commit: dirs whose
-    * recorded `key` min/max cannot intersect the source's key range
-    * carry forward untouched; each touched dir is rewritten with a
-    * broadcast LEFT ANTI join against the (small) source key set — the
+    * are inserted. Executed copy-on-write in ONE commit that writes ONE
+    * dir: dirs whose recorded `key` min/max cannot intersect the
+    * source's key range carry forward untouched; the touched dirs'
+    * rows, broadcast LEFT ANTI joined against the (small) source key
+    * set, and the source rows go to a single new dir, which every
+    * touched entry and `batchId` then point at (the representation
+    * [[compact]] uses for a dir holding several batch ids). This is the
     * upsert shape of a streaming CDC apply, where `source` is a
     * micro-batch and the table is 100 TB: rewrite cost scales with the
-    * dirs the delta actually lands in, not table size. The inserted
-    * source rows commit under `batchId` with fresh stats; a replayed
-    * `batchId` is refused exactly like [[append]].
+    * dirs the delta actually lands in, not table size, and a merge
+    * whose keys span every dir leaves one dir behind instead of
+    * growing the table by one dir per merge. A replayed `batchId` is
+    * refused exactly like [[append]].
     */
   def merge(spark: SparkSession, source: DataFrame, key: String,
       batchId: Long): Unit = merge(spark, source, Seq(key), batchId)
@@ -2032,20 +2035,22 @@ final class ManifestTableStore(path: String,
     */
   def merge(spark: SparkSession, source: DataFrame, keys: Seq[String],
       batchId: Long): Unit =
-    mergeImpl(spark, source, keys, batchId, sourcePinned = false)
+    mergeImpl(spark, source, keys, batchId, None)
 
-  /** [[merge]] whose source the CALLER already pinned — the MV fold
-    * probes its pinned combine result before merging, and re-pinning
-    * here would run a full re-materialization job and copy every
-    * block for nothing.
+  /** [[merge]] whose source the CALLER already pinned, with its key
+    * `bounds` already aggregated (the row of [[mergeBoundCols]]) — the
+    * MV fold probes its pinned combine result in the same aggregate
+    * job, and re-pinning here would run a full re-materialization job
+    * and copy every block for nothing.
     */
   private[engine] def mergePinned(spark: SparkSession,
-      source: DataFrame, keys: Seq[String], batchId: Long): Unit =
-    mergeImpl(spark, source, keys, batchId, sourcePinned = true)
+      source: DataFrame, keys: Seq[String], batchId: Long,
+      bounds: org.apache.spark.sql.Row): Unit =
+    mergeImpl(spark, source, keys, batchId, Some(bounds))
 
   private def mergeImpl(spark: SparkSession, source: DataFrame,
       keys: Seq[String], batchId: Long,
-      sourcePinned: Boolean): Unit = synchronized {
+      pinnedBounds: Option[org.apache.spark.sql.Row]): Unit = synchronized {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     require(keys.nonEmpty, "merge needs at least one key column")
     val f = fs(spark)
@@ -2054,51 +2059,67 @@ final class ManifestTableStore(path: String,
     snap.requireNoDeletes("merge")
     if (snap.has(batchId)) return // replay → no-op
     // PIN before anything reads it (same reason as [[mergeClauses]]):
-    // the bounds aggregate, the anti-join key set, and the insert
-    // write are separate evaluations — a non-deterministic source
-    // would anti-join one set of keys and write another
-    val src =
-      if (sourcePinned) source
-      else { import Pin.Pinnable; source.pinned }
-    val touched = mergeTouchedDirs(src, keys, snap.data)
-    val srcKeys = src.select(keys.map(col): _*).distinct()
-    val insDir = s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
-    val insEntry = Entry(batchId, insDir,
-      write(src.withColumn("batch_id", lit(batchId)), insDir))
-    rewriteDirs(spark, f, snap, touched, "merge",
-      _.join(broadcast(srcKeys), keys, "left_anti"),
-      extra = Seq(insEntry))
+    // the bounds aggregate, the anti-join key set, and the write are
+    // separate evaluations — a non-deterministic source would
+    // anti-join one set of keys and write another
+    val (src, bounds) = pinnedBounds match {
+      case Some(b) => (source, b)
+      case None =>
+        val p = source.pinned
+        (p, mergeBounds(p, keys))
+    }
+    val touched = mergeTouchedDirs(src, keys, snap.data, bounds)
+    val srcKeys = broadcast(src.select(keys.map(col): _*).distinct())
+    // pending renames and widens project onto each touched dir first,
+    // as in [[rewriteDirs]]; the union pads columns a dir predates
+    // exactly as the read path does
+    val rows = touched.toSeq.sorted.map(d =>
+      snap.project(ManifestTableStore.DirSchemas.read(spark, d))
+        .join(srcKeys, keys, "left_anti")) :+
+      src.withColumn("batch_id", lit(batchId))
+    val nd = s"$path/data/merge-${java.util.UUID.randomUUID()}"
+    val st = write(rows.reduce(_.unionByName(_, allowMissingColumns = true)),
+      nd)
+    commitDml(f, snap, "merge", _.map { e =>
+      if (touched(e.dir)) Entry(e.batchId, nd, st) else e
+    } :+ Entry(batchId, nd, st))
+  }
+
+  /** The key-range aggregate a keyed merge prunes dirs by: min and
+    * max of each key over `source`, in key order, normalized exactly
+    * like collectStats values so the dir-stats comparison is
+    * representation-free.
+    */
+  private[engine] def mergeBoundCols(source: DataFrame,
+      keys: Seq[String]): Seq[org.apache.spark.sql.Column] =
+    keys.flatMap { k =>
+      val dt = source.schema(k).dataType
+      Seq(statsNorm(min(col(k)), dt), statsNorm(max(col(k)), dt))
+    }
+
+  private def mergeBounds(source: DataFrame,
+      keys: Seq[String]): org.apache.spark.sql.Row = {
+    val bc = mergeBoundCols(source, keys)
+    source.agg(bc.head, bc.tail: _*).head()
   }
 
   /** Data dirs a keyed merge must rewrite, among the data entries
     * `lines` (schema markers are structure: a key join cannot run
     * against their batch_id-only files): those whose recorded key
     * min/max cannot be proven disjoint from `source`'s key range on
-    * any key column (no stats → conservatively touched). The source
-    * key ranges are normalized exactly like collectStats values so
-    * the dir-stats comparison is representation-free; all bounds come
-    * from ONE aggregate over the source.
+    * any key column (no stats → conservatively touched). `bounds` is
+    * the row of [[mergeBoundCols]] over `source`.
     */
   private def mergeTouchedDirs(source: DataFrame, keys: Seq[String],
-      lines: Seq[Entry]): Set[String] = {
-    import org.apache.spark.sql.types.{NumericType, StringType,
-      TimestampNTZType, TimestampType}
-    def isTsOf(k: String) = {
-      val kt = source.schema(k).dataType
-      kt == TimestampType || kt == TimestampNTZType
-    }
-    def norm(k: String)(c: org.apache.spark.sql.Column) =
-      if (isTsOf(k)) unix_micros(c.cast(TimestampType)).cast("string")
-      else c.cast("string")
-    val boundCols = keys.flatMap(k =>
-      Seq(norm(k)(min(col(k))), norm(k)(max(col(k)))))
-    val bounds = source.agg(boundCols.head, boundCols.tail: _*).head()
+      lines: Seq[Entry], bounds: org.apache.spark.sql.Row)
+      : Set[String] = {
+    import org.apache.spark.sql.types.{NumericType, StringType}
     val srcRanges: Seq[(String, Option[(SVal, SVal)])] =
       keys.zipWithIndex.map { case (k, i) =>
         val (lo, hi) = (2 * i, 2 * i + 1)
         val r: Option[(SVal, SVal)] =
           if (bounds.isNullAt(lo) || bounds.isNullAt(hi)) None
-          else if (isTsOf(k))
+          else if (statsIsTs(source.schema(k).dataType))
             Some((TsV(bounds.getString(lo).toLong),
               TsV(bounds.getString(hi).toLong)))
           else source.schema(k).dataType match {
@@ -2196,7 +2217,7 @@ final class ManifestTableStore(path: String,
     val touched: Set[String] =
       if (matched.isEmpty && bySource.isEmpty) Set.empty // insert-only
       else if (bySource.nonEmpty) snap.dataDirs.toSet
-      else mergeTouchedDirs(src, keys, snap.data)
+      else mergeTouchedDirs(src, keys, snap.data, mergeBounds(src, keys))
     // index of the first clause (declaration order) whose condition
     // holds, -1 when none does — SQL MERGE's first-match-wins
     def firstClause(clauses: Seq[ManifestTableStore.MergeClause],
@@ -2333,15 +2354,11 @@ final class ManifestTableStore(path: String,
       extra = extra)
   }
 
-  /** Shared CoW rewrite: write `xform` of each touched dir to a fresh
-    * dir (stats recomputed), then commit untouched entries + rewritten
-    * entries (+ `extra`, e.g. a merge's insert batch) as one new
-    * version through [[commitRewrite]]'s optimistic retry. Throws
-    * [[java.util.ConcurrentModificationException]] when a concurrent
-    * maintenance rewrite aborts the commit: the caller issued row-level
-    * DML and NOTHING was applied — silence here would let a SQL DELETE
-    * report success while deleting nothing. The freshly-written dirs
-    * stay invisible orphans for vacuum.
+  /** Shared per-dir CoW rewrite of delete, update and `MERGE INTO`:
+    * write `xform` of each touched dir to a fresh dir (stats
+    * recomputed), then commit untouched entries + rewritten entries
+    * (+ `extra`, a `MERGE INTO`'s insert batch) as one new version
+    * through [[commitDml]].
     */
   private def rewriteDirs(spark: SparkSession, f: FileSystem,
       snap: Snapshot, touched: Set[String], tag: String,
@@ -2357,16 +2374,30 @@ final class ManifestTableStore(path: String,
       d -> (nd, write(xform(
         snap.project(ManifestTableStore.DirSchemas.read(spark, d))), nd))
     }.toMap
-    beforeDmlCommit()
-    val committed = commitRewrite(f, snap, _.map { e =>
+    commitDml(f, snap, tag, _.map { e =>
       rewritten.get(e.dir) match {
         case Some((nd, st)) => Entry(e.batchId, nd, st)
         case None => e
       }
     } ++ extra)
-    if (!committed) throw new java.util.ConcurrentModificationException(
-      s"$tag on $path aborted: a concurrent maintenance rewrite moved " +
-        "this snapshot's dirs; nothing was applied — re-read and retry")
+  }
+
+  /** Commit a row-level DML rewrite through [[commitRewrite]]'s
+    * optimistic retry. Throws
+    * [[java.util.ConcurrentModificationException]] when a concurrent
+    * maintenance rewrite aborts the commit: the caller issued row-level
+    * DML and NOTHING was applied — silence here would let a SQL DELETE
+    * report success while deleting nothing. The freshly-written dirs
+    * stay invisible orphans for vacuum.
+    */
+  private def commitDml(f: FileSystem, snap: Snapshot, tag: String,
+      rewrite: Seq[Entry] => Seq[Entry]): Unit = {
+    beforeDmlCommit()
+    if (!commitRewrite(f, snap, rewrite))
+      throw new java.util.ConcurrentModificationException(
+        s"$tag on $path aborted: a concurrent maintenance rewrite " +
+          "moved this snapshot's dirs; nothing was applied — re-read " +
+          "and retry")
   }
 
   /** The table's commit history as a DataFrame — Delta's DESCRIBE
@@ -2863,11 +2894,12 @@ final class ManifestTableStore(path: String,
     * representation or visibility changed between the versions — dirs
     * added/removed by the window's commits plus the scopes of its
     * delete entries — via two scoped scans and one exceptAll
-    * (hash-based multiset difference). Untouched dirs are never read,
-    * so cost is proportional to the window's rewritten data, which is
-    * what ANY read-time CDF reconstruction costs (Delta avoids it by
-    * writing CDC files at commit time; the manifest analogue records
-    * nothing extra and pays at read).
+    * (hash-based multiset difference); a window with one side empty
+    * (pure appends) is a single scan, no diff. Untouched dirs are
+    * never read, so cost is proportional to the window's rewritten
+    * data, which is what ANY read-time CDF reconstruction costs
+    * (Delta avoids it by writing CDC files at commit time; the
+    * manifest analogue records nothing extra and pays at read).
     */
   def readChangeFeed(spark: SparkSession, fromVersion: Long,
       toVersion: Long): DataFrame = {
@@ -2940,7 +2972,12 @@ final class ManifestTableStore(path: String,
     }
     val o = aligned(oldS)
     val n = aligned(newS)
-    n.exceptAll(o).withColumn("_change_type", lit("insert"))
+    // a multiset difference against nothing is the other side itself:
+    // a pure-append window (no old side) serves its rows as inserts
+    // without the diff's shuffle
+    if (oldS.isEmpty) n.withColumn("_change_type", lit("insert"))
+    else if (newS.isEmpty) o.withColumn("_change_type", lit("delete"))
+    else n.exceptAll(o).withColumn("_change_type", lit("insert"))
       .unionByName(
         o.exceptAll(n).withColumn("_change_type", lit("delete")))
   }
@@ -3355,7 +3392,8 @@ final class ManifestTableStore(path: String,
         case Some(ids) => snap.data.filter(e => ids.contains(e.batchId))
         case None => snap.data
       }
-      mergeTouchedDirs(keys, Seq(kc), candidates)
+      mergeTouchedDirs(keys, Seq(kc), candidates,
+        mergeBounds(keys, Seq(kc)))
     }.toSet
     val rewritten: Map[String, (String, String)] = touched.map { dir =>
       val nd = s"$path/data/delfold-${java.util.UUID.randomUUID()}"
@@ -3363,18 +3401,13 @@ final class ManifestTableStore(path: String,
         snap.masked(spark, ManifestTableStore.DirSchemas.read(spark, dir)),
         nd))
     }.toMap
-    beforeDmlCommit()
-    val committed = commitRewrite(f, snap, es =>
+    commitDml(f, snap, "compactDeletes", es =>
       es.filterNot(isDeleteEntry).map { e =>
         rewritten.get(e.dir) match {
           case Some((nd, st)) => Entry(e.batchId, nd, st)
           case None => e
         }
       })
-    if (!committed) throw new java.util.ConcurrentModificationException(
-      s"compactDeletes on $path aborted: a concurrent maintenance " +
-        "rewrite moved this snapshot's dirs; nothing was applied — " +
-        "re-read and retry")
   }
 
   /** ONE-CALL maintenance (the scheduled OPTIMIZE habit): fold any

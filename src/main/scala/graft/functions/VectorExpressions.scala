@@ -242,50 +242,37 @@ object HyperplaneBuckets {
 }
 
 object VectorExpressions {
-  /** Register `vec_dot` / `vec_sqdist` in the session's function registry
-    * (idempotent) so they are usable from `expr(...)` and SQL.
+  /** Register `vec_dot` / `vec_sqdist` / ... in the session's function
+    * registry so they are usable from `expr(...)` and SQL. Idempotent:
+    * a name the registry already holds is left alone (re-registering
+    * would replace it and log a WARN on every call).
     */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("vec_dot",
-      exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_sqdist",
-      exprs => SquaredDistance(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("vec_hp_buckets",
-      exprs => HyperplaneBuckets(exprs.head,
-        exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]),
-      "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      exprs => MinHashAgg(exprs.head,
-        exprs(1).eval().asInstanceOf[Int]).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction("shingle_hashes",
-      exprs => ShingleHashes(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("shingle_strings",
-      exprs => ShingleStrings(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("char_ngrams",
-      exprs => CharNgrams(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("minhash_text",
-      exprs => MinHashText(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue(),
-        exprs(2).eval().asInstanceOf[Number].intValue()),
-      "built-in")
-    reg.createOrReplaceTempFunction("mg_sketch",
-      exprs => MisraGries(exprs.head,
-        exprs(1).eval().asInstanceOf[Number].intValue())
-        .toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction("simhash64",
-      exprs => SimHash64(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("trigram_lm_score",
-      exprs => TrigramLmScore(exprs.head, exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("word_lm_score",
-      exprs => WordLmScore(exprs.head, exprs(1)), "built-in")
+    def fn(name: String)(build: Seq[Expression] => Expression): Unit =
+      if (!reg.functionExists(
+          org.apache.spark.sql.catalyst.FunctionIdentifier(name)))
+        reg.createOrReplaceTempFunction(name, build, "built-in")
+    fn("vec_dot")(exprs => DotProduct(exprs.head, exprs(1)))
+    fn("vec_sqdist")(exprs => SquaredDistance(exprs.head, exprs(1)))
+    fn("vec_hp_buckets")(exprs => HyperplaneBuckets(exprs.head,
+      exprs(1).eval().asInstanceOf[Int], exprs(2).eval().asInstanceOf[Int]))
+    fn("minhash_sig")(exprs => MinHashAgg(exprs.head,
+      exprs(1).eval().asInstanceOf[Int]).toAggregateExpression())
+    fn("shingle_hashes")(exprs => ShingleHashes(exprs.head,
+      exprs(1).eval().asInstanceOf[Number].intValue()))
+    fn("shingle_strings")(exprs => ShingleStrings(exprs.head,
+      exprs(1).eval().asInstanceOf[Number].intValue()))
+    fn("char_ngrams")(exprs => CharNgrams(exprs.head,
+      exprs(1).eval().asInstanceOf[Number].intValue()))
+    fn("minhash_text")(exprs => MinHashText(exprs.head,
+      exprs(1).eval().asInstanceOf[Number].intValue(),
+      exprs(2).eval().asInstanceOf[Number].intValue()))
+    fn("mg_sketch")(exprs => MisraGries(exprs.head,
+      exprs(1).eval().asInstanceOf[Number].intValue())
+      .toAggregateExpression())
+    fn("simhash64")(exprs => SimHash64(exprs.head))
+    fn("trigram_lm_score")(exprs => TrigramLmScore(exprs.head, exprs(1)))
+    fn("word_lm_score")(exprs => WordLmScore(exprs.head, exprs(1)))
   }
 }

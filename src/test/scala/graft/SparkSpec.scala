@@ -6,4 +6,33 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared session: one lazy local SparkSession per suite. */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = graft.engine.Sessions.local(4, "graft-test")
+
+  /** Spark jobs started while `body` runs. A marker job submitted after
+    * it drains the listener bus: events arrive in submission order.
+    */
+  protected def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val marker = "spec-jobs-marker"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setJobDescription(null)
+      Iterator.continually(
+        seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
+        .takeWhile { d =>
+          assert(d != null, "listener bus stalled")
+          d != marker
+        }.size
+    } finally sc.removeSparkListener(listener)
+  }
 }

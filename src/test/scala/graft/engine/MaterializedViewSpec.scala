@@ -85,6 +85,41 @@ class MaterializedViewSpec extends SparkSpec {
       asMap(cat2.query(spark, defn)))
   }
 
+  test("an insert-only fold whose keys span every backing dir leaves " +
+      "ONE backing data dir and runs as many Spark jobs at the fifth " +
+      "refresh as at the second, equal to the full recompute " +
+      "throughout") {
+    val (cat, _) = freshCat()
+    cat.exec(spark,
+      "CREATE TABLE fa (k STRING, v BIGINT) USING graft_store")
+    cat.exec(spark, "INSERT INTO fa VALUES ('a', 1), ('m', 2), ('z', 3)",
+      batchId = Some(0L))
+    val defn = "SELECT k, COUNT(*) AS cnt, SUM(v) AS total FROM fa " +
+      "GROUP BY k"
+    cat.exec(spark, s"CREATE MATERIALIZED VIEW gall AS $defn",
+      batchId = Some(100L))
+    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    def backingDirs() = cat.resolve(spark, "gall").get.read(spark)
+      .inputFiles.map(_.split("/data/").last.split('/').head).toSet
+    val jobs = (1 to 5).map { i =>
+      // every window lands on both ends of the key range (and opens a
+      // group in between), so no backing dir is provably untouched
+      cat.exec(spark, s"INSERT INTO fa VALUES ('a', $i), " +
+        s"('z', ${10 * i}), ('k$i', $i)", batchId = Some(i.toLong))
+      var mode = ""
+      val n = jobsDuring {
+        mode = modeOf(cat.exec(spark, "REFRESH MATERIALIZED VIEW gall"))
+      }
+      assert(mode == "incremental", s"refresh $i: $mode")
+      assert(backingDirs().size == 1, s"refresh $i: ${backingDirs()}")
+      assert(asMap(cat.query(spark, "SELECT k, cnt, total FROM gall")) ==
+        asMap(cat.query(spark, defn)), s"refresh $i")
+      n
+    }
+    assert(jobs(4) == jobs(1), s"jobs per refresh: $jobs")
+  }
+
   test("row-map MV (filter/projection): incremental refresh appends " +
       "the transformed delta only") {
     val (cat, _) = freshCat()

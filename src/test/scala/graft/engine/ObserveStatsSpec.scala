@@ -104,35 +104,6 @@ class ObserveStatsSpec extends SparkSpec {
     assert(observed.values.forall(_.contains("\"__bloom__\"")))
   }
 
-  /** Spark jobs started while `body` runs. A marker job submitted after
-    * it drains the listener bus: events arrive in submission order.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val marker = "obs-jobs-marker"
-    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count()
-      finally sc.setJobDescription(null)
-      Iterator.continually(
-        seen.poll(60, java.util.concurrent.TimeUnit.SECONDS))
-        .takeWhile { d =>
-          assert(d != null, "listener bus stalled")
-          d != marker
-        }.size
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("a partitioned append with stats columns runs exactly as many " +
       "Spark jobs as the same append without them") {
     def jobsOfSecondAppend(statsColumns: Seq[String]): Int = {

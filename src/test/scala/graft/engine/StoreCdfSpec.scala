@@ -39,6 +39,33 @@ class StoreCdfSpec extends SparkSpec {
       ("insert", "b", 2), ("insert", "c", 3), ("insert", "d", 4)))
   }
 
+  test("an append-only window serves exactly its new batches' rows as " +
+      "inserts with no multiset diff or shuffle in the plan; a rewrite " +
+      "window still diffs to delete+insert pairs") {
+    import org.apache.spark.sql.catalyst.plans.logical.Except
+    val store = mkStore()
+    store.append(Seq(("c", 3), ("e", 5)).toDF("k", "n"), 2L) // v3
+    val appended = store.readChangeFeed(spark, 1, 3)
+    // a duplicate of an older row stays: the window's rows as a multiset
+    assert(appended.select("_change_type", "k", "n")
+      .as[(String, String, Int)].collect().toSeq.sorted ==
+      Seq(("insert", "c", 3), ("insert", "c", 3), ("insert", "d", 4),
+        ("insert", "e", 5)))
+    val qe = appended.queryExecution
+    assert(qe.analyzed.collect { case e: Except => e }.isEmpty,
+      qe.analyzed.treeString)
+    assert("""(?<!Broadcast)Exchange""".r
+      .findFirstIn(qe.executedPlan.toString).isEmpty,
+      qe.executedPlan.toString)
+    store.update(spark, "k = 'e'", Map("n" -> lit(50))) // v4
+    val rewritten = store.readChangeFeed(spark, 3, 4)
+    assert(rewritten.queryExecution.analyzed
+      .collect { case e: Except => e }.nonEmpty)
+    assert(rewritten.select("_change_type", "k", "n")
+      .as[(String, String, Int)].collect().toSet ==
+      Set(("delete", "e", 5), ("insert", "e", 50)))
+  }
+
   test("a pure maintenance rewrite (compact) emits an EMPTY feed — " +
       "batch attribution survives reorganization") {
     val store = mkStore()

@@ -125,18 +125,33 @@ class StoreDmlSpec extends SparkSpec {
     val src = (150 until 250).map(i => (s"new$i", i)).toDF("k", "n")
     store.merge(spark, src, "n", batchId = 7L)
     val after = currentDirs(store)
-    assert(before.intersect(after).exists(_.startsWith("batch-0-")))
-    assert(after.exists(_.startsWith("merge-")))
-    assert(after.exists(_.startsWith("batch-7-")))
+    val dir0 = before.find(_.startsWith("batch-0-")).get
+    assert(after.contains(dir0)) // carried forward, never rewritten
+    // exactly one new dir, holding the touched dir's batch 1 (its
+    // surviving rows) and the merge's batch 7 (replacements + inserts)
+    val fresh = after -- before
+    assert(fresh.size == 1 && after.size == 2, after)
+    assert(fresh.head.startsWith("merge-"), fresh)
+    val idsByDir = store.read(spark)
+      .select(input_file_name().as("f"), col("batch_id")).distinct()
+      .as[(String, Long)].collect()
+      .groupBy(_._1.split("/data/").last.split('/').head)
+      .map { case (d, rs) => d -> rs.map(_._2).toSet }
+    assert(idsByDir == Map(dir0 -> Set(0L), fresh.head -> Set(1L, 7L)),
+      idsByDir)
+    assert(store.committedBatchIds(spark) == Set(0L, 1L, 7L))
     val got = store.read(spark).select("n", "k").as[(Int, String)]
       .collect().toMap
     assert(got.size == 250)
     assert(got(10) == "k10") // untouched
     assert(got(175) == "new175") // replaced
     assert(got(225) == "new225") // inserted
-    // replay of the same merge batch id is refused at write time
+    // replay of the same merge batch id is refused at write time: no
+    // version, no row
+    val v = store.currentVersion(spark)
     val replay = (150 until 250).map(i => (s"ghost$i", i)).toDF("k", "n")
     store.merge(spark, replay, "n", batchId = 7L)
+    assert(store.currentVersion(spark) == v)
     assert(store.read(spark).filter(col("k").startsWith("ghost"))
       .count() == 0L)
   }
