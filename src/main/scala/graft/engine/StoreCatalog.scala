@@ -2886,8 +2886,7 @@ final class StoreCatalog(basePath: String) {
     import org.apache.spark.sql.functions.{
       coalesce, col => fcol, count => fcount, greatest, least, lit, when}
     import Pin.Pinnable
-    val backingStore = store(name)
-    val backing = backingStore.read(spark).drop("batch_id")
+    val backing = store(name).read(spark).drop("batch_id")
     val bCols = backing.columns.map(_.toLowerCase).toSet
     val avgAliases = aggs.collect { case (a, "avg") => a }
     val sumAliases = aggs.collect { case (a, "sum") => a }
@@ -2987,15 +2986,13 @@ final class StoreCatalog(basePath: String) {
       if (retractable)
         Seq(nullkC, fcount(when(fcol("__rows") === 0, 1)).as("empt"))
       else Seq(nullkC)
-    val aggCols = probeCols ++ backingStore.mergeBoundCols(combined, keys)
-    val probe = combined.agg(aggCols.head, aggCols.tail: _*).head()
-    if (probe.getLong(0) > 0L)
-      return Some("null group key in the delta")
-    if (retractable && probe.getLong(1) > 0L)
-      return Some("a group emptied in the window")
-    backingStore.mergePinned(spark, combined, keys, bid,
-      org.apache.spark.sql.Row.fromSeq(probe.toSeq.drop(probeCols.size)))
-    None
+    store(name).mergePinned(spark, combined, keys, bid, probeCols) {
+      probe =>
+        if (probe.getLong(0) > 0L) Some("null group key in the delta")
+        else if (retractable && probe.getLong(1) > 0L)
+          Some("a group emptied in the window")
+        else None
+    }
   }
 
   /** A parsed definition plan (or its aggregate's input) with every

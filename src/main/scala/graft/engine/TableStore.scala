@@ -2009,19 +2009,26 @@ final class ManifestTableStore(path: String,
   /** Keyed MERGE (Delta `MERGE INTO` with whenMatched=replace,
     * whenNotMatched=insert): every table row whose `key` appears in
     * `source` is replaced by the source row; source rows with no match
-    * are inserted. Executed copy-on-write in ONE commit that writes ONE
-    * dir: dirs whose recorded `key` min/max cannot intersect the
-    * source's key range carry forward untouched; the touched dirs'
-    * rows, broadcast LEFT ANTI joined against the (small) source key
-    * set, and the source rows go to a single new dir, which every
-    * touched entry and `batchId` then point at (the representation
-    * [[compact]] uses for a dir holding several batch ids). This is the
-    * upsert shape of a streaming CDC apply, where `source` is a
-    * micro-batch and the table is 100 TB: rewrite cost scales with the
-    * dirs the delta actually lands in, not table size, and a merge
-    * whose keys span every dir leaves one dir behind instead of
-    * growing the table by one dir per merge. A replayed `batchId` is
-    * refused exactly like [[append]].
+    * are inserted. Executed copy-on-write in ONE commit: dirs whose
+    * recorded `key` min/max cannot intersect the source's key range
+    * carry forward untouched. This is the upsert shape of a streaming
+    * CDC apply, where `source` is a micro-batch and the table is
+    * 100 TB: rewrite cost scales with the dirs the delta actually
+    * lands in, not table size. The touched dirs' layout follows their
+    * key stats:
+    *   - when a touched dir, or the table's stats columns, carry
+    *     min/max on a key, each touched dir is rewritten on its own
+    *     with a broadcast LEFT ANTI join against the (small) source
+    *     key set, and the source rows commit under `batchId` as their
+    *     own dir — every dir keeps a narrow key range, so a later
+    *     merge or lookup prunes to the dirs it lands in;
+    *   - when none does, every merge touches every dir anyway, so the
+    *     touched dirs' anti-joined rows and the source rows go to ONE
+    *     new dir that every touched entry and `batchId` point at (the
+    *     representation [[compact]] uses for a dir holding several
+    *     batch ids): a merge whose keys span the table leaves one dir
+    *     behind instead of growing it by one dir per merge.
+    * A replayed `batchId` is refused exactly like [[append]].
     */
   def merge(spark: SparkSession, source: DataFrame, key: String,
       batchId: Long): Unit = merge(spark, source, Seq(key), batchId)
@@ -2037,16 +2044,25 @@ final class ManifestTableStore(path: String,
       batchId: Long): Unit =
     mergeImpl(spark, source, keys, batchId, None)
 
-  /** [[merge]] whose source the CALLER already pinned, with its key
-    * `bounds` already aggregated (the row of [[mergeBoundCols]]) — the
-    * MV fold probes its pinned combine result in the same aggregate
-    * job, and re-pinning here would run a full re-materialization job
-    * and copy every block for nothing.
+  /** [[merge]] whose source the CALLER already pinned and probes
+    * first: `probe` aggregates over `source` run in the same job as
+    * the merge's key bounds, and `gate` sees the probe's row alone.
+    * A reason from `gate` skips the merge and is returned; None means
+    * the merge ran. Re-pinning here would run a full
+    * re-materialization job and copy every block for nothing.
     */
   private[engine] def mergePinned(spark: SparkSession,
       source: DataFrame, keys: Seq[String], batchId: Long,
-      bounds: org.apache.spark.sql.Row): Unit =
-    mergeImpl(spark, source, keys, batchId, Some(bounds))
+      probe: Seq[org.apache.spark.sql.Column])(
+      gate: org.apache.spark.sql.Row => Option[String]): Option[String] = {
+    import org.apache.spark.sql.Row
+    val cols = probe ++ mergeBoundCols(source, keys)
+    val row = source.agg(cols.head, cols.tail: _*).head().toSeq
+    val reason = gate(Row.fromSeq(row.take(probe.size)))
+    if (reason.isEmpty) mergeImpl(spark, source, keys, batchId,
+      Some(Row.fromSeq(row.drop(probe.size))))
+    reason
+  }
 
   private def mergeImpl(spark: SparkSession, source: DataFrame,
       keys: Seq[String], batchId: Long,
@@ -2070,19 +2086,30 @@ final class ManifestTableStore(path: String,
     }
     val touched = mergeTouchedDirs(src, keys, snap.data, bounds)
     val srcKeys = broadcast(src.select(keys.map(col): _*).distinct())
-    // pending renames and widens project onto each touched dir first,
-    // as in [[rewriteDirs]]; the union pads columns a dir predates
-    // exactly as the read path does
-    val rows = touched.toSeq.sorted.map(d =>
-      snap.project(ManifestTableStore.DirSchemas.read(spark, d))
-        .join(srcKeys, keys, "left_anti")) :+
-      src.withColumn("batch_id", lit(batchId))
-    val nd = s"$path/data/merge-${java.util.UUID.randomUUID()}"
-    val st = write(rows.reduce(_.unionByName(_, allowMissingColumns = true)),
-      nd)
-    commitDml(f, snap, "merge", _.map { e =>
-      if (touched(e.dir)) Entry(e.batchId, nd, st) else e
-    } :+ Entry(batchId, nd, st))
+    val inserted = src.withColumn("batch_id", lit(batchId))
+    val keyStats = statsEligibleIn(src.schema).exists(keys.contains) ||
+      snap.data.exists(e => touched(e.dir) &&
+        parseStats(e.statsJson).keySet.exists(keys.contains))
+    if (keyStats) {
+      val insDir =
+        s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
+      rewriteDirs(spark, f, snap, touched, "merge",
+        _.join(srcKeys, keys, "left_anti"),
+        extra = Seq(Entry(batchId, insDir, write(inserted, insDir))))
+    } else {
+      // pending renames and widens project onto each touched dir
+      // first, as in [[rewriteDirs]]; the union pads columns a dir
+      // predates exactly as the read path does
+      val rows = touched.toSeq.sorted.map(d =>
+        snap.project(ManifestTableStore.DirSchemas.read(spark, d))
+          .join(srcKeys, keys, "left_anti")) :+ inserted
+      val nd = s"$path/data/merge-${java.util.UUID.randomUUID()}"
+      val st = write(
+        rows.reduce(_.unionByName(_, allowMissingColumns = true)), nd)
+      commitDml(f, snap, "merge", _.map { e =>
+        if (touched(e.dir)) Entry(e.batchId, nd, st) else e
+      } :+ Entry(batchId, nd, st))
+    }
   }
 
   /** The key-range aggregate a keyed merge prunes dirs by: min and
@@ -2090,7 +2117,7 @@ final class ManifestTableStore(path: String,
     * like collectStats values so the dir-stats comparison is
     * representation-free.
     */
-  private[engine] def mergeBoundCols(source: DataFrame,
+  private def mergeBoundCols(source: DataFrame,
       keys: Seq[String]): Seq[org.apache.spark.sql.Column] =
     keys.flatMap { k =>
       val dt = source.schema(k).dataType
@@ -2354,11 +2381,11 @@ final class ManifestTableStore(path: String,
       extra = extra)
   }
 
-  /** Shared per-dir CoW rewrite of delete, update and `MERGE INTO`:
-    * write `xform` of each touched dir to a fresh dir (stats
-    * recomputed), then commit untouched entries + rewritten entries
-    * (+ `extra`, a `MERGE INTO`'s insert batch) as one new version
-    * through [[commitDml]].
+  /** Shared per-dir CoW rewrite of delete, update, `MERGE INTO` and a
+    * keyed [[merge]] over key stats: write `xform` of each touched dir
+    * to a fresh dir (stats recomputed), then commit untouched entries
+    * + rewritten entries (+ `extra`, a merge's insert batch) as one
+    * new version through [[commitDml]].
     */
   private def rewriteDirs(spark: SparkSession, f: FileSystem,
       snap: Snapshot, touched: Set[String], tag: String,

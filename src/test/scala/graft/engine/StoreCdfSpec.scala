@@ -66,6 +66,20 @@ class StoreCdfSpec extends SparkSpec {
       Set(("delete", "e", 5), ("insert", "e", 50)))
   }
 
+  test("a window that leaves no row of its affected batches (TRUNCATE) " +
+      "serves the old rows as deletes with no multiset diff") {
+    import org.apache.spark.sql.catalyst.plans.logical.Except
+    val store = mkStore()
+    store.truncate(spark) // v3
+    val gone = store.readChangeFeed(spark, 2, 3)
+    assert(gone.select("_change_type", "k", "n")
+      .as[(String, String, Int)].collect().toSeq.sorted ==
+      Seq(("delete", "a", 1), ("delete", "b", 2), ("delete", "c", 3),
+        ("delete", "d", 4)))
+    assert(gone.queryExecution.analyzed.collect { case e: Except => e }
+      .isEmpty, gone.queryExecution.analyzed.treeString)
+  }
+
   test("a pure maintenance rewrite (compact) emits an EMPTY feed — " +
       "batch attribution survives reorganization") {
     val store = mkStore()

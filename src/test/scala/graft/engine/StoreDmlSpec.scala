@@ -29,6 +29,14 @@ class StoreDmlSpec extends SparkSpec {
     store.read(spark).inputFiles
       .map(f => f.split("/data/").last.split('/').head).toSet
 
+  /** The batch ids each current data dir holds. */
+  private def idsByDir(store: ManifestTableStore): Map[String, Set[Long]] =
+    store.read(spark)
+      .select(input_file_name().as("f"), col("batch_id")).distinct()
+      .as[(String, Long)].collect()
+      .groupBy(_._1.split("/data/").last.split('/').head)
+      .map { case (d, rs) => d -> rs.map(_._2).toSet }
+
   /** Two key-ranged batches with stats on n: dir0 holds n in [0,99],
     * dir1 holds n in [100,199].
     */
@@ -127,23 +135,25 @@ class StoreDmlSpec extends SparkSpec {
     val after = currentDirs(store)
     val dir0 = before.find(_.startsWith("batch-0-")).get
     assert(after.contains(dir0)) // carried forward, never rewritten
-    // exactly one new dir, holding the touched dir's batch 1 (its
-    // surviving rows) and the merge's batch 7 (replacements + inserts)
+    // the key stats keep the per-dir layout: the touched batch-1 dir
+    // is rewritten on its own and the source rows get their own dir
     val fresh = after -- before
-    assert(fresh.size == 1 && after.size == 2, after)
-    assert(fresh.head.startsWith("merge-"), fresh)
-    val idsByDir = store.read(spark)
-      .select(input_file_name().as("f"), col("batch_id")).distinct()
-      .as[(String, Long)].collect()
-      .groupBy(_._1.split("/data/").last.split('/').head)
-      .map { case (d, rs) => d -> rs.map(_._2).toSet }
-    assert(idsByDir == Map(dir0 -> Set(0L), fresh.head -> Set(1L, 7L)),
-      idsByDir)
+    assert(fresh.size == 2 && after.size == 3, after)
+    val rewritten = fresh.find(_.startsWith("merge-")).get
+    val inserted = fresh.find(_.startsWith("batch-7-")).get
+    assert(idsByDir(store) == Map(dir0 -> Set(0L),
+      rewritten -> Set(1L), inserted -> Set(7L)))
     assert(store.committedBatchIds(spark) == Set(0L, 1L, 7L))
+    // every dir keeps a narrow key range: a lookup of a key the merge
+    // left alone opens the rewritten batch-1 dir [100,149] only
+    val (kept, _) = store.pruneDirs(spark, "n = 120")
+    assert(kept.map(_.split("/data/").last.split('/').head) ==
+      Seq(rewritten), kept)
     val got = store.read(spark).select("n", "k").as[(Int, String)]
       .collect().toMap
     assert(got.size == 250)
     assert(got(10) == "k10") // untouched
+    assert(got(120) == "k120") // touched dir, unmatched key
     assert(got(175) == "new175") // replaced
     assert(got(225) == "new225") // inserted
     // replay of the same merge batch id is refused at write time: no
@@ -154,6 +164,38 @@ class StoreDmlSpec extends SparkSpec {
     assert(store.currentVersion(spark) == v)
     assert(store.read(spark).filter(col("k").startsWith("ghost"))
       .count() == 0L)
+  }
+
+  test("a merge over dirs without key stats writes ONE dir holding " +
+      "every touched batch id and the merge's own, and refuses a " +
+      "replayed merge batch id") {
+    // stats on k only: nothing proves a dir disjoint on the key n, so
+    // every merge touches every dir and one dir loses no pruning
+    val store = new ManifestTableStore(tmp("dml-merge-nostats-").toString,
+      statsColumns = Seq("k"))
+    store.append((0 until 100).map(i => (s"k$i", i)).toDF("k", "n"), 0L)
+    store.append((100 until 200).map(i => (s"k$i", i)).toDF("k", "n"), 1L)
+    val src = (150 until 250).map(i => (s"new$i", i)).toDF("k", "n")
+    store.merge(spark, src, "n", batchId = 7L)
+    val after = currentDirs(store)
+    assert(after.size == 1 && after.head.startsWith("merge-"), after)
+    assert(idsByDir(store) == Map(after.head -> Set(0L, 1L, 7L)))
+    assert(store.committedBatchIds(spark) == Set(0L, 1L, 7L))
+    val got = store.read(spark).select("n", "k").as[(Int, String)]
+      .collect().toMap
+    assert(got.size == 250)
+    assert(got(10) == "k10" && got(120) == "k120") // kept
+    assert(got(175) == "new175") // replaced
+    assert(got(225) == "new225") // inserted
+    // a second merge rewrites that one dir again: still one dir
+    store.merge(spark, Seq(("again", 10)).toDF("k", "n"), "n", 8L)
+    assert(currentDirs(store).size == 1)
+    assert(store.read(spark).filter(col("n") === 10)
+      .select("k").as[String].collect().toSeq == Seq("again"))
+    val v = store.currentVersion(spark)
+    store.merge(spark, Seq(("ghost", 10)).toDF("k", "n"), "n", 7L)
+    assert(store.currentVersion(spark) == v)
+    assert(store.read(spark).filter(col("k") === "ghost").count() == 0L)
   }
 
   test("merge key-range pruning works on string keys (UTF8 stats order)") {
