@@ -87,9 +87,10 @@ trait TableStore {
   *     predicates on partition columns prune directories — the same scan
   *     reduction a table format's partition spec gives (asserted against
   *     the executed plan's PartitionFilters in the spec);
-  *   - readers see exactly the current version's dirs, each read with
-  *     its cached schema ([[ManifestTableStore.DirSchemas]]) and unioned
-  *     by name, so governed evolution null-pads missing columns.
+  *   - readers see exactly the current version's dirs, read with their
+  *     cached schemas ([[ManifestTableStore.DirSchemas]]) as one file
+  *     scan per schema version and unioned by name, so governed
+  *     evolution null-pads missing columns.
   *
   * Time travel ([[readVersion]]) and garbage collection ([[vacuum]])
   * fall out of the versioned design, and `statsColumns` adds the third
@@ -2097,15 +2098,16 @@ final class ManifestTableStore(path: String,
         _.join(srcKeys, keys, "left_anti"),
         extra = Seq(Entry(batchId, insDir, write(inserted, insDir))))
     } else {
-      // pending renames and widens project onto each touched dir
-      // first, as in [[rewriteDirs]]; the union pads columns a dir
+      // pending renames and widens project onto the touched dirs
+      // first, as in [[rewriteDirs]]; the read pads columns a dir
       // predates exactly as the read path does
-      val rows = touched.toSeq.sorted.map(d =>
-        snap.project(ManifestTableStore.DirSchemas.read(spark, d))
-          .join(srcKeys, keys, "left_anti")) :+ inserted
+      val kept =
+        if (touched.isEmpty) Nil
+        else Seq(snap.project(readDirs(spark, touched.toSeq.sorted))
+          .join(srcKeys, keys, "left_anti"))
       val nd = s"$path/data/merge-${java.util.UUID.randomUUID()}"
-      val st = write(
-        rows.reduce(_.unionByName(_, allowMissingColumns = true)), nd)
+      val st = write((kept :+ inserted)
+        .reduce(_.unionByName(_, allowMissingColumns = true)), nd)
       commitDml(f, snap, "merge", _.map { e =>
         if (touched(e.dir)) Entry(e.batchId, nd, st) else e
       } :+ Entry(batchId, nd, st))
@@ -3148,13 +3150,14 @@ final class ManifestTableStore(path: String,
     }
 
   /** Exactly the current version's data dirs, unioned by name with
-    * missing-column padding (governed evolution across batches). Each dir
-    * is read separately: hive-style partition discovery only accepts
-    * `k=v` segments directly under one root, so a multi-root read of
-    * partitioned batch dirs is structurally "conflicting" — per-dir scans
-    * sidestep that, and predicate/partition pruning pushes into every
-    * scan of the union. Many tiny batch dirs widen the plan linearly;
-    * that is exactly the pressure [[compact]] relieves.
+    * missing-column padding (governed evolution across batches). The
+    * dirs that share a schema are read as ONE file scan over all of
+    * them ([[readDirs]]), so the plan holds one scan per schema
+    * version however many commits the table has; partitioned dirs
+    * carry an explicit partition spec, and predicate and partition
+    * pruning push into every scan. Many tiny batch dirs still mean
+    * many small files per scan; that is the pressure [[compact]]
+    * relieves.
     */
   override def read(spark: SparkSession): DataFrame = {
     val snap = current(fs(spark))
@@ -3203,7 +3206,8 @@ final class ManifestTableStore(path: String,
     * it needs:
     *
     *   1. [[scan]] — the chosen dirs plus every PURE schema-marker dir,
-    *      unioned by name in commit order;
+    *      one file scan per schema version, unioned by name in commit
+    *      order;
     *   2. [[masked]] — the scoped merge-on-read deletes anti-joined;
     *   3. [[project]] — renames, then widens;
     *   4. [[dropped]] — drop markers' columns removed.
@@ -3275,17 +3279,20 @@ final class ManifestTableStore(path: String,
       * commit order. Markers join the scan but never the pruning or
       * attribution: an ADD COLUMNS marker is the only physical holder of
       * a column no data dir carries yet, and every read must serve the
-      * full snapshot schema. Zero rows — no scan cost. Only PURE marker
-      * dirs: after a compact, marker entries point at the shared
-      * materialized data dir, and adding it would defeat the pruning.
+      * full snapshot schema. Zero rows — its columns join, no scan
+      * does. Only PURE marker dirs: after a compact, marker entries
+      * point at the shared materialized data dir, and adding it would
+      * defeat the pruning.
       */
     def scan(spark: SparkSession, dirs: Seq[String] = dataDirs)
         : DataFrame = {
       val dataSet = data.map(_.dir).toSet
-      val want = dirs.toSet ++ entries.filter(isSchemaMarker).map(_.dir)
-        .filterNot(dataSet)
+      val markers = entries.filter(isSchemaMarker).map(_.dir)
+        .filterNot(dataSet).toSet
+      val want = dirs.toSet ++ markers
       readDirs(spark,
-        entries.filterNot(isDeleteEntry).map(_.dir).distinct.filter(want))
+        entries.filterNot(isDeleteEntry).map(_.dir).distinct.filter(want),
+        markers)
     }
 
     /** Step 2: the equality deletes anti-joined (broadcast — delete
@@ -3461,9 +3468,27 @@ final class ManifestTableStore(path: String,
     actions.result()
   }
 
-  private def readDirs(spark: SparkSession, dirs: Seq[String]): DataFrame =
-    dirs.map(d => ManifestTableStore.DirSchemas.read(spark, d))
-      .reduce(_.unionByName(_, allowMissingColumns = true))
+  /** `dirs`, in commit order, as one frame: ONE file scan per schema
+    * version ([[ManifestTableStore.DirSchemas.scan]]), the versions
+    * unioned by name with missing-column padding in first-commit order.
+    * Column order and type widening are those of a union of the dirs
+    * one by one: a version's later dirs add no column and no type its
+    * first dir has not. `schemaOnly` dirs (zero-row schema markers)
+    * contribute their columns and no scan.
+    */
+  private def readDirs(spark: SparkSession, dirs: Seq[String],
+      schemaOnly: Set[String] = Set.empty): DataFrame = {
+    val versions = scala.collection.mutable.LinkedHashMap.empty[
+      (org.apache.spark.sql.types.StructType, Boolean), Vector[String]]
+    dirs.foreach { d =>
+      val v = (ManifestTableStore.DirSchemas.schema(spark, d), schemaOnly(d))
+      versions(v) = versions.getOrElse(v, Vector.empty) :+ d
+    }
+    versions.toSeq.map { case ((schema, only), ds) =>
+      ManifestTableStore.DirSchemas.scan(spark, schema,
+        if (only) Nil else ds)
+    }.reduce(_.unionByName(_, allowMissingColumns = true))
+  }
 
   /** Read with manifest-stats data skipping: data dirs whose recorded
     * min/max prove `predicateSql` cannot match are never opened — their
@@ -3645,34 +3670,51 @@ object ManifestTableStore {
   private[engine] val ObservationWait =
     scala.concurrent.duration.Duration(120, "seconds")
 
-  /** Per-dir parquet schema cache for committed store dirs.
+  /** The reader of committed store dirs: each dir's schema, each dir's
+    * leaf-file listing, and one file scan per schema version.
     *
     * Every writer targets a fresh UUID-stamped dir and a dir is written
-    * by exactly ONE Spark write, so (a) a committed dir's schema never
-    * changes and (b) all its part files share one schema — schema
-    * inference per read is pure waste. Without this cache every
-    * `spark.read.parquet(dir)` re-lists the dir and re-reads a footer,
-    * and the previous `mergeSchema=true` per-dir reads each launched a
-    * DISTRIBUTED footer-merge job — a multi-statement DML/MV board paid
-    * tens of footer jobs per invocation, and at 100 TB a footer storm
-    * per statement is exactly the metadata cost manifest formats exist
-    * to avoid (the manifest, not the files, is the schema authority —
-    * Iceberg's contract). Serving the cached schema via
-    * `spark.read.schema(...)` skips inference entirely. Writers pre-fill
-    * the cache, and a hive-partitioned dir also carries its writer
-    * schema on disk ([[record]]): inference would re-type its
+    * by exactly ONE Spark write, so (a) a committed dir's schema and
+    * files never change and (b) all its part files share one schema —
+    * schema inference and re-listing per read are pure waste. Without
+    * the caches every read re-lists every dir and re-reads a footer per
+    * dir; at 100 TB a footer storm per statement is exactly the
+    * metadata cost manifest formats exist to avoid (the manifest, not
+    * the files, is the schema authority — Iceberg's contract). Writers
+    * pre-fill the schema cache, and a hive-partitioned dir also carries
+    * its writer schema on disk ([[record]]): inference would re-type its
     * partition columns from dir names, so the record is what makes the
     * reader's schema the writer's in every process. The miss path reads
     * the record, else one footer driver-side (single-write dirs make
     * merge-vs-single-footer equivalent; unpartitioned footers are
     * exact, and partitioned dirs committed before records existed keep
-    * inference). Entries for vacuumed dirs simply go cold — UUID names
-    * are never reused.
+    * inference).
+    *
+    * A SCHEMA VERSION is a set of dirs sharing one schema; [[scan]]
+    * reads it as ONE file scan — one `HadoopFsRelation` over an
+    * `InMemoryFileIndex` whose root paths are the version's dirs — so
+    * a read's planning, listing and task count follow the table's
+    * schema versions, not its commits. Hive-partitioned dirs take a
+    * user-specified partition spec built from each dir's own `k=v` leaf
+    * dirs and typed by its schema: a multi-root read cannot infer
+    * partitions (each root is its own base path, which partition
+    * discovery refuses as conflicting), and the spec keeps the writer's
+    * types ("007" stays a STRING). Leaf listings are cached like
+    * schemas ([[Listings]]), so a read lists only the dirs this process
+    * has not seen. Entries for vacuumed dirs are evicted
+    * ([[evictUnder]]); UUID names are never reused.
     */
   private[engine] object DirSchemas {
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionPath,
+      PartitionSpec, PartitioningUtils}
+    import org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat
     import org.apache.spark.sql.types.{ArrayType, DataType, MapType,
-      StructType}
+      StringType, StructField, StructType}
     private val cache = new java.util.concurrent.ConcurrentHashMap[
       String, StructType]()
     // growth bound for a long-lived driver: entries are (path,
@@ -3684,24 +3726,100 @@ object ManifestTableStore {
     // parquet-affecting ones (Sessions pins them), which is what
     // makes the process-wide key sound.
     private val MaxEntries = 100000
-    def read(spark: SparkSession, dir: String): DataFrame = {
-      val known = Option(cache.get(dir)).orElse {
+
+    /** `dir`'s schema: cached, else recorded, else one footer read. */
+    def schema(spark: SparkSession, dir: String): StructType =
+      Option(cache.get(dir)).getOrElse {
         val f = new HPath(dir).getFileSystem(
           spark.sparkContext.hadoopConfiguration)
-        AtomicCreate.readString(f, new HPath(dir, SchemaFile)).map { json =>
-          val recorded = DataType.fromJson(json).asInstanceOf[StructType]
-          put(dir, recorded)
-          recorded
+        val found = AtomicCreate.readString(f, new HPath(dir, SchemaFile))
+          .map(DataType.fromJson(_).asInstanceOf[StructType])
+          .getOrElse(spark.read.parquet(dir).schema)
+        put(dir, found)
+        readSchema(found)
+      }
+
+    /** One dir's rows: the one-dir case of [[scan]]. */
+    def read(spark: SparkSession, dir: String): DataFrame =
+      scan(spark, schema(spark, dir), Seq(dir))
+
+    /** The dirs of ONE schema version, all written with `schema`, as
+      * one file scan (one per partition layout, should a version's
+      * dirs disagree on theirs). A version with no data files is its
+      * columns alone, with no scan. A dir that lists empty must exist:
+      * a vacuumed dir fails the read, as a per-dir read did.
+      */
+    def scan(spark: SparkSession, schema: StructType,
+        dirs: Seq[String]): DataFrame = {
+      val conf = spark.sparkContext.hadoopConfiguration
+      val roots = dirs.map { d =>
+        val p = new HPath(d)
+        p.getFileSystem(conf).makeQualified(p)
+      }
+      def index(rs: Seq[HPath], spec: PartitionSpec) =
+        new DirIndex(spark, rs, schema, spec)
+      val listed = index(roots, PartitionSpec.emptySpec)
+      // each leaf dir's root and the `k=v` segments between the two
+      val isRoot = roots.toSet
+      val leaves = listed.leafDirs.map { leaf =>
+        var p = leaf
+        var segs = List.empty[String]
+        while (p != null && !isRoot(p)) {
+          segs = p.getName :: segs
+          p = p.getParent
         }
+        require(p != null, s"$leaf lies under none of the dirs read")
+        (leaf, p, segs)
       }
-      known match {
-        case Some(schema) => spark.read.schema(schema).parquet(dir)
-        case None =>
-          val df = spark.read.parquet(dir)
-          put(dir, df.schema)
-          df
+      val keysOf = leaves.groupBy(_._2).map { case (r, ls) =>
+        val layouts = ls.map(_._3.map(_.takeWhile(_ != '='))).distinct
+        require(layouts.size == 1,
+          s"$r mixes partition layouts ${layouts.mkString(", ")}")
+        r -> layouts.head
       }
+      roots.filterNot(keysOf.contains).foreach { r =>
+        if (!r.getFileSystem(conf).exists(r))
+          throw new java.io.FileNotFoundException(
+            s"data dir $r does not exist")
+      }
+      val zone = java.time.ZoneId.of(
+        spark.conf.get("spark.sql.session.timeZone"))
+      val byLayout = roots.filter(keysOf.contains).groupBy(keysOf)
+      val frames = byLayout.toSeq.sortBy(l => roots.indexOf(l._2.head))
+        .map { case (keys, rs) =>
+          val fields = keys.map(k =>
+            schema.find(_.name.equalsIgnoreCase(k))
+              .getOrElse(StructField(k, StringType)))
+          val inLayout = rs.toSet
+          val parts = leaves.collect {
+            case (leaf, r, segs) if inLayout(r) =>
+              PartitionPath(InternalRow.fromSeq(segs.zip(fields).map {
+                case (s, f) => PartitioningUtils.castPartValueToDesiredType(
+                  f.dataType, s.drop(s.indexOf('=') + 1), zone)
+              }), leaf)
+          }
+          val spec = PartitionSpec(StructType(fields), parts)
+          // partition columns last, as a one-dir hive read orders them
+          val data = StructType(schema.filterNot(f =>
+            keys.exists(_.equalsIgnoreCase(f.name))))
+          org.apache.spark.sql.graftshim.PlanShim.ofRows(spark,
+            LogicalRelation(HadoopFsRelation(index(rs, spec),
+              spec.partitionColumns, data, None, new ParquetFileFormat,
+              Map.empty)(spark)))
+        }
+      if (frames.isEmpty)
+        spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+      else frames.reduce(_.unionByName(_, allowMissingColumns = true))
     }
+
+    /** A file index over committed dirs, listed through [[Listings]]. */
+    private final class DirIndex(spark: SparkSession, roots: Seq[HPath],
+        schema: StructType, spec: PartitionSpec)
+        extends InMemoryFileIndex(spark, roots, Map.empty, Some(schema),
+          Listings, Some(spec)) {
+      def leafDirs: Seq[HPath] = leafDirToChildrenFiles.keys.toSeq
+    }
+
     /** Pre-fill from the WRITER: the first read of a fresh dir then
       * skips the one-task footer inference job Spark runs per uncached
       * parquet scan — at 100 TB ingest, one job per committed dir.
@@ -3735,15 +3853,44 @@ object ManifestTableStore {
         case other => other
       }
     }
-    /** Drop entries for a deleted dir tree (vacuum/abortStaged): the
-      * UUID-stamped dirs never come back, so this is pure reclamation.
+
+    /** Leaf-file listings of the dirs [[scan]] read, keyed by qualified
+      * dir path, shared by every scan in the process (Spark's own
+      * shared cache is partitioned per relation, so a fresh scan of a
+      * known dir would list it again). Bounded like the schema cache.
+      */
+    private object Listings extends FileStatusCache {
+      private val listings = new java.util.concurrent.ConcurrentHashMap[
+        HPath, Array[FileStatus]]()
+      override def getLeafFiles(dir: HPath): Option[Array[FileStatus]] =
+        Option(listings.get(dir))
+      override def putLeafFiles(dir: HPath,
+          leafFiles: Array[FileStatus]): Unit = {
+        if (listings.size >= MaxEntries) invalidateAll()
+        listings.put(dir, leafFiles)
+      }
+      override def invalidateAll(): Unit = listings.clear()
+      def keys: java.util.Set[HPath] = listings.keySet
+    }
+
+    /** Whether a listing of `dir` or of a dir under it is cached. */
+    private[engine] def listed(dir: String): Boolean =
+      Listings.keys.stream.anyMatch(k => under(dir)(k.toUri.getPath))
+
+    /** Drop the schemas and listings of a deleted dir tree
+      * (vacuum/abortStaged): the UUID-stamped dirs never come back, so
+      * this is pure reclamation.
       */
     def evictUnder(dir: String): Unit = {
+      val inTree = under(dir)
+      cache.keySet.removeIf(k => inTree(new HPath(k).toUri.getPath))
+      Listings.keys.removeIf(k => inTree(k.toUri.getPath))
+    }
+
+    // `dir` itself or a path below it, on a path-segment boundary
+    private def under(dir: String): String => Boolean = {
       val p = new HPath(dir).toUri.getPath
-      cache.keySet.removeIf { k =>
-        val kp = new HPath(k).toUri.getPath
-        kp == p || kp.startsWith(p + "/")
-      }
+      kp => kp == p || kp.startsWith(p + "/")
     }
   }
 

@@ -27,8 +27,9 @@ import graft.engine.ManifestTableStore
   * Translation is best-effort and purely an optimization: Spark
   * re-applies every filter after the scan (the default
   * `unhandledFilters` contract), so an untranslatable predicate costs
-  * pruning, never correctness. Column pruning projects before the
-  * union read.
+  * pruning, never correctness. Column pruning projects onto the
+  * store's read (one file scan per schema version), so the scans read
+  * only the required columns.
   */
 final class StoreRelation(val sqlContext: SQLContext,
     store: ManifestTableStore, parameters: Map[String, String])

@@ -3,6 +3,7 @@ package graft.engine
 import java.nio.file.{Files, Path}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -26,9 +27,17 @@ class StoreSnapshotSpec extends SparkSpec {
   private def columns(df: DataFrame): Seq[(String, DataType)] =
     df.schema.fields.toSeq.map(f => f.name -> f.dataType)
 
+  private def rows(df: DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  /** The file scans of a frame's physical plan. */
+  private def scans(df: DataFrame): Seq[FileSourceScanExec] =
+    df.queryExecution.sparkPlan.collect { case s: FileSourceScanExec => s }
+
   test("every read path serves the same columns over ADD, RENAME, " +
       "WIDEN and DROP markers plus a merge-on-read delete") {
-    val store = new ManifestTableStore(tmp("snap-paths-").toString)
+    val root = tmp("snap-paths-")
+    val store = new ManifestTableStore(root.toString)
     store.append(Seq(("a", 1, "x1", "t1"), ("b", 2, "x2", "t2"))
       .toDF("k", "n", "old", "tmp"), 0L)                          // v1
     store.addColumns(spark, Seq("extra" -> StringType))           // v2
@@ -55,6 +64,120 @@ class StoreSnapshotSpec extends SparkSpec {
     }
     assert(store.read(spark).select("k").as[String].collect().sorted
       .toSeq == Seq("a", "c"))
+
+    // a fresh process: no cached schema and no cached listing
+    val served: Seq[(String, () => DataFrame)] = Seq(
+      "read" -> (() => store.read(spark)),
+      "readWhere" -> (() => store.readWhere(spark, "n >= 1")),
+      "readVersion" -> (() => store.readVersion(spark, 6L)),
+      "readChangeFeed" -> (() => store.readChangeFeed(spark, 1L, cur)))
+    def shape(df: DataFrame) = (columns(df), rows(df))
+    val warm = served.map { case (_, df) => shape(df()) }
+    assert(ManifestTableStore.DirSchemas.listed(root.toString))
+    ManifestTableStore.DirSchemas.evictUnder(root.toString)
+    assert(!ManifestTableStore.DirSchemas.listed(root.toString))
+    served.zip(warm).foreach { case ((n, df), w) =>
+      ManifestTableStore.DirSchemas.evictUnder(root.toString)
+      assert(shape(df()) == w, s"$n cold")
+    }
+  }
+
+  test("vacuum and abortStaged evict the dirs they delete from the " +
+      "listing cache") {
+    val root = tmp("snap-listing-")
+    val store = new ManifestTableStore(root.toString)
+    store.append(Seq(("a", 1)).toDF("k", "n"), 0L)
+    store.append(Seq(("b", 2)).toDF("k", "n"), 1L)
+    val staged = store.stage(Seq(("c", 3)).toDF("k", "n"), 2L)
+    assert(store.readStaged(spark, staged).count() == 1L)
+    assert(ManifestTableStore.DirSchemas.listed(staged))
+    store.abortStaged(spark, staged)
+    assert(!ManifestTableStore.DirSchemas.listed(staged))
+
+    import scala.jdk.CollectionConverters._
+    def dataDirs(): Seq[String] = Files.list(root.resolve("data"))
+      .iterator().asScala.map(_.toString).toSeq
+    assert(store.read(spark).count() == 2L)
+    val before = dataDirs()
+    assert(before.size == 2 &&
+      before.forall(ManifestTableStore.DirSchemas.listed))
+    store.compact(spark)
+    assert(store.read(spark).count() == 2L)
+    val deleted = store.vacuum(spark, retainLast = 0, minAgeMs = 0L)
+    assert(deleted.size == 2, deleted)
+    assert(!before.exists(ManifestTableStore.DirSchemas.listed))
+    assert(dataDirs().size == 1 &&
+      dataDirs().forall(ManifestTableStore.DirSchemas.listed))
+  }
+
+  test("a read is one file scan per schema version: 20 appends are one " +
+      "scan, and an ADD COLUMNS between appends makes two") {
+    val one = new ManifestTableStore(tmp("snap-scan1-").toString)
+    (0 until 20).foreach(i => one.append(Seq(("a", i)).toDF("k", "n"), i))
+    val read = one.read(spark)
+    assert(scans(read).size == 1)
+    assert(scans(read).head.relation.location.inputFiles.length == 20)
+    assert(read.count() == 20L)
+
+    val two = new ManifestTableStore(tmp("snap-scan2-").toString)
+    (0 until 10).foreach(i => two.append(Seq(("a", i)).toDF("k", "n"), i))
+    two.addColumns(spark, Seq("extra" -> StringType))
+    (10 until 20).foreach(i =>
+      two.append(Seq(("b", i, s"e$i")).toDF("k", "n", "extra"), i))
+    val evolved = two.read(spark)
+    assert(scans(evolved).size == 2)
+    assert(evolved.columns.toSeq == Seq("k", "n", "batch_id", "extra"))
+    assert(evolved.filter("extra IS NULL").count() == 10L)
+    assert(evolved.filter("extra IS NOT NULL").count() == 10L)
+  }
+
+  test("partitioned commits read as one scan that serves a STRING " +
+      "'007' and prunes by partition filter") {
+    val store = new ManifestTableStore(tmp("snap-scanp-").toString,
+      partitionBy = Seq("p"))
+    (0 until 5).foreach(i =>
+      store.append(Seq(("007", i), ("010", i)).toDF("p", "n"), i))
+    val read = store.read(spark)
+    assert(scans(read).size == 1)
+    // partition columns last, as a one-dir hive read orders them
+    assert(read.columns.toSeq == Seq("n", "batch_id", "p"))
+    assert(read.schema("p").dataType == StringType)
+    assert(read.select("p").distinct().as[String].collect().sorted.toSeq ==
+      Seq("007", "010"))
+    val only007 = read.filter("p = '007'")
+    val scan = scans(only007).head
+    assert(scan.partitionFilters.nonEmpty)
+    val files = scan.relation.location.listFiles(scan.partitionFilters, Nil)
+      .flatMap(_.files)
+    assert(files.size == 5)
+    assert(files.forall(_.getPath.getParent.getName == "p=007"))
+    assert(only007.count() == 5L)
+  }
+
+  test("readWhere drops stats-pruned dirs from its scan, a merge-on-read " +
+      "delete still masks, and a three-version change feed is one scan") {
+    val store = new ManifestTableStore(tmp("snap-scanw-").toString,
+      statsColumns = Seq("n"))
+    (0 until 5).foreach(i =>
+      store.append(Seq(("k" + i, i * 10), ("x" + i, i * 10 + 5))
+        .toDF("k", "n"), i))
+    val pruned = store.readWhere(spark, "n >= 40")
+    assert(scans(pruned).size == 1)
+    assert(pruned.inputFiles.map(f => f.take(f.lastIndexOf('/')))
+      .distinct.length == 1)
+    assert(rows(pruned.select("k")) == Seq("k4", "x4"))
+
+    val feed = store.readChangeFeed(spark, 2L, 5L)
+    assert(scans(feed).size == 1)
+    assert(rows(feed.select("k", "_change_type")) ==
+      Seq("k2|insert", "k3|insert", "k4|insert", "x2|insert", "x3|insert",
+        "x4|insert"))
+
+    store.deleteMoR(spark, "n = 25", "k")
+    assert(rows(store.read(spark).filter("n >= 20").select("k")) ==
+      Seq("k2", "k3", "k4", "x3", "x4"))
+    assert(rows(store.readWhere(spark, "n >= 20").select("k")) ==
+      Seq("k2", "k3", "k4", "x3", "x4"))
   }
 
   test("a missing or incomplete version is one typed refusal on every " +
