@@ -17,9 +17,10 @@ import org.apache.spark.sql.types.StructType
   * prior progress.
   *
   * Artifacts are folders of text (`<root>/<topic>/schema/`,
-  * `<root>/<topic>/_state/`), written `coalesce(1) + overwrite` — the
-  * folder-as-artifact convention avoids object-store rename issues
-  * (reference `:141`) and keeps read-back a plain directory scan.
+  * `<root>/<topic>/_state/`) holding one part file, the layout of the
+  * reference's `coalesce(1) + overwrite` (reference `:141`); both the
+  * write and the read-back go through the Hadoop FileSystem on the
+  * driver, so a governance pass runs Spark jobs for inference only.
   */
 object SchemaRegistry {
 
@@ -178,17 +179,24 @@ final class SchemaRegistry(
       .getOrElse(TopicState(topic))
   }
 
-  /** Single-file folder overwrite (atomic-enough on object stores). */
-  def writeState(topic: String, state: TopicState): Unit = {
-    import spark.implicits._
-    Seq(stateToJson(state)).toDF("value")
-      .coalesce(1).write.mode("overwrite").text(stateDir(topic))
-  }
+  def writeState(topic: String, state: TopicState): Unit =
+    writeArtifact(stateDir(topic), stateToJson(state))
 
-  def writeSchema(topic: String, schemaJson: String): Unit = {
-    import spark.implicits._
-    Seq(schemaJson).toDF("value")
-      .coalesce(1).write.mode("overwrite").text(schemaDir(topic))
+  def writeSchema(topic: String, schemaJson: String): Unit =
+    writeArtifact(schemaDir(topic), schemaJson)
+
+  /** Overwrite a folder artifact with one part file holding `line`,
+    * driver-side ([[AtomicCreate.publish]]; no Spark job). Like the
+    * text write it replaces, a reader may find the folder empty
+    * between the delete and the publish.
+    */
+  private def writeArtifact(dir: String, line: String): Unit = {
+    val d = new org.apache.hadoop.fs.Path(dir)
+    val f = d.getFileSystem(hconf)
+    f.delete(d, true)
+    require(AtomicCreate.publish(f, new org.apache.hadoop.fs.Path(d,
+      "part-00000.txt"), (line + "\n").getBytes("UTF-8")),
+      s"lost the publish race for $dir")
   }
 
   /** Persisted schema for a topic, if any. */

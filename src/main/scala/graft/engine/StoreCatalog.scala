@@ -2687,35 +2687,44 @@ final class StoreCatalog(basePath: String) {
           .getOrElse(
             backingStore.read(spark).isEmpty))
       return full("backing empty at a non-zero window start")
-    // ONE window-bounded feed read per moved source; a VACUUMED window
+    // ONE window-bounded feed per moved source; a VACUUMED window
     // (missing manifest or data dir) degrades to the recompute — a
     // routine source vacuum must never hard-fail the refresh
-    val feeds: Map[String, DataFrame] =
-      srcs.filter(t => starts(t) < curs(t)).map { t =>
-        t -> (try store(t).readChangeFeed(spark, starts(t), curs(t))
-          .pinned
-        catch {
-          case scala.util.control.NonFatal(e) if mvWindowVacuumed(e) =>
-            return full("cdf window vacuumed")
-        })
-      }.toMap
-    // ONE probe job for both window gates over every pinned feed
-    // (guide §2.4: the emptiness and delete probes fuse into a single
-    // global aggregate instead of a pass per gate or per source)
-    val winProbe = feeds.values.map(_.select("_change_type"))
-      .reduce(_ union _)
-      .agg(fcount(flit(1)).as("n"),
-        fcount(fwhen(fcol("_change_type") =!= "insert", 1)).as("d"))
-      .head()
+    val vacuumed: PartialFunction[Throwable, Nothing] = {
+      case scala.util.control.NonFatal(e) if mvWindowVacuumed(e) =>
+        return full("cdf window vacuumed")
+    }
+    val moved = srcs.filter(t => starts(t) < curs(t))
+    val (feeds, rows, deletes) = try {
+      val raw = moved.map(t =>
+        t -> store(t).readChangeFeed(spark, starts(t), curs(t))).toMap
+      // pure-append windows count their rows from the manifest and
+      // carry no deletes: no job, and the fold's write reads each feed
+      // once, unpinned. Any other window is pinned and ONE probe job
+      // counts rows and deletes over every feed (guide §2.4: the
+      // emptiness and delete probes fuse into a single global
+      // aggregate instead of a pass per gate or per source)
+      val appended = moved.map(t =>
+        store(t).appendedRows(spark, starts(t), curs(t)))
+      if (appended.forall(_.isDefined)) (raw, appended.flatten.sum, 0L)
+      else {
+        val pinned = raw.map { case (t, f) => t -> f.pinned }
+        val p = pinned.values.map(_.select("_change_type"))
+          .reduce(_ union _)
+          .agg(fcount(flit(1)).as("n"),
+            fcount(fwhen(fcol("_change_type") =!= "insert", 1)).as("d"))
+          .head()
+        (pinned, p.getLong(0), p.getLong(1))
+      }
+    } catch vacuumed
     // windows of pure STRUCTURAL commits (evolution markers,
     // maintenance rewrites) have empty feeds: folding them would
-    // anti-join every backing dir against an empty key set — a
-    // wasted gold-table rewrite. Advance the sidecar and go.
-    if (winProbe.getLong(0) == 0L) {
+    // rewrite the gold table for nothing. Advance the sidecar and go.
+    if (rows == 0L) {
       publishMviewSpec(spark, name, text, curs)
       return row("incremental", fromV, toV)
     }
-    val hasDeletes = winProbe.getLong(1) > 0L
+    val hasDeletes = deletes > 0L
     val bid = MvRefreshBidBase + toV
     // `plan` over the windows: every source substituted by its feed's
     // rows of `changeType` (all rows when None), or by an empty read
@@ -2736,24 +2745,24 @@ final class StoreCatalog(basePath: String) {
         if (hasDeletes) return full(
           if (srcs.size == 1) "deletes in the CDF window"
           else "deletes in a multi-source window")
-        store(name).append(overWindows(parsed, Some("insert")), bid)
+        try store(name).append(overWindows(parsed, Some("insert")), bid)
+        catch vacuumed
       case Right(MvShape(keys, keyExprs, aggs)) =>
         // distributive aggregate: fold the windows' partials into the
         // backing rows. Inserts add; with the retractable pair
         // columns present (COUNT/SUM/AVG shapes), DELETES SUBTRACT —
         // a CoW UPDATE travels as its delete+insert pair and folds
-        // exactly ([[foldAggPartials]]). The keyed merge rewrites only
-        // dirs whose key range overlaps the delta's groups —
-        // stats-bounded, gold-table-sized, never source-sized.
+        // exactly ([[foldAggPartials]]). The fold rewrites the backing
+        // once, as one dir — gold-table-sized, never source-sized.
         val expanded = expandFoldPairs(parsed)
         val retractable =
           !aggs.exists(a => a._2 == "min" || a._2 == "max")
         if (!hasDeletes || retractable) {
-          foldAggPartials(spark, name, keys, aggs,
+          (try foldAggPartials(spark, name, keys, aggs,
             overWindows(expanded, Some("insert")),
             if (hasDeletes) Some(overWindows(expanded, Some("delete")))
             else None, bid)
-            .foreach(reason => return full(reason))
+          catch vacuumed).foreach(reason => return full(reason))
         } else {
           // MIN/MAX cannot retract — but only groups the windows
           // TOUCHED can change. Recompute exactly those groups from
@@ -2867,17 +2876,21 @@ final class StoreCatalog(basePath: String) {
     row("incremental", fromV, toV)
   }
 
-  /** Fold one window's aggregate PARTIALS into an MV's backing via
-    * the keyed merge. `insA` / `delA0` are the definition
-    * (pair-expanded) applied to the windows' insert / delete rows.
-    * Inserts add; deletes subtract through the retractable pair
-    * columns (`__rows`, `<a>__cnt`, avg's pair), the served AVG
-    * recomputes from the FOLDED pair, and a SUM whose non-null count
-    * reaches zero serves NULL, not 0. MIN/MAX fold inserts only (a
-    * delete window under them takes the group-bounded recompute).
+  /** Fold one window's aggregate PARTIALS into an MV's backing: the
+    * new backing is `backing ⟗ partials` on the keys, written once as
+    * one dir ([[ManifestTableStore.rewriteGated]]). `insA` / `delA0`
+    * are the definition (pair-expanded) applied to the windows' insert
+    * / delete rows. Inserts add; deletes subtract through the
+    * retractable pair columns (`__rows`, `<a>__cnt`, avg's pair), the
+    * served AVG recomputes from the FOLDED pair, and a SUM whose
+    * non-null count reaches zero serves NULL, not 0. MIN/MAX fold
+    * inserts only (a delete window under them takes the group-bounded
+    * recompute). Backing rows the window does not touch keep their
+    * values and batch ids; folded and new groups take `bid`, so the
+    * backing's own change feed shows only the changed groups.
     * Returns Some(reason) when the fold must degrade to a loud full
-    * recompute (vintage gate, a NULL group key, an emptied group);
-    * None when the merge committed.
+    * recompute (vintage gate, a NULL group key, an emptied group) —
+    * nothing is committed then; None when the fold committed.
     */
   private def foldAggPartials(spark: SparkSession, name: String,
       keys: Seq[String], aggs: Seq[(String, String)],
@@ -2885,9 +2898,7 @@ final class StoreCatalog(basePath: String) {
       : Option[String] = {
     import org.apache.spark.sql.functions.{
       coalesce, col => fcol, count => fcount, greatest, least, lit, when}
-    import Pin.Pinnable
-    val backing = store(name).read(spark).drop("batch_id")
-    val bCols = backing.columns.map(_.toLowerCase).toSet
+    val bCols = store(name).read(spark).columns.map(_.toLowerCase).toSet
     val avgAliases = aggs.collect { case (a, "avg") => a }
     val sumAliases = aggs.collect { case (a, "sum") => a }
     // vintage gate, uniform across rounds: the expanded partial's
@@ -2899,19 +2910,16 @@ final class StoreCatalog(basePath: String) {
     val retractable =
       !aggs.exists(a => a._2 == "min" || a._2 == "max")
     val hasDeletes = delA0.isDefined
+    def isKey(c: String) = keys.exists(_.equalsIgnoreCase(c))
     val net0 =
       if (!hasDeletes) insA
       else {
         // net delta: insert partials ⟗ delete partials on the
         // keys (a group may appear on either side alone)
-        val valCols = insA.columns.filterNot(c =>
-          keys.exists(_.equalsIgnoreCase(c))).toSeq
-        val delA = valCols.foldLeft(delA0.get)((d, c) =>
-          d.withColumnRenamed(c, s"__del_$c"))
+        val delA = insA.columns.filterNot(isKey).foldLeft(delA0.get)(
+          (d, c) => d.withColumnRenamed(c, s"__del_$c"))
         insA.join(delA, keys, "full_outer")
       }
-    val joined = net0.alias("d").join(backing.alias("b"), keys,
-      "left")
     def dl(c: String): org.apache.spark.sql.Column =
       if (hasDeletes) fcol(s"d.__del_$c")
       else lit(null).cast(insA.schema(c).dataType)
@@ -2941,57 +2949,58 @@ final class StoreCatalog(basePath: String) {
       if (sumAliases.exists(_.equalsIgnoreCase(c))) Some(c + "__cnt")
       else avgAliases.find(a => c.equalsIgnoreCase(a + "__sum"))
         .map(_ + "__cnt")
-    val combined = joined.select(insA.columns.toSeq.map { c =>
-      if (keys.exists(_.equalsIgnoreCase(c))) fcol(c)
-      else if (isAvg(c)) {
+    def folded(c: String): org.apache.spark.sql.Column =
+      if (isAvg(c)) {
         // ratio over the FOLDED pair; guard the division so ANSI
         // mode never throws on an all-null group (cnt = 0)
         val s = fold(c + "__sum", "sum")
         val n = fold(c + "__cnt", "count")
-        when(n === 0, lit(null))
-          .otherwise(s.cast("double") / n)
-          .cast(insA.schema(c).dataType).as(c)
+        when(n === 0, lit(null)).otherwise(s.cast("double") / n)
       } else cntColFor(c) match {
         case Some(cc) if retractable =>
-          when(fold(cc, "count") === 0, lit(null))
-            .otherwise(fold(c, "sum"))
-            .cast(insA.schema(c).dataType).as(c)
+          when(fold(cc, "count") === 0, lit(null)).otherwise(fold(c, "sum"))
         case _ =>
-          val fn = aggs.find(_._1.equalsIgnoreCase(c)).map(_._2)
+          fold(c, aggs.find(_._1.equalsIgnoreCase(c)).map(_._2)
             .getOrElse(
               // only the generated count columns are unmatched
               if (c.toLowerCase.endsWith("__cnt") ||
                 c.equalsIgnoreCase("__rows")) "count"
-              else "sum")
-          fold(c, fn).as(c)
+              else "sum"))
       }
-    }: _*).pinned
-    // ONE probe job over the pinned fold result (guide §2.4), fusing
-    // two gates that each used to evaluate the partial-aggregate plan:
-    //  - a NULL group key never meets the keyed merge's equality —
-    //    each refresh would INSERT another null-key row instead of
-    //    folding it (nulls pass from the net delta through the left
-    //    join unchanged, so probing the pinned fold equals probing
-    //    net0 and skips re-running its aggregate);
+    // two gates over the rows the fold writes (the window's groups:
+    // batch id `bid`), observed on the write itself:
+    //  - a NULL group key never meets the fold's equality join — each
+    //    refresh would INSERT another null-key row instead of folding
+    //    it (null groups in the backing alone fold nothing and pass);
     //  - a group whose last row leaves in the window nets to ZERO
-    //    rows; the keyed merge can replace and insert but never
-    //    DELETE a backing row (rare: a whole gold group vanishing in
-    //    one window).
-    // Both degrade to the loud full recompute; reason precedence is
-    // preserved. The keyed merge's key-bounds aggregate rides the same
-    // job: it reads the same pinned frame.
-    val nullkC = fcount(when(keys.map(fcol(_).isNull)
-      .reduce(_ || _), 1)).as("nullk")
-    val probeCols =
-      if (retractable)
-        Seq(nullkC, fcount(when(fcol("__rows") === 0, 1)).as("empt"))
-      else Seq(nullkC)
-    store(name).mergePinned(spark, combined, keys, bid, probeCols) {
-      probe =>
-        if (probe.getLong(0) > 0L) Some("null group key in the delta")
-        else if (retractable && probe.getLong(1) > 0L)
-          Some("a group emptied in the window")
-        else None
+    //    rows, which the fold would keep as a zero row (rare: a whole
+    //    gold group vanishing in one window).
+    // Both degrade to the loud full recompute, in this precedence.
+    val mine = fcol("batch_id") === bid
+    val gates =
+      fcount(when(mine && keys.map(fcol(_).isNull).reduce(_ || _), 1)) +:
+        (if (retractable) Seq(fcount(when(mine && fcol("__rows") === 0, 1)))
+        else Nil)
+    store(name).rewriteGated(spark, bid, gates) { backing =>
+      val inDelta = fcol("__in_delta").isNotNull
+      val joined = net0.withColumn("__in_delta", lit(true)).alias("d")
+        .join(backing.alias("b"), keys, "full_outer")
+      joined.select(backing.schema.fields.toSeq.map { f =>
+        val c = f.name
+        val v =
+          if (isKey(c)) fcol(c)
+          else if (c == "batch_id")
+            when(inDelta, lit(bid)).otherwise(fcol("b.batch_id"))
+          else when(inDelta, insA.columns.find(_.equalsIgnoreCase(c))
+            .map(folded).getOrElse(lit(null)))
+            .otherwise(fcol(s"b.$c"))
+        v.cast(f.dataType).as(c)
+      }: _*)
+    } { g =>
+      if (g.getLong(0) > 0L) Some("null group key in the delta")
+      else if (retractable && g.getLong(1) > 0L)
+        Some("a group emptied in the window")
+      else None
     }
   }
 

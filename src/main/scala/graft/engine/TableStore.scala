@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import graft.engine.Pin.Pinnable
 
 /** Silver-table sink. The reference appends micro-batches to an Iceberg
@@ -445,9 +445,7 @@ final class ManifestTableStore(path: String,
     // pending merge-on-read delete files make the manifest count an
     // overcount — fall back to a real (delete-applied) count
     if (snap.deletes.nonEmpty) return None
-    val perDir = snap.entries.groupBy(_.dir).map(_._2.head.statsJson).toSeq
-    val ns = perDir.map(ManifestTableStore.parseCount)
-    if (ns.forall(_.isDefined)) Some(ns.flatten.sum) else None
+    ManifestTableStore.countOf(snap.entries)
   }
 
   /** Per-dir MEMBERSHIP stats for `bloomColumns` (the Delta bloom-filter
@@ -642,9 +640,14 @@ final class ManifestTableStore(path: String,
     * still read the written dir, so only bloom-indexed tables pay any
     * post-write read at all. The dir reads back with the schema
     * written here ([[putSchema]]), partition columns included, so the
-    * observed values are the values readers see.
+    * observed values are the values readers see. `gates` are the
+    * caller's aggregates over the written rows, observed the same way:
+    * a reason from `refuse` over their row deletes the dir and throws
+    * [[ManifestTableStore.WriteRefused]] before the checks apply.
     */
-  private def write(df0: DataFrame, dir: String): String = {
+  private def write(df0: DataFrame, dir: String,
+      gates: Seq[Column] = Nil,
+      refuse: Row => Option[String] = _ => None): String = {
     // a void column (a NULL-literal partition value, or a rewrite of a
     // dir whose null-only partition column inferred as void) refuses
     // to be a partition column — cast to string, which is type-neutral
@@ -668,7 +671,7 @@ final class ManifestTableStore(path: String,
         statsNorm(max(col(c)), dt).as(s"__mx_$c"))
     }) ++ checks.zipWithIndex.map { case ((_, pred), i) =>
       count(when(!expr(pred), 1)).as(s"__chk_$i")
-    }
+    } ++ gates.zipWithIndex.map { case (g, i) => g.as(s"__gate_$i") }
     val observed = df.observe(obs, aggs.head, aggs.tail: _*)
     if (partitionBy.isEmpty) observed.write.mode("overwrite").parquet(dir)
     else
@@ -716,6 +719,12 @@ final class ManifestTableStore(path: String,
       if (lost) 0L else m(k).asInstanceOf[Long]
     def mStr(k: String): String =
       if (lost) null else m(k).asInstanceOf[String]
+    // a lost observation is a provably-empty write: no row to refuse
+    if (!lost) refuse(Row.fromSeq(gates.indices.map(i => m(s"__gate_$i"))))
+      .foreach { reason =>
+        fs(spark).delete(new HPath(dir), true)
+        throw new ManifestTableStore.WriteRefused(reason)
+      }
     checks.zipWithIndex.foreach { case ((cname, pred), i) =>
       val violations = mLong(s"__chk_$i")
       if (violations > 0) {
@@ -2042,32 +2051,7 @@ final class ManifestTableStore(path: String,
     * full key tuple.
     */
   def merge(spark: SparkSession, source: DataFrame, keys: Seq[String],
-      batchId: Long): Unit =
-    mergeImpl(spark, source, keys, batchId, None)
-
-  /** [[merge]] whose source the CALLER already pinned and probes
-    * first: `probe` aggregates over `source` run in the same job as
-    * the merge's key bounds, and `gate` sees the probe's row alone.
-    * A reason from `gate` skips the merge and is returned; None means
-    * the merge ran. Re-pinning here would run a full
-    * re-materialization job and copy every block for nothing.
-    */
-  private[engine] def mergePinned(spark: SparkSession,
-      source: DataFrame, keys: Seq[String], batchId: Long,
-      probe: Seq[org.apache.spark.sql.Column])(
-      gate: org.apache.spark.sql.Row => Option[String]): Option[String] = {
-    import org.apache.spark.sql.Row
-    val cols = probe ++ mergeBoundCols(source, keys)
-    val row = source.agg(cols.head, cols.tail: _*).head().toSeq
-    val reason = gate(Row.fromSeq(row.take(probe.size)))
-    if (reason.isEmpty) mergeImpl(spark, source, keys, batchId,
-      Some(Row.fromSeq(row.drop(probe.size))))
-    reason
-  }
-
-  private def mergeImpl(spark: SparkSession, source: DataFrame,
-      keys: Seq[String], batchId: Long,
-      pinnedBounds: Option[org.apache.spark.sql.Row]): Unit = synchronized {
+      batchId: Long): Unit = synchronized {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     require(keys.nonEmpty, "merge needs at least one key column")
     val f = fs(spark)
@@ -2079,13 +2063,8 @@ final class ManifestTableStore(path: String,
     // the bounds aggregate, the anti-join key set, and the write are
     // separate evaluations — a non-deterministic source would
     // anti-join one set of keys and write another
-    val (src, bounds) = pinnedBounds match {
-      case Some(b) => (source, b)
-      case None =>
-        val p = source.pinned
-        (p, mergeBounds(p, keys))
-    }
-    val touched = mergeTouchedDirs(src, keys, snap.data, bounds)
+    val src = source.pinned
+    val touched = mergeTouchedDirs(src, keys, snap.data)
     val srcKeys = broadcast(src.select(keys.map(col): _*).distinct())
     val inserted = src.withColumn("batch_id", lit(batchId))
     val keyStats = statsEligibleIn(src.schema).exists(keys.contains) ||
@@ -2106,43 +2085,69 @@ final class ManifestTableStore(path: String,
         else Seq(snap.project(readDirs(spark, touched.toSeq.sorted))
           .join(srcKeys, keys, "left_anti"))
       val nd = s"$path/data/merge-${java.util.UUID.randomUUID()}"
-      val st = write((kept :+ inserted)
-        .reduce(_.unionByName(_, allowMissingColumns = true)), nd)
-      commitDml(f, snap, "merge", _.map { e =>
-        if (touched(e.dir)) Entry(e.batchId, nd, st) else e
-      } :+ Entry(batchId, nd, st))
+      commitOneDir(f, snap, nd, write((kept :+ inserted)
+        .reduce(_.unionByName(_, allowMissingColumns = true)), nd),
+        touched, batchId)
     }
   }
 
-  /** The key-range aggregate a keyed merge prunes dirs by: min and
-    * max of each key over `source`, in key order, normalized exactly
-    * like collectStats values so the dir-stats comparison is
-    * representation-free.
+  /** Commit `nd` as the one dir every `touched` data entry and
+    * `batchId` point at — the representation [[compact]] uses for a
+    * dir holding several batch ids — against `snap`, aborting on a
+    * racing rewrite as every DML does ([[commitDml]]).
     */
-  private def mergeBoundCols(source: DataFrame,
-      keys: Seq[String]): Seq[org.apache.spark.sql.Column] =
-    keys.flatMap { k =>
-      val dt = source.schema(k).dataType
-      Seq(statsNorm(min(col(k)), dt), statsNorm(max(col(k)), dt))
-    }
+  private def commitOneDir(f: FileSystem, snap: Snapshot, nd: String,
+      stats: String, touched: Set[String], batchId: Long): Unit =
+    commitDml(f, snap, "merge", _.map { e =>
+      if (touched(e.dir)) Entry(e.batchId, nd, stats) else e
+    } :+ Entry(batchId, nd, stats))
 
-  private def mergeBounds(source: DataFrame,
-      keys: Seq[String]): org.apache.spark.sql.Row = {
-    val bc = mergeBoundCols(source, keys)
-    source.agg(bc.head, bc.tail: _*).head()
+  /** Rewrite the whole table as ONE dir holding `rebuild` of its
+    * current rows (batch ids included) in one write job, committed
+    * like the one-dir keyed [[merge]]: every data entry and `batchId`
+    * point at the new dir. `gates` are aggregates over the rewritten
+    * rows that ride the write's observation; a reason from `refuse`
+    * over their row deletes the uncommitted dir and is returned before
+    * any commit. None means the rewrite committed (or `batchId` is
+    * already committed: a replay). `rebuild` reads the rows once, so
+    * nothing is pinned — the caller's frame must be deterministic.
+    */
+  private[engine] def rewriteGated(spark: SparkSession, batchId: Long,
+      gates: Seq[Column])(rebuild: DataFrame => DataFrame)(
+      refuse: Row => Option[String]): Option[String] = synchronized {
+    require(batchId >= 0, s"batchId must be >= 0, got $batchId")
+    val f = fs(spark)
+    guardInheritedId(f, batchId)
+    val snap = current(f)
+    snap.requireNoDeletes("merge")
+    require(!snap.isEmpty, s"no committed batches under $path")
+    if (snap.has(batchId)) return None
+    val nd = s"$path/data/merge-${java.util.UUID.randomUUID()}"
+    try {
+      val stats = write(rebuild(snap.read(spark)), nd, gates, refuse)
+      commitOneDir(f, snap, nd, stats, snap.dataDirs.toSet, batchId)
+      None
+    } catch {
+      case r: ManifestTableStore.WriteRefused => Some(r.reason)
+    }
   }
 
   /** Data dirs a keyed merge must rewrite, among the data entries
     * `lines` (schema markers are structure: a key join cannot run
     * against their batch_id-only files): those whose recorded key
     * min/max cannot be proven disjoint from `source`'s key range on
-    * any key column (no stats → conservatively touched). `bounds` is
-    * the row of [[mergeBoundCols]] over `source`.
+    * any key column (no stats → conservatively touched). `source`'s
+    * key range is one aggregate, min and max of each key normalized
+    * like the dir stats, so the comparison is representation-free.
     */
   private def mergeTouchedDirs(source: DataFrame, keys: Seq[String],
-      lines: Seq[Entry], bounds: org.apache.spark.sql.Row)
-      : Set[String] = {
+      lines: Seq[Entry]): Set[String] = {
     import org.apache.spark.sql.types.{NumericType, StringType}
+    val bc = keys.flatMap { k =>
+      val dt = source.schema(k).dataType
+      Seq(statsNorm(min(col(k)), dt), statsNorm(max(col(k)), dt))
+    }
+    val bounds = source.agg(bc.head, bc.tail: _*).head()
     val srcRanges: Seq[(String, Option[(SVal, SVal)])] =
       keys.zipWithIndex.map { case (k, i) =>
         val (lo, hi) = (2 * i, 2 * i + 1)
@@ -2246,7 +2251,7 @@ final class ManifestTableStore(path: String,
     val touched: Set[String] =
       if (matched.isEmpty && bySource.isEmpty) Set.empty // insert-only
       else if (bySource.nonEmpty) snap.dataDirs.toSet
-      else mergeTouchedDirs(src, keys, snap.data, mergeBounds(src, keys))
+      else mergeTouchedDirs(src, keys, snap.data)
     // index of the first clause (declaration order) whose condition
     // holds, -1 when none does — SQL MERGE's first-match-wins
     def firstClause(clauses: Seq[ManifestTableStore.MergeClause],
@@ -2444,12 +2449,10 @@ final class ManifestTableStore(path: String,
     // the ledger lists the versions that still exist, it never throws
     (1L to current(f).version).flatMap { v =>
       manifestAt(f, v).map { es =>
-        val counts = es.groupBy(_.dir).map(_._2.head.statsJson).toSeq
-          .map(ManifestTableStore.parseCount)
         (v, es.map(_.batchId).distinct.size.toLong,
           es.map(_.dir).distinct.size.toLong,
-          if (counts.nonEmpty && counts.forall(_.isDefined))
-            counts.flatten.sum else -1L)
+          ManifestTableStore.countOf(es).filter(_ => es.nonEmpty)
+            .getOrElse(-1L))
       }
     }.toDF("version", "n_batches", "n_dirs", "n_rows")
   }
@@ -2804,11 +2807,8 @@ final class ManifestTableStore(path: String,
       val baseDirs = base.map(_.dir).toSet
       val maintPrefixes = Seq("compact-", "cluster-", "zorder-")
       def totalCount(es: Seq[Entry]): Option[Long] = {
-        val per = es.filterNot(isDeleteEntry).groupBy(_.dir)
-          .map(_._2.head.statsJson).toSeq
-          .map(ManifestTableStore.parseCount)
-        if (per.nonEmpty && per.forall(_.isDefined)) Some(per.flatten.sum)
-        else None
+        val data = es.filterNot(isDeleteEntry)
+        ManifestTableStore.countOf(data).filter(_ => data.nonEmpty)
       }
       val baseCount = totalCount(base)
       var done = false
@@ -2932,35 +2932,10 @@ final class ManifestTableStore(path: String,
     */
   def readChangeFeed(spark: SparkSession, fromVersion: Long,
       toVersion: Long): DataFrame = {
-    val f = fs(spark)
-    def at(v: Long) = if (v == 0L) new Snapshot(0L, Nil) else snapshotAt(f, v)
-    val from = at(fromVersion)
-    val to = at(toVersion)
+    val (from, to) = feedEnds(fs(spark), fromVersion, toVersion)
     require(!from.isEmpty || !to.isEmpty,
       s"no data in either version $fromVersion or $toVersion of $path")
-    // zero-row schema markers (add/drop/rename/widen) are structure,
-    // never data: a metadata-only evolution commit must not mark its
-    // reserved batch id "affected" — its marker dir (schema: batch_id
-    // only) would masquerade as changed rows' home and the empty feed
-    // would lose the data columns. The full snapshots still drive the
-    // projection below.
-    val (fromDel, fromData) = (from.deletes, from.data)
-    val (toDel, toData) = (to.deletes, to.data)
-    // affected ids: dirs present on exactly one side, plus the scopes
-    // of delete entries present on exactly one side (an unscoped
-    // legacy delete entry masks everything → all ids conservatively)
-    val fromDirs = fromData.map(_.dir).toSet
-    val toDirs = toData.map(_.dir).toSet
-    val delDiff = (toDel.toSet -- fromDel.toSet) ++
-      (fromDel.toSet -- toDel.toSet)
-    val allIds = (fromData ++ toData).map(_.batchId).toSet
-    val affected: Set[Long] =
-      if (delDiff.exists(e =>
-          ManifestTableStore.parseApplies(e.statsJson).isEmpty)) allIds
-      else fromData.filterNot(e => toDirs(e.dir)).map(_.batchId).toSet ++
-        toData.filterNot(e => fromDirs(e.dir)).map(_.batchId).toSet ++
-        delDiff.toSeq.flatMap(e =>
-          ManifestTableStore.parseApplies(e.statsJson).get)
+    val affected = changedIds(from, to)
     val end = if (to.isEmpty) from else to
     // the visible state of one version, restricted to the affected ids
     // (post-compaction dirs can mix ids — the row filter re-separates).
@@ -3009,6 +2984,54 @@ final class ManifestTableStore(path: String,
     else n.exceptAll(o).withColumn("_change_type", lit("insert"))
       .unionByName(
         o.exceptAll(n).withColumn("_change_type", lit("delete")))
+  }
+
+  /** The rows a [[readChangeFeed]] window inserts, from the manifest
+    * alone: Some(n) when the window is a pure append — the feed has no
+    * old side and no delete entry applies — and every new dir records
+    * its row count; None otherwise. Each new dir holds only changed
+    * batch ids then (an id's rows live in the dirs its entries name),
+    * so the counts are the feed's rows.
+    */
+  private[engine] def appendedRows(spark: SparkSession, fromVersion: Long,
+      toVersion: Long): Option[Long] = {
+    val (from, to) = feedEnds(fs(spark), fromVersion, toVersion)
+    val affected = changedIds(from, to)
+    if (to.deletes.nonEmpty || from.data.exists(e => affected(e.batchId)))
+      None
+    else ManifestTableStore.countOf(to.data.filter(e => affected(e.batchId)))
+  }
+
+  /** A change feed's two end versions; version 0 is the empty table. */
+  private def feedEnds(f: FileSystem, fromVersion: Long,
+      toVersion: Long): (Snapshot, Snapshot) = {
+    def at(v: Long) = if (v == 0L) new Snapshot(0L, Nil) else snapshotAt(f, v)
+    (at(fromVersion), at(toVersion))
+  }
+
+  /** The batch ids whose rows a change feed from `from` to `to` diffs:
+    * those of dirs present on exactly one side, plus the scopes of
+    * delete entries present on exactly one side (an unscoped legacy
+    * delete entry masks everything → all ids conservatively). Zero-row
+    * schema markers (add/drop/rename/widen) are structure, never data:
+    * a metadata-only evolution commit must not mark its reserved batch
+    * id — its marker dir (schema: batch_id only) would masquerade as
+    * changed rows' home and the empty feed would lose the data columns.
+    */
+  private def changedIds(from: Snapshot, to: Snapshot): Set[Long] = {
+    val (fromDel, fromData) = (from.deletes, from.data)
+    val (toDel, toData) = (to.deletes, to.data)
+    val fromDirs = fromData.map(_.dir).toSet
+    val toDirs = toData.map(_.dir).toSet
+    val delDiff = (toDel.toSet -- fromDel.toSet) ++
+      (fromDel.toSet -- toDel.toSet)
+    if (delDiff.exists(e =>
+        ManifestTableStore.parseApplies(e.statsJson).isEmpty))
+      (fromData ++ toData).map(_.batchId).toSet
+    else fromData.filterNot(e => toDirs(e.dir)).map(_.batchId).toSet ++
+      toData.filterNot(e => fromDirs(e.dir)).map(_.batchId).toSet ++
+      delDiff.toSeq.flatMap(e =>
+        ManifestTableStore.parseApplies(e.statsJson).get)
   }
 
   /** Delete data dirs referenced by NO manifest version up to and
@@ -3426,8 +3449,7 @@ final class ManifestTableStore(path: String,
         case Some(ids) => snap.data.filter(e => ids.contains(e.batchId))
         case None => snap.data
       }
-      mergeTouchedDirs(keys, Seq(kc), candidates,
-        mergeBounds(keys, Seq(kc)))
+      mergeTouchedDirs(keys, Seq(kc), candidates)
     }.toSet
     val rewritten: Map[String, (String, String)] = touched.map { dir =>
       val nd = s"$path/data/delfold-${java.util.UUID.randomUUID()}"
@@ -3480,9 +3502,10 @@ final class ManifestTableStore(path: String,
       schemaOnly: Set[String] = Set.empty): DataFrame = {
     val versions = scala.collection.mutable.LinkedHashMap.empty[
       (org.apache.spark.sql.types.StructType, Boolean), Vector[String]]
-    dirs.foreach { d =>
-      val v = (ManifestTableStore.DirSchemas.schema(spark, d), schemaOnly(d))
-      versions(v) = versions.getOrElse(v, Vector.empty) :+ d
+    dirs.zip(ManifestTableStore.DirSchemas.schemas(spark, dirs)).foreach {
+      case (d, schema) =>
+        val v = (schema, schemaOnly(d))
+        versions(v) = versions.getOrElse(v, Vector.empty) :+ d
     }
     versions.toSeq.map { case ((schema, only), ds) =>
       ManifestTableStore.DirSchemas.scan(spark, schema,
@@ -3663,6 +3686,12 @@ object ManifestTableStore {
         "missing or incomplete (never committed, vacuumed past the " +
         "retention horizon, or its writer died mid-commit)")
 
+  /** A write whose caller gate refused its observed rows: the dir is
+    * deleted and nothing was committed.
+    */
+  private[engine] final class WriteRefused(val reason: String)
+      extends RuntimeException(reason)
+
   /** How long [[ManifestTableStore]]'s write waits, after the write
     * action returned, for its observed metrics. They arrive through
     * Spark's listener bus (asynchronous), normally within milliseconds.
@@ -3711,8 +3740,11 @@ object ManifestTableStore {
     import org.apache.spark.sql.execution.datasources.{FileStatusCache,
       HadoopFsRelation, InMemoryFileIndex, LogicalRelation, PartitionPath,
       PartitionSpec, PartitioningUtils}
-    import org.apache.spark.sql.execution.datasources.parquet
-      .ParquetFileFormat
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    import org.apache.parquet.format.converter.ParquetMetadataConverter
+    import org.apache.parquet.hadoop.Footer
+    import org.apache.parquet.hadoop.util.HadoopInputFile
     import org.apache.spark.sql.types.{ArrayType, DataType, MapType,
       StringType, StructField, StructType}
     private val cache = new java.util.concurrent.ConcurrentHashMap[
@@ -3729,15 +3761,48 @@ object ManifestTableStore {
 
     /** `dir`'s schema: cached, else recorded, else one footer read. */
     def schema(spark: SparkSession, dir: String): StructType =
-      Option(cache.get(dir)).getOrElse {
-        val f = new HPath(dir).getFileSystem(
-          spark.sparkContext.hadoopConfiguration)
-        val found = AtomicCreate.readString(f, new HPath(dir, SchemaFile))
-          .map(DataType.fromJson(_).asInstanceOf[StructType])
-          .getOrElse(spark.read.parquet(dir).schema)
-        put(dir, found)
-        readSchema(found)
+      schemas(spark, Seq(dir)).head
+
+    /** [[schema]] of each of `dirs`, with every miss resolved in one
+      * pass: recorded schemas are read, and the other dirs' footers —
+      * one part file per dir — are read in parallel on the driver by
+      * Spark's own footer reader and schema converter, so a cold read
+      * of N unpartitioned dirs runs no inference job per dir. A dir
+      * holding subdirs (hive-partitioned before records existed), no
+      * part file or an unreadable footer keeps Spark's inference.
+      */
+    def schemas(spark: SparkSession, dirs: Seq[String]): Seq[StructType] = {
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val misses = dirs.distinct.filterNot(cache.containsKey)
+      if (misses.nonEmpty) {
+        val conf = spark.sparkContext.hadoopConfiguration
+        val converter = new ParquetToSparkSchemaConverter(
+          spark.sessionState.conf)
+        Await.ready(Future.traverse(misses)(d => Future {
+          val p = new HPath(d)
+          val f = p.getFileSystem(conf)
+          AtomicCreate.readString(f, new HPath(p, SchemaFile)) match {
+            case Some(json) =>
+              put(d, DataType.fromJson(json).asInstanceOf[StructType])
+            case None =>
+              val visible = f.listStatus(p)
+                .filterNot(st => FsCatalog.isHiddenName(st.getPath.getName))
+              if (!visible.exists(_.isDirectory))
+                visible.sortBy(_.getPath.getName).headOption.foreach { st =>
+                  put(d, ParquetFileFormat.readSchemaFromFooter(new Footer(
+                    st.getPath, ParquetFooterReader.readFooter(
+                      HadoopInputFile.fromStatus(st, conf),
+                      ParquetMetadataConverter.SKIP_ROW_GROUPS)), converter))
+                }
+          }
+        }), scala.concurrent.duration.Duration.Inf)
       }
+      // a miss left (its read failed, or Spark must infer) fails or
+      // infers exactly as a plain parquet read of the dir does
+      dirs.map(d => Option(cache.get(d))
+        .getOrElse(put(d, spark.read.parquet(d).schema)))
+    }
 
     /** One dir's rows: the one-dir case of [[scan]]. */
     def read(spark: SparkSession, dir: String): DataFrame =
@@ -3824,9 +3889,11 @@ object ManifestTableStore {
       * skips the one-task footer inference job Spark runs per uncached
       * parquet scan — at 100 TB ingest, one job per committed dir.
       */
-    def put(dir: String, schema: StructType): Unit = {
+    def put(dir: String, schema: StructType): StructType = {
       if (cache.size >= MaxEntries) cache.clear()
-      cache.put(dir, readSchema(schema))
+      val read = readSchema(schema)
+      cache.put(dir, read)
+      read
     }
     /** [[put]], plus the schema published into `dir` as [[SchemaFile]]
       * for every later process — called before `dir` is committed.
@@ -3952,6 +4019,15 @@ object ManifestTableStore {
 
   /** Stats-JSON key holding the dir's row count. */
   private[engine] val CountKey = "__n__"
+
+  /** The rows of `entries`' dirs (each dir once) from their recorded
+    * counts; None when any dir predates count recording.
+    */
+  private[engine] def countOf(entries: Seq[Entry]): Option[Long] = {
+    val ns = entries.groupBy(_.dir).values.map(es => parseCount(
+      es.head.statsJson)).toSeq
+    if (ns.forall(_.isDefined)) Some(ns.flatten.sum) else None
+  }
 
   private[engine] def parseCount(json: String): Option[Long] = {
     if (json.isEmpty || !json.contains(CountKey)) return None

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SQLContext, SparkSession}
+import org.apache.spark.sql.connector.read.streaming.{Offset => OffsetV2,
+  ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset, Sink, Source}
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.graftshim.PlanShim
@@ -139,14 +141,29 @@ final class StoreChangeSourceProvider extends StreamSourceProvider
         .map(s => math.max(0L, s.toLong - 1L)).getOrElse(0L))
 }
 
+/** The source half of [[StoreChangeSourceProvider]]. Under
+  * `Trigger.AvailableNow` a run stops at the version current when it
+  * starts ([[prepareForTriggerAvailableNow]]): commits landing during
+  * the run wait for the next run.
+  */
 final class StoreChangeSource(spark: SparkSession,
     store: ManifestTableStore, override val schema: StructType,
-    cdf: Boolean, startingVersion: Long = 0L) extends Source {
+    cdf: Boolean, startingVersion: Long = 0L) extends Source
+    with SupportsTriggerAvailableNow {
 
   import org.apache.spark.sql.execution.streaming.runtime.LongOffset
 
+  // the AvailableNow run's end version, fixed when the run starts
+  @volatile private var runEnd: Option[Long] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    runEnd = Some(store.currentVersion(spark))
+
+  override def latestOffset(start: OffsetV2, limit: ReadLimit): OffsetV2 =
+    getOffset.orNull
+
   override def getOffset: Option[Offset] = {
-    val v = store.currentVersion(spark)
+    val v = runEnd.getOrElse(store.currentVersion(spark))
     if (v == 0L) None else Some(LongOffset(v))
   }
 

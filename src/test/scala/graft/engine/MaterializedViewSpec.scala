@@ -120,6 +120,88 @@ class MaterializedViewSpec extends SparkSpec {
     assert(jobs(4) == jobs(1), s"jobs per refresh: $jobs")
   }
 
+  test("an incremental aggregate REFRESH over an append-only window " +
+      "runs at most 4 Spark jobs, and the backing's change feed shows " +
+      "only the groups it folded") {
+    val (cat, _) = freshCat()
+    cat.exec(spark,
+      "CREATE TABLE ap (k STRING, s STRING, r DOUBLE) USING graft_store")
+    cat.exec(spark, "INSERT INTO ap VALUES ('a', 'x', 1.0), " +
+      "('b', 'x', 2.0), ('c', 'y', 3.0)", batchId = Some(0L))
+    val defn = "SELECT k, s, COUNT(*) AS n, MAX(r) AS hi FROM ap " +
+      "GROUP BY k, s"
+    cat.exec(spark, s"CREATE MATERIALIZED VIEW apg AS $defn",
+      batchId = Some(100L))
+    val backing = cat.resolve(spark, "apg").get
+    def asSet(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+        r.getDouble(3))).toSet
+    (1 to 2).foreach { i =>
+      // group 'a' grows and a new group opens; 'b' and 'c' stay put
+      cat.exec(spark, s"INSERT INTO ap VALUES ('a', 'x', ${i + 5}.0), " +
+        s"('n$i', 'y', 0.5)", batchId = Some(i.toLong))
+      val before = backing.currentVersion(spark)
+      var mode = ""
+      val jobs = jobsDuring {
+        mode = modeOf(cat.exec(spark, "REFRESH MATERIALIZED VIEW apg"))
+      }
+      assert(mode == "incremental", s"refresh $i: $mode")
+      assert(jobs <= 4, s"refresh $i ran $jobs jobs")
+      assert(asSet(cat.query(spark, "SELECT k, s, n, hi FROM apg")) ==
+        asSet(cat.query(spark, defn)), s"refresh $i")
+      val feed = backing.readChangeFeed(spark, before,
+        backing.currentVersion(spark))
+      def keysOf(t: String) = feed.filter(s"_change_type = '$t'")
+        .select("k").as[String].collect().toSet
+      assert(keysOf("insert") == Set("a", s"n$i"), s"refresh $i")
+      assert(keysOf("delete") == Set("a"), s"refresh $i")
+    }
+  }
+
+  test("a tripped null-key or emptied-group gate commits no backing " +
+      "version and leaves no uncommitted dir under the backing's data/") {
+    val (cat, _) = freshCat()
+    cat.exec(spark,
+      "CREATE TABLE gt (k STRING, n BIGINT) USING graft_store")
+    cat.exec(spark, "INSERT INTO gt VALUES ('a', 1), ('b', 2)",
+      batchId = Some(0L))
+    val defn = "SELECT k, COUNT(*) AS cnt, SUM(n) AS total FROM gt " +
+      "GROUP BY k"
+    cat.exec(spark, s"CREATE MATERIALIZED VIEW gmv AS $defn",
+      batchId = Some(100L))
+    val backing = cat.resolve(spark, "gmv").get
+    val data = java.nio.file.Paths.get(backing.tablePath, "data")
+    def dirs(): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      Files.list(data).iterator().asScala.map(_.getFileName.toString).toSet
+    }
+    // the fold's gated rewrite alone: a refused write commits nothing
+    // and deletes its dir
+    val (v0, d0) = (backing.currentVersion(spark), dirs())
+    val refused = backing.rewriteGated(spark, 1L << 50,
+      Seq(org.apache.spark.sql.functions.count("*")))(identity)(
+      g => Some(s"refused ${g.getLong(0)} rows"))
+    assert(refused.contains("refused 2 rows"))
+    assert(backing.currentVersion(spark) == v0)
+    assert(dirs() == d0)
+    // through REFRESH: each gate degrades to the full recompute, and no
+    // fold dir (`merge-…`) ever reaches data/, committed or not
+    def foldDirs() = dirs().filter(_.startsWith("merge-"))
+    cat.exec(spark, "INSERT INTO gt VALUES (NULL, 5)", batchId = Some(1L))
+    val r1 = cat.exec(spark, "REFRESH MATERIALIZED VIEW gmv")
+    assert(modeOf(r1) == "full:null group key in the delta",
+      r1.collect().mkString)
+    assert(foldDirs().isEmpty, foldDirs())
+    cat.exec(spark, "DELETE FROM gt WHERE k = 'b'")
+    val r2 = cat.exec(spark, "REFRESH MATERIALIZED VIEW gmv")
+    assert(modeOf(r2) == "full:a group emptied in the window",
+      r2.collect().mkString)
+    assert(foldDirs().isEmpty, foldDirs())
+    assert(cat.query(spark, "SELECT COALESCE(k, '-') AS k, cnt, total " +
+      "FROM gmv").as[(String, Long, Long)].collect().toSet ==
+      Set(("a", 1L, 1L), ("-", 1L, 5L)))
+  }
+
   test("row-map MV (filter/projection): incremental refresh appends " +
       "the transformed delta only") {
     val (cat, _) = freshCat()

@@ -182,4 +182,32 @@ class SchemaRegistrySpec extends SparkSpec {
       p.endsWith("f8.json") || p.endsWith("f9.json") || p.endsWith("f10.json")),
       s"should sample the 3 newest, got ${st.sampleFiles}")
   }
+
+  test("a governance pass runs one Spark job per changed topic (its " +
+      "inference); the schema and state artifacts are written without " +
+      "one and read back as one part file each") {
+    val bronze = tmp("bronze-"); val wh = tmp("wh-")
+    Seq("t1", "t2").foreach { t =>
+      val topic = Files.createDirectory(bronze.resolve(t))
+      writeFile(topic, "a.json", s"""{"x": 1, "$t": "s"}""", 1000L)
+    }
+    val reg = registry(bronze, wh)
+    var out = Seq.empty[Outcome]
+    assert(jobsDuring { out = reg.runOnce() } == 2)
+    assert(out.forall(_.isInstanceOf[Updated]), out)
+    Seq("t1", "t2").foreach { t =>
+      assert(reg.readSchema(t).get.fieldNames.toSet == Set("x", t))
+      assert(reg.readState(t).lastProcessedMtime == 1000L)
+      Seq("schema", "_state").foreach { a =>
+        val parts = Files.list(wh.resolve(t).resolve(a)).toArray.toSeq
+          .map(_.toString.split('/').last).filterNot(_.startsWith("."))
+        assert(parts == Seq("part-00000.txt"), s"$t/$a: $parts")
+      }
+    }
+    // drift on one topic rewrites its artifacts in place
+    writeFile(bronze.resolve("t1"), "b.json", """{"y": 2}""", 2000L)
+    assert(jobsDuring { out = reg.runOnce() } == 1)
+    assert(reg.readSchema("t1").get.fieldNames.toSet == Set("x", "t1", "y"))
+    assert(reg.readState("t1").previousSchemaHash.isDefined)
+  }
 }

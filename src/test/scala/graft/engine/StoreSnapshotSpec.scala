@@ -281,4 +281,23 @@ class StoreSnapshotSpec extends SparkSpec {
     assert(!cached(d1))
     assert(cached(d10))
   }
+
+  test("a cold read of 50 unpartitioned appends reads their footers in " +
+      "one driver-side pass: at most 2 Spark jobs, the same schema and " +
+      "rows as the warm read") {
+    val root = tmp("snap-cold-flat-")
+    val store = new ManifestTableStore(root.toString)
+    (0 until 50).foreach(i =>
+      store.append(Seq((i.toLong, s"v$i", i * 0.5)).toDF("k", "s", "w"),
+        i.toLong))
+    val warm = store.read(spark)
+    val warmRows = rows(warm)
+    ManifestTableStore.DirSchemas.evictUnder(root.toString)
+    var cold: DataFrame = null
+    val jobs = jobsDuring { cold = store.read(spark) }
+    assert(jobs <= 2, s"cold read ran $jobs jobs")
+    assert(columns(cold) == columns(warm))
+    assert(scans(cold).size == 1)
+    assert(rows(cold) == warmRows)
+  }
 }

@@ -257,6 +257,35 @@ class StoreChangeSourceSpec extends SparkSpec {
     assert(sink.toSet == Set((1L, "a"), (2L, "b")))
   }
 
+  test("an AvailableNow run stops at the version current when it " +
+      "starts: a commit landing during the run waits for the next run") {
+    val (path, store) = newStore()
+    store.append(Seq((1L, "a")).toDF("k", "v"), 0L)
+    val ckpt = Files.createTempDirectory("an-end-ckpt-").toString
+    val sink = new scala.collection.mutable.ArrayBuffer[(Long, String)]()
+    def run(): Unit = {
+      val q = spark.readStream.format("graft-store").option("path", path)
+        .load()
+        .writeStream
+        .option("checkpointLocation", ckpt)
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, _: Long) =>
+          val got = df.select("k", "v").as[(Long, String)].collect()
+          sink.synchronized { sink ++= got }
+          // the first batch's commit lands while the run is going
+          if (got.contains((1L, "a")))
+            store.append(Seq((2L, "b")).toDF("k", "v"), 1L)
+          ()
+        }
+        .trigger(Trigger.AvailableNow()).start()
+      assert(q.awaitTermination(120000), "AvailableNow must terminate")
+    }
+    run()
+    assert(store.currentVersion(spark) == 2L)
+    assert(sink.toSeq == Seq((1L, "a")))
+    run()
+    assert(sink.toSeq == Seq((1L, "a"), (2L, "b")))
+  }
+
   test("getBatch windows are version-pinned (a replayed window " +
       "re-reads identical rows); missing path refuses") {
     val (path, store) = newStore()
