@@ -2231,18 +2231,19 @@ final class StoreCatalog(basePath: String) {
     *     source — window-bounded, never the 100 TB source. The
     *     definition runs over the windows' rows with every source
     *     substituted at once: a row map appends the result (insert
-    *     windows only); an aggregate folds its partials through the
-    *     keyed merge — inserts add, deletes (and CoW UPDATE/MERGE,
-    *     which travel as delete+insert pairs) subtract through the
-    *     generated pair columns, and a delete window under MIN/MAX
-    *     recomputes only the touched groups. The refresh batch id
+    *     windows only); an aggregate rewrites its backing once —
+    *     inserts add, deletes (and CoW UPDATE/MERGE, which travel as
+    *     delete+insert pairs) subtract through the generated pair
+    *     columns, a delete window under MIN/MAX recomputes only the
+    *     touched groups, NULL group keys fold like any other, and an
+    *     emptied group leaves the backing. The refresh batch id
     *     derives from the windows' end-version SUM in a reserved
     *     namespace, so a crash between the data commit and the
     *     sidecar update replays into a no-op or recovers loudly.
     *   - FULL RECOMPUTE otherwise (joins, UNION DISTINCT,
-    *     non-decomposable aggregates, deletes under a row map, and
-    *     every gate: a vacuumed window, a NULL group key, an emptied
-    *     group, a crashed refresh, a pre-pair backing), reported
+    *     non-decomposable aggregates, deletes under a row map, a
+    *     vacuumed window, a crashed refresh, an empty backing past
+    *     window start zero, a pre-pair backing), reported
     *     loudly in the returned mode row — never a silent wrong
     *     answer.
     */
@@ -2494,7 +2495,8 @@ final class StoreCatalog(basePath: String) {
     * the FOLDED pair at every refresh, so it always equals the full
     * recompute); `SUM(x) AS s` → `COUNT(x) AS s__cnt` (retracting the
     * last non-null value must serve NULL, not 0); plus ONE per-group
-    * `COUNT(1) AS __rows` (the emptied-group detector). These are what
+    * `COUNT(1) AS __rows` (a group folding to zero rows leaves the
+    * backing). These are what
     * make DELETE windows — and therefore CoW UPDATE/MERGE windows,
     * which travel as delete+insert pairs — incrementally foldable.
     */
@@ -2579,11 +2581,10 @@ final class StoreCatalog(basePath: String) {
     * recompute unconditionally — the operator's rebuild verb when a
     * backing is suspected stale/corrupt, or to re-snapshot after an
     * out-of-band source repair (mode `full:forced`). Robustness
-    * contract: a vacuumed CDF window, a NULL group key in the delta,
-    * and a backing table predating the AVG pair columns all degrade
-    * to the full recompute LOUDLY — REFRESH never hard-fails on
-    * routine source maintenance and never folds wrong numbers
-    * silently.
+    * contract: a vacuumed CDF window and a backing table predating
+    * the fold pair columns degrade to the full recompute LOUDLY —
+    * REFRESH never hard-fails on routine source maintenance and never
+    * folds wrong numbers silently.
     *
     * Refreshes serialize per (catalog, MV): two streaming feeds
     * driving the same gold MV (the silver→gold topology runs one
@@ -2612,8 +2613,9 @@ final class StoreCatalog(basePath: String) {
     * applied to the windows' rows with every source substituted at
     * once (a source whose window is empty reads as empty), and the
     * result folds into the backing: a row map appends it, an
-    * aggregate merges its partials ([[foldAggPartials]]), and a
-    * delete window under MIN/MAX recomputes only the touched groups.
+    * aggregate folds its partials ([[foldAggPartials]]), and a
+    * delete window under MIN/MAX recomputes only the touched groups;
+    * either way the backing is rewritten once, as one dir.
     * The row reports the window as version sums.
     */
   private def refreshMaterializedViewLocked(spark: SparkSession,
@@ -2755,24 +2757,32 @@ final class StoreCatalog(basePath: String) {
         // exactly ([[foldAggPartials]]). The fold rewrites the backing
         // once, as one dir — gold-table-sized, never source-sized.
         val expanded = expandFoldPairs(parsed)
+        val insA = try overWindows(expanded, Some("insert")) catch vacuumed
+        // vintage gate for both paths: the pair-expanded definition's
+        // columns must all exist in the backing (older MVs predate
+        // __rows and/or the sum/avg pairs). One REPLACE upgrades the
+        // backing; every later window folds incrementally.
+        val bCols = backingStore.read(spark).columns
+          .map(_.toLowerCase).toSet
+        if (!insA.columns.forall(c => bCols(c.toLowerCase)))
+          return full("backing predates retractable fold pairs")
         val retractable =
           !aggs.exists(a => a._2 == "min" || a._2 == "max")
         if (!hasDeletes || retractable) {
-          (try foldAggPartials(spark, name, keys, aggs,
-            overWindows(expanded, Some("insert")),
+          try foldAggPartials(spark, name, keys, aggs, insA,
             if (hasDeletes) Some(overWindows(expanded, Some("delete")))
             else None, bid)
-          catch vacuumed).foreach(reason => return full(reason))
+          catch vacuumed
         } else {
           // MIN/MAX cannot retract — but only groups the windows
           // TOUCHED can change. Recompute exactly those groups from
-          // every source PINNED at its window end and merge them over
-          // the backing: a delete-bearing window costs a group-bounded
-          // scan (broadcast semi-join on the delta's key tuples, plus
-          // min/max dir pruning on bare-column keys), never a gold
-          // rebuild. A group the windows EMPTIED vanishes from the
-          // recompute — the keyed merge cannot delete a backing row,
-          // so that (rare) case still recomputes fully, loudly.
+          // every source PINNED at its window end and rewrite the
+          // backing once: its rows outside the touched groups, plus
+          // the recomputed groups. A delete-bearing window costs a
+          // group-bounded scan (broadcast semi-join on the delta's key
+          // tuples, plus min/max dir pruning on bare-column keys),
+          // never a gold rebuild; a group the windows EMPTIED is
+          // absent from the recompute and so leaves the backing.
           import org.apache.spark.sql.catalyst.analysis.{
             UnresolvedAttribute, UnresolvedRelation, UnresolvedStar}
           import org.apache.spark.sql.catalyst.expressions.Alias
@@ -2796,6 +2806,12 @@ final class StoreCatalog(basePath: String) {
           val inputIsBare =
             stripAlias(input).isInstanceOf[UnresolvedRelation]
           val tmp = keys.indices.map(i => s"__gk$i")
+          val dks = keys.indices.map(i => s"__dk$i")
+          // a row whose `cols` equal a delta key tuple, NULL-safe: a
+          // NULL group key is a group like any other
+          def touched(cols: Seq[String]): org.apache.spark.sql.Column =
+            cols.zip(dks).map { case (c, d) => fcol(c) <=> fcol(d) }
+              .reduce(_ && _)
           def keyed(rows: DataFrame, star: Boolean): DataFrame =
             PlanShim.ofRows(spark, Project(
               (if (star) Seq(UnresolvedStar(None)) else Nil) ++
@@ -2803,14 +2819,9 @@ final class StoreCatalog(basePath: String) {
               PlanShim.planOf(rows)))
           // through the input FIRST: a delete touching only rows the
           // MV's WHERE clause excludes contributes no never-visible
-          // groups here, so it folds incrementally instead of
-          // tripping the emptied-group full rebuild
+          // groups here
           val deltaKeys = keyed(overWindows(input, None), star = false)
-            .distinct().pinned
-          if (!deltaKeys.filter(tmp.map(fcol(_).isNull)
-              .reduce(_ || _)).isEmpty)
-            return full("null group key in the delta")
-          val affectedN = deltaKeys.count()
+            .distinct().toDF(dks: _*).pinned
           // bare-column keys prune source dirs by the affected range
           // BEFORE the join — the manifest's min/max stats make the
           // bounded scan skip every dir outside the delta's key span.
@@ -2822,20 +2833,22 @@ final class StoreCatalog(basePath: String) {
             case a: UnresolvedAttribute => a.nameParts.size == 1
             case _ => false
           })
-          val keySpans: Seq[org.apache.spark.sql.Column] =
-            if (bare.isEmpty) Nil
-            else {
-              val spans = bare.flatMap(i =>
-                Seq(fmin(fcol(tmp(i))), fmax(fcol(tmp(i)))))
-              val mm = deltaKeys.agg(spans.head, spans.tail: _*).head()
-              bare.zipWithIndex.flatMap { case (i, j) =>
-                val (lo, hi) = (mm.get(2 * j), mm.get(2 * j + 1))
-                val sc = keyExprs(i)
-                  .asInstanceOf[UnresolvedAttribute].nameParts.head
-                if (lo == null || hi == null) None
-                else Some(fcol(sc) >= flit(lo) && fcol(sc) <= flit(hi))
-              }
-            }
+          // ONE aggregate over the delta's key tuples: their count, and
+          // per bare key its span and its non-null count
+          val stats = fcount(flit(1)) +: bare.flatMap(i => Seq(
+            fmin(fcol(dks(i))), fmax(fcol(dks(i))), fcount(fcol(dks(i)))))
+          val st = deltaKeys.agg(stats.head, stats.tail: _*).head()
+          val affectedN = st.getLong(0)
+          val keySpans = bare.zipWithIndex.flatMap { case (i, j) =>
+            val (lo, hi) = (st.get(3 * j + 1), st.get(3 * j + 2))
+            val sc = fcol(keyExprs(i)
+              .asInstanceOf[UnresolvedAttribute].nameParts.head)
+            val span =
+              if (lo == null) None else Some(sc >= flit(lo) && sc <= flit(hi))
+            // a NULL key in the delta: its group's rows pass too
+            if (st.getLong(3 * j + 3) == affectedN) span
+            else Some(span.fold(sc.isNull)(_ || sc.isNull))
+          }
           // each source reads AS OF its window end — a commit racing
           // this refresh must not leak rows past it into the
           // recomputed groups (they fold in the NEXT window)
@@ -2848,28 +2861,24 @@ final class StoreCatalog(basePath: String) {
             t -> keySpans.foldLeft(at)(_ filter _)
           }.toMap
           // broadcast only a broadcast-SIZED key set; a delete wave
-          // touching millions of groups semi-joins by shuffle instead
-          // of OOMing the driver
+          // touching millions of groups joins by shuffle instead of
+          // OOMing the driver
           val dk = if (affectedN <= 1000000L) broadcast(deltaKeys)
             else deltaKeys
           val bounded = keyed(
             applyPlanOverDeltas(spark, input, asOfEnds), star = true)
-            .join(dk, tmp, "left_semi")
+            .join(dk, touched(tmp), "left_semi")
             .drop(tmp: _*)
           // the (pair-expanded) aggregate over the bounded input rows
           val recomputed = PlanShim.ofRows(spark,
             expanded.withNewChildren(Seq(PlanShim.planOf(bounded))))
-            .pinned
-          // vintage gate: the recomputed groups carry the generated
-          // pair columns; a backing that predates them upgrades
-          // through ONE full recompute
-          val bCols = store(name).read(spark).columns
-            .map(_.toLowerCase).toSet
-          if (!recomputed.columns.forall(c => bCols(c.toLowerCase)))
-            return full("backing predates retractable fold pairs")
-          if (recomputed.count() < affectedN)
-            return full("a group emptied in the window")
-          store(name).merge(spark, recomputed, keys, bid)
+          backingStore.rewrite(spark, bid) { backing =>
+            backing.join(dk, touched(keys), "left_anti")
+              .unionByName(recomputed.select(backing.schema.fields.map {
+                f => (if (f.name == "batch_id") flit(bid) else fcol(f.name))
+                  .cast(f.dataType).as(f.name)
+              }.toSeq: _*))
+          }
         }
     }
     publishMviewSpec(spark, name, text, curs)
@@ -2877,56 +2886,40 @@ final class StoreCatalog(basePath: String) {
   }
 
   /** Fold one window's aggregate PARTIALS into an MV's backing: the
-    * new backing is `backing ⟗ partials` on the keys, written once as
-    * one dir ([[ManifestTableStore.rewriteGated]]). `insA` / `delA0`
-    * are the definition (pair-expanded) applied to the windows' insert
-    * / delete rows. Inserts add; deletes subtract through the
-    * retractable pair columns (`__rows`, `<a>__cnt`, avg's pair), the
-    * served AVG recomputes from the FOLDED pair, and a SUM whose
-    * non-null count reaches zero serves NULL, not 0. MIN/MAX fold
-    * inserts only (a delete window under them takes the group-bounded
-    * recompute). Backing rows the window does not touch keep their
-    * values and batch ids; folded and new groups take `bid`, so the
-    * backing's own change feed shows only the changed groups.
-    * Returns Some(reason) when the fold must degrade to a loud full
-    * recompute (vintage gate, a NULL group key, an emptied group) —
-    * nothing is committed then; None when the fold committed.
+    * new backing is the backing rows, the insert partials `insA` and
+    * the delete partials `delA` (the definition, pair-expanded, over
+    * the windows' insert / delete rows) grouped by the keys — at most
+    * one row of each per group, so each column's fold reads the
+    * group's backing, insert and delete values side by side — and is
+    * written once as one dir ([[ManifestTableStore.rewrite]]). GROUP
+    * BY matches NULL keys, so a NULL group key folds like any other.
+    * Inserts add; deletes subtract through the retractable pair
+    * columns (`__rows`, `<a>__cnt`, avg's pair), the served AVG
+    * recomputes from the FOLDED pair, a SUM whose non-null count
+    * reaches zero serves NULL, not 0, and a group whose `__rows`
+    * reaches zero leaves the backing. MIN/MAX fold inserts only (a
+    * delete window under them takes the group-bounded recompute).
+    * Backing rows the window does not touch keep their values and
+    * batch ids; folded and new groups take `bid`, so the backing's own
+    * change feed shows only the changed groups.
     */
   private def foldAggPartials(spark: SparkSession, name: String,
       keys: Seq[String], aggs: Seq[(String, String)],
-      insA: DataFrame, delA0: Option[DataFrame], bid: Long)
-      : Option[String] = {
+      insA: DataFrame, delA: Option[DataFrame], bid: Long): Unit = {
     import org.apache.spark.sql.functions.{
-      coalesce, col => fcol, count => fcount, greatest, least, lit, when}
-    val bCols = store(name).read(spark).columns.map(_.toLowerCase).toSet
+      coalesce, col => fcol, greatest, least, lit, max => fmax, when}
     val avgAliases = aggs.collect { case (a, "avg") => a }
     val sumAliases = aggs.collect { case (a, "sum") => a }
-    // vintage gate, uniform across rounds: the expanded partial's
-    // columns must all exist in the backing (older MVs predate
-    // __rows and/or the sum/avg pairs). One REPLACE upgrades the
-    // backing; every later window folds incrementally.
-    if (!insA.columns.forall(c => bCols(c.toLowerCase)))
-      return Some("backing predates retractable fold pairs")
     val retractable =
       !aggs.exists(a => a._2 == "min" || a._2 == "max")
-    val hasDeletes = delA0.isDefined
     def isKey(c: String) = keys.exists(_.equalsIgnoreCase(c))
-    val net0 =
-      if (!hasDeletes) insA
-      else {
-        // net delta: insert partials ⟗ delete partials on the
-        // keys (a group may appear on either side alone)
-        val delA = insA.columns.filterNot(isKey).foldLeft(delA0.get)(
-          (d, c) => d.withColumnRenamed(c, s"__del_$c"))
-        insA.join(delA, keys, "full_outer")
-      }
-    def dl(c: String): org.apache.spark.sql.Column =
-      if (hasDeletes) fcol(s"d.__del_$c")
-      else lit(null).cast(insA.schema(c).dataType)
+    // the group's value of `c` on its backing (0), insert (1) or
+    // delete (2) row; NULL when the group has no such row
+    def on(role: Int, c: String): org.apache.spark.sql.Column =
+      fmax(when(fcol("__role") === role, fcol(c)))
     def fold(alias: String,
         fn: String): org.apache.spark.sql.Column = {
-      val d = fcol(s"d.$alias"); val b = fcol(s"b.$alias")
-      val x = dl(alias)
+      val b = on(0, alias); val d = on(1, alias); val x = on(2, alias)
       val zero = lit(0).cast(insA.schema(alias).dataType)
       fn match {
         case "count" =>
@@ -2967,40 +2960,26 @@ final class StoreCatalog(basePath: String) {
                 c.equalsIgnoreCase("__rows")) "count"
               else "sum"))
       }
-    // two gates over the rows the fold writes (the window's groups:
-    // batch id `bid`), observed on the write itself:
-    //  - a NULL group key never meets the fold's equality join — each
-    //    refresh would INSERT another null-key row instead of folding
-    //    it (null groups in the backing alone fold nothing and pass);
-    //  - a group whose last row leaves in the window nets to ZERO
-    //    rows, which the fold would keep as a zero row (rare: a whole
-    //    gold group vanishing in one window).
-    // Both degrade to the loud full recompute, in this precedence.
-    val mine = fcol("batch_id") === bid
-    val gates =
-      fcount(when(mine && keys.map(fcol(_).isNull).reduce(_ || _), 1)) +:
-        (if (retractable) Seq(fcount(when(mine && fcol("__rows") === 0, 1)))
-        else Nil)
-    store(name).rewriteGated(spark, bid, gates) { backing =>
-      val inDelta = fcol("__in_delta").isNotNull
-      val joined = net0.withColumn("__in_delta", lit(true)).alias("d")
-        .join(backing.alias("b"), keys, "full_outer")
-      joined.select(backing.schema.fields.toSeq.map { f =>
-        val c = f.name
-        val v =
-          if (isKey(c)) fcol(c)
-          else if (c == "batch_id")
-            when(inDelta, lit(bid)).otherwise(fcol("b.batch_id"))
-          else when(inDelta, insA.columns.find(_.equalsIgnoreCase(c))
-            .map(folded).getOrElse(lit(null)))
-            .otherwise(fcol(s"b.$c"))
-        v.cast(f.dataType).as(c)
-      }: _*)
-    } { g =>
-      if (g.getLong(0) > 0L) Some("null group key in the delta")
-      else if (retractable && g.getLong(1) > 0L)
-        Some("a group emptied in the window")
-      else None
+    store(name).rewrite(spark, bid) { backing =>
+      val inDelta = fmax(fcol("__role")) > 0
+      // the backing hashed on the keys like the partials' aggregates
+      // are: the union keeps that partitioning, so the grouping adds
+      // no shuffle of its own
+      val rows = (Seq(backing.repartition(keys.map(fcol): _*), insA) ++
+          delA).zipWithIndex
+        .map { case (df, role) => df.withColumn("__role", lit(role)) }
+        .reduce(_.unionByName(_, allowMissingColumns = true))
+      val folds = backing.columns.filterNot(isKey).toSeq.map { c =>
+        (if (c == "batch_id") when(inDelta, lit(bid))
+          .otherwise(on(0, "batch_id"))
+        else when(inDelta, insA.columns.find(_.equalsIgnoreCase(c))
+          .map(folded).getOrElse(lit(null)))
+          .otherwise(on(0, c))).as(c)
+      }
+      rows.groupBy(keys.map(fcol): _*).agg(folds.head, folds.tail: _*)
+        .select(backing.schema.fields.toSeq.map(f =>
+          fcol(f.name).cast(f.dataType).as(f.name)): _*)
+        .filter(fcol("__rows") =!= 0) // an emptied group leaves
     }
   }
 

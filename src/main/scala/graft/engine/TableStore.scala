@@ -1,6 +1,6 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.engine.Pin.Pinnable
 
 /** Silver-table sink. The reference appends micro-batches to an Iceberg
@@ -640,14 +640,9 @@ final class ManifestTableStore(path: String,
     * still read the written dir, so only bloom-indexed tables pay any
     * post-write read at all. The dir reads back with the schema
     * written here ([[putSchema]]), partition columns included, so the
-    * observed values are the values readers see. `gates` are the
-    * caller's aggregates over the written rows, observed the same way:
-    * a reason from `refuse` over their row deletes the dir and throws
-    * [[ManifestTableStore.WriteRefused]] before the checks apply.
+    * observed values are the values readers see.
     */
-  private def write(df0: DataFrame, dir: String,
-      gates: Seq[Column] = Nil,
-      refuse: Row => Option[String] = _ => None): String = {
+  private def write(df0: DataFrame, dir: String): String = {
     // a void column (a NULL-literal partition value, or a rewrite of a
     // dir whose null-only partition column inferred as void) refuses
     // to be a partition column — cast to string, which is type-neutral
@@ -671,7 +666,7 @@ final class ManifestTableStore(path: String,
         statsNorm(max(col(c)), dt).as(s"__mx_$c"))
     }) ++ checks.zipWithIndex.map { case ((_, pred), i) =>
       count(when(!expr(pred), 1)).as(s"__chk_$i")
-    } ++ gates.zipWithIndex.map { case (g, i) => g.as(s"__gate_$i") }
+    }
     val observed = df.observe(obs, aggs.head, aggs.tail: _*)
     if (partitionBy.isEmpty) observed.write.mode("overwrite").parquet(dir)
     else
@@ -719,12 +714,6 @@ final class ManifestTableStore(path: String,
       if (lost) 0L else m(k).asInstanceOf[Long]
     def mStr(k: String): String =
       if (lost) null else m(k).asInstanceOf[String]
-    // a lost observation is a provably-empty write: no row to refuse
-    if (!lost) refuse(Row.fromSeq(gates.indices.map(i => m(s"__gate_$i"))))
-      .foreach { reason =>
-        fs(spark).delete(new HPath(dir), true)
-        throw new ManifestTableStore.WriteRefused(reason)
-      }
     checks.zipWithIndex.foreach { case ((cname, pred), i) =>
       val violations = mLong(s"__chk_$i")
       if (violations > 0) {
@@ -2064,12 +2053,17 @@ final class ManifestTableStore(path: String,
     // separate evaluations — a non-deterministic source would
     // anti-join one set of keys and write another
     val src = source.pinned
-    val touched = mergeTouchedDirs(src, keys, snap.data)
+    // a dir without min/max on a key is touched anyway: when no dir
+    // carries any, every dir is, and the bounds aggregate is skipped
+    def hasKeyStats(e: Entry) =
+      parseStats(e.statsJson).keySet.exists(keys.contains)
+    val touched =
+      if (snap.data.exists(hasKeyStats)) mergeTouchedDirs(src, keys, snap.data)
+      else snap.dataDirs.toSet
     val srcKeys = broadcast(src.select(keys.map(col): _*).distinct())
     val inserted = src.withColumn("batch_id", lit(batchId))
     val keyStats = statsEligibleIn(src.schema).exists(keys.contains) ||
-      snap.data.exists(e => touched(e.dir) &&
-        parseStats(e.statsJson).keySet.exists(keys.contains))
+      snap.data.exists(e => touched(e.dir) && hasKeyStats(e))
     if (keyStats) {
       val insDir =
         s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
@@ -2105,31 +2099,22 @@ final class ManifestTableStore(path: String,
   /** Rewrite the whole table as ONE dir holding `rebuild` of its
     * current rows (batch ids included) in one write job, committed
     * like the one-dir keyed [[merge]]: every data entry and `batchId`
-    * point at the new dir. `gates` are aggregates over the rewritten
-    * rows that ride the write's observation; a reason from `refuse`
-    * over their row deletes the uncommitted dir and is returned before
-    * any commit. None means the rewrite committed (or `batchId` is
-    * already committed: a replay). `rebuild` reads the rows once, so
-    * nothing is pinned — the caller's frame must be deterministic.
+    * point at the new dir. A committed `batchId` is a replay: no-op.
+    * `rebuild` reads the rows once, so nothing is pinned — the
+    * caller's frame must be deterministic.
     */
-  private[engine] def rewriteGated(spark: SparkSession, batchId: Long,
-      gates: Seq[Column])(rebuild: DataFrame => DataFrame)(
-      refuse: Row => Option[String]): Option[String] = synchronized {
+  private[engine] def rewrite(spark: SparkSession, batchId: Long)(
+      rebuild: DataFrame => DataFrame): Unit = synchronized {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     val f = fs(spark)
     guardInheritedId(f, batchId)
     val snap = current(f)
     snap.requireNoDeletes("merge")
     require(!snap.isEmpty, s"no committed batches under $path")
-    if (snap.has(batchId)) return None
+    if (snap.has(batchId)) return
     val nd = s"$path/data/merge-${java.util.UUID.randomUUID()}"
-    try {
-      val stats = write(rebuild(snap.read(spark)), nd, gates, refuse)
-      commitOneDir(f, snap, nd, stats, snap.dataDirs.toSet, batchId)
-      None
-    } catch {
-      case r: ManifestTableStore.WriteRefused => Some(r.reason)
-    }
+    commitOneDir(f, snap, nd, write(rebuild(snap.read(spark)), nd),
+      snap.dataDirs.toSet, batchId)
   }
 
   /** Data dirs a keyed merge must rewrite, among the data entries
@@ -3685,12 +3670,6 @@ object ManifestTableStore {
       extends IllegalArgumentException(s"version $version of $table is " +
         "missing or incomplete (never committed, vacuumed past the " +
         "retention horizon, or its writer died mid-commit)")
-
-  /** A write whose caller gate refused its observed rows: the dir is
-    * deleted and nothing was committed.
-    */
-  private[engine] final class WriteRefused(val reason: String)
-      extends RuntimeException(reason)
 
   /** How long [[ManifestTableStore]]'s write waits, after the write
     * action returned, for its observed metrics. They arrive through

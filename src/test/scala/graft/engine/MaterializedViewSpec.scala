@@ -158,8 +158,9 @@ class MaterializedViewSpec extends SparkSpec {
     }
   }
 
-  test("a tripped null-key or emptied-group gate commits no backing " +
-      "version and leaves no uncommitted dir under the backing's data/") {
+  test("a REFRESH whose window brings a NULL group key or empties a " +
+      "group folds incrementally, equal to the recompute, and leaves " +
+      "no uncommitted dir under the backing's data/") {
     val (cat, _) = freshCat()
     cat.exec(spark,
       "CREATE TABLE gt (k STRING, n BIGINT) USING graft_store")
@@ -175,31 +176,25 @@ class MaterializedViewSpec extends SparkSpec {
       import scala.jdk.CollectionConverters._
       Files.list(data).iterator().asScala.map(_.getFileName.toString).toSet
     }
-    // the fold's gated rewrite alone: a refused write commits nothing
-    // and deletes its dir
-    val (v0, d0) = (backing.currentVersion(spark), dirs())
-    val refused = backing.rewriteGated(spark, 1L << 50,
-      Seq(org.apache.spark.sql.functions.count("*")))(identity)(
-      g => Some(s"refused ${g.getLong(0)} rows"))
-    assert(refused.contains("refused 2 rows"))
-    assert(backing.currentVersion(spark) == v0)
-    assert(dirs() == d0)
-    // through REFRESH: each gate degrades to the full recompute, and no
-    // fold dir (`merge-…`) ever reaches data/, committed or not
-    def foldDirs() = dirs().filter(_.startsWith("merge-"))
+    def readDirs() = backing.read(spark).inputFiles
+      .map(_.split("/data/").last.split('/').head).toSet
+    def asSet(q: String) = cat.query(spark, q)
+      .as[(Option[String], Long, Long)].collect().toSet
+    // each fold adds exactly one dir under data/, the one the backing
+    // now reads: nothing uncommitted is left behind
+    def refresh(): String = {
+      val before = dirs()
+      val r = cat.exec(spark, "REFRESH MATERIALIZED VIEW gmv")
+      assert(dirs() -- before == readDirs(), dirs() -- before)
+      assert(asSet("SELECT k, cnt, total FROM gmv") == asSet(defn))
+      modeOf(r)
+    }
     cat.exec(spark, "INSERT INTO gt VALUES (NULL, 5)", batchId = Some(1L))
-    val r1 = cat.exec(spark, "REFRESH MATERIALIZED VIEW gmv")
-    assert(modeOf(r1) == "full:null group key in the delta",
-      r1.collect().mkString)
-    assert(foldDirs().isEmpty, foldDirs())
+    assert(refresh() == "incremental")
     cat.exec(spark, "DELETE FROM gt WHERE k = 'b'")
-    val r2 = cat.exec(spark, "REFRESH MATERIALIZED VIEW gmv")
-    assert(modeOf(r2) == "full:a group emptied in the window",
-      r2.collect().mkString)
-    assert(foldDirs().isEmpty, foldDirs())
-    assert(cat.query(spark, "SELECT COALESCE(k, '-') AS k, cnt, total " +
-      "FROM gmv").as[(String, Long, Long)].collect().toSet ==
-      Set(("a", 1L, 1L), ("-", 1L, 5L)))
+    assert(refresh() == "incremental")
+    assert(asSet("SELECT k, cnt, total FROM gmv") ==
+      Set((Some("a"), 1L, 1L), (None, 1L, 5L)))
   }
 
   test("row-map MV (filter/projection): incremental refresh appends " +
@@ -249,7 +244,7 @@ class MaterializedViewSpec extends SparkSpec {
     assert(cat.query(spark, "SELECT total FROM m1 WHERE k = 'b'")
       .as[Long].head() == 13L)
     // MIN/MAX cannot retract through pairs, but a delete window only
-    // changes the groups it TOUCHED: group-bounded recompute, merged
+    // changes the groups it TOUCHED: group-bounded recompute, written
     // over the backing — INCREMENTAL, not a gold rebuild (own table —
     // f1 keeps serving the multi-source case below)
     cat.exec(spark,
@@ -261,20 +256,28 @@ class MaterializedViewSpec extends SparkSpec {
       "CREATE MATERIALIZED VIEW m1b AS SELECT k, MIN(n) AS lo " +
         "FROM f1b GROUP BY k", batchId = Some(110L))
     cat.exec(spark, "DELETE FROM f1b WHERE n = 1")
-    val r1b = cat.exec(spark, "REFRESH MATERIALIZED VIEW m1b")
+    var r1b: org.apache.spark.sql.DataFrame = null
+    val minMaxJobs = jobsDuring {
+      r1b = cat.exec(spark, "REFRESH MATERIALIZED VIEW m1b")
+    }
+    // the touched groups' recompute and the backing rewrite are one
+    // write job
+    assert(minMaxJobs == 12, s"MIN/MAX delete-window refresh: $minMaxJobs")
     assert(modeOf(r1b) == "incremental", r1b.collect().mkString)
     assert(cat.query(spark, "SELECT k, lo FROM m1b ORDER BY k")
       .as[(String, Long)].collect().toSeq ==
       Seq(("a", 5L), ("b", 3L)))
-    // ...but a group the window EMPTIES vanishes from the recompute —
-    // the keyed merge cannot delete a backing row, so that case
-    // recomputes fully, loudly
+    // ...and a group the window EMPTIES vanishes from the recompute
+    // and so leaves the backing
     cat.exec(spark, "DELETE FROM f1b WHERE n = 5")
     val r1c = cat.exec(spark, "REFRESH MATERIALIZED VIEW m1b")
-    assert(modeOf(r1c) == "full:a group emptied in the window",
-      r1c.collect().mkString)
+    assert(modeOf(r1c) == "incremental", r1c.collect().mkString)
     assert(cat.query(spark, "SELECT k, lo FROM m1b ORDER BY k")
       .as[(String, Long)].collect().toSeq == Seq(("b", 3L)))
+    assert(cat.query(spark, "SELECT k, lo FROM m1b ORDER BY k")
+      .as[(String, Long)].collect().toSeq ==
+      cat.query(spark, "SELECT k, MIN(n) AS lo FROM f1b GROUP BY k " +
+        "ORDER BY k").as[(String, Long)].collect().toSeq)
     // multi-source JOINs: always full (only UNION ALL row-map legs
     // decompose)
     cat.exec(spark,
@@ -346,12 +349,17 @@ class MaterializedViewSpec extends SparkSpec {
     }
     // content-preserving maintenance stays allowed
     cat.exec(spark, "OPTIMIZE gm")
-    // and the MV's own full recompute still runs (internal bypass)
+    // and the MV's own writes still run (internal bypass): the fold,
+    // which drops the emptied group, and the full recompute
     cat.exec(spark, "INSERT INTO g1 VALUES ('b', 2)",
       batchId = Some(1L))
     cat.exec(spark, "DELETE FROM g1 WHERE k = 'a'")
     assert(cat.exec(spark, "REFRESH MATERIALIZED VIEW gm")
-      .head().getString(0).startsWith("full:"))
+      .head().getString(0) == "incremental")
+    assert(cat.query(spark, "SELECT k, c FROM gm")
+      .as[(String, Long)].collect().toSeq == Seq(("b", 1L)))
+    assert(cat.exec(spark, "REFRESH MATERIALIZED VIEW gm FULL")
+      .head().getString(0) == "full:forced")
     assert(cat.query(spark, "SELECT k, c FROM gm")
       .as[(String, Long)].collect().toSeq == Seq(("b", 1L)))
     intercept[IllegalArgumentException] {
@@ -583,10 +591,9 @@ class MaterializedViewSpec extends SparkSpec {
       .getDecimal(0).doubleValue() == 2.0)
   }
 
-  test("a NULL group key in the delta degrades to a loud full " +
-      "recompute (plain-equality folds would insert a fresh null row " +
-      "per refresh); null groups in the BACKING alone stay " +
-      "incremental") {
+  test("a NULL group key folds incrementally like any other group: " +
+      "the backing keeps ONE null-key row across refreshes, whether " +
+      "the null group is in the delta or in the backing alone") {
     val (cat, _) = freshCat()
     cat.exec(spark,
       "CREATE TABLE nk (k STRING, n BIGINT) USING graft_store")
@@ -596,23 +603,92 @@ class MaterializedViewSpec extends SparkSpec {
       "FROM nk GROUP BY k"
     cat.exec(spark, s"CREATE MATERIALIZED VIEW nmv AS $defn",
       batchId = Some(100L))
-    // delta without a null key: incremental, even though the backing
-    // holds a null group (the merge never needs to touch it)
+    def served() = cat.query(spark,
+      "SELECT COALESCE(k, '<null>') AS k2, cnt, total FROM nmv")
+      .as[(String, Long, Long)].collect().toSeq.sorted
+    // delta without a null key: the backing's null group is untouched
     cat.exec(spark, "INSERT INTO nk VALUES ('x', 3)",
       batchId = Some(1L))
     assert(modeOf(cat.exec(spark, "REFRESH MATERIALIZED VIEW nmv"))
       == "incremental")
-    // delta WITH a null key: full, loudly — and the content matches
+    // delta WITH a null key, twice: it folds into the one null row
     cat.exec(spark, "INSERT INTO nk VALUES (NULL, 5)",
       batchId = Some(2L))
     val r = cat.exec(spark, "REFRESH MATERIALIZED VIEW nmv")
-    assert(modeOf(r) == "full:null group key in the delta",
-      r.collect().mkString)
-    val got = cat.query(spark,
-      "SELECT COALESCE(k, '<null>') AS k2, cnt, total FROM nmv")
-      .collect().map(x =>
-        x.getString(0) -> (x.getLong(1), x.getLong(2))).toMap
-    assert(got == Map("x" -> ((2L, 4L)), "<null>" -> ((2L, 7L))), got)
+    assert(modeOf(r) == "incremental", r.collect().mkString)
+    assert(served() == Seq(("<null>", 2L, 7L), ("x", 2L, 4L)), served())
+    cat.exec(spark, "INSERT INTO nk VALUES (NULL, 10)",
+      batchId = Some(3L))
+    assert(modeOf(cat.exec(spark, "REFRESH MATERIALIZED VIEW nmv"))
+      == "incremental")
+    assert(served() == Seq(("<null>", 3L, 17L), ("x", 2L, 4L)), served())
+  }
+
+  test("NULL keys fold incrementally through both aggregate paths: " +
+      "COUNT/SUM over a composite key with a NULL part, and MIN over " +
+      "a bare stats key under delete windows with a NULL key — one " +
+      "backing row per group and one backing dir after each refresh, " +
+      "content equal to the recompute") {
+    val (cat, _) = freshCat()
+    var bid = 10L
+    def check(mv: String, keys: String, out: String, defn: String,
+        change: Seq[String]): Unit = {
+      change.foreach { sql =>
+        if (!sql.startsWith("INSERT")) cat.exec(spark, sql)
+        else { cat.exec(spark, sql, batchId = Some(bid)); bid += 1 }
+      }
+      val r = cat.exec(spark, s"REFRESH MATERIALIZED VIEW $mv")
+      assert(modeOf(r) == "incremental", s"$change: ${r.collect().mkString}")
+      def rows(q: String) = cat.query(spark, q).collect()
+        .map(_.toSeq.map(Option(_))).toSeq.sortBy(_.toString)
+      val served = rows(s"SELECT $out FROM $mv")
+      assert(served == rows(defn), change)
+      val groups = rows(s"SELECT $keys FROM $mv")
+      assert(groups.distinct.size == groups.size, s"$change: $groups")
+      val backingDirs = cat.resolve(spark, mv).get.read(spark).inputFiles
+        .map(_.split("/data/").last.split('/').head).toSet
+      assert(backingDirs.size == 1, s"$change: $backingDirs")
+    }
+    // the retractable fold: a composite key, one part NULL
+    cat.exec(spark,
+      "CREATE TABLE ck (a STRING, b STRING, n BIGINT) USING graft_store")
+    cat.exec(spark, "INSERT INTO ck VALUES (NULL, 'x', 1), " +
+      "('p', 'x', 2), ('p', NULL, 3)", batchId = Some(0L))
+    val cdefn = "SELECT a, b, COUNT(*) AS cnt, SUM(n) AS total FROM ck " +
+      "GROUP BY a, b"
+    cat.exec(spark, s"CREATE MATERIALIZED VIEW cmv AS $cdefn",
+      batchId = Some(100L))
+    val cout = "a, b, cnt, total"
+    check("cmv", "a, b", cout, cdefn, Seq(
+      "INSERT INTO ck VALUES (NULL, 'x', 4), ('p', NULL, 5)"))
+    check("cmv", "a, b", cout, cdefn, Seq("DELETE FROM ck WHERE n = 1"))
+    // the (NULL, 'x') group empties while a new null-part group opens
+    check("cmv", "a, b", cout, cdefn, Seq(
+      "INSERT INTO ck VALUES ('q', NULL, 6)",
+      "DELETE FROM ck WHERE n = 4"))
+    // the group-bounded MIN recompute over a bare key with dir stats:
+    // the key span must admit the NULL group's rows, also in a dir
+    // whose key range lies outside it
+    cat.exec(spark, "CREATE TABLE mk (k STRING, n BIGINT) USING " +
+      "graft_store TBLPROPERTIES ('statsColumns'='k')")
+    cat.exec(spark, "INSERT INTO mk VALUES ('a', 1), ('a', 5), " +
+      "(NULL, 2)", batchId = Some(0L))
+    cat.exec(spark, "INSERT INTO mk VALUES ('m', 3), ('z', 4), " +
+      "(NULL, 7)", batchId = Some(1L))
+    val mdefn = "SELECT k, MIN(n) AS lo FROM mk GROUP BY k"
+    cat.exec(spark, s"CREATE MATERIALIZED VIEW mmv AS $mdefn",
+      batchId = Some(101L))
+    check("mmv", "k", "k, lo", mdefn, Seq(
+      "DELETE FROM mk WHERE n IN (1, 2)"))
+    // 'm' empties; the null group's minimum moves to an inserted row
+    check("mmv", "k", "k, lo", mdefn, Seq(
+      "INSERT INTO mk VALUES (NULL, 9), ('b', 6)",
+      "DELETE FROM mk WHERE n IN (3, 7)"))
+    check("mmv", "k", "k, lo", mdefn, Seq(
+      "DELETE FROM mk WHERE k IS NULL"))
+    assert(cat.query(spark, "SELECT k, lo FROM mmv ORDER BY k")
+      .as[(String, Long)].collect().toSeq ==
+      Seq(("a", 5L), ("b", 6L), ("z", 4L)))
   }
 
   test("crash between the refresh's data commit and its sidecar " +
@@ -659,7 +735,7 @@ class MaterializedViewSpec extends SparkSpec {
   test("DELETE and CoW UPDATE windows fold incrementally for " +
       "COUNT/SUM/AVG shapes: retraction through the pair columns, " +
       "NULL served when the last non-null value leaves, a fully " +
-      "emptied group recomputes loudly") {
+      "emptied group leaves the backing") {
     val (cat, _) = freshCat()
     cat.exec(spark,
       "CREATE TABLE rt (k STRING, n BIGINT) USING graft_store")
@@ -698,12 +774,11 @@ class MaterializedViewSpec extends SparkSpec {
       == "incremental")
     assert(served() == recomputed())
     assert(served()("b") == ((1L, 0L, null, null)))
-    // a group whose LAST row leaves cannot fold (the keyed merge
-    // never deletes a backing row): full, loudly, content exact
+    // a group whose LAST row leaves folds to zero rows and leaves the
+    // backing
     cat.exec(spark, "DELETE FROM rt WHERE k = 'a'")
     val r4 = cat.exec(spark, "REFRESH MATERIALIZED VIEW rmv2")
-    assert(modeOf(r4) == "full:a group emptied in the window",
-      r4.collect().mkString)
+    assert(modeOf(r4) == "incremental", r4.collect().mkString)
     assert(served() == recomputed())
     assert(!served().contains("a"))
     // a group inserted AND deleted inside one window is invisible to
@@ -1029,11 +1104,10 @@ class MaterializedViewSpec extends SparkSpec {
     assert(modeOf(r2) == "incremental", r2.collect().mkString)
     assert(served() == recomputed())
     assert(served()("a") == ((2L, 11L, 5.5)))
-    // a group emptied across the union still degrades loudly
+    // a group emptied across the union folds out of the backing
     cat.exec(spark, "DELETE FROM ga WHERE k = 'b'")
     val r3 = cat.exec(spark, "REFRESH MATERIALIZED VIEW gu")
-    assert(modeOf(r3) == "full:a group emptied in the window",
-      r3.collect().mkString)
+    assert(modeOf(r3) == "incremental", r3.collect().mkString)
     assert(served() == recomputed())
   }
 
@@ -1208,13 +1282,15 @@ class MaterializedViewSpec extends SparkSpec {
       .as[(String, Long)].collect().toSeq ==
       Seq(("a", 50L), ("b", 60L)))
     // ...and a delete of a filtered MV's visible row still recomputes
-    // its group correctly through the map
+    // its group correctly through the map: emptied, it leaves
     cat.exec(spark, "DELETE FROM fw WHERE n = 60")
     val r4 = cat.exec(spark, "REFRESH MATERIALIZED VIEW fwv")
-    assert(modeOf(r4) == "full:a group emptied in the window",
-      r4.collect().mkString)
+    assert(modeOf(r4) == "incremental", r4.collect().mkString)
     assert(cat.query(spark, "SELECT k, hi FROM fwv ORDER BY k")
       .as[(String, Long)].collect().toSeq == Seq(("a", 50L)))
+    assert(cat.query(spark, "SELECT k, MAX(n) AS hi FROM (SELECT k, n " +
+      "FROM fw WHERE n >= 10) GROUP BY k").as[(String, Long)].collect()
+      .toSeq == Seq(("a", 50L)))
   }
 
   test("DESCRIBE and the read path agree on batch_id: hidden for " +

@@ -12,12 +12,15 @@ import graft.SparkSpec
   * REFRESH-maintained backing serves exactly what a full recompute of
   * the definition serves — for every agg family the fold supports
   * (COUNT/SUM/AVG and their nullable accumulators), including all-null
-  * groups (SUM must serve NULL, not 0), NULL group keys (degrades to a
-  * loud full recompute, content still exact), emptied groups (ditto),
-  * and MIN/MAX shapes (delete windows take the group-bounded
-  * recompute). The MODE is free to vary — the law is content equality
-  * after every refresh, which is what corners environment-borne
-  * divergence the targeted specs can't enumerate.
+  * groups (SUM must serve NULL, not 0), NULL group keys and emptied
+  * groups (both fold like any other group), and MIN/MAX shapes (delete
+  * windows take the group-bounded recompute). Content equality after
+  * every refresh corners environment-borne divergence the targeted
+  * specs can't enumerate. The mode law rides along: every refresh is
+  * `incremental` or `current`, except that the refresh right after one
+  * that left the view EMPTY may recompute
+  * (`full:backing empty at a non-zero window start` — an empty backing
+  * past window start zero reads as a crashed full refresh).
   *
   * Raw ScalaCheck generators over a fixed seed sweep (the
   * scalatest-scalacheck bridge artifact is not in the offline cache).
@@ -53,6 +56,15 @@ class MvFoldPropertySpec extends SparkSpec {
     2 -> Gen.zip(Gen.choose(0L, 2L), Gen.choose(-7L, 7L))
       .map { case (m, d) => Upd(m, d) })
 
+  /** The mode law; `emptied` = the previous refresh left the view
+    * empty.
+    */
+  private def assertMode(mode: String, emptied: Boolean,
+      after: String): Unit =
+    assert(mode == "incremental" || mode == "current" ||
+      (emptied && mode == "full:backing empty at a non-zero window start"),
+      s"after $after: mode $mode")
+
   private def lit(v: Option[Any]): String =
     v.fold("NULL")(x => x match {
       case s: String => s"'$s'"
@@ -70,6 +82,7 @@ class MvFoldPropertySpec extends SparkSpec {
     cat.exec(spark, s"CREATE MATERIALIZED VIEW m AS $defn",
       batchId = Some(100L))
     var bid = 1L
+    var emptied = false
     ops.foreach { op =>
       op match {
         case Ins(rows) =>
@@ -87,13 +100,16 @@ class MvFoldPropertySpec extends SparkSpec {
           cat.exec(spark,
             s"UPDATE src SET v = v + $d WHERE v % 3 = $m")
       }
-      cat.exec(spark, "REFRESH MATERIALIZED VIEW m")
+      val mode = cat.exec(spark, "REFRESH MATERIALIZED VIEW m")
+        .head().getString(0)
       val got = cat.query(spark, served).collect()
         .map(_.toSeq.map(Option(_))).toSeq.sortBy(_.toString)
       val want = cat.query(spark, defn).collect()
         .map(_.toSeq.map(Option(_))).toSeq.sortBy(_.toString)
       assert(got == want,
         s"after $op:\n  served=$got\n  recompute=$want")
+      assertMode(mode, emptied, op.toString)
+      emptied = got.isEmpty
     }
   }
 
@@ -147,6 +163,7 @@ class MvFoldPropertySpec extends SparkSpec {
       cat.exec(spark, s"CREATE MATERIALIZED VIEW mu AS $defn",
         batchId = Some(100L))
       var bid = 1L
+      var emptied = false
       ops.foreach { case (t, op) =>
         op match {
           case Ins(rows) =>
@@ -164,13 +181,16 @@ class MvFoldPropertySpec extends SparkSpec {
             cat.exec(spark,
               s"UPDATE $t SET v = v + $d WHERE v % 3 = $m")
         }
-        cat.exec(spark, "REFRESH MATERIALIZED VIEW mu")
+        val mode = cat.exec(spark, "REFRESH MATERIALIZED VIEW mu")
+          .head().getString(0)
         val got = cat.query(spark, s"SELECT $served FROM mu").collect()
           .map(_.toSeq.map(Option(_))).toSeq.sortBy(_.toString)
         val want = cat.query(spark, defn).collect()
           .map(_.toSeq.map(Option(_))).toSeq.sortBy(_.toString)
         assert(got == want,
           s"after $op on $t:\n  served=$got\n  recompute=$want")
+        assertMode(mode, emptied, s"$op on $t")
+        emptied = got.isEmpty
       }
     }
   }

@@ -198,6 +198,20 @@ class StoreDmlSpec extends SparkSpec {
     assert(store.read(spark).filter(col("k") === "ghost").count() == 0L)
   }
 
+  test("a merge into a table whose dirs carry no key stats skips the " +
+      "bounds aggregate: every dir is touched, known from the manifest") {
+    val store = new ManifestTableStore(tmp("dml-merge-jobs-").toString,
+      statsColumns = Seq("k"))
+    store.append((0 until 100).map(i => (s"k$i", i)).toDF("k", "n"), 0L)
+    store.append((100 until 200).map(i => (s"k$i", i)).toDF("k", "n"), 1L)
+    val src = (150 until 250).map(i => (s"new$i", i)).toDF("k", "n")
+    // the bounds aggregate would add two jobs to these
+    val jobs = jobsDuring { store.merge(spark, src, "n", batchId = 7L) }
+    assert(jobs == 4, s"merge ran $jobs jobs")
+    assert(currentDirs(store).size == 1)
+    assert(store.read(spark).count() == 250L)
+  }
+
   test("merge key-range pruning works on string keys (UTF8 stats order)") {
     val root = tmp("dml-merge-str-")
     val store = new ManifestTableStore(root.toString,
