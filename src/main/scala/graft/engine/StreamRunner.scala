@@ -9,7 +9,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *
   * Mirrors `/root/reference/scripts/bronze_assets_to_silver_assets.py:
   * 280-299`: one streaming query per source, all appending to one silver
-  * store, driver parks on awaitAnyTermination.
+  * store, driver parks on awaitAnyTermination. The queries are
+  * independent micro-batch loops: on a [[ManifestTableStore]] their
+  * parquet writes overlap, and their commits race on the manifest
+  * version (the loser rebases and retries).
   */
 object StreamRunner {
 

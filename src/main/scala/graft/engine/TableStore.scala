@@ -72,7 +72,11 @@ trait TableStore {
   *     retries at a higher version — the Iceberg/Delta commit protocol.
   *     (Needs atomic create-if-absent from the store — hard link /
   *     namenode rename here; bare S3 needs an external coordinator,
-  *     Delta's documented caveat too.);
+  *     Delta's documented caveat too.) An [[append]] holds no lock
+  *     within the process either: its write runs outside the handle's
+  *     monitor and only its publish races, so two sources appending
+  *     through one handle write in parallel. Every other state change
+  *     keeps the monitor;
   *   - a replayed micro-batch (crash between write and checkpoint
   *     commit, then restart) finds its batch id in the current version
   *     and becomes a NO-OP: exactly-once lands at WRITE time, with no
@@ -268,16 +272,18 @@ final class ManifestTableStore(path: String,
     * winner's state goes to `rebase`, which throws to refuse, returns
     * false when the winner already holds the change (converged: nothing
     * to commit), or true to retry on top of it at a higher version.
+    * Returns whether `entry` itself was committed (false: converged).
     */
   private def commitEntry(f: FileSystem, base: Snapshot, entry: Entry)(
-      rebase: Snapshot => Boolean): Unit = {
+      rebase: Snapshot => Boolean): Boolean = {
     var snap = base
     var next = base.version + 1
     while (!tryCommit(f, next, snap.entries :+ entry)) {
       snap = current(f)
-      if (!rebase(snap)) return
+      if (!rebase(snap)) return false
       next = math.max(snap.version + 1, next + 1)
     }
+    true
   }
 
   /** Write a ZERO-ROW schema-marker dir `data/<kind>-<uuid>` holding
@@ -739,7 +745,16 @@ final class ManifestTableStore(path: String,
     if (partitionBy.isEmpty) ManifestTableStore.DirSchemas.put(dir, schema)
     else ManifestTableStore.DirSchemas.record(fs(spark), dir, schema)
 
-  override def append(df: DataFrame, batchId: Long): Unit = synchronized {
+  /** Commit `df` as batch `batchId`, a no-op when the current version
+    * already holds that id (a replayed micro-batch). Takes no monitor:
+    * the parquet write runs unlocked, and only the publish races, on
+    * the manifest version. Two appends on one handle (two streaming
+    * sources into one silver table) overlap their writes exactly as two
+    * writer processes do. A competitor that commits the same id first
+    * (a replay racing its original) wins, and this write's dir is
+    * deleted.
+    */
+  override def append(df: DataFrame, batchId: Long): Unit = {
     require(batchId >= 0, // negative ids are reserved (delete entries)
       s"batchId must be >= 0, got $batchId")
     val f = fs(df.sparkSession)
@@ -749,7 +764,10 @@ final class ManifestTableStore(path: String,
     val dataDir = s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
     val entry = Entry(batchId, dataDir,
       write(df.withColumn("batch_id", lit(batchId)), dataDir))
-    commitEntry(f, snap, entry)(!_.has(batchId)) // competitor replayed it
+    if (!commitEntry(f, snap, entry)(!_.has(batchId))) {
+      f.delete(new HPath(dataDir), true)
+      ManifestTableStore.DirSchemas.evictUnder(dataDir)
+    }
   }
 
   /** Exposed partition layout (for SQL routing of
