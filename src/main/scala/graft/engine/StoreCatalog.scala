@@ -1247,8 +1247,8 @@ final class StoreCatalog(basePath: String) {
     * number, like a manifest commit) — SET/UNSET TBLPROPERTIES' and
     * the column-metadata verbs' durable leg. Takes TRANSFORMS, not
     * final bytes: a lost publish race reloads the winner's generation
-    * and re-applies the transform to IT (the manifest tryCommit rebase
-    * contract) — republishing stale bytes would silently revert a
+    * and re-applies the transform to IT, as a manifest append rebases
+    * on the winner — republishing stale bytes would silently revert a
     * concurrent ALTER's change on the next re-attach. `seed` is the
     * starting state when no spec sidecar exists yet. Returns what was
     * actually published so callers update their registries from the

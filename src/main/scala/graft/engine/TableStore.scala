@@ -66,10 +66,11 @@ trait TableStore {
   *     visible version is never half-written;
   *   - CONCURRENT WRITERS are safe without any lock: the version number
   *     is the optimistic-concurrency token. A writer that loses the
-  *     atomic-publish race re-reads the winner's state, REBASES its
-  *     change (appends keep both batches; maintenance rewrites carry
-  *     fresh appends forward and abort against competing rewrites), and
-  *     retries at a higher version — the Iceberg/Delta commit protocol.
+  *     atomic-publish race hands the winner's state to its op's rebase
+  *     policy in the one commit core ([[commit]]: appends re-apply,
+  *     replaces throw, maintenance rewrites carry fresh appends forward
+  *     and abort against competing rewrites, DML throws) and retries at
+  *     a higher version — the Iceberg/Delta commit protocol.
   *     (Needs atomic create-if-absent from the store — hard link /
   *     namenode rename here; bare S3 needs an external coordinator,
   *     Delta's documented caveat too.) An [[append]] holds no lock
@@ -151,12 +152,12 @@ final class ManifestTableStore(path: String,
   private def fs(spark: SparkSession): FileSystem =
     new HPath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Test-only failpoint, invoked after a DML/maintenance rewrite (or a
-    * MoR delete) has written its data/delete files, immediately before
-    * the first commit attempt — the window where a writer can die with
-    * orphan files on disk, or a concurrent maintenance op can win the
-    * version race. Specs inject crashes and interleavings here; the
-    * default is a no-op and production paths never assign it.
+  /** Test-only failpoint, invoked by [[commit]] after an op has written
+    * its data/delete files, immediately before the first commit
+    * attempt — the window where a writer can die with orphan files on
+    * disk, or a concurrent writer can win the version race. Specs
+    * inject crashes and interleavings here; the default is a no-op and
+    * production paths never assign it.
     */
   private[engine] var beforeDmlCommit: () => Unit = () => ()
 
@@ -255,8 +256,7 @@ final class ManifestTableStore(path: String,
     * local FS, namenode rename(NONE) on HDFS; bare object stores need an
     * external coordinator — the same caveat Delta documents).
     *
-    * Returns false on a lost race; the caller re-reads table state,
-    * REBASES its change, and retries at a higher version.
+    * Returns false on a lost race; [[commit]], its one caller, rebases.
     */
   private def tryCommit(f: FileSystem, next: Long,
       lines: Seq[Entry]): Boolean =
@@ -266,24 +266,120 @@ final class ManifestTableStore(path: String,
         else s"${e.batchId}\t${e.dir}\t${e.statsJson}"
       } :+ EndMarker).mkString("\n").getBytes("UTF-8"))
 
-  /** Commit ONE entry on top of `base` with optimistic retry — the
-    * protocol every single-entry commit shares. A lost race means the
-    * occupant is complete by construction (single-step publish), so the
-    * winner's state goes to `rebase`, which throws to refuse, returns
-    * false when the winner already holds the change (converged: nothing
-    * to commit), or true to retry on top of it at a higher version.
-    * Returns whether `entry` itself was committed (false: converged).
+  /** The commit core, every manifest publish: publish
+    * `edit(base.entries)` as the version after `base`; on a lost race
+    * hand the winner's state to `rebase`, one of the four [[Rebase]]
+    * policies. The class's only retry loop and only [[beforeDmlCommit]]
+    * call, made outside the cleanup: a crash there leaves what a dead
+    * writer leaves. Returns whether the op published.
+    *
+    * Cleanup rule: when nothing is published — converged, aborted or
+    * thrown — each dir in `wrote` (declared by the op: a restore or a
+    * new branch re-references old dirs) that the CURRENT version does
+    * not reference is deleted.
     */
-  private def commitEntry(f: FileSystem, base: Snapshot, entry: Entry)(
-      rebase: Snapshot => Boolean): Boolean = {
-    var snap = base
-    var next = base.version + 1
-    while (!tryCommit(f, next, snap.entries :+ entry)) {
-      snap = current(f)
-      if (!rebase(snap)) return false
-      next = math.max(snap.version + 1, next + 1)
+  private def commit(f: FileSystem, base: Snapshot, wrote: Seq[String])(
+      edit: Seq[Entry] => Seq[Entry], rebase: Rebase): Boolean = {
+    beforeDmlCommit()
+    var published = false
+    try {
+      var next = base.version + 1
+      var lines = Option(edit(base.entries))
+      while (!published && lines.isDefined) {
+        published = tryCommit(f, next, lines.get)
+        if (!published) {
+          val won = current(f)
+          lines = rebase(base, won, edit)
+          next = math.max(won.version + 1, next + 1)
+        }
+      }
+      published
+    } finally if (!published && wrote.nonEmpty) {
+      def norm(d: String) = new HPath(d).toUri.getPath
+      val live = current(f).entries.map(e => norm(e.dir))
+      wrote.filterNot { d =>
+        val n = norm(d)
+        live.exists(l => l == n || l.startsWith(n + "/"))
+      }.foreach { d =>
+        f.delete(new HPath(d), true)
+        ManifestTableStore.DirSchemas.evictUnder(d)
+      }
     }
-    true
+  }
+
+  /** (base, winner, edit) => the entries to publish at the next
+    * version, or None to stop with nothing published; refusals throw.
+    */
+  private type Rebase =
+    (Snapshot, Snapshot, Seq[Entry] => Seq[Entry]) => Option[Seq[Entry]]
+
+  /** The four rebase policies. */
+  private object Rebase {
+    /** Idempotent append: re-apply the edit on the winner while
+      * `reapply(winner)` holds; false stops (converged, or the caller
+      * re-runs). Caller guards (schema markers, fast-forward)
+      * re-validate here by throwing.
+      */
+    def append(reapply: Snapshot => Boolean): Rebase =
+      (_, won, edit) => if (reapply(won)) Some(edit(won.entries)) else None
+
+    /** Converged when the winner holds `batchId` (a replay). */
+    def append(batchId: Long): Rebase = append(!_.has(batchId))
+
+    /** Blind replace: throws on ANY concurrent write (Delta's
+      * serializable rule) rather than clobbering it, unless
+      * `converged` (the winner holds this very change).
+      */
+    def replace(op: String,
+        converged: Snapshot => Boolean = _ => false): Rebase =
+      (_, won, _) =>
+        if (converged(won)) None
+        else throw new java.util.ConcurrentModificationException(
+          s"$op of $path aborted: a concurrent write committed after " +
+            s"this ${op.toLowerCase}'s snapshot; nothing was applied — " +
+            "re-read and retry")
+
+    /** Maintenance rewrite (compactions, stats refresh): rebase
+      * around appends committed since the base; abort (None) when a
+      * competing rewrite moved a base batch — re-running is the
+      * caller's choice.
+      */
+    val maintenance: Rebase = { (base, won, edit) =>
+      // Snapshot identity is the FULL entry (batchId, dir, stats), not
+      // batchId alone: delete entries all share the reserved sentinel
+      // id, so id-keyed bookkeeping would conflate a concurrent second
+      // delete with a moved batch.
+      val snapshot = base.entries
+      val snapSet = snapshot.toSet
+      val snapDataIds =
+        snapshot.filterNot(isDeleteEntry).map(_.batchId).toSet
+      val (kept, fresh) = won.entries.partition(snapSet.contains)
+      // a snapshot data batch re-committed under a new dir (or a
+      // snapshot entry gone) = a CONCURRENT MAINTENANCE op landed:
+      // abort — rebasing across two rewrites would double-count rows
+      val movedByOther = fresh.exists(e =>
+        !isDeleteEntry(e) && snapDataIds.contains(e.batchId))
+      // an UNSCOPED delete entry in the snapshot masks every data
+      // entry, including fresh appends the rewrite never anti-joined —
+      // folding it in would silently resurrect those rows. Scoped
+      // deletes (everything deleteMoR commits) never mask fresh
+      // batches, so rebasing around fresh appends stays sound.
+      val unscopedDelete = snapshot.exists(e => isDeleteEntry(e) &&
+        ManifestTableStore.parseApplies(e.statsJson).isEmpty)
+      if (movedByOther || kept.size != snapshot.size) None
+      else if (unscopedDelete && fresh.exists(e => !isDeleteEntry(e))) None
+      else Some(edit(snapshot) ++ fresh)
+    }
+
+    /** DML: the maintenance rule, but an abort throws — silence would
+      * let a SQL DELETE report success while deleting nothing.
+      */
+    def dml(tag: String): Rebase = (base, won, edit) =>
+      maintenance(base, won, edit).orElse(
+        throw new java.util.ConcurrentModificationException(
+          s"$tag on $path aborted: a concurrent maintenance rewrite " +
+            "moved this snapshot's dirs; nothing was applied — re-read " +
+            "and retry"))
   }
 
   /** Write a ZERO-ROW schema-marker dir `data/<kind>-<uuid>` holding
@@ -751,8 +847,8 @@ final class ManifestTableStore(path: String,
     * the manifest version. Two appends on one handle (two streaming
     * sources into one silver table) overlap their writes exactly as two
     * writer processes do. A competitor that commits the same id first
-    * (a replay racing its original) wins, and this write's dir is
-    * deleted.
+    * (a replay racing its original) wins, and [[commit]] deletes this
+    * write's dir.
     */
   override def append(df: DataFrame, batchId: Long): Unit = {
     require(batchId >= 0, // negative ids are reserved (delete entries)
@@ -764,10 +860,7 @@ final class ManifestTableStore(path: String,
     val dataDir = s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
     val entry = Entry(batchId, dataDir,
       write(df.withColumn("batch_id", lit(batchId)), dataDir))
-    if (!commitEntry(f, snap, entry)(!_.has(batchId))) {
-      f.delete(new HPath(dataDir), true)
-      ManifestTableStore.DirSchemas.evictUnder(dataDir)
-    }
+    commit(f, snap, Seq(dataDir))(_ :+ entry, Rebase.append(batchId))
   }
 
   /** Exposed partition layout (for SQL routing of
@@ -786,8 +879,7 @@ final class ManifestTableStore(path: String,
     * lakehouse job uses to republish a computed table. Replayed batch
     * ids no-op like [[append]]; the superseded state stays readable AS
     * OF its version (rollback via [[restore]]) until [[vacuum]].
-    * Overwrite conflicts with ANY concurrent write
-    * ([[commitReplacing]]).
+    * Overwrite conflicts with ANY concurrent write ([[Rebase.replace]]).
     */
   def overwrite(df: DataFrame, batchId: Long): Unit = synchronized {
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
@@ -799,28 +891,8 @@ final class ManifestTableStore(path: String,
     val dataDir = s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
     val entry = Entry(batchId, dataDir,
       write(df.withColumn("batch_id", lit(batchId)), dataDir))
-    commitReplacing(f, snap, entry, "overwrite",
-      converged = _.has(batchId))
-  }
-
-  /** Commit `entry` as the ONLY entry of the version after `snap` — a
-    * blind replacement, which conflicts with ANY concurrent write
-    * (Delta's serializable rule): losing the race throws rather than
-    * silently clobbering a commit that landed between snapshot and
-    * publish, and deletes the uncommitted dir — unless the winner
-    * already holds this very change (`converged`: a replayed batch).
-    */
-  private def commitReplacing(f: FileSystem, snap: Snapshot, entry: Entry,
-      op: String, converged: Snapshot => Boolean = _ => false): Unit = {
-    beforeDmlCommit()
-    if (!tryCommit(f, snap.version + 1, Seq(entry)) &&
-        !converged(current(f))) {
-      f.delete(new HPath(entry.dir), true)
-      throw new java.util.ConcurrentModificationException(
-        s"$op of $path aborted: a concurrent write committed after " +
-          s"this ${op.toLowerCase}'s snapshot; nothing was applied — " +
-          "re-read and retry")
-    }
+    commit(f, snap, Seq(dataDir))(_ => Seq(entry),
+      Rebase.replace("overwrite", converged = _.has(batchId)))
   }
 
   /** `TRUNCATE TABLE` — one METADATA commit that empties the table
@@ -833,7 +905,7 @@ final class ManifestTableStore(path: String,
     * mistaken truncate). No data file is read, rewritten, or deleted
     * at truncate time: at 100 TB this is one empty-footer write + one
     * manifest commit, vs DELETE WHERE true's full-table rewrite.
-    * Conflicts like [[overwrite]] ([[commitReplacing]]). No-op on an
+    * Conflicts like [[overwrite]] ([[Rebase.replace]]). No-op on an
     * empty (zero-version) table.
     */
   def truncate(spark: SparkSession): Unit = synchronized {
@@ -842,8 +914,9 @@ final class ManifestTableStore(path: String,
     if (snap.isEmpty) return
     // the truncated table's schema anchor: the CURRENT logical schema
     // (renames/widens/drops applied)
-    commitReplacing(f, snap,
-      writeMarker(spark, "schema", snap.read(spark).schema), "TRUNCATE")
+    val marker = writeMarker(spark, "schema", snap.read(spark).schema)
+    commit(f, snap, Seq(marker.dir))(_ => Seq(marker),
+      Rebase.replace("TRUNCATE"))
   }
 
   /** `SHOW PARTITIONS` — the table's partition values as Spark's
@@ -951,10 +1024,10 @@ final class ManifestTableStore(path: String,
         snap.entries
     }
     val tf = target.fs(spark)
-    val tv = target.current(tf).version
-    require(tv == 0L,
+    val tbase = target.current(tf)
+    require(tbase.version == 0L,
       s"clone target ${target.tablePath} already has commits " +
-        s"(version $tv)")
+        s"(version ${tbase.version})")
     // the INHERITED batch-id ledger, published BEFORE the commit (a
     // crash between them leaves an inert ledger beside a zero-version
     // table): the cloned entries carry the SOURCE's batch ids — they
@@ -980,10 +1053,8 @@ final class ManifestTableStore(path: String,
     AtomicCreate.publish(f,
       new HPath(s"$path/clone_refs/ref-${java.util.UUID.randomUUID()}"),
       target.tablePath.getBytes("UTF-8"))
-    if (!target.tryCommit(tf, 1L, entries))
-      throw new java.util.ConcurrentModificationException(
-        s"SHALLOW CLONE to ${target.tablePath} lost to a concurrent " +
-          "first commit")
+    target.commit(tf, tbase, Nil)(_ => entries,
+      target.Rebase.replace("SHALLOW CLONE"))
   }
 
   /** Reserve `n` consecutive IDENTITY values for `col` and return the
@@ -1319,7 +1390,7 @@ final class ManifestTableStore(path: String,
         org.apache.spark.sql.types.StructType(fresh.map { case (n, t) =>
           org.apache.spark.sql.types.StructField(n, t, nullable = true)
         }))
-      commitEntry(f, snap, entry) { won =>
+      commit(f, snap, Seq(entry.dir))(_ :+ entry, Rebase.append { won =>
         // rebase = new table state: a concurrent append may have
         // introduced one of the fresh names, a concurrent drop/rename
         // may have retired it — re-run the guards before retrying
@@ -1333,7 +1404,7 @@ final class ManifestTableStore(path: String,
               "rebase refused (compact() first)")
         }
         true
-      }
+      })
     }
 
   /** Governed `ALTER TABLE ... DROP COLUMN` — metadata-only, like
@@ -1379,7 +1450,7 @@ final class ManifestTableStore(path: String,
         .find(_.equalsIgnoreCase(name)).get
       val entry = writeMarker(spark, "dropcol", payload = Some(
         ManifestTableStore.DropColKey -> TextNode.valueOf(canonical)))
-      commitEntry(f, snap, entry) { won =>
+      commit(f, snap, Seq(entry.dir))(_ :+ entry, Rebase.append { won =>
         // rebase: a concurrent rename may have moved the column away —
         // re-check it still exists under this name before retrying
         require(won.read(spark).schema.fieldNames
@@ -1387,7 +1458,7 @@ final class ManifestTableStore(path: String,
           s"column '$canonical' changed concurrently; DROP COLUMN " +
             "rebase refused")
         true
-      }
+      })
     }
 
   /** `CREATE TABLE (cols)` — commit the DECLARED schema as version 1,
@@ -1395,9 +1466,9 @@ final class ManifestTableStore(path: String,
     * the whole schema): the table is immediately readable (empty, typed)
     * and INSERT's positional column mapping has a target before any
     * data lands — the first statement of every SQL-only onboarding
-    * flow. The marker commits via the atomic create-if-absent
-    * primitive, so two concurrent CREATEs resolve to one winner; the
-    * loser sees "already has commits". Refused on a table with any
+    * flow. The marker commits as a blind replace of version 0
+    * ([[Rebase.replace]]), so two concurrent CREATEs resolve to one
+    * winner and the loser throws. Refused on a table with any
     * committed version (CREATE of an existing table is the caller's
     * IF NOT EXISTS decision).
     */
@@ -1415,12 +1486,9 @@ final class ManifestTableStore(path: String,
       }
       require(!schema.fieldNames.exists(_.equalsIgnoreCase("batch_id")),
         "batch_id is the store's replay-attribution column")
-      val entry = writeMarker(spark, "schema", schema)
-      if (!tryCommit(f, 1L, Seq(entry))) {
-        f.delete(new HPath(entry.dir), true)
-        throw new java.util.ConcurrentModificationException(
-          s"CREATE TABLE at $path lost to a concurrent first commit")
-      }
+      val marker = writeMarker(spark, "schema", schema)
+      commit(f, snap, Seq(marker.dir))(_ => Seq(marker),
+        Rebase.replace("CREATE TABLE"))
     }
 
   /** `CREATE OR REPLACE TABLE` — ONE metadata commit that retires
@@ -1454,8 +1522,9 @@ final class ManifestTableStore(path: String,
     }
     require(!schema.fieldNames.exists(_.equalsIgnoreCase("batch_id")),
       "batch_id is the store's replay-attribution column")
-    commitReplacing(f, snap, writeMarker(spark, "schema", schema),
-      "REPLACE")
+    val marker = writeMarker(spark, "schema", schema)
+    commit(f, snap, Seq(marker.dir))(_ => Seq(marker),
+      Rebase.replace("REPLACE"))
   }
 
   /** Governed `ALTER TABLE ... RENAME COLUMN` — metadata-only, the
@@ -1530,7 +1599,8 @@ final class ManifestTableStore(path: String,
         ManifestTableStore.RenameColKey -> JsonNodeFactory.instance
           .objectNode().put("f", canonical).put("t", to)))
       // rebase = new table state: re-run the guards
-      commitEntry(f, snap, entry) { won => validate(won); true }
+      commit(f, snap, Seq(entry.dir))(_ :+ entry,
+        Rebase.append { won => validate(won); true })
     }
 
   /** Governed `ALTER TABLE ... ALTER COLUMN ... TYPE` — metadata-only
@@ -1601,12 +1671,9 @@ final class ManifestTableStore(path: String,
     val entry = writeMarker(spark, "widencol", payload = Some(
       ManifestTableStore.WidenColKey -> JsonNodeFactory.instance
         .objectNode().put("c", canonical).put("t", to.sql)))
-    commitEntry(f, snap, entry) { won =>
-      // a concurrent identical widen landed: converged
-      val retry = validate(won).isDefined
-      if (!retry) f.delete(new HPath(entry.dir), true)
-      retry
-    }
+    // None from validate: an identical widen won, converged
+    commit(f, snap, Seq(entry.dir))(_ :+ entry,
+      Rebase.append(validate(_).isDefined))
   }
 
   /** `ANALYZE TABLE ... COMPUTE STATISTICS` — refresh every data dir's
@@ -1632,13 +1699,10 @@ final class ManifestTableStore(path: String,
       d -> collectStatsOf(
         snap.project(ManifestTableStore.DirSchemas.read(spark, d)))
     }.toMap
-    commitRewrite(f, snap, _.map { e =>
+    commit(f, snap, Nil)(_.map { e =>
       if (isDeleteEntry(e) || isSchemaMarker(e)) e
-      else fresh.get(e.dir) match {
-        case Some(st) => Entry(e.batchId, e.dir, st)
-        case None => e
-      }
-    })
+      else fresh.get(e.dir).fold(e)(Entry(e.batchId, e.dir, _))
+    }, Rebase.maintenance)
   }
 
   // ---- Write-audit-publish (Iceberg's WAP pattern) -------------------
@@ -1677,9 +1741,9 @@ final class ManifestTableStore(path: String,
   def readStaged(spark: SparkSession, stagedDir: String): DataFrame =
     ManifestTableStore.DirSchemas.read(spark, stagedDir)
 
-  /** Commit a staged dir as the next version (idempotent per batch id;
-    * optimistic retry like [[append]]). The staged files themselves
-    * become table state — no rewrite between audit and publish.
+  /** Commit a staged dir as the next version (idempotent per batch id
+    * like [[append]]). The staged files themselves become table state —
+    * no rewrite between audit and publish.
     */
   def publishStaged(spark: SparkSession, stagedDir: String,
       batchId: Long): Unit = synchronized {
@@ -1691,7 +1755,8 @@ final class ManifestTableStore(path: String,
     val stats = AtomicCreate.readString(f,
       new HPath(stagedDir, StagedStatsFile))
       .getOrElse(collectStats(spark, stagedDir))
-    commitEntry(f, snap, Entry(batchId, stagedDir, stats))(!_.has(batchId))
+    commit(f, snap, Seq(stagedDir))(_ :+ Entry(batchId, stagedDir, stats),
+      Rebase.append(batchId))
   }
 
   /** Drop a staged batch that failed its audit — the table never
@@ -1720,8 +1785,9 @@ final class ManifestTableStore(path: String,
     // committed manifest (Iceberg's rewrite_data_files + rewrite of
     // delete files in one step).
     val stats = write(snap.read(spark), dataDir)
-    commitRewrite(f, snap,
-      _.filterNot(isDeleteEntry).map(e => Entry(e.batchId, dataDir, stats)))
+    commit(f, snap, Seq(dataDir))(
+      _.filterNot(isDeleteEntry).map(e => Entry(e.batchId, dataDir, stats)),
+      Rebase.maintenance)
   }
 
   /** Incremental small-file compaction — Delta's OPTIMIZE with a
@@ -1736,20 +1802,17 @@ final class ManifestTableStore(path: String,
     * dir's stats are recomputed. Refuses pending merge-on-read delete
     * files (fold them with [[compact]] first); no-op below two small
     * dirs.
-    */
-  def compactSmall(spark: SparkSession, smallBytes: Long): Unit =
-    compactSmallWhere(spark, smallBytes, None)
-
-  /** [[compactSmall]] scoped by a predicate (Delta's `OPTIMIZE t WHERE
-    * pred`): only small dirs whose manifest stats ADMIT a match merge;
-    * every dir the predicate provably cannot touch carries forward
+    *
+    * A `where` predicate scopes it (Delta's `OPTIMIZE t WHERE pred`):
+    * only small dirs whose manifest stats ADMIT a match merge; every
+    * dir the predicate provably cannot touch carries forward
     * byte-identical — at 100 TB "optimize today's ingest" reads
     * today's small dirs, not every small dir in the table. Dirs with
     * no stats for a referenced column are conservatively in scope
     * (same rule as [[readWhere]]).
     */
-  def compactSmallWhere(spark: SparkSession, smallBytes: Long,
-      predicateSql: Option[String]): Unit =
+  def compactSmall(spark: SparkSession, smallBytes: Long,
+      where: Option[String] = None): Unit =
     synchronized {
       val f = fs(spark)
       val snap = current(f)
@@ -1759,7 +1822,7 @@ final class ManifestTableStore(path: String,
       // untouched dirs still hold the old physical column
       val smallAll = snap.dataDirs.filter(d =>
         f.getContentSummary(new HPath(d)).getLength < smallBytes)
-      val small = predicateSql match {
+      val small = where match {
         case None => smallAll
         case Some(p) =>
           val (kept, _) = pruneEntries(spark, p,
@@ -1770,59 +1833,11 @@ final class ManifestTableStore(path: String,
       val dataDir = s"$path/data/compact-${java.util.UUID.randomUUID()}"
       val stats = write(readDirs(spark, small), dataDir)
       val smallSet = small.toSet
-      commitRewrite(f, snap, _.map { e =>
+      commit(f, snap, Seq(dataDir))(_.map { e =>
         if (smallSet.contains(e.dir)) Entry(e.batchId, dataDir, stats)
         else e
-      })
+      }, Rebase.maintenance)
     }
-
-  /** Commit a maintenance rewrite (compact / cluster) with optimistic
-    * retry: on a lost race, appends committed since the snapshot keep
-    * their own dirs (the rewrite rebases around them); if a CONCURRENT
-    * MAINTENANCE op moved any snapshot batch to a new dir, abort —
-    * nothing was committed, our freshly-written dir stays an invisible
-    * orphan (vacuum reclaims it), and retrying the whole rewrite is the
-    * caller's choice (rebasing across two rewrites would double-count
-    * snapshot rows). Returns false on abort so callers can surface it:
-    * maintenance ops may shrug (re-running compact is free), but
-    * row-level DML must NOT report success for a write that never
-    * happened — [[commitDml]] turns it into a throw for every DML.
-    */
-  private def commitRewrite(f: FileSystem, base: Snapshot,
-      rewrite: Seq[Entry] => Seq[Entry]): Boolean = {
-    // Snapshot identity is the FULL entry (batchId, dir, stats), not
-    // batchId alone: delete entries all share the reserved sentinel id,
-    // so id-keyed bookkeeping would conflate a concurrent second delete
-    // with a moved batch.
-    val snapshot = base.entries
-    val snapSet = snapshot.toSet
-    val snapDataIds =
-      snapshot.filterNot(isDeleteEntry).map(_.batchId).toSet
-    var next = base.version + 1
-    var committed = tryCommit(f, next, rewrite(snapshot))
-    while (!committed) {
-      val won = current(f)
-      val (kept, fresh) = won.entries.partition(snapSet.contains)
-      // a snapshot data batch re-committed under a new dir (or a
-      // snapshot entry gone) = a CONCURRENT MAINTENANCE op landed:
-      // abort — rebasing across two rewrites would double-count rows
-      val movedByOther = fresh.exists(e =>
-        !isDeleteEntry(e) && snapDataIds.contains(e.batchId))
-      if (movedByOther || kept.size != snapshot.size) return false
-      // an UNSCOPED delete entry in the snapshot masks every data
-      // entry, including fresh appends the rewrite never anti-joined —
-      // folding it in would silently resurrect those rows. Scoped
-      // deletes (everything deleteMoR commits) never mask fresh
-      // batches, so rebasing around fresh appends stays sound.
-      val unscopedDelete = snapshot.exists(e => isDeleteEntry(e) &&
-        ManifestTableStore.parseApplies(e.statsJson).isEmpty)
-      if (unscopedDelete && fresh.exists(e => !isDeleteEntry(e)))
-        return false
-      next = math.max(won.version + 1, next + 1)
-      committed = tryCommit(f, next, rewrite(snapshot) ++ fresh)
-    }
-    true
-  }
 
   /** Cluster-compact: rewrite the whole table as up to `buckets`
     * range-disjoint data dirs ordered by `clusterBy`, each committed
@@ -1847,19 +1862,21 @@ final class ManifestTableStore(path: String,
     val clustered = snap.read(spark) // drops materialize here
       .repartitionByRange(buckets, col(clusterBy))
       .withColumn("__cluster", spark_partition_id())
-    commitBuckets(spark, f, snap, clustered, "cluster")
+    val (base, edit) = writeBuckets(spark, f, clustered, "cluster")
+    commit(f, snap, Seq(base))(edit, Rebase.maintenance)
   }
 
   /** Write a clustered rewrite as hive `__cluster=k` output dirs under
     * a fresh `data/<kind>-<uuid>` base (table partitions nested
-    * inside), and commit each as an independent manifest dir with its
-    * own stats and recorded schema, through [[commitRewrite]]. Every
-    * batch id of the snapshot stays present for replay checks (the
-    * id→dir association is void after the rewrite, as with
-    * [[compact]]).
+    * inside), each with its own stats and recorded schema. Returns the
+    * base and the edit that commits every output dir as an independent
+    * manifest dir. Every batch id of the snapshot stays present for
+    * replay checks (the id→dir association is void after the rewrite,
+    * as with [[compact]]).
     */
-  private def commitBuckets(spark: SparkSession, f: FileSystem,
-      snap: Snapshot, clustered: DataFrame, kind: String): Unit = {
+  private def writeBuckets(spark: SparkSession, f: FileSystem,
+      clustered: DataFrame,
+      kind: String): (String, Seq[Entry] => Seq[Entry]) = {
     val base = s"$path/data/$kind-${java.util.UUID.randomUUID()}"
     clustered.write.mode("overwrite")
       .partitionBy("__cluster" +: partitionBy: _*).parquet(base)
@@ -1869,14 +1886,14 @@ final class ManifestTableStore(path: String,
     val schema = clustered.drop("__cluster").schema
     dirs.foreach(putSchema(spark, _, schema))
     val stats = dirs.map(d => d -> collectStats(spark, d)).toMap
-    commitRewrite(f, snap, { es =>
+    base -> { es =>
       val ids = es.map(_.batchId).distinct
       val entries = dirs.zipWithIndex.map { case (d, i) =>
         Entry(ids(i % ids.size), d, stats(d)) }
       val carried = ids.filterNot(id => entries.exists(_.batchId == id))
         .map(id => Entry(id, dirs.head, stats(dirs.head)))
       entries ++ carried
-    })
+    }
   }
 
   /** Z-order clustered compaction — multi-dimensional data skipping
@@ -1898,9 +1915,9 @@ final class ManifestTableStore(path: String,
     * min position per value = SQL `rank()`, so the codes are
     * bit-identical to what `percent_rank` over a global window
     * produced) and joins back on the value — table/n rows per task
-    * instead of the whole table through one window task. Commits via
-    * [[commitRewrite]]; batch ids carry forward (replay refusal and
-    * time travel survive).
+    * instead of the whole table through one window task. Commits under
+    * [[Rebase.maintenance]]; batch ids carry forward (replay refusal
+    * and time travel survive).
     */
   def compactZOrder(spark: SparkSession, zorderBy: Seq[String],
       buckets: Int): Unit = synchronized {
@@ -1936,7 +1953,8 @@ final class ManifestTableStore(path: String,
       .repartitionByRange(buckets, col("__z"))
       .withColumn("__cluster", spark_partition_id())
       .drop(("__z" +: (0 until n).map(i => s"__r$i")): _*)
-    commitBuckets(spark, f, snap, clustered, "zorder")
+    val (base, edit) = writeBuckets(spark, f, clustered, "zorder")
+    commit(f, snap, Seq(base))(edit, Rebase.maintenance)
   }
 
   /** Copy-on-write row-level DELETE (Iceberg CoW delete / Delta DELETE,
@@ -1947,9 +1965,10 @@ final class ManifestTableStore(path: String,
     * never rewritten. At 100 TB this is the difference between "delete
     * one day = rewrite one day's dirs" and "delete one day = rewrite the
     * table": the rewrite scope is bounded by the same stats pruning
-    * [[readWhere]] uses for scans. Commits as ONE new version via the
-    * optimistic [[commitRewrite]] protocol (concurrent appends rebase
-    * around it; a competing maintenance rewrite aborts it cleanly).
+    * [[readWhere]] uses for scans. Commits as ONE new version under
+    * the DML policy ([[Rebase.dml]]: concurrent appends rebase around
+    * it; a competing maintenance rewrite makes it throw, and its
+    * rewritten dirs are deleted).
     * Batch ids carry forward, so replay refusal and time travel survive:
     * [[readVersion]] on the pre-delete version still sees the deleted
     * rows (their dirs stay on disk until [[vacuum]]).
@@ -2096,23 +2115,15 @@ final class ManifestTableStore(path: String,
         if (touched.isEmpty) Nil
         else Seq(snap.project(readDirs(spark, touched.toSeq.sorted))
           .join(srcKeys, keys, "left_anti"))
+      // one dir that every touched entry and `batchId` point at
       val nd = s"$path/data/merge-${java.util.UUID.randomUUID()}"
-      commitOneDir(f, snap, nd, write((kept :+ inserted)
-        .reduce(_.unionByName(_, allowMissingColumns = true)), nd),
-        touched, batchId)
+      val stats = write((kept :+ inserted)
+        .reduce(_.unionByName(_, allowMissingColumns = true)), nd)
+      commit(f, snap, Seq(nd))(_.map { e =>
+        if (touched(e.dir)) Entry(e.batchId, nd, stats) else e
+      } :+ Entry(batchId, nd, stats), Rebase.dml("merge"))
     }
   }
-
-  /** Commit `nd` as the one dir every `touched` data entry and
-    * `batchId` point at — the representation [[compact]] uses for a
-    * dir holding several batch ids — against `snap`, aborting on a
-    * racing rewrite as every DML does ([[commitDml]]).
-    */
-  private def commitOneDir(f: FileSystem, snap: Snapshot, nd: String,
-      stats: String, touched: Set[String], batchId: Long): Unit =
-    commitDml(f, snap, "merge", _.map { e =>
-      if (touched(e.dir)) Entry(e.batchId, nd, stats) else e
-    } :+ Entry(batchId, nd, stats))
 
   /** Rewrite the whole table as ONE dir holding `rebuild` of its
     * current rows (batch ids included) in one write job, committed
@@ -2131,8 +2142,11 @@ final class ManifestTableStore(path: String,
     require(!snap.isEmpty, s"no committed batches under $path")
     if (snap.has(batchId)) return
     val nd = s"$path/data/merge-${java.util.UUID.randomUUID()}"
-    commitOneDir(f, snap, nd, write(rebuild(snap.read(spark)), nd),
-      snap.dataDirs.toSet, batchId)
+    val stats = write(rebuild(snap.read(spark)), nd)
+    val touched = snap.dataDirs.toSet
+    commit(f, snap, Seq(nd))(_.map { e =>
+      if (touched(e.dir)) Entry(e.batchId, nd, stats) else e
+    } :+ Entry(batchId, nd, stats), Rebase.dml("merge"))
   }
 
   /** Data dirs a keyed merge must rewrite, among the data entries
@@ -2395,7 +2409,7 @@ final class ManifestTableStore(path: String,
     * keyed [[merge]] over key stats: write `xform` of each touched dir
     * to a fresh dir (stats recomputed), then commit untouched entries
     * + rewritten entries (+ `extra`, a merge's insert batch) as one
-    * new version through [[commitDml]].
+    * new version under the DML policy ([[Rebase.dml]]).
     */
   private def rewriteDirs(spark: SparkSession, f: FileSystem,
       snap: Snapshot, touched: Set[String], tag: String,
@@ -2411,30 +2425,9 @@ final class ManifestTableStore(path: String,
       d -> (nd, write(xform(
         snap.project(ManifestTableStore.DirSchemas.read(spark, d))), nd))
     }.toMap
-    commitDml(f, snap, tag, _.map { e =>
-      rewritten.get(e.dir) match {
-        case Some((nd, st)) => Entry(e.batchId, nd, st)
-        case None => e
-      }
-    } ++ extra)
-  }
-
-  /** Commit a row-level DML rewrite through [[commitRewrite]]'s
-    * optimistic retry. Throws
-    * [[java.util.ConcurrentModificationException]] when a concurrent
-    * maintenance rewrite aborts the commit: the caller issued row-level
-    * DML and NOTHING was applied — silence here would let a SQL DELETE
-    * report success while deleting nothing. The freshly-written dirs
-    * stay invisible orphans for vacuum.
-    */
-  private def commitDml(f: FileSystem, snap: Snapshot, tag: String,
-      rewrite: Seq[Entry] => Seq[Entry]): Unit = {
-    beforeDmlCommit()
-    if (!commitRewrite(f, snap, rewrite))
-      throw new java.util.ConcurrentModificationException(
-        s"$tag on $path aborted: a concurrent maintenance rewrite " +
-          "moved this snapshot's dirs; nothing was applied — re-read " +
-          "and retry")
+    commit(f, snap, rewritten.values.map(_._1).toSeq ++ extra.map(_.dir))(
+      _.map(e => rewritten.get(e.dir).fold(e) { case (nd, st) =>
+        Entry(e.batchId, nd, st) }) ++ extra, Rebase.dml(tag))
   }
 
   /** The table's commit history as a DataFrame — Delta's DESCRIBE
@@ -2654,9 +2647,10 @@ final class ManifestTableStore(path: String,
     snap.requireNoDeletes("shallowClone")
     val clone = new ManifestTableStore(targetPath, partitionBy,
       statsColumns, bloomColumns, bloomBits, morDeleteKey)
-    require(clone.current(f).version == 0L &&
-      clone.tryCommit(f, 1L, snap.entries),
-      s"target $targetPath already holds a table")
+    val empty = clone.current(f)
+    require(empty.version == 0L, s"target $targetPath already holds a table")
+    clone.commit(f, empty, Nil)(_ => snap.entries,
+      clone.Rebase.replace("SHALLOW CLONE"))
     clone
   }
 
@@ -2744,10 +2738,9 @@ final class ManifestTableStore(path: String,
     val f = fs(spark)
     val entries = snapshotAt(f, fromVersion).entries
     val b = branch(name)
-    require(b.current(f).version == 0L,
-      s"branch '$name' already exists on $path")
-    require(b.tryCommit(f, 1L, entries),
-      s"branch '$name' already exists on $path")
+    val empty = b.current(f)
+    require(empty.version == 0L, s"branch '$name' already exists on $path")
+    b.commit(f, empty, Nil)(_ => entries, b.Rebase.replace("CREATE BRANCH"))
   }
 
   /** A handle committing to branch `name`'s chain: every store
@@ -2814,9 +2807,8 @@ final class ManifestTableStore(path: String,
         ManifestTableStore.countOf(data).filter(_ => data.nonEmpty)
       }
       val baseCount = totalCount(base)
-      var done = false
-      while (!done) {
-        val main = current(f)
+      // the ancestry check, re-run on the winner of every lost race
+      def guard(main: Snapshot): Boolean = {
         val mLines = main.entries
         val mDataIds = mLines.filterNot(isDeleteEntry)
           .map(_.batchId).toSet
@@ -2834,8 +2826,11 @@ final class ManifestTableStore(path: String,
           s"cannot fast-forward '$name': main advanced past the " +
             "branch point (a non-maintenance commit landed) — " +
             "recreate the branch from the new head")
-        done = tryCommit(f, main.version + 1, head.entries)
+        true
       }
+      val main = current(f)
+      guard(main)
+      commit(f, main, Nil)(_ => head.entries, Rebase.append(guard(_)))
     }
 
   /** Drop a branch chain; data dirs only it referenced become vacuum
@@ -2866,7 +2861,7 @@ final class ManifestTableStore(path: String,
       require(f.exists(new HPath(d)),
         s"cannot restore $path to version $version: data dir $d was vacuumed")
     }
-    while (!tryCommit(f, current(f).version + 1, target)) ()
+    commit(f, current(f), Nil)(_ => target, Rebase.append(_ => true))
   }
 
   /** Rows ADDED between two manifest versions — change-data-feed lite
@@ -3395,7 +3390,8 @@ final class ManifestTableStore(path: String,
     * RECOMPUTED against the winner's state — rows committed between
     * snapshot and commit cannot escape the predicate (serializable,
     * not write-skew: single-step version files mean a successful
-    * tryCommit proves nothing changed since the snapshot read).
+    * publish proves nothing changed since the snapshot read): a lost
+    * attempt publishes nothing and the op re-runs.
     */
   def deleteMoR(spark: SparkSession, predicateSql: String,
       keyCol: String): Unit = synchronized {
@@ -3416,9 +3412,8 @@ final class ManifestTableStore(path: String,
       val entry = Entry(ManifestTableStore.DeleteBatchId, delDir,
         applies.mkString("{\"" + ManifestTableStore.AppliesKey +
           "\":[", ",", "]}"))
-      beforeDmlCommit()
-      done = tryCommit(f, snap.version + 1, snap.entries :+ entry)
-      if (!done) f.delete(new HPath(delDir), true)
+      done = commit(f, snap, Seq(delDir))(_ :+ entry,
+        Rebase.append(_ => false))
     }
   }
 
@@ -3437,9 +3432,10 @@ final class ManifestTableStore(path: String,
     * Folded dirs are named `delfold-`, NOT a maintenance prefix:
     * folding materializes a deletion, so a branch fast-forward over it
     * must refuse (the fold is content-neutral only relative to the
-    * post-delete state). Commits via [[commitRewrite]]: concurrent
-    * appends rebase around it (scoped deletes never mask them), a
-    * competing maintenance rewrite aborts cleanly.
+    * post-delete state). Commits under the DML policy
+    * ([[Rebase.dml]]): concurrent appends rebase around it (scoped
+    * deletes never mask them), a competing maintenance rewrite makes
+    * it throw.
     */
   def compactDeletes(spark: SparkSession): Unit = synchronized {
     val f = fs(spark)
@@ -3460,13 +3456,10 @@ final class ManifestTableStore(path: String,
         snap.masked(spark, ManifestTableStore.DirSchemas.read(spark, dir)),
         nd))
     }.toMap
-    commitDml(f, snap, "compactDeletes", es =>
-      es.filterNot(isDeleteEntry).map { e =>
-        rewritten.get(e.dir) match {
-          case Some((nd, st)) => Entry(e.batchId, nd, st)
-          case None => e
-        }
-      })
+    commit(f, snap, rewritten.values.map(_._1).toSeq)(
+      _.filterNot(isDeleteEntry).map(e => rewritten.get(e.dir).fold(e) {
+        case (nd, st) => Entry(e.batchId, nd, st) }),
+      Rebase.dml("compactDeletes"))
   }
 
   /** ONE-CALL maintenance (the scheduled OPTIMIZE habit): fold any
@@ -3486,7 +3479,7 @@ final class ManifestTableStore(path: String,
       actions += "compactDeletes"
     }
     val before = currentVersion(spark)
-    compactSmallWhere(spark, smallBytes, predicateSql)
+    compactSmall(spark, smallBytes, predicateSql)
     if (currentVersion(spark) != before)
       actions += predicateSql.fold("compactSmall")(p =>
         s"compactSmall(where $p)")

@@ -11,10 +11,62 @@ import graft.SparkSpec
   * protocol promises: every batch commits exactly once, no append is
   * lost to a rebase, no row is duplicated by a fold, and the final
   * version chain is strictly increasing and complete.
+  *
+  * The last tests force ONE lost race per rebase policy of the commit
+  * core: a second handle on the same path commits from inside the
+  * first handle's `beforeDmlCommit` failpoint, so the op's first
+  * publish attempt loses. Each asserts the policy's outcome and that
+  * the loser left no dir that no manifest version references.
   */
 class ConcurrencyFuzzSpec extends SparkSpec {
 
   import spark.implicits._
+
+  /** A two-batch table and two handles on it: `mine` runs the op under
+    * test, `rival` wins its race.
+    */
+  private def raced(): (String, ManifestTableStore, ManifestTableStore) = {
+    val p = Files.createTempDirectory("race-")
+    p.toFile.deleteOnExit()
+    val mine = new ManifestTableStore(p.toString, statsColumns = Seq("n"))
+    mine.append(Seq(("a", 1)).toDF("k", "n"), 0L)
+    mine.append(Seq(("b", 2)).toDF("k", "n"), 1L)
+    (p.toString, mine,
+      new ManifestTableStore(p.toString, statsColumns = Seq("n")))
+  }
+
+  /** Run `rival` inside `mine`'s next commit, before its first publish
+    * attempt; the returned probe tells whether it ran.
+    */
+  private def loseNextCommit(mine: ManifestTableStore)(
+      rival: => Unit): () => Boolean = {
+    @volatile var fired = false
+    mine.beforeDmlCommit = () => {
+      mine.beforeDmlCommit = () => ()
+      fired = true
+      rival
+    }
+    () => fired
+  }
+
+  /** Dirs under `data/` and `staged/` that no surviving manifest
+    * version of the table references.
+    */
+  private def orphans(path: String, store: ManifestTableStore)
+      : Seq[String] = {
+    val f = new org.apache.hadoop.fs.Path(path).getFileSystem(
+      spark.sparkContext.hadoopConfiguration)
+    Seq("data", "staged").flatMap { sub =>
+      val d = new org.apache.hadoop.fs.Path(s"$path/$sub")
+      if (!f.exists(d)) Nil
+      else f.listStatus(d).toSeq.map(_.getPath)
+        .filterNot(p => store.referencesDirsUnder(f, p.toUri.getPath))
+        .map(p => s"$sub/${p.getName}")
+    }
+  }
+
+  private def keys(store: ManifestTableStore): Set[String] =
+    store.read(spark).select("k").as[String].collect().toSet
 
   test("8 concurrent writers + interleaved compaction: every batch " +
       "lands exactly once, nothing lost, nothing doubled") {
@@ -284,5 +336,119 @@ class ConcurrencyFuzzSpec extends SparkSpec {
         s"${finalRows.diff(sinceReplace)} vs " +
         s"${sinceReplace.diff(finalRows)}")
     assert(store.history(spark).count() == cur)
+  }
+
+  test("idempotent append loses a race: it rebases on the winner, a " +
+      "replay racing its original converges, and the loser's dir is " +
+      "deleted") {
+    val (p, mine, rival) = raced()
+    val rebased = loseNextCommit(mine) {
+      rival.append(Seq(("c", 3)).toDF("k", "n"), 2L)
+    }
+    mine.append(Seq(("d", 4)).toDF("k", "n"), 3L)
+    assert(rebased())
+    assert(keys(mine) == Set("a", "b", "c", "d"))
+    val converged = loseNextCommit(mine) {
+      rival.append(Seq(("e", 5)).toDF("k", "n"), 4L)
+    }
+    mine.append(Seq(("e-replay", 5)).toDF("k", "n"), 4L)
+    assert(converged())
+    assert(keys(mine) == Set("a", "b", "c", "d", "e"),
+      "the winner's batch 4 stands; the replay added nothing")
+    assert(mine.currentVersion(spark) == 5L)
+    assert(orphans(p, mine).isEmpty, orphans(p, mine))
+  }
+
+  test("schema markers re-validate on the winner: a racing identical " +
+      "widen converges, a racing rename refuses, and neither leaves " +
+      "its marker behind") {
+    val (p, mine, rival) = raced()
+    val widened = loseNextCommit(mine) {
+      rival.widenColumn(spark, "n", org.apache.spark.sql.types.LongType)
+    }
+    mine.widenColumn(spark, "n", org.apache.spark.sql.types.LongType)
+    assert(widened())
+    val renamed = loseNextCommit(mine) {
+      rival.renameColumn(spark, "n", "qty")
+    }
+    intercept[IllegalArgumentException] {
+      mine.renameColumn(spark, "n", "qty")
+    }
+    assert(renamed())
+    assert(mine.currentVersion(spark) == 4L)
+    assert(mine.read(spark).schema("qty").dataType ==
+      org.apache.spark.sql.types.LongType)
+    assert(orphans(p, mine).isEmpty, orphans(p, mine))
+  }
+
+  test("a publish that converges on a competitor's publish of the SAME " +
+      "staged dir keeps that dir") {
+    val (p, mine, rival) = raced()
+    val staged = mine.stage(Seq(("s", 7)).toDF("k", "n"), 5L)
+    val fired = loseNextCommit(mine) {
+      rival.publishStaged(spark, staged, 5L)
+    }
+    mine.publishStaged(spark, staged, 5L)
+    assert(fired())
+    assert(keys(mine) == Set("a", "b", "s"))
+    assert(orphans(p, mine).isEmpty, orphans(p, mine))
+  }
+
+  test("blind replace loses a race: overwrite, TRUNCATE and REPLACE " +
+      "throw, apply nothing, and delete what they wrote") {
+    val schema = org.apache.spark.sql.types.StructType.fromDDL(
+      "k STRING, n INT")
+    Seq[(String, ManifestTableStore => Unit)](
+      "overwrite" -> (_.overwrite(Seq(("z", 9)).toDF("k", "n"), 7L)),
+      "TRUNCATE" -> (_.truncate(spark)),
+      "REPLACE" -> (_.replaceSchema(spark, schema, Nil))
+    ).foreach { case (name, op) =>
+      val (p, mine, rival) = raced()
+      val fired = loseNextCommit(mine) {
+        rival.append(Seq(("c", 3)).toDF("k", "n"), 2L)
+      }
+      intercept[java.util.ConcurrentModificationException](op(mine))
+      assert(fired(), name)
+      assert(mine.currentVersion(spark) == 3L, name)
+      assert(keys(mine) == Set("a", "b", "c"), name)
+      assert(orphans(p, mine).isEmpty, s"$name: ${orphans(p, mine)}")
+    }
+  }
+
+  test("a compaction racing a compaction is a no-op that deletes what " +
+      "it wrote") {
+    Seq[(String, ManifestTableStore => Unit)](
+      "compact" -> (_.compact(spark)),
+      "compactSmall" -> (_.compactSmall(spark, 1L << 30)),
+      "compactClustered" -> (_.compactClustered(spark, "n", 2))
+    ).foreach { case (name, op) =>
+      val (p, mine, rival) = raced()
+      val fired = loseNextCommit(mine)(rival.compact(spark))
+      op(mine)
+      assert(fired(), name)
+      assert(mine.currentVersion(spark) == 3L,
+        s"$name published over the rival's compaction")
+      assert(keys(mine) == Set("a", "b"), name)
+      assert(orphans(p, mine).isEmpty, s"$name: ${orphans(p, mine)}")
+    }
+  }
+
+  test("DML racing a compaction throws, applies nothing, and deletes " +
+      "what it wrote") {
+    Seq[(String, ManifestTableStore => Unit)](
+      "delete" -> (_.delete(spark, "n >= 2")),
+      "update" -> (_.update(spark, "n = 1",
+        Map("n" -> org.apache.spark.sql.functions.lit(10)))),
+      "merge" -> (_.merge(spark, Seq(("b", 20)).toDF("k", "n"), "k", 5L))
+    ).foreach { case (name, op) =>
+      val (p, mine, rival) = raced()
+      val fired = loseNextCommit(mine)(rival.compact(spark))
+      intercept[java.util.ConcurrentModificationException](op(mine))
+      assert(fired(), name)
+      assert(mine.currentVersion(spark) == 3L, name)
+      assert(mine.read(spark).select("k", "n").as[(String, Int)]
+        .collect().toSet == Set(("a", 1), ("b", 2)), name)
+      assert(orphans(p, mine).isEmpty, s"$name: ${orphans(p, mine)}")
+    }
   }
 }
