@@ -2,6 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.functions.Param
 
 /** Bronze → silver normalization: corrupt-record filter, declarative
   * mapping, typed null-padding, deterministic surrogate key, raw-payload
@@ -55,8 +56,14 @@ object Normalize {
   /** Normalize a raw (bronze) frame: drop corrupt records, project to the
     * canonical model. Works identically on batch and streaming frames.
     *
-    * @param ingestTs audit timestamp; `current_timestamp()` in production,
-    *                 a fixed literal in oracle-facing/deterministic runs.
+    * @param ingestTs audit timestamp, one value for every row of the
+    *                 frame. By default the query's `current_timestamp()`,
+    *                 which a streaming query replaces with its micro-batch
+    *                 timestamp, so each micro-batch carries one `ingest_ts`:
+    *                 the batch timestamp. The default is a codegen
+    *                 [[graft.functions.Param]], so the next trigger reuses
+    *                 this one's compiled stage. Oracle-facing and
+    *                 deterministic runs pass a fixed literal.
     * @param observeAs when set, attach observed metrics (`rows_in`,
     *                  `corrupt_dropped`) under this name — computed inline
     *                  by the running plan (zero extra actions or scans) and
@@ -67,7 +74,7 @@ object Normalize {
     *                  drift is INSPECTABLE, per batch, for free.
     */
   def apply(raw: DataFrame, spec: SourceSpec,
-      ingestTs: Column = current_timestamp(),
+      ingestTs: Column = Param.of(current_timestamp()),
       observeAs: Option[String] = None): DataFrame = {
     val observed = observeAs.fold(raw)(name => raw.observe(name,
       count(lit(1)).as("rows_in"),
@@ -82,7 +89,7 @@ object Normalize {
     */
   def observed(raw: DataFrame, spec: SourceSpec,
       obs: org.apache.spark.sql.Observation,
-      ingestTs: Column = current_timestamp()): DataFrame = {
+      ingestTs: Column = Param.of(current_timestamp())): DataFrame = {
     val o = raw.observe(obs,
       count(lit(1)).as("rows_in"),
       count(col(CorruptCol)).as("corrupt_dropped"))

@@ -6,6 +6,7 @@ import org.apache.spark.sql.catalyst.plans.logical.{ColumnDefinition,
   CreateTable, CreateTableAsSelect, LogicalPlan, UnresolvedTableSpec}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.{StructField, StructType}
+import graft.functions.Param
 
 /** A mutable name → store registry rooted at a base path — the piece a
   * SQL-ONLY session needs on top of [[StoreSql]]: `CREATE TABLE` and
@@ -2875,7 +2876,7 @@ final class StoreCatalog(basePath: String) {
           backingStore.rewrite(spark, bid) { backing =>
             backing.join(dk, touched(keys), "left_anti")
               .unionByName(recomputed.select(backing.schema.fields.map {
-                f => (if (f.name == "batch_id") flit(bid) else fcol(f.name))
+                f => (if (f.name == "batch_id") Param.of(bid) else fcol(f.name))
                   .cast(f.dataType).as(f.name)
               }.toSeq: _*))
           }
@@ -2970,7 +2971,7 @@ final class StoreCatalog(basePath: String) {
         .map { case (df, role) => df.withColumn("__role", lit(role)) }
         .reduce(_.unionByName(_, allowMissingColumns = true))
       val folds = backing.columns.filterNot(isKey).toSeq.map { c =>
-        (if (c == "batch_id") when(inDelta, lit(bid))
+        (if (c == "batch_id") when(inDelta, Param.of(bid))
           .otherwise(on(0, "batch_id"))
         else when(inDelta, insA.columns.find(_.equalsIgnoreCase(c))
           .map(folded).getOrElse(lit(null)))

@@ -1045,17 +1045,23 @@ object StoreSql {
         // so `VACUUM t RETAIN 168 HOURS` preserves a week of history
         // instead of instantly deleting every superseded manifest.
         // ONE manifest-dir listing yields every version's commit time
-        // (no per-version manifest reads — O(1) metadata ops).
-        val cutoff = System.currentTimeMillis() - minAge
+        // (no per-version manifest reads — O(1) metadata ops). "Now"
+        // is never earlier than the newest commit's mtime, so a
+        // filesystem clock ahead of the JVM's cannot place commits
+        // after "now". Only versions committed AFTER the cutoff count:
+        // the one current at the cutoff is the keep window's first.
         val mdir = new org.apache.hadoop.fs.Path(
           s"${store.tablePath}/manifest")
         val mfs = mdir.getFileSystem(
           spark.sparkContext.hadoopConfiguration)
-        val recent =
-          if (!mfs.exists(mdir)) 0
-          else mfs.listStatus(mdir).count(st =>
-            st.getPath.getName.startsWith("v") &&
-              st.getModificationTime >= cutoff)
+        val commits =
+          if (!mfs.exists(mdir)) Seq.empty[Long]
+          else mfs.listStatus(mdir).toSeq
+            .filter(_.getPath.getName.startsWith("v"))
+            .map(_.getModificationTime)
+        val cutoff =
+          (System.currentTimeMillis() +: commits).max - minAge
+        val recent = commits.count(_ > cutoff)
         Some(store.vacuum(spark, retainLast = recent,
           minAgeMs = minAge, dryRun = dry != null).toDF("path"))
       case _ => None

@@ -47,6 +47,32 @@ trait TableStore {
   def writerBase(spark: SparkSession, writerId: String): Long = 0L
 }
 
+object TableStore {
+  import graft.functions.Param
+  import org.apache.spark.sql.Column
+  import org.apache.spark.sql.catalyst.expressions.InSet
+  import org.apache.spark.sql.functions.col
+  import org.apache.spark.sql.graftshim.PlanShim
+
+  /** `df` stamped with `batch_id` = `batchId`. The id is a codegen
+    * [[Param]], so the next commit of a same-shaped frame reuses the
+    * stage this one compiled.
+    */
+  private[engine] def withBatchId(df: DataFrame, batchId: Long): DataFrame =
+    df.withColumn("batch_id", Param.of(batchId))
+
+  /** `batch_id IN ids` as an `InSet`, whose generated code reads the
+    * set from the plan's references: a plain `IN` of up to ten ids
+    * writes them into the source, so each window would compile anew.
+    * An `InSet` skips type coercion; `batch_id` is a LongType column
+    * in every dir (stamped by [[withBatchId]] or a schema marker).
+    */
+  private[engine] def batchIdIn(ids: Iterable[Long],
+      batchId: Column = col("batch_id")): Column =
+    PlanShim.column(InSet(PlanShim.expression(batchId),
+      ids.map(id => id: Any).toSet))
+}
+
 /** Manifest-committed parquet table — the closest offline analogue of an
   * Iceberg snapshot commit (reference sink
   * `bronze_assets_to_silver_assets.py:275-277`), built from nothing but
@@ -859,7 +885,7 @@ final class ManifestTableStore(path: String,
     if (snap.has(batchId)) return // replay → idempotent no-op
     val dataDir = s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
     val entry = Entry(batchId, dataDir,
-      write(df.withColumn("batch_id", lit(batchId)), dataDir))
+      write(TableStore.withBatchId(df, batchId), dataDir))
     commit(f, snap, Seq(dataDir))(_ :+ entry, Rebase.append(batchId))
   }
 
@@ -890,7 +916,7 @@ final class ManifestTableStore(path: String,
     if (snap.has(batchId)) return // replay → no-op
     val dataDir = s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
     val entry = Entry(batchId, dataDir,
-      write(df.withColumn("batch_id", lit(batchId)), dataDir))
+      write(TableStore.withBatchId(df, batchId), dataDir))
     commit(f, snap, Seq(dataDir))(_ => Seq(entry),
       Rebase.replace("overwrite", converged = _.has(batchId)))
   }
@@ -1286,7 +1312,7 @@ final class ManifestTableStore(path: String,
       val dataDir =
         s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
       val entry = Entry(batchId, dataDir,
-        write(df.withColumn("batch_id", lit(batchId)), dataDir))
+        write(TableStore.withBatchId(df, batchId), dataDir))
       val touchedTuples = partitionTuples(f, dataDir)
       require(touchedTuples.nonEmpty,
         "dynamic partition overwrite with an EMPTY batch is refused " +
@@ -1724,7 +1750,7 @@ final class ManifestTableStore(path: String,
     require(batchId >= 0, s"batchId must be >= 0, got $batchId")
     val dataDir =
       s"$path/staged/batch-$batchId-${java.util.UUID.randomUUID()}"
-    val stats = write(df.withColumn("batch_id", lit(batchId)), dataDir)
+    val stats = write(TableStore.withBatchId(df, batchId), dataDir)
     // stash the stats the write job already computed beside the staged
     // files (underscore name: invisible to parquet readers, so the
     // audit sees exactly the bytes publish would commit) — publish then
@@ -2098,7 +2124,7 @@ final class ManifestTableStore(path: String,
       if (snap.data.exists(hasKeyStats)) mergeTouchedDirs(src, keys, snap.data)
       else snap.dataDirs.toSet
     val srcKeys = broadcast(src.select(keys.map(col): _*).distinct())
-    val inserted = src.withColumn("batch_id", lit(batchId))
+    val inserted = TableStore.withBatchId(src, batchId)
     val keyStats = statsEligibleIn(src.schema).exists(keys.contains) ||
       snap.data.exists(e => touched(e.dir) && hasKeyStats(e))
     if (keyStats) {
@@ -2358,9 +2384,9 @@ final class ManifestTableStore(path: String,
     // marker costs one empty parquet footer; compact folds it away.
     val insRows: DataFrame =
       if (notMatched.isEmpty)
-        spark.createDataFrame(spark.sparkContext
+        TableStore.withBatchId(spark.createDataFrame(spark.sparkContext
             .emptyRDD[org.apache.spark.sql.Row], tSchema)
-          .drop("batch_id").withColumn("batch_id", lit(batchId))
+          .drop("batch_id"), batchId)
       else {
         val unmatched =
           if (snap.isEmpty) src
@@ -2395,8 +2421,7 @@ final class ManifestTableStore(path: String,
               }
             }.as(fld.name)
           }
-        picked.select(insCols.toSeq: _*)
-          .withColumn("batch_id", lit(batchId))
+        TableStore.withBatchId(picked.select(insCols.toSeq: _*), batchId)
       }
     val insDir =
       s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
@@ -2896,7 +2921,7 @@ final class ManifestTableStore(path: String,
       return to.dropped(to.project(to.scan(spark))).filter(lit(false))
     val dirs = to.data.filter(e => newIds.contains(e.batchId)).map(_.dir)
     to.dropped(to.project(to.scan(spark, dirs)
-      .filter(col("batch_id").isInCollection(newIds))))
+      .filter(TableStore.batchIdIn(newIds))))
   }
 
   /** FULL change-data-feed between two versions — Delta CDF shaped:
@@ -2945,7 +2970,7 @@ final class ManifestTableStore(path: String,
         .map(_.dir).distinct
       if (dirs.isEmpty) None
       else Some(end.project(side.masked(spark, side.scan(spark, dirs)))
-        .filter(col("batch_id").isInCollection(affected)))
+        .filter(TableStore.batchIdIn(affected)))
     }
     val oldS = scoped(from)
     val newS = scoped(to)
@@ -3331,7 +3356,8 @@ final class ManifestTableStore(path: String,
         val kc = keys.schema.fields.head.name
         val cond = ManifestTableStore.parseApplies(d.statsJson) match {
           case Some(ids) =>
-            df(kc) === keys(kc) && df("batch_id").isInCollection(ids)
+            df(kc) === keys(kc) &&
+              TableStore.batchIdIn(ids, df("batch_id"))
           case None => df(kc) === keys(kc)
         }
         df.join(broadcast(keys), cond, "left_anti")
@@ -4271,7 +4297,7 @@ final class ParquetTableStore(path: String) extends TableStore {
     * share this process.)
     */
   override def append(df: DataFrame, batchId: Long): Unit = synchronized {
-    df.withColumn("batch_id", lit(batchId))
+    TableStore.withBatchId(df, batchId)
       .write.mode("append").parquet(path)
   }
 

@@ -1,18 +1,25 @@
 package org.apache.spark.sql.graftshim
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.classic.{Dataset, SparkSession => CSpark}
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils,
+  SparkSession => CSpark}
 
-/** The Spark-internal doorways the custom-plan tier needs, in one shim
-  * living in a subpackage of `org.apache.spark.sql` (so `private[sql]`/
-  * `private[spark]` members resolve). Two re-exports, nothing else:
-  * `ofRows` (the `classic.Dataset` companion is `private[sql]`) to wrap
-  * a hand-built [[LogicalPlan]] back into the public Dataset API, and
-  * `sparkLocalDir` (`Utils` is `private[spark]`) so custom operators
-  * spill where Spark's own external operators do.
+/** The Spark-internal doorways the engine needs, in one shim living in
+  * a subpackage of `org.apache.spark.sql` (so `private[sql]`/
+  * `private[spark]` members resolve): plans to and from DataFrames
+  * (`ofRows`, `planOf`, the streaming/batch re-plans, `internalRdd`),
+  * Catalyst expressions to and from Columns (`column`, `expression`),
+  * and `sparkLocalDir` (`Utils` is `private[spark]`) so custom
+  * operators spill where Spark's own external operators do.
   */
 object PlanShim {
+  /** A Catalyst expression as a DataFrame-API column, and back. */
+  def column(e: Expression): Column = ExpressionUtils.column(e)
+
+  def expression(c: Column): Expression = ExpressionUtils.expression(c)
+
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     Dataset.ofRows(spark.asInstanceOf[CSpark], plan)
 

@@ -168,6 +168,32 @@ class StoreCatalogSpec extends SparkSpec {
     assert(cat.exec(spark, "DESCRIBE HISTORY t").count() == 2)
   }
 
+  test("VACUUM RETAIN 0 HOURS keeps only the current version when the " +
+      "manifest mtimes read ahead of the JVM clock") {
+    val cat = freshCatalog()
+    spark.conf.set("spark.graft.vacuum.retentionCheck.enabled", "false")
+    cat.exec(spark, "CREATE TABLE t (k STRING, n INT) USING graft_store")
+    cat.exec(spark, "INSERT INTO t VALUES ('a', 1)", batchId = Some(0L))
+    cat.exec(spark, "INSERT INTO t VALUES ('b', 2)", batchId = Some(1L))
+    cat.store("t").compact(spark)
+    assert(cat.exec(spark, "DESCRIBE HISTORY t").count() > 1)
+    // a filesystem clock an hour ahead of the JVM's: every commit
+    // reads as younger than "now", in commit order
+    val mdir = new org.apache.hadoop.fs.Path(
+      s"${cat.store("t").tablePath}/manifest")
+    val mfs = mdir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val ahead = System.currentTimeMillis() + 3600000L
+    mfs.listStatus(mdir).filter(_.getPath.getName.startsWith("v"))
+      .foreach { st =>
+        val v = st.getPath.getName.drop(1).toLong
+        mfs.setTimes(st.getPath, ahead + v * 1000L, -1L)
+      }
+    cat.exec(spark, "VACUUM t RETAIN 0 HOURS")
+    assert(cat.exec(spark, "DESCRIBE HISTORY t").count() == 1)
+    assert(cat.query(spark, "SELECT k, n FROM t ORDER BY k")
+      .as[(String, Int)].collect().toSeq == Seq(("a", 1), ("b", 2)))
+  }
+
   test("custom-LOCATION tables stay addressable across catalogs via " +
       "the name pointer: property-less re-attach and DROP both work") {
     val base = Files.createTempDirectory("catalog4-")

@@ -236,6 +236,32 @@ class StreamRunnerSpec extends SparkSpec {
     assert(store.read(spark).count() == 2) // only the clean rows landed
   }
 
+  test("every row of one micro-batch carries one ingest_ts: the " +
+      "batch timestamp in the query's offset log") {
+    import org.apache.spark.sql.streaming.Trigger
+    val src = tmp("bronze-ts-"); val ckpt = tmp("ckpt-ts-")
+    val out = tmp("silver-ts-")
+    (1 to 4).foreach { i =>
+      writeFile(src, s"a$i.json",
+        s"""{"id": $i, "ip": "10.0.0.$i", "hostName": "h$i"}""")
+    }
+    val store = new ManifestTableStore(out.toString)
+    StreamRunner.start(spark, SourceSpec.rapid7, src.toString,
+      ckpt.toString, store, Trigger.AvailableNow(), Some(2))
+      .awaitTermination()
+    // one line of the offset log per batch holds its metadata
+    val logged = (0 to 1).map { b =>
+      val meta = Files.readAllLines(ckpt.resolve(s"offsets/$b")).get(1)
+      "\"batchTimestampMs\":(\\d+)".r.findFirstMatchIn(meta).get
+        .group(1).toLong
+    }
+    val batches = store.read(spark).groupBy("batch_id")
+      .agg(count(lit(1)), countDistinct("ingest_ts"), min("ingest_ts"))
+      .orderBy("batch_id").collect().toSeq
+      .map(r => (r.getLong(1), r.getLong(2), r.getTimestamp(3).getTime))
+    assert(batches == logged.map(ts => (2L, 1L, ts)), s"$batches vs $logged")
+  }
+
   test("observed metrics: batch Observation handle resolves after the " +
       "first action") {
     val obs = org.apache.spark.sql.Observation("normalize_batch_obs")
