@@ -1012,11 +1012,13 @@ object StoreSql {
               .map(_.trim.stripPrefix("`").stripSuffix("`"))
               .filter(_.nonEmpty).toSeq
             // ZORDER rewrites the table anyway; fold pending
-            // merge-on-read deletes first (no-op when none)
-            store.compactDeletes(spark)
-            store.compactZOrder(spark, cols,
-              spark.sessionState.conf.numShufflePartitions)
-            Seq(s"compactZOrder(${cols.mkString(", ")})")
+            // merge-on-read deletes first (no-op when none). Like
+            // `maintain`, report only the steps that published.
+            Seq("compactDeletes" -> store.compactDeletes(spark),
+              s"compactZOrder(${cols.mkString(", ")})" ->
+                store.compactZOrder(spark, cols,
+                  spark.sessionState.conf.numShufflePartitions))
+              .collect { case (action, true) => action }
           }
         Some(actions.toDF("action"))
       case VacuumStmt(t, hours, dry) =>

@@ -114,6 +114,13 @@ object TableStore {
   *     30 s trigger writes ~3k dirs/day) and commits it as the next
   *     version. Superseded dirs stay on disk for in-flight readers;
   *     vacuuming them after a grace period is a trivial dir diff;
+  *   - every data rewrite (compactions, DML, partition overwrite, the
+  *     REFRESH fold) picks dirs and builds frames, and hands its outputs
+  *     (replaced dirs, frame, added batch id; or a bucket layout) to
+  *     ONE write-and-commit, [[rewriteCommit]]. Its kind names its dirs
+  *     and picks its rebase policy: maintenance `compact-`, `cluster-`,
+  *     `zorder-`; DML `delete-`, `update-`, `merge-`, `overwrite-`,
+  *     `delfold-`;
   *   - optional `partitionBy` lays data out hive-style so reader
   *     predicates on partition columns prune directories — the same scan
   *     reduction a table format's partition spec gives (asserted against
@@ -407,6 +414,34 @@ final class ManifestTableStore(path: String,
             "moved this snapshot's dirs; nothing was applied — re-read " +
             "and retry"))
   }
+
+  /** A data rewrite's kind: its dir name `data/<prefix>-<uuid>` and
+    * its rebase policy. Maintenance preserves content, so a branch
+    * [[fastForward]] may publish over its dirs. `delfold` is DML:
+    * folding a merge-on-read delete materializes a deletion.
+    */
+  private final class Kind(val prefix: String, val rebase: Rebase)
+
+  private object Kind {
+    val Compact = new Kind("compact", Rebase.maintenance)
+    val Cluster = new Kind("cluster", Rebase.maintenance)
+    val ZOrder = new Kind("zorder", Rebase.maintenance)
+    val Delete = new Kind("delete", Rebase.dml("delete"))
+    val Update = new Kind("update", Rebase.dml("update"))
+    val Merge = new Kind("merge", Rebase.dml("merge"))
+    val Overwrite = new Kind("overwrite", Rebase.dml("overwrite"))
+    val DelFold = new Kind("delfold", Rebase.dml("compactDeletes"))
+    val maintenancePrefixes: Seq[String] =
+      Seq(Compact, Cluster, ZOrder).map(_.prefix + "-")
+  }
+
+  /** One output of a data rewrite: `frame`, written to a fresh dir
+    * that takes over the entries of the `replaces` dirs, plus an entry
+    * for the batch it `adds`. A `buckets` frame carries a `__cluster`
+    * column and writes one dir per bucket.
+    */
+  private final case class Output(replaces: Set[String], frame: DataFrame,
+      adds: Option[Long] = None, buckets: Boolean = false)
 
   /** Write a ZERO-ROW schema-marker dir `data/<kind>-<uuid>` holding
     * `cols` plus `batch_id`, and return its manifest entry under the
@@ -1292,8 +1327,8 @@ final class ManifestTableStore(path: String,
     * committed dirs whose OWN hive layout shows an overlapping
     * partition are rewritten, with the touched partitions filtered out
     * (the filter is on partition columns, so each rewrite scan prunes
-    * to exactly the overlapping subdirs). One commit via the same
-    * optimistic [[rewriteDirs]] protocol as DML: concurrent appends
+    * to exactly the overlapping subdirs). One commit through the same
+    * [[rewriteCommit]] as DML: concurrent appends
     * rebase around it, concurrent maintenance aborts it cleanly.
     * Replayed batch ids no-op BEFORE any file is written.
     */
@@ -1309,35 +1344,36 @@ final class ManifestTableStore(path: String,
       val snap = current(f)
       snap.requireNoDeletes("overwritePartitions")
       if (snap.has(batchId)) return // replay → no-op
-      val dataDir =
-        s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
-      val entry = Entry(batchId, dataDir,
-        write(TableStore.withBatchId(df, batchId), dataDir))
-      val touchedTuples = partitionTuples(f, dataDir)
-      require(touchedTuples.nonEmpty,
-        "dynamic partition overwrite with an EMPTY batch is refused " +
-          "(it would replace nothing; a full truncate must be the " +
-          "explicit full-table overwrite)")
-      val touched = snap.entries.map(_.dir).distinct
-        .filter(d => partitionTuples(f, d).exists(touchedTuples))
-        .toSet
-      // null-safe per column: hive encodes a NULL partition value as the
-      // __HIVE_DEFAULT_PARTITION__ dir name, and a plain === against ANY
-      // literal evaluates to NULL for null-valued rows — the negated
-      // filter would then silently DROP null-partition rows from every
-      // rewritten dir (and never replace existing null-partition rows).
-      // <=> against the decoded value (null for the hive sentinel) keeps
-      // the predicate two-valued for every row.
-      val keep = !touchedTuples.toSeq.map(t =>
-        partitionBy.zip(t).map { case (c, value) =>
-          val decoded =
-            if (value == ManifestTableStore.HiveNullPartition)
-              lit(null).cast("string")
-            else lit(value)
-          col(c).cast("string") <=> decoded
-        }.reduce(_ && _)).reduce(_ || _)
-      rewriteDirs(spark, f, snap, touched, "overwrite",
-        _.filter(keep), extra = Seq(entry))
+      // the new batch is written first: the dirs it replaces are read
+      // off the partitions it wrote
+      rewriteCommit(f, snap, Kind.Overwrite)(Seq(Output(Set.empty,
+          TableStore.withBatchId(df, batchId), Some(batchId))),
+        more = { case Seq(dataDir) =>
+          val touchedTuples = partitionTuples(f, dataDir)
+          require(touchedTuples.nonEmpty,
+            "dynamic partition overwrite with an EMPTY batch is refused " +
+              "(it would replace nothing; a full truncate must be the " +
+              "explicit full-table overwrite)")
+          val touched = snap.entries.map(_.dir).distinct
+            .filter(d => partitionTuples(f, d).exists(touchedTuples))
+          // null-safe per column: hive encodes a NULL partition value as
+          // the __HIVE_DEFAULT_PARTITION__ dir name, and a plain ===
+          // against ANY literal evaluates to NULL for null-valued rows —
+          // the negated filter would then silently DROP null-partition
+          // rows from every rewritten dir (and never replace existing
+          // null-partition rows). <=> against the decoded value (null
+          // for the hive sentinel) keeps the predicate two-valued for
+          // every row.
+          val keep = !touchedTuples.toSeq.map(t =>
+            partitionBy.zip(t).map { case (c, value) =>
+              val decoded =
+                if (value == ManifestTableStore.HiveNullPartition)
+                  lit(null).cast("string")
+                else lit(value)
+              col(c).cast("string") <=> decoded
+            }.reduce(_ && _)).reduce(_ || _)
+          perDir(spark, snap, touched)(_.filter(keep))
+        })
     }
 
   /** The hive partition tuples a data dir holds, read off its directory
@@ -1796,24 +1832,21 @@ final class ManifestTableStore(path: String,
   /** Rewrite every committed row into ONE data dir and commit it as the
     * next version, carrying all batch ids forward (replay detection and
     * `readExactlyOnce` survive: batch_id is a data column). No-op on a
-    * table that is already one dir.
+    * table that is already one dir. Returns whether it published.
     */
-  def compact(spark: SparkSession): Unit = synchronized {
+  def compact(spark: SparkSession): Boolean = synchronized {
     val f = fs(spark)
     val snap = current(f)
     if (snap.entries.map(_.dir).distinct.size <= 1 &&
-      snap.deletes.isEmpty) return
-    val dataDir = s"$path/data/compact-${java.util.UUID.randomUUID()}"
+      snap.deletes.isEmpty) return false
     // rewrite the SNAPSHOT's dirs (not a re-listed current) so a
     // conflict rebase knows exactly which batches the new dir holds.
     // Merge-on-read delete files fold in here: the rewrite materializes
     // the delete-applied state and the delete entries drop out of the
     // committed manifest (Iceberg's rewrite_data_files + rewrite of
     // delete files in one step).
-    val stats = write(snap.read(spark), dataDir)
-    commit(f, snap, Seq(dataDir))(
-      _.filterNot(isDeleteEntry).map(e => Entry(e.batchId, dataDir, stats)),
-      Rebase.maintenance)
+    rewriteCommit(f, snap, Kind.Compact)(
+      Seq(Output(snap.entries.map(_.dir).toSet, snap.read(spark))))
   }
 
   /** Incremental small-file compaction — Delta's OPTIMIZE with a
@@ -1835,10 +1868,10 @@ final class ManifestTableStore(path: String,
     * byte-identical — at 100 TB "optimize today's ingest" reads
     * today's small dirs, not every small dir in the table. Dirs with
     * no stats for a referenced column are conservatively in scope
-    * (same rule as [[readWhere]]).
+    * (same rule as [[readWhere]]). Returns whether it published.
     */
   def compactSmall(spark: SparkSession, smallBytes: Long,
-      where: Option[String] = None): Unit =
+      where: Option[String] = None): Boolean =
     synchronized {
       val f = fs(spark)
       val snap = current(f)
@@ -1848,21 +1881,10 @@ final class ManifestTableStore(path: String,
       // untouched dirs still hold the old physical column
       val smallAll = snap.dataDirs.filter(d =>
         f.getContentSummary(new HPath(d)).getLength < smallBytes)
-      val small = where match {
-        case None => smallAll
-        case Some(p) =>
-          val (kept, _) = pruneEntries(spark, p,
-            snap.data.filter(e => smallAll.contains(e.dir)))
-          smallAll.filter(kept.contains)
-      }
-      if (small.size < 2) return
-      val dataDir = s"$path/data/compact-${java.util.UUID.randomUUID()}"
-      val stats = write(readDirs(spark, small), dataDir)
-      val smallSet = small.toSet
-      commit(f, snap, Seq(dataDir))(_.map { e =>
-        if (smallSet.contains(e.dir)) Entry(e.batchId, dataDir, stats)
-        else e
-      }, Rebase.maintenance)
+      val small = where.fold(smallAll)(p => pruneEntries(spark, p,
+        snap.data.filter(e => smallAll.contains(e.dir)))._1.distinct)
+      small.size >= 2 && rewriteCommit(f, snap, Kind.Compact)(
+        Seq(Output(small.toSet, readDirs(spark, small))))
     }
 
   /** Cluster-compact: rewrite the whole table as up to `buckets`
@@ -1873,37 +1895,39 @@ final class ManifestTableStore(path: String,
     * [[readWhere]] on a `clusterBy` range touches ~1/buckets of the
     * data (Delta's OPTIMIZE ZORDER / Iceberg's sort-order rewrite, in
     * one dimension). One shuffle (range repartition by the sampled key
-    * distribution) + one write; each hive `__cluster=k` output dir is
-    * registered as an independent manifest dir, so pruning operates at
-    * dir granularity exactly like fresh appends. Batch ids all carry
-    * forward (replay refusal and `readExactlyOnce` survive; the
-    * id→dir association is void post-compaction, as with [[compact]]).
+    * distribution) + one write. Returns whether it published.
     */
   def compactClustered(spark: SparkSession, clusterBy: String,
-      buckets: Int): Unit = synchronized {
+      buckets: Int): Boolean =
+    rewriteBuckets(spark, Kind.Cluster, "compactClustered")(
+      _.repartitionByRange(buckets, col(clusterBy)))
+
+  /** [[compactClustered]] and [[compactZOrder]]: the whole table, read
+    * once (drops materialize here), rewritten as one dir per partition
+    * of `layout`'s range repartition. Each is an independent manifest
+    * dir, so pruning works per dir exactly as on fresh appends, and
+    * every batch id carries forward. No-op when the manifest counts no
+    * row: a zero-row write lays out no bucket to carry the ids.
+    */
+  private def rewriteBuckets(spark: SparkSession, kind: Kind, op: String)(
+      layout: DataFrame => DataFrame): Boolean = synchronized {
     val f = fs(spark)
     val snap = current(f)
-    snap.requireNoDeletes("compactClustered")
-    if (snap.isEmpty) return
-    val clustered = snap.read(spark) // drops materialize here
-      .repartitionByRange(buckets, col(clusterBy))
-      .withColumn("__cluster", spark_partition_id())
-    val (base, edit) = writeBuckets(spark, f, clustered, "cluster")
-    commit(f, snap, Seq(base))(edit, Rebase.maintenance)
+    snap.requireNoDeletes(op)
+    !ManifestTableStore.countOf(snap.data).contains(0L) &&
+      rewriteCommit(f, snap, kind)(Seq(Output(snap.entries.map(_.dir).toSet,
+        layout(snap.read(spark)).withColumn("__cluster", spark_partition_id()),
+        buckets = true)))
   }
 
-  /** Write a clustered rewrite as hive `__cluster=k` output dirs under
-    * a fresh `data/<kind>-<uuid>` base (table partitions nested
-    * inside), each with its own stats and recorded schema. Returns the
-    * base and the edit that commits every output dir as an independent
-    * manifest dir. Every batch id of the snapshot stays present for
-    * replay checks (the id→dir association is void after the rewrite,
-    * as with [[compact]]).
+  /** Write a bucket layout as hive `__cluster=k` dirs under `base`
+    * (table partitions nested inside) and return each dir with its
+    * stats, read back one job per dir: per-bucket aggregates in the
+    * write's `observe` measured slower at OPTIMIZE ZORDER's bucket
+    * count (`spark.sql.shuffle.partitions`).
     */
   private def writeBuckets(spark: SparkSession, f: FileSystem,
-      clustered: DataFrame,
-      kind: String): (String, Seq[Entry] => Seq[Entry]) = {
-    val base = s"$path/data/$kind-${java.util.UUID.randomUUID()}"
+      clustered: DataFrame, base: String): Seq[(String, String)] = {
     clustered.write.mode("overwrite")
       .partitionBy("__cluster" +: partitionBy: _*).parquet(base)
     val dirs = f.listStatus(new HPath(base)).map(_.getPath)
@@ -1911,15 +1935,7 @@ final class ManifestTableStore(path: String,
       .sorted.toSeq
     val schema = clustered.drop("__cluster").schema
     dirs.foreach(putSchema(spark, _, schema))
-    val stats = dirs.map(d => d -> collectStats(spark, d)).toMap
-    base -> { es =>
-      val ids = es.map(_.batchId).distinct
-      val entries = dirs.zipWithIndex.map { case (d, i) =>
-        Entry(ids(i % ids.size), d, stats(d)) }
-      val carried = ids.filterNot(id => entries.exists(_.batchId == id))
-        .map(id => Entry(id, dirs.head, stats(dirs.head)))
-      entries ++ carried
-    }
+    dirs.map(d => d -> collectStats(spark, d))
   }
 
   /** Z-order clustered compaction — multi-dimensional data skipping
@@ -1941,46 +1957,39 @@ final class ManifestTableStore(path: String,
     * min position per value = SQL `rank()`, so the codes are
     * bit-identical to what `percent_rank` over a global window
     * produced) and joins back on the value — table/n rows per task
-    * instead of the whole table through one window task. Commits under
-    * [[Rebase.maintenance]]; batch ids carry forward (replay refusal
-    * and time travel survive).
+    * instead of the whole table through one window task. Returns
+    * whether it published.
     */
   def compactZOrder(spark: SparkSession, zorderBy: Seq[String],
-      buckets: Int): Unit = synchronized {
+      buckets: Int): Boolean = {
     require(zorderBy.nonEmpty, "compactZOrder needs at least one column")
-    val f = fs(spark)
-    val snap = current(f)
-    snap.requireNoDeletes("compactZOrder")
-    if (snap.isEmpty) return
     val bitsPer = 12
     val n = zorderBy.size
-    val base0 = snap.read(spark) // drops materialize here
-    val total = base0.count()
-    val denom = math.max(total - 1L, 1L).toDouble
-    val ranked = zorderBy.zipWithIndex.foldLeft(base0) {
-      case (d, (c, i)) =>
-        // rank() = min ExactRank position among a value's ties;
-        // percent_rank = (rank-1)/(n-1). NULLs order first under a
-        // window, so a left-join miss codes to rank 0 — identical.
-        val rmap = ExactRank.ranked(base0.select(col(c)), c)
-          .groupBy("v").agg(min("pos").as(s"__minpos$i"))
-          .withColumnRenamed("v", c)
-        d.join(rmap, Seq(c), "left")
-          .withColumn(s"__r$i",
-            ((coalesce(col(s"__minpos$i"), lit(1L)) - 1L) / denom *
-              ((1 << bitsPer) - 1)).cast("int"))
-          .drop(s"__minpos$i")
+    rewriteBuckets(spark, Kind.ZOrder, "compactZOrder") { base0 =>
+      val total = base0.count()
+      val denom = math.max(total - 1L, 1L).toDouble
+      val ranked = zorderBy.zipWithIndex.foldLeft(base0) {
+        case (d, (c, i)) =>
+          // rank() = min ExactRank position among a value's ties;
+          // percent_rank = (rank-1)/(n-1). NULLs order first under a
+          // window, so a left-join miss codes to rank 0 — identical.
+          val rmap = ExactRank.ranked(base0.select(col(c)), c)
+            .groupBy("v").agg(min("pos").as(s"__minpos$i"))
+            .withColumnRenamed("v", c)
+          d.join(rmap, Seq(c), "left")
+            .withColumn(s"__r$i",
+              ((coalesce(col(s"__minpos$i"), lit(1L)) - 1L) / denom *
+                ((1 << bitsPer) - 1)).cast("int"))
+            .drop(s"__minpos$i")
+      }
+      // interleave: bit b of column i lands at position b*n + i
+      val zExpr = (0 until bitsPer).flatMap(b => (0 until n).map(i =>
+        s"(cast((__r$i >> $b) & 1 as bigint) << ${b * n + i})"))
+        .mkString(" + ")
+      ranked.withColumn("__z", expr(zExpr))
+        .repartitionByRange(buckets, col("__z"))
+        .drop(("__z" +: (0 until n).map(i => s"__r$i")): _*)
     }
-    // interleave: bit b of column i lands at position b*n + i
-    val zExpr = (0 until bitsPer).flatMap(b => (0 until n).map(i =>
-      s"(cast((__r$i >> $b) & 1 as bigint) << ${b * n + i})"))
-      .mkString(" + ")
-    val clustered = ranked.withColumn("__z", expr(zExpr))
-      .repartitionByRange(buckets, col("__z"))
-      .withColumn("__cluster", spark_partition_id())
-      .drop(("__z" +: (0 until n).map(i => s"__r$i")): _*)
-    val (base, edit) = writeBuckets(spark, f, clustered, "zorder")
-    commit(f, snap, Seq(base))(edit, Rebase.maintenance)
   }
 
   /** Copy-on-write row-level DELETE (Iceberg CoW delete / Delta DELETE,
@@ -2000,45 +2009,11 @@ final class ManifestTableStore(path: String,
     * rows (their dirs stay on disk until [[vacuum]]).
     */
   def delete(spark: SparkSession, predicateSql: String): Unit =
-    synchronized {
-      val f = fs(spark)
-      val snap = current(f)
-      snap.requireNoDeletes("delete")
-      if (snap.isEmpty) return
-      val (touched, _) = pruneEntries(spark, predicateSql, snap.data)
-      if (touched.isEmpty) return // stats prove no row matches: no-op
-      // row probe (Delta's find-files phase): stats admit these dirs,
-      // but only a dir holding an ACTUAL match justifies a rewrite.
-      // A no-match DELETE must not rewrite admitted dirs or mint a
-      // version — at 100 TB a `%`-shaped predicate admits every dir,
-      // and an idempotent re-run (orchestrator retry, replayed batch
-      // script) would otherwise pay a full CoW pass per replay and
-      // push every MV into a spurious refresh window. The probe
-      // short-circuits on the first matching row (LocalLimit), so the
-      // matching path pays ~one partition read, the no-match path a
-      // read-only scan instead of a rewrite+commit.
-      if (probeNoMatch(spark, touched, snap, predicateSql)) return
-      // SQL DELETE removes rows where the predicate is TRUE; a NULL
-      // predicate (NULL-valued column in `WHERE c = 3`) KEEPS the row
-      // — a bare `!pred` filter would silently delete it
-      val keep = !(expr(predicateSql) <=> lit(true))
-      rewriteDirs(spark, f, snap, touched.toSet, "delete",
-        _.filter(keep))
-    }
-
-  /** True iff NO row in `touched`'s dirs satisfies `predicateSql` —
-    * the row-level confirmation behind the stats prune (see
-    * [[delete]]). One short-circuiting job over the admitted dirs.
-    * The pending rename/widen chain projects onto the raw read first,
-    * exactly as [[rewriteDirs]] does before its transform: the
-    * predicate speaks CURRENT names/types while old-generation dirs
-    * still hold the old physical column.
-    */
-  private def probeNoMatch(spark: SparkSession, touched: Seq[String],
-      snap: Snapshot, predicateSql: String): Boolean =
-    snap.project(readDirs(spark, touched.distinct))
-      .filter(expr(predicateSql) <=> lit(true))
-      .isEmpty
+    // SQL DELETE removes rows where the predicate is TRUE; a NULL
+    // predicate (NULL-valued column in `WHERE c = 3`) KEEPS the row
+    // — a bare `!pred` filter would silently delete it
+    rewriteMatching(spark, predicateSql, Kind.Delete)(
+      _.filter(!(expr(predicateSql) <=> lit(true))))
 
   /** Copy-on-write row-level UPDATE: rows matching `predicateSql` get
     * each column in `set` re-assigned; all other rows (and every data
@@ -2049,24 +2024,33 @@ final class ManifestTableStore(path: String,
     * the update.
     */
   def update(spark: SparkSession, predicateSql: String,
-      set: Map[String, org.apache.spark.sql.Column]): Unit =
-    synchronized {
-      val f = fs(spark)
-      val snap = current(f)
-      snap.requireNoDeletes("update")
-      if (snap.isEmpty) return
-      val (touched, _) = pruneEntries(spark, predicateSql, snap.data)
-      if (touched.isEmpty) return
-      // same row probe as [[delete]]: an UPDATE matching no row must
-      // not rewrite dirs or mint a version
-      if (probeNoMatch(spark, touched, snap, predicateSql)) return
-      val hit = expr(predicateSql)
-      rewriteDirs(spark, f, snap, touched.toSet, "update", { df =>
-        set.foldLeft(df) { case (d, (c, value)) =>
-          d.withColumn(c, when(hit, value).otherwise(col(c)))
-        }
+      set: Map[String, org.apache.spark.sql.Column]): Unit = {
+    val hit = expr(predicateSql)
+    rewriteMatching(spark, predicateSql, Kind.Update)(df =>
+      set.foldLeft(df) { case (d, (c, value)) =>
+        d.withColumn(c, when(hit, value).otherwise(col(c)))
       })
-    }
+  }
+
+  /** [[delete]] and [[update]]: `xform` of each data dir whose stats
+    * admit `predicateSql`, once a short-circuiting row probe (Delta's
+    * find-files phase) found an ACTUAL match among them. A no-match
+    * re-run (orchestrator retry, replayed script) must not pay a CoW
+    * pass or push every MV into a spurious refresh window. The probe
+    * reads through pending renames/widens like [[perDir]]: the
+    * predicate speaks CURRENT names and types.
+    */
+  private def rewriteMatching(spark: SparkSession, predicateSql: String,
+      kind: Kind)(xform: DataFrame => DataFrame): Unit = synchronized {
+    val f = fs(spark)
+    val snap = current(f)
+    snap.requireNoDeletes(kind.prefix)
+    if (snap.isEmpty) return
+    val touched = pruneEntries(spark, predicateSql, snap.data)._1.distinct
+    if (touched.isEmpty || snap.project(readDirs(spark, touched))
+        .filter(expr(predicateSql) <=> lit(true)).isEmpty) return
+    rewriteCommit(f, snap, kind)(perDir(spark, snap, touched)(xform))
+  }
 
   /** Keyed MERGE (Delta `MERGE INTO` with whenMatched=replace,
     * whenNotMatched=insert): every table row whose `key` appears in
@@ -2127,28 +2111,25 @@ final class ManifestTableStore(path: String,
     val inserted = TableStore.withBatchId(src, batchId)
     val keyStats = statsEligibleIn(src.schema).exists(keys.contains) ||
       snap.data.exists(e => touched(e.dir) && hasKeyStats(e))
-    if (keyStats) {
-      val insDir =
-        s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
-      rewriteDirs(spark, f, snap, touched, "merge",
-        _.join(srcKeys, keys, "left_anti"),
-        extra = Seq(Entry(batchId, insDir, write(inserted, insDir))))
-    } else {
-      // pending renames and widens project onto the touched dirs
-      // first, as in [[rewriteDirs]]; the read pads columns a dir
-      // predates exactly as the read path does
-      val kept =
-        if (touched.isEmpty) Nil
-        else Seq(snap.project(readDirs(spark, touched.toSeq.sorted))
-          .join(srcKeys, keys, "left_anti"))
-      // one dir that every touched entry and `batchId` point at
-      val nd = s"$path/data/merge-${java.util.UUID.randomUUID()}"
-      val stats = write((kept :+ inserted)
-        .reduce(_.unionByName(_, allowMissingColumns = true)), nd)
-      commit(f, snap, Seq(nd))(_.map { e =>
-        if (touched(e.dir)) Entry(e.batchId, nd, stats) else e
-      } :+ Entry(batchId, nd, stats), Rebase.dml("merge"))
-    }
+    val outputs =
+      if (keyStats)
+        Output(Set.empty, inserted, Some(batchId)) +:
+          perDir(spark, snap, touched.toSeq)(
+            _.join(srcKeys, keys, "left_anti"))
+      else {
+        // pending renames and widens project onto the touched dirs
+        // first, as in [[perDir]]; the read pads columns a dir
+        // predates exactly as the read path does
+        val kept =
+          if (touched.isEmpty) Nil
+          else Seq(snap.project(readDirs(spark, touched.toSeq.sorted))
+            .join(srcKeys, keys, "left_anti"))
+        // one dir that every touched entry and `batchId` point at
+        Seq(Output(touched, (kept :+ inserted)
+          .reduce(_.unionByName(_, allowMissingColumns = true)),
+          Some(batchId)))
+      }
+    rewriteCommit(f, snap, Kind.Merge)(outputs)
   }
 
   /** Rewrite the whole table as ONE dir holding `rebuild` of its
@@ -2167,12 +2148,8 @@ final class ManifestTableStore(path: String,
     snap.requireNoDeletes("merge")
     require(!snap.isEmpty, s"no committed batches under $path")
     if (snap.has(batchId)) return
-    val nd = s"$path/data/merge-${java.util.UUID.randomUUID()}"
-    val stats = write(rebuild(snap.read(spark)), nd)
-    val touched = snap.dataDirs.toSet
-    commit(f, snap, Seq(nd))(_.map { e =>
-      if (touched(e.dir)) Entry(e.batchId, nd, stats) else e
-    } :+ Entry(batchId, nd, stats), Rebase.dml("merge"))
+    rewriteCommit(f, snap, Kind.Merge)(Seq(Output(snap.dataDirs.toSet,
+      rebuild(snap.read(spark)), Some(batchId))))
   }
 
   /** Data dirs a keyed merge must rewrite, among the data entries
@@ -2423,36 +2400,71 @@ final class ManifestTableStore(path: String,
           }
         TableStore.withBatchId(picked.select(insCols.toSeq: _*), batchId)
       }
-    val insDir =
-      s"$path/data/batch-$batchId-${java.util.UUID.randomUUID()}"
-    val extra = Seq(Entry(batchId, insDir, write(insRows, insDir)))
-    rewriteDirs(spark, f, snap, touched, "merge", xform,
-      extra = extra)
+    rewriteCommit(f, snap, Kind.Merge)(
+      Output(Set.empty, insRows, Some(batchId)) +:
+        perDir(spark, snap, touched.toSeq)(xform))
   }
 
-  /** Shared per-dir CoW rewrite of delete, update, `MERGE INTO` and a
-    * keyed [[merge]] over key stats: write `xform` of each touched dir
-    * to a fresh dir (stats recomputed), then commit untouched entries
-    * + rewritten entries (+ `extra`, a merge's insert batch) as one
-    * new version under the DML policy ([[Rebase.dml]]).
+  /** Copy-on-write outputs: `xform` of each dir in `dirs`, each to its
+    * own fresh dir. Pending renames AND widens project onto each dir
+    * first: `xform` speaks current names and types while old dirs hold
+    * the old physical column, and the rewrite materializes the new
+    * ones, so DML incrementally completes a metadata-only rename/widen.
     */
-  private def rewriteDirs(spark: SparkSession, f: FileSystem,
-      snap: Snapshot, touched: Set[String], tag: String,
-      xform: DataFrame => DataFrame, extra: Seq[Entry] = Nil): Unit = {
-    val rewritten: Map[String, (String, String)] = touched.map { d =>
-      val nd = s"$path/data/$tag-${java.util.UUID.randomUUID()}"
-      // pending renames AND widens project onto each dir BEFORE the
-      // transform: the caller's predicates/joins reference current
-      // (renamed, widened) names and types, and old dirs still hold
-      // the old physical column — the rewrite also materializes the
-      // new name/type (with fresh stats), so DML incrementally
-      // completes a metadata-only rename or widen
-      d -> (nd, write(xform(
-        snap.project(ManifestTableStore.DirSchemas.read(spark, d))), nd))
-    }.toMap
-    commit(f, snap, rewritten.values.map(_._1).toSeq ++ extra.map(_.dir))(
-      _.map(e => rewritten.get(e.dir).fold(e) { case (nd, st) =>
-        Entry(e.batchId, nd, st) }) ++ extra, Rebase.dml(tag))
+  private def perDir(spark: SparkSession, snap: Snapshot,
+      dirs: Seq[String])(xform: DataFrame => DataFrame): Seq[Output] =
+    dirs.map(d => Output(Set(d),
+      xform(snap.project(ManifestTableStore.DirSchemas.read(spark, d)))))
+
+  /** The one data rewrite behind every compaction, DML op, partition
+    * overwrite and REFRESH fold: write each [[Output]] once ([[write]],
+    * or [[writeBuckets]] for a bucket layout) and publish them in ONE
+    * [[commit]] under the [[Kind]]'s policy. Each replaced entry keeps
+    * its batch id on its output's dir (a bucket layout spreads the ids
+    * over its dirs), so replay refusal and time travel survive; an
+    * output adding a batch appends its entry; delete entries drop (only
+    * [[compact]] and [[compactDeletes]] run over them, and fold them).
+    * Dirs are `data/<kind prefix>-<uuid>`, or `data/batch-<b>-<uuid>`
+    * for an output that replaces nothing and adds batch b. `more` maps
+    * the dirs `outputs` wrote to further outputs: a partition overwrite
+    * reads the partitions its new batch wrote. Returns whether it
+    * published.
+    */
+  private def rewriteCommit(f: FileSystem, snap: Snapshot, kind: Kind)(
+      outputs: Seq[Output],
+      more: Seq[String] => Seq[Output] = _ => Nil): Boolean = {
+    // `dir` is what the output wrote; `dirs` its committed dirs + stats
+    final case class Written(out: Output, dir: String,
+        dirs: Seq[(String, String)]) {
+      def entry(batchId: Long, i: Int = 0): Entry =
+        Entry(batchId, dirs(i)._1, dirs(i)._2)
+    }
+    def writeAll(os: Seq[Output]): Seq[Written] = os.map { o =>
+      val name = o.adds.filter(_ => o.replaces.isEmpty)
+        .fold(kind.prefix)(b => s"batch-$b")
+      val dir = s"$path/data/$name-${java.util.UUID.randomUUID()}"
+      Written(o, dir,
+        if (o.buckets) writeBuckets(o.frame.sparkSession, f, o.frame, dir)
+        else Seq(dir -> write(o.frame, dir)))
+    }
+    val first = writeAll(outputs)
+    val written = first ++ writeAll(more(first.map(_.dir)))
+    val owner = written.flatMap(w => w.out.replaces.map(_ -> w)).toMap
+    val edit: Seq[Entry] => Seq[Entry] = { es =>
+      val live = es.filterNot(isDeleteEntry)
+      // a bucket layout re-spreads the ids it replaces, below
+      live.flatMap(e => owner.get(e.dir).fold(Seq(e)) { w =>
+        if (w.out.buckets) Nil else Seq(w.entry(e.batchId))
+      }) ++ written.flatMap { w =>
+        if (w.out.buckets) {
+          val ids = live.filter(e => w.out.replaces(e.dir))
+            .map(_.batchId).distinct
+          w.dirs.indices.map(i => w.entry(ids(i % ids.size), i)) ++
+            ids.drop(w.dirs.size).map(w.entry(_))
+        } else w.out.adds.map(w.entry(_))
+      }
+    }
+    commit(f, snap, written.map(_.dir))(edit, kind.rebase)
   }
 
   /** The table's commit history as a DataFrame — Delta's DESCRIBE
@@ -2798,8 +2810,8 @@ final class ManifestTableStore(path: String,
     * — refusing there (as byte-equality did) would block every publish
     * after routine table maintenance. The check is (a) the DATA
     * batch-id sets match the base, (b) every main entry not in the
-    * base is a maintenance-rewrite dir (compact-/cluster-/zorder-
-    * prefixed — the store's own naming), and (c) the manifest-recorded
+    * base is a maintenance-rewrite dir (named by a maintenance [[Kind]]:
+    * compact-/cluster-/zorder-), and (c) the manifest-recorded
     * TOTAL ROW COUNTS match (both sides' counts must be recorded;
     * pre-stats manifests refuse conservatively). (c) closes the one
     * content-changing path that passes (a)+(b): a `compact` that FOLDS
@@ -2826,7 +2838,6 @@ final class ManifestTableStore(path: String,
       require(head.version >= 1L, s"branch '$name' on $path has no commits")
       val baseDataIds = base.filterNot(isDeleteEntry).map(_.batchId).toSet
       val baseDirs = base.map(_.dir).toSet
-      val maintPrefixes = Seq("compact-", "cluster-", "zorder-")
       def totalCount(es: Seq[Entry]): Option[Long] = {
         val data = es.filterNot(isDeleteEntry)
         ManifestTableStore.countOf(data).filter(_ => data.nonEmpty)
@@ -2843,7 +2854,7 @@ final class ManifestTableStore(path: String,
           mLines.filterNot(e => baseDirs.contains(e.dir)).forall { e =>
             !isDeleteEntry(e) && {
               val seg = e.dir.split("/data/").last.split('/').head
-              maintPrefixes.exists(seg.startsWith)
+              Kind.maintenancePrefixes.exists(seg.startsWith)
             }
           } &&
           baseCount.isDefined && mCount.isDefined && baseCount == mCount)
@@ -3461,13 +3472,13 @@ final class ManifestTableStore(path: String,
     * post-delete state). Commits under the DML policy
     * ([[Rebase.dml]]): concurrent appends rebase around it (scoped
     * deletes never mask them), a competing maintenance rewrite makes
-    * it throw.
+    * it throw. Returns whether it published.
     */
-  def compactDeletes(spark: SparkSession): Unit = synchronized {
+  def compactDeletes(spark: SparkSession): Boolean = synchronized {
     val f = fs(spark)
     val snap = current(f)
-    if (snap.deletes.isEmpty) return
-    val touched: Set[String] = snap.deletes.distinctBy(_.dir).flatMap { d =>
+    if (snap.deletes.isEmpty) return false
+    val touched = snap.deletes.distinctBy(_.dir).flatMap { d =>
       val keys = ManifestTableStore.DirSchemas.read(spark, d.dir)
       val kc = keys.schema.fields.head.name
       val candidates = ManifestTableStore.parseApplies(d.statsJson) match {
@@ -3475,42 +3486,26 @@ final class ManifestTableStore(path: String,
         case None => snap.data
       }
       mergeTouchedDirs(keys, Seq(kc), candidates)
-    }.toSet
-    val rewritten: Map[String, (String, String)] = touched.map { dir =>
-      val nd = s"$path/data/delfold-${java.util.UUID.randomUUID()}"
-      dir -> (nd, write(
-        snap.masked(spark, ManifestTableStore.DirSchemas.read(spark, dir)),
-        nd))
-    }.toMap
-    commit(f, snap, rewritten.values.map(_._1).toSeq)(
-      _.filterNot(isDeleteEntry).map(e => rewritten.get(e.dir).fold(e) {
-        case (nd, st) => Entry(e.batchId, nd, st) }),
-      Rebase.dml("compactDeletes"))
+    }.distinct
+    rewriteCommit(f, snap, Kind.DelFold)(touched.map(d => Output(Set(d),
+      snap.masked(spark, ManifestTableStore.DirSchemas.read(spark, d)))))
   }
 
   /** ONE-CALL maintenance (the scheduled OPTIMIZE habit): fold any
     * pending merge-on-read delete files (targeted, [[compactDeletes]])
     * then merge data dirs below `smallBytes` ([[compactSmall]]).
-    * Returns the actions that actually committed — both steps no-op on
+    * Returns the actions that actually published — both steps no-op on
     * a clean table, so a cron-driven `maintain()` costs two manifest
     * reads at steady state. Deliberately NOT clustering/z-ordering:
     * layout choices depend on the query workload and stay explicit.
     */
   def maintain(spark: SparkSession,
       smallBytes: Long = 32L << 20,
-      predicateSql: Option[String] = None): Seq[String] = {
-    val actions = Seq.newBuilder[String]
-    if (current(fs(spark)).deletes.nonEmpty) {
-      compactDeletes(spark)
-      actions += "compactDeletes"
-    }
-    val before = currentVersion(spark)
-    compactSmall(spark, smallBytes, predicateSql)
-    if (currentVersion(spark) != before)
-      actions += predicateSql.fold("compactSmall")(p =>
-        s"compactSmall(where $p)")
-    actions.result()
-  }
+      predicateSql: Option[String] = None): Seq[String] =
+    Seq("compactDeletes" -> compactDeletes(spark),
+      predicateSql.fold("compactSmall")(p => s"compactSmall(where $p)") ->
+        compactSmall(spark, smallBytes, predicateSql))
+      .collect { case (action, true) => action }
 
   /** `dirs`, in commit order, as one frame: ONE file scan per schema
     * version ([[ManifestTableStore.DirSchemas.scan]]), the versions

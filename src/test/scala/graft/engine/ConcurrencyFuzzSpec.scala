@@ -417,14 +417,15 @@ class ConcurrencyFuzzSpec extends SparkSpec {
 
   test("a compaction racing a compaction is a no-op that deletes what " +
       "it wrote") {
-    Seq[(String, ManifestTableStore => Unit)](
+    Seq[(String, ManifestTableStore => Boolean)](
       "compact" -> (_.compact(spark)),
       "compactSmall" -> (_.compactSmall(spark, 1L << 30)),
-      "compactClustered" -> (_.compactClustered(spark, "n", 2))
+      "compactClustered" -> (_.compactClustered(spark, "n", 2)),
+      "compactZOrder" -> (_.compactZOrder(spark, Seq("n"), 2))
     ).foreach { case (name, op) =>
       val (p, mine, rival) = raced()
       val fired = loseNextCommit(mine)(rival.compact(spark))
-      op(mine)
+      assert(!op(mine), s"$name reported a publish")
       assert(fired(), name)
       assert(mine.currentVersion(spark) == 3L,
         s"$name published over the rival's compaction")
@@ -439,7 +440,16 @@ class ConcurrencyFuzzSpec extends SparkSpec {
       "delete" -> (_.delete(spark, "n >= 2")),
       "update" -> (_.update(spark, "n = 1",
         Map("n" -> org.apache.spark.sql.functions.lit(10)))),
-      "merge" -> (_.merge(spark, Seq(("b", 20)).toDF("k", "n"), "k", 5L))
+      "merge" -> (_.merge(spark, Seq(("b", 20)).toDF("k", "n"), "k", 5L)),
+      // keyed on the stats column: one rewritten dir per touched dir
+      "merge per dir" ->
+        (_.merge(spark, Seq(("b", 2)).toDF("k", "n"), "n", 5L)),
+      "mergeClauses" -> (_.mergeClauses(spark,
+        Seq(("b", 20), ("c", 3)).toDF("k", "n"), "k",
+        matched = Seq(ManifestTableStore.UpdateClause(None, None)),
+        notMatched = Seq(ManifestTableStore.InsertClause(None, None)),
+        bySource = Nil, batchId = 5L)),
+      "rewrite" -> (_.rewrite(spark, 5L)(_.filter("n >= 2")))
     ).foreach { case (name, op) =>
       val (p, mine, rival) = raced()
       val fired = loseNextCommit(mine)(rival.compact(spark))
@@ -450,5 +460,20 @@ class ConcurrencyFuzzSpec extends SparkSpec {
         .collect().toSet == Set(("a", 1), ("b", 2)), name)
       assert(orphans(p, mine).isEmpty, s"$name: ${orphans(p, mine)}")
     }
+  }
+
+  test("a delete fold racing a compaction throws, applies nothing, and " +
+      "deletes what it wrote") {
+    val (p, mine, _) = raced()
+    val mor = new ManifestTableStore(p, statsColumns = Seq("n"),
+      morDeleteKey = Some("k"))
+    mor.deleteMoR(spark, "k = 'a'", "k")
+    val fired = loseNextCommit(mor)(mine.compact(spark))
+    intercept[java.util.ConcurrentModificationException](
+      mor.compactDeletes(spark))
+    assert(fired())
+    assert(mor.currentVersion(spark) == 4L)
+    assert(keys(mor) == Set("b"), "the rival's compaction folded the delete")
+    assert(orphans(p, mor).isEmpty, orphans(p, mor))
   }
 }

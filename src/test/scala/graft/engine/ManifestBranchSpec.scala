@@ -106,6 +106,44 @@ class ManifestBranchSpec extends SparkSpec {
     assert(state(store3) == Set(("b", 2)))
   }
 
+  test("fast-forward over each rewrite op on main: accepted after the " +
+      "maintenance kinds, refused after the DML kinds") {
+    Seq[(String, Boolean, ManifestTableStore => Unit)](
+      ("compactSmall", true, _.compactSmall(spark, 1L << 30)),
+      ("compactClustered", true, _.compactClustered(spark, "n", 2)),
+      ("compactZOrder", true, _.compactZOrder(spark, Seq("n"), 2)),
+      ("update", false, _.update(spark, "n = 1", Map("n" -> lit(10)))),
+      ("merge", false,
+        _.merge(spark, Seq(("b", 20)).toDF("k", "n"), "k", 7L)),
+      ("compactDeletes", false, { s =>
+        s.deleteMoR(spark, "k = 'a'", "k")
+        s.compactDeletes(spark)
+      })
+    ).foreach { case (name, accepted, op) =>
+      val p = Files.createTempDirectory("branch-ff-")
+      p.toFile.deleteOnExit()
+      val store = new ManifestTableStore(p.toString,
+        statsColumns = Seq("n"), morDeleteKey = Some("k"))
+      store.append(Seq(("a", 1), ("b", 2)).toDF("k", "n"), 0L)
+      store.append(Seq(("c", 3)).toDF("k", "n"), 1L)
+      store.createBranch(spark, "run", 2L)
+      store.branch("run").append(Seq(("x", 10)).toDF("k", "n"), 5L)
+      val v = store.currentVersion(spark)
+      op(store)
+      assert(store.currentVersion(spark) > v, s"$name did not commit")
+      if (accepted) {
+        store.fastForward(spark, "run")
+        assert(state(store) == Set(("a", 1), ("b", 2), ("c", 3),
+          ("x", 10)), name)
+      } else {
+        val before = state(store)
+        intercept[IllegalArgumentException](
+          store.fastForward(spark, "run"))
+        assert(state(store) == before, name)
+      }
+    }
+  }
+
   test("main vacuum retains branch-head data (ref-retention); " +
       "dropBranch releases it for the next vacuum") {
     val (path, store) = newStore()

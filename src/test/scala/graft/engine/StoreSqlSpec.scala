@@ -325,6 +325,38 @@ class StoreSqlSpec extends SparkSpec {
     }
   }
 
+  test("OPTIMIZE ZORDER reports the steps that published: pending " +
+      "merge-on-read deletes give the fold and the z-order, an empty " +
+      "table gives none") {
+    val p = Files.createTempDirectory("sqlz-report-")
+    p.toFile.deleteOnExit()
+    val store = new ManifestTableStore(p.toString,
+      statsColumns = Seq("n"), morDeleteKey = Some("k"))
+    store.append(Seq(("a", 1), ("b", 2)).toDF("k", "n"), 0L)
+    store.append(Seq(("c", 3), ("d", 4)).toDF("k", "n"), 1L)
+    StoreSql.exec(spark, Map("t" -> store), "DELETE FROM t WHERE n = 2")
+    val acts = StoreSql.exec(spark, Map("t" -> store),
+      "OPTIMIZE t ZORDER BY (n)").as[String].collect().toSeq
+    assert(acts == Seq("compactDeletes", "compactZOrder(n)"), acts)
+    assert(state(store) == Set(("a", 1), ("c", 3), ("d", 4)))
+    val ep = Files.createTempDirectory("sqlz-empty-")
+    ep.toFile.deleteOnExit()
+    val empty = new ManifestTableStore(ep.toString)
+    val none = StoreSql.exec(spark, Map("e" -> empty),
+      "OPTIMIZE e ZORDER BY (n)").as[String].collect().toSeq
+    assert(none.isEmpty, none)
+    assert(empty.currentVersion(spark) == 0L)
+    // a created table holds a schema marker and no row
+    val cp = Files.createTempDirectory("sqlz-created-")
+    cp.toFile.deleteOnExit()
+    val created = new ManifestTableStore(cp.toString)
+    created.createEmpty(spark,
+      org.apache.spark.sql.types.StructType.fromDDL("k STRING, n INT"))
+    assert(StoreSql.exec(spark, Map("c" -> created),
+      "OPTIMIZE c ZORDER BY (n)").as[String].collect().isEmpty)
+    assert(created.currentVersion(spark) == 1L)
+  }
+
   test("RESTORE TABLE ... TO VERSION AS OF and DESCRIBE HISTORY run " +
       "as SQL text: rollback is metadata-only and audited, the ledger " +
       "is a result frame") {
