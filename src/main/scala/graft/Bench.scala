@@ -3,21 +3,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // Warm replay for keyed stores: Bench measures the warm engine
-      // (manifest-read replay, not per-invocation rebuild). Correctness
-      // runs (Verify, the driver gate) never set this — state-history
-      // pins require the first-run build path (Materialize.freshKeyedPath).
-      .config("graft.state.warm", "1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = engine.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-bench")
+    // Warm replay for keyed stores: Bench measures the warm engine
+    // (manifest-read replay, not per-invocation rebuild). Correctness
+    // runs (Verify, the driver gate) never set this — state-history
+    // pins require the first-run build path (Materialize.freshKeyedPath).
+    spark.conf.set("graft.state.warm", "1")
     // Warmup (excluded from timings): run every query once against the
     // smallest scale factor. Plans and generated classes are identical
     // across scale factors, so this pays janino compilation and JIT once

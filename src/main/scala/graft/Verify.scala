@@ -1,27 +1,19 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // correctness certifies the FIRST-RUN path: inherited keyed state
-      // (written by an older binary with different statements) is
-      // invisible to batch-id-idempotent replay, so the gate clears it
-      // (Materialize fresh-state). SPARK_GRAFT_FRESH_STATE=0 restores
-      // replay-on-warm-state for targeted iteration.
-      .config("graft.state.fresh",
-        sys.env.getOrElse("SPARK_GRAFT_FRESH_STATE", "1"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = engine.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt, "graft-verify")
+    // correctness certifies the FIRST-RUN path: inherited keyed state
+    // (written by an older binary with different statements) is
+    // invisible to batch-id-idempotent replay, so the gate clears it
+    // (Materialize fresh-state). SPARK_GRAFT_FRESH_STATE=0 restores
+    // replay-on-warm-state for targeted iteration.
+    spark.conf.set("graft.state.fresh",
+      sys.env.getOrElse("SPARK_GRAFT_FRESH_STATE", "1"))
     new java.io.File(outDir).mkdirs()
     // Optional name filter for targeted local iteration (same contract
     // as Bench's SPARK_GRAFT_BENCH_ONLY); the driver never sets it.

@@ -13,6 +13,12 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * independent micro-batch loops: on a [[ManifestTableStore]] their
   * parquet writes overlap, and their commits race on the manifest
   * version (the loser rebases and retries).
+  *
+  * A drain after the first compiles nothing. Each query runs in a cloned
+  * session, and on a [[Sessions.local]] session its tasks share the
+  * executor's class loader (artifact isolation is off there), so a new
+  * query's stages hit the classes the queries before it compiled
+  * (CodegenReuseSpec pins a second AvailableNow drain at 0 compiles).
   */
 object StreamRunner {
 

@@ -327,7 +327,15 @@ final class ManifestTableStore(path: String,
         }
       }
       published
-    } finally if (!published && wrote.nonEmpty) {
+    } finally if (!published) dropUnreferenced(f, wrote)
+  }
+
+  /** The cleanup of a write that published nothing: delete the dirs in
+    * `wrote` that the current version does not reference, and evict
+    * their cached schemas.
+    */
+  private def dropUnreferenced(f: FileSystem, wrote: Seq[String]): Unit =
+    if (wrote.nonEmpty) {
       def norm(d: String) = new HPath(d).toUri.getPath
       val live = current(f).entries.map(e => norm(e.dir))
       wrote.filterNot { d =>
@@ -338,7 +346,6 @@ final class ManifestTableStore(path: String,
         ManifestTableStore.DirSchemas.evictUnder(d)
       }
     }
-  }
 
   /** (base, winner, edit) => the entries to publish at the next
     * version, or None to stop with nothing published; refusals throw.
@@ -2427,8 +2434,9 @@ final class ManifestTableStore(path: String,
     * Dirs are `data/<kind prefix>-<uuid>`, or `data/batch-<b>-<uuid>`
     * for an output that replaces nothing and adds batch b. `more` maps
     * the dirs `outputs` wrote to further outputs: a partition overwrite
-    * reads the partitions its new batch wrote. Returns whether it
-    * published.
+    * reads the partitions its new batch wrote. A write that throws
+    * deletes the dirs written before it (as [[commit]] does when it
+    * publishes nothing) and rethrows. Returns whether it published.
     */
   private def rewriteCommit(f: FileSystem, snap: Snapshot, kind: Kind)(
       outputs: Seq[Output],
@@ -2439,16 +2447,25 @@ final class ManifestTableStore(path: String,
       def entry(batchId: Long, i: Int = 0): Entry =
         Entry(batchId, dirs(i)._1, dirs(i)._2)
     }
+    val started = scala.collection.mutable.ArrayBuffer.empty[String]
     def writeAll(os: Seq[Output]): Seq[Written] = os.map { o =>
       val name = o.adds.filter(_ => o.replaces.isEmpty)
         .fold(kind.prefix)(b => s"batch-$b")
       val dir = s"$path/data/$name-${java.util.UUID.randomUUID()}"
+      started += dir
       Written(o, dir,
         if (o.buckets) writeBuckets(o.frame.sparkSession, f, o.frame, dir)
         else Seq(dir -> write(o.frame, dir)))
     }
-    val first = writeAll(outputs)
-    val written = first ++ writeAll(more(first.map(_.dir)))
+    val written =
+      try {
+        val first = writeAll(outputs)
+        first ++ writeAll(more(first.map(_.dir)))
+      } catch {
+        case t: Throwable =>
+          dropUnreferenced(f, started.toSeq)
+          throw t
+      }
     val owner = written.flatMap(w => w.out.replaces.map(_ -> w)).toMap
     val edit: Seq[Entry] => Seq[Entry] = { es =>
       val live = es.filterNot(isDeleteEntry)

@@ -1,9 +1,10 @@
 package graft.engine
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
 
@@ -11,7 +12,9 @@ import graft.SparkSpec
   * fold's batch id, the change feed's window ids) reach generated code
   * as parameters, not as literals in the source: the next commit of the
   * same shape hits Spark's compiled-class cache and compiles nothing,
-  * on the driver or in the tasks. The count is Spark's own compile
+  * on the driver or in the tasks. A new streaming query's tasks share
+  * the executor's class loader ([[Sessions]] turns artifact isolation
+  * off), so they hit the same cache. The count is Spark's own compile
   * counter (one tick per class Janino actually compiles).
   */
 class CodegenReuseSpec extends SparkSpec {
@@ -67,5 +70,25 @@ class CodegenReuseSpec extends SparkSpec {
     def rows(df: DataFrame) = df.collect().map(_.toSeq).toSet
     assert(rows(cat.query(spark, "SELECT k, c, s, hi FROM g")) ==
       rows(cat.query(spark, defn)))
+  }
+
+  test("a second AvailableNow drain on the same checkpoint compiles no " +
+      "class") {
+    val src = tmp("codegen-drain-src-")
+    val ckpt = tmp("codegen-drain-ckpt-")
+    val store = new ManifestTableStore(tmp("codegen-drain-silver-"))
+    def drain(file: String, id: Int): Unit = {
+      Files.writeString(Paths.get(src, file),
+        s"""{"id": $id, "ip": "10.0.0.$id", "hostName": "h$id"}""")
+      StreamRunner.start(spark, SourceSpec.rapid7, src, ckpt, store,
+        Trigger.AvailableNow()).awaitTermination()
+    }
+    drain("a.json", 1)
+    val compiles = compilesDuring(drain("b.json", 2))
+    assert(compiles == 0L, s"the second drain compiled $compiles classes")
+    import spark.implicits._
+    val base = store.writerBase(spark, SourceSpec.rapid7.name)
+    assert(store.read(spark).groupBy("batch_id").count()
+      .as[(Long, Long)].collect().toSet == Set((base, 1L), (base + 1, 1L)))
   }
 }

@@ -476,4 +476,23 @@ class ConcurrencyFuzzSpec extends SparkSpec {
     assert(keys(mor) == Set("b"), "the rival's compaction folded the delete")
     assert(orphans(p, mor).isEmpty, orphans(p, mor))
   }
+
+  test("a rewrite whose second write throws deletes the dir its first " +
+      "write left and publishes nothing") {
+    val p = Files.createTempDirectory("throwing-rewrite-")
+    p.toFile.deleteOnExit()
+    val store = new ManifestTableStore(p.toString)
+    store.append(Seq(("a", 5)).toDF("k", "n"), 0L)
+    store.append(Seq(("b", 1)).toDF("k", "n"), 1L)
+    store.addCheck(spark, "pos", "n >= 0")
+    assert(store.currentVersion(spark) == 2L)
+    // a: 5 -> 3 is written; b: 1 -> -1 fails the check
+    val e = intercept[IllegalArgumentException](store.update(spark,
+      "n >= 1", Map("n" -> (org.apache.spark.sql.functions.col("n") - 2))))
+    assert(e.getMessage.contains("pos"), e.getMessage)
+    assert(store.currentVersion(spark) == 2L)
+    assert(store.read(spark).select("k", "n").as[(String, Int)]
+      .collect().toSet == Set(("a", 5), ("b", 1)))
+    assert(orphans(p.toString, store).isEmpty, orphans(p.toString, store))
+  }
 }
